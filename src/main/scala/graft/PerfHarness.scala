@@ -249,84 +249,6 @@ object PerfHarness {
       s""""queries":{${perQuery.mkString(",")}},"valid":$valid}"""
   }
 
-  /** Long-horizon metadata-log soak: file-backed vs RocksDB backend on
-    * the SAME workload — `rounds` incremental cycles, each one a fresh
-    * AvailableNow query start (so every round pays real checkpoint
-    * recovery: latest-offset lookup + last-batch replay) draining
-    * `newPerRound` newly announced files. Measures the two long-horizon
-    * costs a backend choice owns:
-    *  - per-round drain seconds over time (restart cost as the log
-    *    accumulates `rounds` batches — a backend whose recovery walks
-    *    history would show a rising series);
-    *  - checkpoint-dir bytes after each round (on-disk growth: the file
-    *    log's per-batch files + compactions vs RocksDB's SSTs + version
-    *    zips).
-    * Both sinks are validated row-for-row at the end. Emits one JSON
-    * line with per-backend series + p50/p95 + first/last-5-round means.
-    */
-  def metadataLogSoak(spark: SparkSession, rounds: Int, newPerRound: Int,
-      rowsPerFile: Int): String = {
-    def dirBytes(p: Path): Long = {
-      if (!Files.exists(p)) 0L
-      else {
-        val walk = Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-        } finally walk.close()
-      }
-    }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val perBackend = Seq("file", "rocksdb").map { backend =>
-      val root = Files.createTempDirectory(s"graft-logsoak-$backend")
-      val dataDir = Files.createDirectory(root.resolve("data"))
-      val out = root.resolve("out"); val cp = root.resolve("cp")
-      val queueName = s"logsoak-$backend-${System.nanoTime()}"
-      val queue = InMemoryQueueRegistry.queue(queueName)
-      val times = Vector.newBuilder[Double]
-      val bytes = Vector.newBuilder[Long]
-      (0 until rounds).foreach { r =>
-        val added = generate(dataDir, r * newPerRound, newPerRound, rowsPerFile)
-        added.foreach(p =>
-          queue.send(s"""{"path":"$p","timestampMs":${System.currentTimeMillis()}}"""))
-        times += timed {
-          val q = spark.readStream.format("graft-files").schema(harnessSchema)
-            .option("fileFormat", "csv").option("queueName", queueName)
-            .option("metadataLog", backend)
-            .option("queueFetchWaitTimeoutSeconds", "5")
-            .load()
-            .writeStream.format("csv")
-            .option("path", out.toString)
-            .option("checkpointLocation", cp.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        bytes += dirBytes(cp)
-      }
-      InMemoryQueueRegistry.remove(queueName)
-      val ts = times.result(); val bs = bytes.result()
-      val expected = rounds.toLong * newPerRound * rowsPerFile
-      val got = spark.read.schema(harnessSchema).csv(out.toString).count()
-      System.err.println(f"[log-soak] $backend%8s: rounds=$rounds " +
-        f"p50=${percentile(ts, 0.5)}%.3fs p95=${percentile(ts, 0.95)}%.3fs " +
-        f"first5=${ts.take(5).sum / 5}%.3fs last5=${ts.takeRight(5).sum / 5}%.3fs " +
-        f"cp_bytes_final=${bs.last} valid=${got == expected}")
-      s""""$backend":{"round_sec_p50":${f"${percentile(ts, 0.5)}%.3f"},""" +
-        s""""round_sec_p95":${f"${percentile(ts, 0.95)}%.3f"},""" +
-        s""""first5_mean_sec":${f"${ts.take(5).sum / 5}%.3f"},""" +
-        s""""last5_mean_sec":${f"${ts.takeRight(5).sum / 5}%.3f"},""" +
-        s""""cp_bytes_after_round":[${bs.mkString(",")}],""" +
-        s""""round_sec":[${ts.map(x => f"$x%.3f").mkString(",")}],""" +
-        s""""valid":${got == expected}}"""
-    }
-    s"""{"metric":"metadata_log_soak","rounds":$rounds,""" +
-      s""""new_files_per_round":$newPerRound,"rows_per_file":$rowsPerFile,""" +
-      s"""${perBackend.mkString(",")}}"""
-  }
-
   /** Bulk-replay decomposition (the 48k-crossover adjudication): drain
     * the SAME pre-generated backlog once per `maxFilesPerTrigger`
     * setting, push source vs listing source. If the push side's bulk
@@ -862,7 +784,6 @@ object PerfHarness {
   /** args: [nFiles] [rowsPerFile], defaults 200 x 1000;
     * or: soak [n1,n2,...] [rowsPerFile] (defaults 1000,4000,12000 x 10);
     * or: layout [sessions] [rounds] [sfDir] (defaults 8 x 3 on sf0.1);
-    * or: logsoak [rounds] [newPerRound] [rowsPerFile] (defaults 40 x 8 x 10);
     * or: scale [k1,k2,...] [op1,op2,...] [reps] (defaults 1,10,100 x
     *     dedup_cc,dedup_minhash_lsh,heavy_hitters,budget_select,ann_topk_ivf x 2);
     * or: bulk [nFiles] [rowsPerFile] [mfpt1,mfpt2,...] (defaults
@@ -872,12 +793,10 @@ object PerfHarness {
   def main(args: Array[String]): Unit = {
     val soakMode = args.headOption.contains("soak")
     val layoutMode = args.headOption.contains("layout")
-    val logSoakMode = args.headOption.contains("logsoak")
     val scaleMode = args.headOption.contains("scale")
     val bulkMode = args.headOption.contains("bulk")
     val ccSoakMode = args.headOption.contains("ccsoak")
-    val anyMode = soakMode || layoutMode || logSoakMode || scaleMode ||
-      bulkMode || ccSoakMode
+    val anyMode = soakMode || layoutMode || scaleMode || bulkMode || ccSoakMode
     val nFiles = if (anyMode) 0 else args.headOption.map(_.toInt).getOrElse(200)
     val rowsPerFile = if (anyMode) 0 else args.lift(1).map(_.toInt).getOrElse(1000)
     val spark = SparkSession.builder()
@@ -894,11 +813,6 @@ object PerfHarness {
         val sfDir = args.lift(3)
           .orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse("/root/testdata/sf0.1")
         println(layoutSoak(spark, sfDir, sessions, rounds))
-      } else if (logSoakMode) {
-        val rounds = args.lift(1).map(_.toInt).getOrElse(40)
-        val newPerRound = args.lift(2).map(_.toInt).getOrElse(8)
-        val rows = args.lift(3).map(_.toInt).getOrElse(10)
-        println(metadataLogSoak(spark, rounds, newPerRound, rows))
       } else if (scaleMode) {
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         // the 128-column minhash signature aggregate must stay inside

@@ -349,8 +349,9 @@ object Relational2 {
     * default rsd) lands within 5% of exact. The oracle recomputes the
     * exact counts and pins the booleans to TRUE, so a sketch drifting out
     * of bound hash-fails the row instead of passing rows-only. */
-  def q42SketchBound(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+  def q42SketchBound(s: SparkSession, d: String): DataFrame =
+    q42SketchBoundOf(Tables.events(s, d))
+  private[graft] def q42SketchBoundOf(ev: DataFrame): DataFrame = {
     // exact and approx sides aggregated SEPARATELY, joined on the
     // 15-row group key (r22). Fused, Spark's multi-distinct Expand
     // rewrite keys the first aggregate on (event_type, user_id,
@@ -361,21 +362,22 @@ object Relational2 {
     // 15-row answer. Split, the approx side is one partial-aggregated
     // pass (15 HLL sketches total) and the exact side's Expand carries
     // only counts. HLL estimates are multiset-determined, so the values
-    // (and the oracle hash) are unchanged.
-    val ev = Tables.events(s, d)
-    val exact = ev.groupBy($"event_type")
+    // (and the oracle hash) are unchanged. The join is null-safe (<=>):
+    // an equi-join would drop the NULL event_type group that GROUP BY
+    // keeps.
+    val exact = ev.groupBy(col("event_type"))
       .agg(
-        countDistinct($"user_id").as("exact_users"),
-        countDistinct($"event_id").as("exact_events"))
-    val approx = ev.groupBy($"event_type")
+        countDistinct(col("user_id")).as("exact_users"),
+        countDistinct(col("event_id")).as("exact_events"))
+    val approx = ev.groupBy(col("event_type").as("approx_type"))
       .agg(
-        approx_count_distinct($"user_id", 0.02).as("au"),
-        approx_count_distinct($"event_id", 0.02).as("ae"))
-    exact.join(approx, Seq("event_type"))
-      .select($"event_type", $"exact_users", $"exact_events",
-        (abs($"au" - $"exact_users") <= $"exact_users" * 0.05).as("users_in_bound"),
-        (abs($"ae" - $"exact_events") <= $"exact_events" * 0.05).as("events_in_bound"))
-      .orderBy($"event_type")
+        approx_count_distinct(col("user_id"), 0.02).as("au"),
+        approx_count_distinct(col("event_id"), 0.02).as("ae"))
+    exact.join(approx, col("event_type") <=> col("approx_type"))
+      .select(col("event_type"), col("exact_users"), col("exact_events"),
+        (abs(col("au") - col("exact_users")) <= col("exact_users") * 0.05).as("users_in_bound"),
+        (abs(col("ae") - col("exact_events")) <= col("exact_events") * 0.05).as("events_in_bound"))
+      .orderBy(col("event_type"))
   }
   val q42BoundSql: String =
     """SELECT event_type,

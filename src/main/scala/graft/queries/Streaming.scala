@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.{ConnectorOptions, InMemoryQueueRegistry}
+import graft.sources.InMemoryQueueRegistry
 
 /** Streaming-source queries for the correctness gate: each runs a real
   * micro-batch streaming query over the push-based `graft-files` source
@@ -33,6 +33,19 @@ object Streaming {
     val prev = s.conf.get(key)
     s.conf.set(key, n.toString)
     try body finally s.conf.set(key, prev)
+  }
+
+  /** Run `body` with Spark's RocksDB state store as the state provider.
+    * The conf is read at query start, so it is scoped to the body and
+    * restored after. */
+  private[queries] def withRocksDBStateStore[T](s: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
   }
 
   /** Events subset written as parquet files (no text round-trip: the
@@ -149,18 +162,16 @@ object Streaming {
 
   /** Duplicate announcements (each file announced twice) must not produce
     * duplicate rows — the exactly-once admission check as a query.
-    * Runs once per metadata-log backend: `stream_exactly_once` (file) and
-    * `stream_exactly_once_rocksdb` (the versioned-KV backend, O22-O24) are
-    * the SAME pipeline differing only in the `metadatalog` option, so both
-    * backends carry a hash-green oracle row, not just unit specs — the
-    * reference's only log IS the RocksDB one (RocksDBS3SourceLog.scala). */
+    * `stream_exactly_once` keeps the counting aggregate's state in the
+    * default state store; `stream_exactly_once_rocksdb` is the SAME
+    * pipeline with that state in Spark's RocksDB state store, so both
+    * state backends carry a hash-green oracle row. */
   def streamExactlyOnce(s: SparkSession, dir: String): DataFrame =
-    streamExactlyOnceOn(s, dir, ConnectorOptions.METADATA_LOG_FILE, "stream_exactly_once")
+    streamExactlyOnceOn(s, dir, "stream_exactly_once")
   def streamExactlyOnceRocksdb(s: SparkSession, dir: String): DataFrame =
-    streamExactlyOnceOn(s, dir, ConnectorOptions.METADATA_LOG_ROCKSDB, "stream_exactly_once_rocksdb")
+    withRocksDBStateStore(s)(streamExactlyOnceOn(s, dir, "stream_exactly_once_rocksdb"))
 
-  private def streamExactlyOnceOn(
-      s: SparkSession, dir: String, logBackend: String, gateName: String): DataFrame =
+  private def streamExactlyOnceOn(s: SparkSession, dir: String, gateName: String): DataFrame =
       withStateShuffle(s, 4) {
     val runId = s"dedup${seq.incrementAndGet()}_${System.nanoTime()}"
     val stage = StageCache.dir(gateName,
@@ -180,7 +191,6 @@ object Streaming {
     val query = s.readStream.format("graft-files").schema(eventsSchema)
       .option("fileFormat", "parquet").option("queueName", runId)
       .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("metadataLog", logBackend)
       .load()
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))

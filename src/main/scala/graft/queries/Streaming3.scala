@@ -110,20 +110,15 @@ object Streaming3 {
     * aggregate of the same slice.
     *
     * At 100 TB this is the always-on entity-profile maintainer: state
-    * is per-key scalars + a bounded type map in RocksDB (incremental
-    * checkpoint to the store — the same SST-upload-once discipline as
-    * [[graft.sources.RocksDBMetadataLog]]), and emission is
+    * is per-key scalars + a bounded type map in Spark's RocksDB state
+    * store (incremental checkpoint: each immutable SST is uploaded once
+    * and shared by later versions), and emission is
     * timer-driven, so downstream sees each profile exactly once. */
   def streamTwsProfile(s: SparkSession, dir: String): DataFrame =
       Streaming.withStateShuffle(s, 4) {
     import s.implicits._
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(ProviderKey)
-    // transformWithState requires the RocksDB provider; scoped to this
-    // query start and restored after (the conf is read at query start)
-    s.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // transformWithState requires the RocksDB provider
+    Streaming.withRocksDBStateStore(s) {
       val runId = s"tws${seq.incrementAndGet()}_${System.nanoTime()}"
       val queue = InMemoryQueueRegistry.queue(runId)
       // two real files announced at increasing timestamps -> with
@@ -166,9 +161,6 @@ object Streaming3 {
       } finally query.stop()
       InMemoryQueueRegistry.remove(runId)
       s.table(sinkName).orderBy($"user_id")
-    } finally prevProvider match {
-      case Some(v) => s.conf.set(ProviderKey, v)
-      case None => s.conf.unset(ProviderKey)
     }
   }
   val streamTwsProfileSql: String =
@@ -565,11 +557,7 @@ object Streaming3 {
   def streamShardManifest(s: SparkSession, dir: String): DataFrame =
       Streaming.withStateShuffle(s, 4) {
     import s.implicits._
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(ProviderKey)
-    s.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streaming.withRocksDBStateStore(s) {
       val runId = s"sshard${seq.incrementAndGet()}_${System.nanoTime()}"
       val queue = InMemoryQueueRegistry.queue(runId)
       // RANGE staging: part-00000 carries the low doc_id range, so
@@ -607,9 +595,6 @@ object Streaming3 {
         .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("sum_tokens"),
           min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
         .orderBy($"shard_id")
-    } finally prevProvider match {
-      case Some(v) => s.conf.set(ProviderKey, v)
-      case None => s.conf.unset(ProviderKey)
     }
   }
   /** Oracle: the batch prefix-sum shard plan over the same corpus. */
@@ -655,11 +640,7 @@ object Streaming3 {
   def streamJourneyMarkov(s: SparkSession, dir: String): DataFrame =
       Streaming.withStateShuffle(s, 4) {
     import s.implicits._
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(ProviderKey)
-    s.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streaming.withRocksDBStateStore(s) {
       val runId = s"sjm${seq.incrementAndGet()}_${System.nanoTime()}"
       val queue = InMemoryQueueRegistry.queue(runId)
       val stage = StageCache.dir("stream_journey_markov",
@@ -705,9 +686,6 @@ object Streaming3 {
         .withColumn("p_ppm", expr("(n_transitions * 1000000) div from_total"))
         .select($"from_type", $"to_type", $"n_transitions", $"p_ppm")
         .orderBy($"from_type", $"to_type")
-    } finally prevProvider match {
-      case Some(v) => s.conf.set(ProviderKey, v)
-      case None => s.conf.unset(ProviderKey)
     }
   }
   val streamJourneyMarkovSql: String =
@@ -867,11 +845,7 @@ object Streaming3 {
   def streamPipelineCurate(s: SparkSession, dir: String): DataFrame =
       Streaming.withStateShuffle(s, 4) {
     import s.implicits._
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(ProviderKey)
-    s.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streaming.withRocksDBStateStore(s) {
       val runId = s"spc${seq.incrementAndGet()}_${System.nanoTime()}"
       val queue = InMemoryQueueRegistry.queue(runId)
       val stage = stageDocsRange2(s, dir, "stream_pipeline_curate")
@@ -916,9 +890,6 @@ object Streaming3 {
         .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("sum_tokens"),
           min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
         .orderBy($"shard_id")
-    } finally prevProvider match {
-      case Some(v) => s.conf.set(ProviderKey, v)
-      case None => s.conf.unset(ProviderKey)
     }
   }
   /** The batch composition, replayed: cascade-pass → first-copy-per-

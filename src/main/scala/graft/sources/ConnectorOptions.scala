@@ -33,7 +33,6 @@ final case class ConnectorOptions(
     reprocessDryRun: Boolean,
     sortBatchByTimestamp: Boolean,
     minFilesForFirstBatch: Option[Int],
-    metadataLogBackend: String,
     fetchErrorBudget: Int,
     queueMaxRetries: Int,
     region: String,
@@ -90,7 +89,7 @@ object ConnectorOptions {
   val REPROCESS_DRY_RUN = "reprocessdryrun"
   val SORT_BATCH_BY_TIMESTAMP = "sortbatchbytimestamp"
   val MIN_FILES_FOR_FIRST_BATCH = "minfilesforfirstbatch"
-  val METADATA_LOG = "metadatalog" // "file" (default) | "rocksdb"
+  val METADATA_LOG = "metadatalog" // "file", the only metadata log
   val FETCH_ERROR_BUDGET = "queue.fetcherrorbudget"
   val MAX_RETRIES = "queue.maxretries"
   val REGION = "queue.region"
@@ -99,7 +98,6 @@ object ConnectorOptions {
   val SESSION_TOKEN = "queue.sessiontoken"
 
   val METADATA_LOG_FILE = "file"
-  val METADATA_LOG_ROCKSDB = "rocksdb"
 
   val QUEUE_TYPE_IN_MEMORY = "inmemory"
   val QUEUE_TYPE_SQS = "sqs"
@@ -180,6 +178,12 @@ object ConnectorOptions {
         "reprocessStartBatchId and reprocessEndBatchId must be set together")
     }
 
+    // the key stays owned so a stale setting never reaches the format reader
+    get(METADATA_LOG).map(_.trim.toLowerCase(Locale.ROOT)).foreach { b =>
+      require(b == METADATA_LOG_FILE, s"$METADATA_LOG must be '$METADATA_LOG_FILE', got '$b': " +
+        "the RocksDB metadata log backend was removed and the file log is the only one")
+    }
+
     // anything we don't own passes through to the file format reader
     val ownKeys = Set(FILE_FORMAT, QUEUE_TYPE, QUEUE_NAME, QUEUE_URL, MAX_FILES_PER_TRIGGER,
       MAX_FILE_AGE, PATH_GLOB_FILTER, PARTITION_COLUMNS, BASE_PATH,
@@ -214,12 +218,6 @@ object ConnectorOptions {
         val n = v.trim.toInt
         require(n > 0, s"$MIN_FILES_FOR_FIRST_BATCH must be positive, got $n")
         n
-      },
-      metadataLogBackend = {
-        val b = get(METADATA_LOG).getOrElse(METADATA_LOG_FILE).toLowerCase(Locale.ROOT)
-        require(b == METADATA_LOG_FILE || b == METADATA_LOG_ROCKSDB,
-          s"$METADATA_LOG must be '$METADATA_LOG_FILE' or '$METADATA_LOG_ROCKSDB', got $b")
-        b
       },
       fetchErrorBudget = {
         val n = get(FETCH_ERROR_BUDGET).map(_.trim.toInt).getOrElse(DEFAULT_FETCH_ERROR_BUDGET)

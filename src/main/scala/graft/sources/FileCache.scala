@@ -16,9 +16,11 @@ import scala.jdk.CollectionConverters._
   *  - `purge()` evicts expired entries and returns the count.
   *
   * The cache synchronizes the async queue-consumer threads with the
-  * stream-execution thread; it holds only *pending* work, so its size is
-  * bounded by ingest lag, not data volume — this is what keeps the driver
-  * footprint flat at 100 TB scale.
+  * stream-execution thread. It holds pending files AND processed ones:
+  * `markProcessed` only flags an entry, and `purge()` evicts by age, so
+  * every file admitted within the `maxAgeMs` horizon stays cached. Its
+  * size is bounded by the file arrival rate times the age horizon, not
+  * by ingest lag or total history.
   */
 final class FileCache(maxAgeMs: Long) {
   require(maxAgeMs > 0, s"maxAgeMs must be positive, got $maxAgeMs")

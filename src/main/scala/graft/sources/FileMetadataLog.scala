@@ -1,13 +1,12 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonGenerator}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ArrayNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -33,9 +32,8 @@ trait FileMetadataLog extends AutoCloseable {
   def getFile(path: String): Option[FileEntry]
   /** Remove batches entirely below the horizon; bounded per call. */
   def purgeBefore(horizonMs: Long): Int
-  def commit(): Unit
-  /** Operational counters as one JSON object (latencies, bytes moved,
-    * GC work); logged by the source at every commit so checkpoint-sync
+  /** Operational counters as one JSON object (live batches, compactions,
+    * restore reads); logged by the source at every commit so log
     * behavior is observable at runtime, not only spec-asserted. */
   def metricsJson: String = "{}"
 }
@@ -86,6 +84,9 @@ final class FileBackedMetadataLog(
   import FileBackedMetadataLog._
 
   private val mapper = new ObjectMapper()
+  // the generator must not close its target: closing the createAtomic
+  // stream IS the rename that publishes the file
+  private val jsonFactory = new JsonFactory().disable(JsonGenerator.Feature.AUTO_CLOSE_TARGET)
   private val logDir = new Path(metadataPath, "graft-batches")
   private val fm = CheckpointFileManager.create(logDir, hadoopConf)
   if (!fm.exists(logDir)) fm.mkdirs(logDir)
@@ -106,15 +107,12 @@ final class FileBackedMetadataLog(
   private val purgedIds = mutable.Set[Long]()
   private def purgedFile: Path = new Path(logDir, "_purged")
 
-  private def writePurgedSidecar(): Unit = {
-    val arr = mapper.createArrayNode()
-    purgedIds.toSeq.sorted.foreach(arr.add(_))
-    val out = fm.createAtomic(purgedFile, true)
-    try {
-      out.write(mapper.writeValueAsString(arr).getBytes(StandardCharsets.UTF_8))
-      out.close()
-    } catch { case t: Throwable => out.cancel(); throw t }
-  }
+  private def writePurgedSidecar(): Unit =
+    writeAtomic(purgedFile, overwrite = true) { g =>
+      g.writeStartArray()
+      purgedIds.toSeq.sorted.foreach(id => g.writeNumber(id))
+      g.writeEndArray()
+    }
 
   /** Files opened by the last restore — the observable restart cost. */
   @volatile var lastRestoreFilesRead: Int = 0
@@ -137,7 +135,7 @@ final class FileBackedMetadataLog(
     // refuse spuriously on a purged batch, which is the conservative
     // direction (operator intervention), never silent wrong state.
     if (fm.exists(purgedFile)) {
-      try mapper.readTree(readFileString(purgedFile)).elements().asScala
+      try readJson(purgedFile).elements().asScala
         .foreach(n => purgedIds += n.asLong())
       catch {
         case scala.util.control.NonFatal(e) =>
@@ -225,19 +223,38 @@ final class FileBackedMetadataLog(
     else fm.list(logDir).toSeq.map(_.getPath.getName)
       .filter(_.endsWith(".compact")).flatMap(_.stripSuffix(".compact").toLongOption)
 
-  private def readFileString(p: Path): String = {
+  private def readJson(p: Path): JsonNode = {
     val in = fm.open(p)
+    try mapper.readTree(in) finally in.close()
+  }
+
+  /** Stream one JSON document into `p` through `createAtomic`: the file
+    * becomes visible (the rename in `out.close()`) only after the last
+    * byte is written, and any failure cancels the temp file instead. */
+  private def writeAtomic(p: Path, overwrite: Boolean)(body: JsonGenerator => Unit): Unit = {
+    val out = fm.createAtomic(p, overwrite)
     try {
-      val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-      val sb = new StringBuilder
-      var line = reader.readLine()
-      while (line != null) { sb.append(line); line = reader.readLine() }
-      sb.toString
-    } finally in.close()
+      val g = jsonFactory.createGenerator(out: java.io.OutputStream, JsonEncoding.UTF8)
+      body(g)
+      g.close() // flushes into `out`, which stays open
+      out.close()
+    } catch { case t: Throwable => out.cancel(); throw t }
+  }
+
+  private def writeEntries(g: JsonGenerator, entries: Iterator[FileEntry]): Unit = {
+    g.writeStartArray()
+    entries.foreach { e =>
+      g.writeStartObject()
+      g.writeStringField("path", e.path)
+      g.writeNumberField("timestampMs", e.timestampMs)
+      g.writeNumberField("batchId", e.batchId)
+      g.writeEndObject()
+    }
+    g.writeEndArray()
   }
 
   private def readBatchFile(batchId: Long): Array[FileEntry] =
-    try parseEntries(readFileString(batchFile(batchId)), batchId) catch {
+    try parseEntries(readJson(batchFile(batchId)), batchId) catch {
       case e: GraftSourceException => throw e
       case scala.util.control.NonFatal(e) =>
         throw new GraftCheckpointCorruptException(
@@ -259,12 +276,12 @@ final class FileBackedMetadataLog(
     * by this derivation). Anything else fails with a descriptive
     * versioned error rather than an opaque NPE. */
   private def readCompactFile(compactId: Long): (Seq[Long], Array[FileEntry]) = {
-    val root = try mapper.readTree(readFileString(compactFile(compactId))) catch {
+    val root = try readJson(compactFile(compactId)) catch {
       case scala.util.control.NonFatal(e) =>
         throw new GraftCheckpointCorruptException(
           s"metadata compact file ${compactFile(compactId)} is torn or corrupt (${e.getMessage})", e)
     }
-    def entriesOf(node: com.fasterxml.jackson.databind.JsonNode): Array[FileEntry] =
+    def entriesOf(node: JsonNode): Array[FileEntry] =
       node.elements().asScala.map { n =>
         FileEntry(n.get("path").asText(), n.get("timestampMs").asLong(), n.get("batchId").asLong())
       }.toArray
@@ -292,23 +309,10 @@ final class FileBackedMetadataLog(
     }
   }
 
-  private def parseEntries(json: String, batchId: Long): Array[FileEntry] = {
-    val arr = mapper.readTree(json).asInstanceOf[ArrayNode]
-    arr.elements().asScala.map { n =>
+  private def parseEntries(json: JsonNode, batchId: Long): Array[FileEntry] =
+    json.asInstanceOf[ArrayNode].elements().asScala.map { n =>
       FileEntry(n.get("path").asText(), n.get("timestampMs").asLong(), batchId)
     }.toArray
-  }
-
-  private def toJson(entries: Array[FileEntry]): String = {
-    val arr = mapper.createArrayNode()
-    entries.foreach { e =>
-      val o = arr.addObject()
-      o.put("path", e.path)
-      o.put("timestampMs", e.timestampMs)
-      o.put("batchId", e.batchId)
-    }
-    mapper.writeValueAsString(arr)
-  }
 
   // ---- contract -------------------------------------------------------
   override def add(batchId: Long, entries: Array[FileEntry]): Boolean = synchronized {
@@ -316,13 +320,7 @@ final class FileBackedMetadataLog(
       throw new GraftMetalogAddException(batchId)
     }
     val tagged = entries.map(_.copy(batchId = batchId))
-    val out = fm.createAtomic(batchFile(batchId), false)
-    try {
-      out.write(toJson(tagged).getBytes(StandardCharsets.UTF_8))
-      out.close()
-    } catch {
-      case t: Throwable => out.cancel(); throw t
-    }
+    writeAtomic(batchFile(batchId), overwrite = false)(writeEntries(_, tagged.iterator))
     batches.put(batchId, tagged)
     tagged.foreach(e => fileIndex.put(e.path, e))
     latestBatchId = Some(latestBatchId.fold(batchId)(math.max(_, batchId)))
@@ -331,23 +329,23 @@ final class FileBackedMetadataLog(
   }
 
   /** Fold the live log into `<batchId>.compact`, then drop the folded
-    * per-batch files and superseded compacts. The compact is atomically
-    * renamed into place BEFORE anything is deleted, so a crash at any
-    * point leaves a readable log (at worst both representations exist
-    * and restore prefers the newest compact). */
+    * per-batch files and superseded compacts. The live log is streamed
+    * once into the atomic stream, so a compaction costs the bytes it
+    * writes, with no intermediate tree or string. The compact is
+    * atomically renamed into place BEFORE anything is deleted, so a crash
+    * at any point leaves a readable log (at worst both representations
+    * exist and restore prefers the newest compact). */
   private def compact(batchId: Long): Unit = {
-    val all = batches.values().asScala.flatten.toArray
-    val root = mapper.createObjectNode()
-    root.put("version", CompactFormatVersion)
-    val idsNode = root.putArray("batchIds")
-    batches.keySet().asScala.foreach(idsNode.add(_))
-    root.set[com.fasterxml.jackson.databind.JsonNode](
-      "entries", mapper.readTree(toJson(all)))
-    val out = fm.createAtomic(compactFile(batchId), false)
-    try {
-      out.write(mapper.writeValueAsString(root).getBytes(StandardCharsets.UTF_8))
-      out.close()
-    } catch { case t: Throwable => out.cancel(); throw t }
+    writeAtomic(compactFile(batchId), overwrite = false) { g =>
+      g.writeStartObject()
+      g.writeNumberField("version", CompactFormatVersion)
+      g.writeArrayFieldStart("batchIds")
+      batches.keySet().asScala.foreach(id => g.writeNumber(id))
+      g.writeEndArray()
+      g.writeFieldName("entries")
+      writeEntries(g, batches.values().asScala.iterator.flatMap(_.iterator))
+      g.writeEndObject()
+    }
     listBatchIds().filter(_ <= batchId).foreach(id => fm.delete(batchFile(id)))
     listCompactIds().filter(_ < batchId).foreach(id => fm.delete(compactFile(id)))
     // a completed compaction bounds every future audit gap to ids above
@@ -409,11 +407,6 @@ final class FileBackedMetadataLog(
     }
     removed
   }
-
-  /** Writes are already durable per-add (atomic rename); commit is a
-    * no-op, kept for contract parity (reference: RocksDBS3SourceLog
-    * commit logs metrics only). */
-  override def commit(): Unit = ()
 
   override def metricsJson: String =
     s"""{"batches":${batches.size()},"compactions":$compactions,""" +

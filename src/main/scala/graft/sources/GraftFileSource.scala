@@ -47,12 +47,19 @@ class GraftFileSource(
   private val hadoopConf = sqlContext.sparkContext.hadoopConfiguration
   private val jsonMapper = new ObjectMapper()
 
-  private val metadataLog: FileMetadataLog = options.metadataLogBackend match {
-    case ConnectorOptions.METADATA_LOG_ROCKSDB =>
-      new RocksDBMetadataLog(metadataPath, hadoopConf)
-    case _ =>
-      new FileBackedMetadataLog(metadataPath, hadoopConf)
+  // A checkpoint written by the removed RocksDB log holds its state under
+  // `rocksdb/`: an empty file log there would restore batch -1 under
+  // Spark's committed offset, and getBatch would silently return nothing
+  // for files already acked from the queue.
+  locally {
+    val legacy = new Path(metadataPath, "rocksdb")
+    if (legacy.getFileSystem(hadoopConf).exists(legacy)) {
+      throw new GraftSourceException(s"metadata path $metadataPath holds a rocksdb/ directory " +
+        "written by the removed RocksDB metadata log backend; this build reads only the file " +
+        "log, so restart from a new checkpoint location")
+    }
   }
+  private val metadataLog: FileMetadataLog = new FileBackedMetadataLog(metadataPath, hadoopConf)
   private val fileCache = new FileCache(options.maxFileAgeMs)
   private val validator = new FileValidator(fileCache, metadataLog, options.pathGlobFilter)
 
@@ -315,8 +322,8 @@ class GraftFileSource(
       : java.util.Map[String, String] = {
     val m = new java.util.LinkedHashMap[String, String]()
     queueClient.metrics.snapshot.foreach { case (k, v) => m.put(s"queue.$k", v.toString) }
-    // the log's metrics are backend-shaped (file: batches/compactions;
-    // rocksdb: checkpoint/SST/GC work) — flatten its flat-JSON fields
+    // the log's metrics (batches, compactions, restore reads) are one
+    // flat JSON object — flatten its fields
     GraftFileSource.flatJsonFields(metadataLog.metricsJson)
       .foreach { case (k, v) => m.put(s"log.$k", v) }
     m.put("pendingFiles", fileCache.size.toString)
@@ -333,11 +340,11 @@ class GraftFileSource(
 }
 
 object GraftFileSource {
-  /** Fields of a FLAT one-level JSON object (the shape both metadata-log
-    * `metricsJson` implementations emit: string keys, numeric values) as
-    * key -> rendered-value pairs, in document order. Not a general JSON
-    * parser — nested objects/arrays would be surfaced as raw text, which
-    * no current backend produces. */
+  /** Fields of a FLAT one-level JSON object (the shape the metadata log's
+    * `metricsJson` emits: string keys, numeric values) as key ->
+    * rendered-value pairs, in document order. Not a general JSON parser —
+    * nested objects/arrays would be surfaced as raw text, which the log
+    * never produces. */
   private[sources] def flatJsonFields(json: String): Seq[(String, String)] = {
     val Field = """"([^"]+)"\s*:\s*([^,{}\[\]]+)""".r
     Field.findAllMatchIn(json).map(m => m.group(1) -> m.group(2).trim).toSeq

@@ -251,6 +251,25 @@ class Round2OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("q42 sketch bound keeps the NULL event_type group, like the fused aggregate") {
+    import spark.implicits._
+    val ev = Seq[(Long, Long, String)]((1L, 10L, "click"), (2L, 11L, "click"),
+      (3L, 10L, null), (4L, 12L, null), (5L, 13L, "view"))
+      .toDF("event_id", "user_id", "event_type")
+    val fused = ev.groupBy($"event_type")
+      .agg(countDistinct($"user_id").as("exact_users"), countDistinct($"event_id").as("exact_events"),
+        approx_count_distinct($"user_id", 0.02).as("au"), approx_count_distinct($"event_id", 0.02).as("ae"))
+      .select($"event_type", $"exact_users", $"exact_events",
+        (abs($"au" - $"exact_users") <= $"exact_users" * 0.05).as("users_in_bound"),
+        (abs($"ae" - $"exact_events") <= $"exact_events" * 0.05).as("events_in_bound"))
+      .orderBy($"event_type")
+    val split = Relational2.q42SketchBoundOf(ev)
+    assert(split.columns.toSeq == fused.columns.toSeq)
+    val got = split.collect().toSeq
+    assert(got == fused.collect().toSeq)
+    assert(got.exists(_.isNullAt(0)), s"NULL event_type group dropped: $got")
+  }
+
   test("approx quantiles land inside the exact p±0.01 discrete bracket") {
     // spec-time replica of the q51_quantile_bound oracle gate: every GK
     // estimate (rank error <= n/10000) must sit between the exact

@@ -26,6 +26,12 @@ class ConnectorOptionsSpec extends AnyFunSuite {
     assert(ConnectorOptions(Map("fileFormat" -> "csv", "queueUrl" -> "u")).queueName == "u")
   }
 
+  test("metadataLog: file is accepted, the removed rocksdb backend fails at parse naming it") {
+    assert(!ConnectorOptions(base + ("metadataLog" -> "file")).formatOptions.contains("metadatalog"))
+    val e = intercept[IllegalArgumentException](ConnectorOptions(base + ("metadataLog" -> "rocksdb")))
+    assert(e.getMessage.contains("RocksDB") && e.getMessage.contains("removed"), e.getMessage)
+  }
+
   test("unsupported queue type throws") {
     intercept[GraftUnsupportedQueueTypeException](
       ConnectorOptions(base + ("queueType" -> "kafka")))

@@ -1,9 +1,50 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.io.{FilterOutputStream, IOException}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Checkpoint file manager whose atomic `.compact` streams throw once
+  * `FailingCompactFileManager.LimitKey` bytes have been written: a crash
+  * in the middle of writing a compact. Installed through Spark's
+  * `spark.sql.streaming.checkpointFileManagerClass` Hadoop conf key. */
+class FailingCompactFileManager(path: Path, conf: Configuration)
+    extends FileContextBasedCheckpointFileManager(path, conf) {
+  private val limit = conf.getLong(FailingCompactFileManager.LimitKey, Long.MaxValue)
+
+  override def createAtomic(p: Path, overwrite: Boolean): CancellableFSDataOutputStream = {
+    val inner = super.createAtomic(p, overwrite)
+    if (!p.getName.endsWith(".compact")) inner
+    else {
+      val failing = new FilterOutputStream(inner) {
+        private var written = 0L
+        override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+          val n = math.min(len.toLong, limit - written).toInt
+          inner.write(b, off, n)
+          written += n
+          if (n < len) throw new IOException(s"injected failure after $written bytes of $p")
+        }
+      }
+      new CancellableFSDataOutputStream(failing) {
+        override def cancel(): Unit = inner.cancel()
+        override def close(): Unit = inner.close()
+      }
+    }
+  }
+}
+
+object FailingCompactFileManager {
+  val LimitKey = "graft.test.compactFailAfterBytes"
+}
 
 class FileMetadataLogSpec extends AnyFunSuite {
   private def withLog(f: (FileBackedMetadataLog, String) => Unit): Unit = {
@@ -93,6 +134,57 @@ class FileMetadataLogSpec extends AnyFunSuite {
     assert(log2.get(0, 4).length == 5, "range read must see all five batches")
     assert(log2.getLatestBatchId.contains(4L))
     log2.close(); log.close()
+  }
+
+  test("compact bytes are the v2 JSON that earlier builds write and read") {
+    val dir = Files.createTempDirectory("graft-metalog").toString
+    val log = new FileBackedMetadataLog(dir, new Configuration())
+    log.add(0, entries(0, "s3://b/dt=1/a.parquet" -> 100L, "s3://b/dt=1/b \"q\".parquet" -> 101L))
+    log.add(1, Array.empty[FileEntry])
+    log.add(2, entries(2, "s3://b/dt=2/café.parquet" -> 1700000000000L))
+    log.add(3, entries(3, "s3://b/dt=3/c.parquet" -> 103L))
+    log.add(4, entries(4, "s3://b/dt=4/d.parquet" -> 104L))
+    log.close()
+    val golden =
+      """{"version":2,"batchIds":[0,1,2,3,4],"entries":[""" +
+        """{"path":"s3://b/dt=1/a.parquet","timestampMs":100,"batchId":0},""" +
+        """{"path":"s3://b/dt=1/b \"q\".parquet","timestampMs":101,"batchId":0},""" +
+        """{"path":"s3://b/dt=2/café.parquet","timestampMs":1700000000000,"batchId":2},""" +
+        """{"path":"s3://b/dt=3/c.parquet","timestampMs":103,"batchId":3},""" +
+        """{"path":"s3://b/dt=4/d.parquet","timestampMs":104,"batchId":4}]}"""
+    val got = Files.readAllBytes(Paths.get(dir, "graft-batches", "4.compact"))
+    assert(got.toSeq == golden.getBytes(StandardCharsets.UTF_8).toSeq,
+      new String(got, StandardCharsets.UTF_8))
+  }
+
+  test("a compact that fails mid-write never becomes visible; restore reads the batch files") {
+    val dir = Files.createTempDirectory("graft-metalog").toString
+    val failing = new Configuration()
+    failing.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[FailingCompactFileManager].getName)
+    failing.setLong(FailingCompactFileManager.LimitKey, 4096L)
+    val log = new FileBackedMetadataLog(dir, failing)
+    // 5 x 100 entries: the compact is far larger than the 4 KiB the
+    // stream accepts, so the failure lands partway through the write
+    def batch(i: Long) = entries(i, (0 until 100).map(j => s"s3://b/$i/part-$j.parquet" -> (1000L + i)): _*)
+    (0L until 4L).foreach(i => log.add(i, batch(i)))
+    val e = intercept[IOException](log.add(4L, batch(4L)))
+    assert(e.getMessage.contains("injected failure"), e.getMessage)
+    log.close()
+    val names = Files.list(Paths.get(dir, "graft-batches")).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    assert(!names.exists(_.contains(".compact")), s"a compact or its temp file is visible: $names")
+    assert((0 to 4).forall(i => names(i.toString)), s"a per-batch file is missing: $names")
+
+    val restored = new FileBackedMetadataLog(dir, new Configuration())
+    try {
+      assert(restored.getLatestBatchId.contains(4L))
+      assert(restored.lastRestoreFilesRead == 5)
+      (0L to 4L).foreach { i =>
+        assert(restored.get(i).get.map(_.path).toSeq == batch(i).map(_.path).toSeq, s"batch $i")
+        assert(!restored.isNewFile(s"s3://b/$i/part-99.parquet", 0L))
+      }
+    } finally restored.close()
   }
 
   test("compaction interleaves with purge: purged batches stay gone from the live log") {
@@ -227,7 +319,6 @@ class FileMetadataLogSpec extends AnyFunSuite {
           maxSeen = math.max(maxSeen, n)
         }
       }
-      import scala.jdk.CollectionConverters._
       // a purge AFTER the last compaction may leave ids below the compact
       // until the next one runs — the law is that each completed
       // compaction drops every id it covers. Run batches up to the next

@@ -18,7 +18,6 @@ class FileValidatorSpec extends AnyFunSuite {
     def getFile(path: String): Option[FileEntry] =
       known.get(path).map(ts => FileEntry(path, ts, 0))
     def purgeBefore(horizonMs: Long): Int = 0
-    def commit(): Unit = ()
     def close(): Unit = ()
   }
 

@@ -213,6 +213,17 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     src.stop()
   }
 
+  test("a checkpoint left by the removed RocksDB log fails construction instead of restoring empty") {
+    val (qn, _) = freshQueue()
+    val metadataPath = Files.createTempDirectory("graft-legacy-rocksdb")
+    Files.createDirectories(metadataPath.resolve("rocksdb").resolve("SSTs"))
+    val e = intercept[GraftSourceException](new GraftFileSource(spark.sqlContext,
+      metadataPath.toString, schema, Map("fileformat" -> "json", "queuename" -> qn)))
+    assert(e.getMessage.contains("rocksdb/") && e.getMessage.contains("removed"), e.getMessage)
+    assert(!Files.exists(metadataPath.resolve("graft-batches")),
+      "the check must run before the file log is built")
+  }
+
   test("orc and text file formats stream through the same source") {
     import spark.implicits._
     // orc
@@ -302,24 +313,6 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(withRows.last.json.contains("queue.receiveMessage"), withRows.last.json)
     } finally query.stop()
     assert(spark.table("metricsout").count() == 2)
-  }
-
-  test("progress metrics on the rocksdb log backend carry checkpoint work") {
-    val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
-    announce(q, writeJson(dir, "r1.json", Seq(1 -> "ada")))
-    val query = streamDF(qn, Map("metadataLog" -> "rocksdb"))
-      .writeStream.format("memory").queryName("metricsrocks")
-      .outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      val withRows = query.recentProgress.filter(_.numInputRows > 0)
-      assert(withRows.nonEmpty)
-      val m = withRows.last.sources.head.metrics
-      assert(m.get("log.adds") != null && m.get("log.adds").toLong >= 1,
-        s"rocksdb log metrics missing: $m")
-      assert(m.get("log.checkpoints") != null, s"$m")
-    } finally query.stop()
   }
 
   test("schema is mandatory") {

@@ -72,8 +72,7 @@ class SqsE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cross-account/region queue: distinct region + credentials, rocksdb log " +
     "(reference S3ConnectorSourceCrossAccountItSuite, hermetic)") {
     // the queue lives in another account and region than any default: its
-    // own stub with its own credentials, eu-west-1 signature scope, and the
-    // RocksDB metadata-log variant the reference's cross-account suite runs
+    // own stub with its own credentials and eu-west-1 signature scope
     val xStub = new SqsStubServer(Map("AKIDXACCT" -> "xacct-secret"), region = "eu-west-1")
     try {
       val dir = Files.createTempDirectory("graft-sqs-xacct")
@@ -91,7 +90,6 @@ class SqsE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
         .option("queue.secretAccessKey", "xacct-secret")
         .option("queue.longPollingWaitTimeSeconds", "0")
         .option("queueFetchWaitTimeoutSeconds", "5")
-        .option("metadataLog", "rocksdb")
         .load()
       val q = df.writeStream.format("memory").queryName("sqsxacct").outputMode("append").start()
       try q.processAllAvailable() finally q.stop()

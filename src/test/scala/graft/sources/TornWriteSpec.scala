@@ -5,15 +5,15 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Torn-write fault injection on both metadata logs (reference
+/** Torn-write fault injection on the metadata log (reference
   * discipline: RocksDBFileManager's atomic-rename + recover-previous-
   * version handling, RocksDBFileManager.scala:244-312,435-466).
   *
   * `createAtomic` makes a torn FINAL file unreachable on rename-atomic
   * filesystems — a mid-write kill leaves only an invisible temp file —
   * but object stores without atomic rename can tear the renamed artifact
-  * itself. These specs inject exactly that: truncate a compact file /
-  * checkpoint zip in place and demand restore either reconstructs the
+  * itself. These specs inject exactly that: truncate a compact or batch
+  * file in place and demand restore either reconstructs the
   * pre-crash state from older intact artifacts or fails descriptively,
   * never continues from silently-partial state (which would re-admit
   * already-ingested files at the source).
@@ -28,8 +28,6 @@ class TornWriteSpec extends AnyFunSuite {
     assert(bytes.length > keep, s"fixture too small to tear: $p (${bytes.length} bytes)")
     Files.write(p, bytes.take(keep), StandardOpenOption.TRUNCATE_EXISTING)
   }
-
-  // ------------------------------------------------ FileBackedMetadataLog
 
   test("file log: torn newest compact falls back to the previous compact + full tail") {
     val dir = Files.createTempDirectory("graft-torn").toString
@@ -155,170 +153,5 @@ class TornWriteSpec extends AnyFunSuite {
     val restored = new FileBackedMetadataLog(dir, new Configuration(), compactInterval = 3)
     try assert(restored.getLatestBatchId.contains(3L))
     finally restored.close()
-  }
-
-  // -------------------------------------------------- RocksDBMetadataLog
-
-  test("rocksdb log: torn newest zip restores the previous retained version and keeps writing") {
-    val dir = Files.createTempDirectory("graft-torn-rdb").toString
-    val log = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 5)
-    (0L to 2L).foreach(i => log.add(i, entries(i, s"p$i" -> (100L + i))))
-    log.close() // one checkpoint version per add: 1.zip, 2.zip, 3.zip
-    truncate(Paths.get(dir, "rocksdb", "3.zip"), 8) // torn mid-write
-
-    val restored = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 5)
-    try {
-      // version 3's commit never completed; version 2 is the durable state
-      assert(restored.getLatestBatchId.contains(1L),
-        s"expected the previous version's latest batch, got ${restored.getLatestBatchId}")
-      assert(restored.get(0).exists(_.head.path == "p0"))
-      assert(restored.get(1).exists(_.head.path == "p1"))
-      // the replayed batch re-adds cleanly and the new commit overwrites
-      // the torn zip atomically
-      restored.add(2L, entries(2L, "p2" -> 102L))
-      assert(restored.getLatestBatchId.contains(2L))
-    } finally restored.close()
-
-    val again = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 5)
-    try assert(again.getLatestBatchId.contains(2L), "re-written version 3 must restore")
-    finally again.close()
-  }
-
-  test("rocksdb log: GC right after a torn-newest fallback skips the torn zip instead of dying") {
-    val dir = Files.createTempDirectory("graft-torn-rdb").toString
-    val log = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 2)
-    (0L to 3L).foreach(i => log.add(i, entries(i, s"p$i" -> (100L + i))))
-    log.close() // versions 1..4
-    truncate(Paths.get(dir, "rocksdb", "4.zip"), 8)
-
-    val restored = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 2)
-    try {
-      assert(restored.getLatestBatchId.contains(2L))
-      // restore deliberately left torn 4.zip on disk; GC's retained window
-      // [3.zip, 4.zip] includes it — the old behavior threw an uncaught
-      // ZipException out of commit() here
-      restored.commit()
-      restored.add(3L, entries(3L, "p3" -> 103L)) // re-writes 4.zip atomically
-      assert(restored.getLatestBatchId.contains(3L))
-    } finally restored.close()
-
-    val again = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 2)
-    try {
-      assert(again.getLatestBatchId.contains(3L), "re-written version 4 must restore")
-      (0L to 3L).foreach(i => assert(again.get(i).exists(_.head.path == s"p$i")))
-    } finally again.close()
-  }
-
-  test("rocksdb log: a torn reused SST referenced by intact zips fails descriptively naming it") {
-    val dir = Files.createTempDirectory("graft-torn-rdb").toString
-    val log = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 10)
-    (0L to 5L).foreach(i => log.add(i, entries(i, s"p$i" -> (100L + i))))
-    log.close()
-    import scala.jdk.CollectionConverters._
-    val ssts = Files.list(Paths.get(dir, "rocksdb", "SSTs")).iterator().asScala.toSeq
-    assert(ssts.nonEmpty, "fixture must have produced at least one SST sidecar")
-    // every version that references a torn SST must be rejected by the
-    // size audit; with all sidecars torn no version is restorable
-    ssts.foreach(truncate(_, 4))
-    val e = intercept[GraftSourceException](
-      new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 10))
-    assert(e.getMessage.contains("no readable checkpoint"), s"not descriptive: ${e.getMessage}")
-    assert(e.getMessage.contains("SST") && e.getMessage.contains("torn"),
-      s"must blame a torn SST: ${e.getMessage}")
-    assert(ssts.exists(s => e.getMessage.contains(s.getFileName.toString)),
-      s"must name the damaged sidecar file: ${e.getMessage}")
-  }
-
-  /** Rewrite one entry of a checkpoint zip with same-length garbage —
-    * content rot, not truncation: the zip itself stays structurally valid
-    * (fresh CRCs), so extraction succeeds and only RocksDB.open can
-    * notice. */
-  private def rotZipEntry(zipPath: Path, namePrefix: String): Unit = {
-    val contents = scala.collection.mutable.LinkedHashMap[String, Array[Byte]]()
-    val zin = new java.util.zip.ZipInputStream(Files.newInputStream(zipPath))
-    try {
-      var e = zin.getNextEntry
-      while (e != null) { contents(e.getName) = zin.readAllBytes(); e = zin.getNextEntry }
-    } finally zin.close()
-    val victim = contents.keys.find(_.startsWith(namePrefix))
-    assert(victim.isDefined, s"no $namePrefix* entry in $zipPath: ${contents.keys}")
-    contents(victim.get) = Array.fill[Byte](contents(victim.get).length)(0x5A)
-    val zout = new java.util.zip.ZipOutputStream(Files.newOutputStream(zipPath))
-    try contents.foreach { case (name, bytes) =>
-      zout.putNextEntry(new java.util.zip.ZipEntry(name)); zout.write(bytes); zout.closeEntry()
-    } finally zout.close()
-  }
-
-  test("rocksdb log: a version that extracts cleanly but won't open falls back, not hard-fails") {
-    val dir = Files.createTempDirectory("graft-torn-rdb").toString
-    val log = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 5)
-    (0L to 2L).foreach(i => log.add(i, entries(i, s"p$i" -> (100L + i))))
-    log.close() // versions 1..3
-    // rot version 3's MANIFEST in place: same length, valid zip, garbage
-    // content — the SST size audit can't see it and extraction succeeds,
-    // so the failure only surfaces at RocksDB.open
-    rotZipEntry(Paths.get(dir, "rocksdb", "3.zip"), "MANIFEST")
-
-    val restored = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 5)
-    try {
-      // version 2 is the newest version that actually opens
-      assert(restored.getLatestBatchId.contains(1L),
-        s"expected fallback to version 2's state, got ${restored.getLatestBatchId}")
-      assert(restored.get(0).exists(_.head.path == "p0"))
-      assert(restored.get(1).exists(_.head.path == "p1"))
-      restored.add(2L, entries(2L, "p2" -> 102L)) // re-writes 3.zip atomically
-      assert(restored.getLatestBatchId.contains(2L))
-    } finally restored.close()
-
-    val again = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 5)
-    try assert(again.getLatestBatchId.contains(2L), "re-written version 3 must restore")
-    finally again.close()
-  }
-
-  test("rocksdb log: GC aborts when an OLDER retained zip is unreadable, deleting nothing") {
-    val dir = Files.createTempDirectory("graft-torn-rdb").toString
-    val log = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 2)
-    (0L to 3L).foreach(i => log.add(i, entries(i, s"p$i" -> (100L + i))))
-    log.close() // versions 1..4, retained window [3, 4]
-    // tear the OLDER retained zip: from GC's seat this is indistinguishable
-    // from a transient DFS read failure on a perfectly restorable version —
-    // deleting the SSTs it references would be silent data loss
-    truncate(Paths.get(dir, "rocksdb", "3.zip"), 8)
-
-    import scala.jdk.CollectionConverters._
-    def ls(p: Path): Set[String] =
-      Files.list(p).iterator().asScala.map(_.getFileName.toString).toSet
-    val zipsBefore = ls(Paths.get(dir, "rocksdb"))
-    val sstsBefore = ls(Paths.get(dir, "rocksdb", "SSTs"))
-    assert(sstsBefore.nonEmpty, "fixture must have produced SST sidecars")
-
-    val restored = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 2)
-    try {
-      assert(restored.getLatestBatchId.contains(3L)) // newest zip is intact
-      restored.commit() // the GC pass: must abort, not guess
-      assert(ls(Paths.get(dir, "rocksdb")) == zipsBefore,
-        "aborted GC must delete no version zips")
-      assert(ls(Paths.get(dir, "rocksdb", "SSTs")) == sstsBefore,
-        "aborted GC must delete no SSTs")
-      val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(restored.metricsJson)
-      assert(m.get("gcAborts").asLong() == 1, s"abort not counted: ${restored.metricsJson}")
-      assert(m.get("sstsDeleted").asLong() == 0 && m.get("versionsDeleted").asLong() == 0)
-      restored.add(4L, entries(4L, "p4" -> 104L)) // and the log keeps writing
-      assert(restored.getLatestBatchId.contains(4L))
-    } finally restored.close()
-  }
-
-  test("rocksdb log: every zip torn fails descriptively with the version list") {
-    val dir = Files.createTempDirectory("graft-torn-rdb").toString
-    val log = new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 5)
-    (0L to 1L).foreach(i => log.add(i, entries(i, s"p$i" -> (100L + i))))
-    log.close()
-    import scala.jdk.CollectionConverters._
-    Files.list(Paths.get(dir, "rocksdb")).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".zip"))
-      .foreach(z => truncate(z, 8))
-    val e = intercept[GraftSourceException](
-      new RocksDBMetadataLog(dir, new Configuration(), minVersionsToRetain = 5))
-    assert(e.getMessage.contains("no readable checkpoint"), s"not descriptive: ${e.getMessage}")
   }
 }
