@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.timestamp_micros
+import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -454,20 +455,12 @@ object PerfHarness {
       }
     }
     def settled(): (Long, Long) = {
-      // the listener bus posts asynchronously and can pause mid-backlog
-      // for hundreds of ms after a many-job op; a short stability window
-      // mis-attributes late stages to the NEXT rep (observed: a 12 MB
-      // reading for a pipeline that demonstrably shuffles 100+ MB).
-      // Floor-wait 500 ms, then require a full second of silence.
-      Thread.sleep(500)
-      var cur = (sw.sum(), sr.sum()); var stableMs = 0; var waited = 0
-      while (stableMs < 1000 && waited < 20000) {
-        Thread.sleep(200); waited += 200
-        val next = (sw.sum(), sr.sum())
-        if (next == cur) stableMs += 200 else stableMs = 0
-        cur = next
-      }
-      cur
+      // the listener bus posts asynchronously and can lag a many-job op
+      // by hundreds of ms; reading early mis-attributes late stages to
+      // the NEXT rep (observed: a 12 MB reading for a pipeline that
+      // demonstrably shuffles 100+ MB)
+      GraftShims.drainListenerBus(spark.sparkContext, Bench.DrainTimeoutMs)
+      (sw.sum(), sr.sum())
     }
     spark.sparkContext.addSparkListener(listener)
     // every temp dir this run mints (per-rep cluster-map outputs, the
@@ -639,15 +632,8 @@ object PerfHarness {
       }
     }
     def settled(): Long = {
-      Thread.sleep(500)
-      var cur = sw.sum(); var stableMs = 0; var waited = 0
-      while (stableMs < 1000 && waited < 20000) {
-        Thread.sleep(200); waited += 200
-        val next = sw.sum()
-        if (next == cur) stableMs += 200 else stableMs = 0
-        cur = next
-      }
-      cur
+      GraftShims.drainListenerBus(spark.sparkContext, Bench.DrainTimeoutMs)
+      sw.sum()
     }
     val nDelta = math.max(1L, (nBase * deltaFrac).toLong)
     val nTotal = nBase + nDelta * nDeltas

@@ -16,16 +16,15 @@ object SparkEntry {
     Relational.q03TopRevenue(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++
-      Streaming.queries ++ Streaming2.queries ++ Streaming3.queries ++
-      Streaming4.queries ++
-      Dedup.queries ++ Similarity.queries ++ TextAnalysis.queries ++
-      Multimodal.queries ++ PipelineOps.queries ++ Clustering.queries ++
-      Curation.queries ++ Dedup2.queries ++ Curation2.queries ++
-      Curation3.queries ++ Curation4.queries ++ Curation5.queries ++
-      Curation6.queries ++ Curation7.queries ++ Sampling.queries ++
-      Sketches.queries ++ Layout.queries ++ Relational3.queries ++ Graph.queries
+  def queries: Map[String, (SparkSession, String) => DataFrame] = mergeUnique(
+    Relational.queries, Relational2.queries,
+    Streaming.queries, Streaming2.queries, Streaming3.queries, Streaming4.queries,
+    Dedup.queries, Similarity.queries, TextAnalysis.queries,
+    Multimodal.queries, PipelineOps.queries, Clustering.queries,
+    Curation.queries, Dedup2.queries, Curation2.queries,
+    Curation3.queries, Curation4.queries, Curation5.queries,
+    Curation6.queries, Curation7.queries, Sampling.queries,
+    Sketches.queries, Layout.queries, Relational3.queries, Graph.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
@@ -39,14 +38,22 @@ object SparkEntry {
     * joined against the exact answer with the error bound asserted in
     * SQL). A `no_oracle` on those two rows is the expected verdict, not
     * a gap. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Relational2.oracles ++
-      Streaming.oracles ++ Streaming2.oracles ++ Streaming3.oracles ++
-      Streaming4.oracles ++
-      Dedup.oracles ++ Similarity.oracles ++ TextAnalysis.oracles ++
-      Multimodal.oracles ++ PipelineOps.oracles ++ Clustering.oracles ++
-      Curation.oracles ++ Dedup2.oracles ++ Curation2.oracles ++
-      Curation3.oracles ++ Curation4.oracles ++ Curation5.oracles ++
-      Curation6.oracles ++ Curation7.oracles ++ Sampling.oracles ++
-      Sketches.oracles ++ Layout.oracles ++ Relational3.oracles ++ Graph.oracles
+  def oracleSql: Map[String, String] = mergeUnique(
+    Relational.oracles, Relational2.oracles,
+    Streaming.oracles, Streaming2.oracles, Streaming3.oracles, Streaming4.oracles,
+    Dedup.oracles, Similarity.oracles, TextAnalysis.oracles,
+    Multimodal.oracles, PipelineOps.oracles, Clustering.oracles,
+    Curation.oracles, Dedup2.oracles, Curation2.oracles,
+    Curation3.oracles, Curation4.oracles, Curation5.oracles,
+    Curation6.oracles, Curation7.oracles, Sampling.oracles,
+    Sketches.oracles, Layout.oracles, Relational3.oracles, Graph.oracles)
+
+  /** Union of the per-module maps. `++` would silently keep the later of
+    * two entries under one name, so a name defined twice is an error that
+    * lists every such name. */
+  private[graft] def mergeUnique[V](parts: Map[String, V]*): Map[String, V] = {
+    val dups = parts.flatMap(_.keys).groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }
+    require(dups.isEmpty, s"names defined more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    parts.reduce(_ ++ _)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftShims
 
 /** Dev tool: steady-state timing of a query subset without the full
   * [[Bench]] sweep. `runMain graft.TimeQueries <sfDir> <n1,n2,...> [reps]`
@@ -40,19 +41,10 @@ object TimeQueries {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(1)
     }
     spark.sparkContext.addSparkListener(listener)
-    // the listener bus posts async (same drain discipline as
-    // PerfHarness.settled, shortened: this is a dev tool); returns the
-    // settled sum
+    // the listener bus posts async: drain it, then read the settled sum
     def drainStable(): Long = {
-      Thread.sleep(300)
-      var cur = shufW.sum(); var stableMs = 0; var waited = 0
-      while (stableMs < 600 && waited < 10000) {
-        Thread.sleep(200); waited += 200
-        val next = shufW.sum()
-        if (next == cur) stableMs += 200 else stableMs = 0
-        cur = next
-      }
-      cur
+      GraftShims.drainListenerBus(spark.sparkContext, Bench.DrainTimeoutMs)
+      shufW.sum()
     }
     try names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))

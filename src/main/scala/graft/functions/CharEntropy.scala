@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object CharEntropy {
 
   /** ln(c)·10⁶ rounded half-up — the micro-nat quantization shared with
-    * the SQL spellings (`cast(round(ln(c) * 1e6) as bigint)`). Inputs
+    * [[Parity.microNats]] and its DuckDB twin. Inputs
     * are ≥ 1 so `Math.round` (floor(x+0.5)) IS half-up; ln values never
     * land on exact .5 micro-nats, so Spark/DuckDB decimal rounding and
     * this agree. */

@@ -30,7 +30,7 @@ object SimHash {
   }
 
   /** First 8 md5 bytes, big-endian — the bit pattern DuckDB gets from
-    * `CAST(concat('0x', substring(md5(tok), 1, 16)) AS UBIGINT)`. */
+    * [[Parity.md5U64Sql]]. */
   def tokenHash64(bytes: Array[Byte]): Long = {
     val d = md5.get()
     d.reset()

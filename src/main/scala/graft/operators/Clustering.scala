@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Parity.dotSql
 import graft.functions.VectorOps
 import graft.queries.Tables
 
@@ -110,9 +111,6 @@ object Clustering {
   }
 
   // ------------------------------------------------------ oracle SQL
-  private[operators] def dotSql(a: String, b: String) =
-    s"list_sum(list_transform(range(1, len($a)+1), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
   /** CTE chain replaying `iters` fixed-point Lloyd rounds over `emb$tag`
     * (columns vec_id, embedding), ending in centroid table `cent${iters}$tag`
     * and assignment view `fin$tag` (vec_id, embedding, k, s). */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{md5Key, md5KeySql, ngrams, ngramsSql}
 import graft.functions.TextFunctions._
 import graft.queries.Tables
 
@@ -16,26 +17,6 @@ import graft.queries.Tables
   * produce bit-identical values.
   */
 object Curation {
-
-  /** Contiguous n-grams of a token array as strings. Guarded: sequence()
-    * with a stop below its start counts DOWN, so a short doc must yield
-    * an empty array, not reversed garbage. */
-  private[graft] def ngrams(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array())
-
-  /** 60-bit key of an n-gram, computable identically in DuckDB: at scale
-    * the join/shuffle carries 8 bytes instead of the gram text (the
-    * standard trick for contamination checks over TB-scale corpora); a
-    * collision would produce the same spurious pair on both engines, so
-    * the gate stays consistent, and at 2^60 the odds are irrelevant. */
-  private[graft] def gramKey(g: Column): Column =
-    conv(substring(md5(g), 1, 15), 16, 10).cast("long")
-
-  private[graft] def gramKeySql(g: String): String =
-    s"CAST(concat('0x', substring(md5($g), 1, 15)) AS BIGINT)"
 
   // ----------------------------------------------------- decontamination
   private[graft] val ContamN = 8 // gram order; 13 is standard, docs here are short
@@ -73,7 +54,7 @@ object Curation {
       .filter(size($"t") >= ContamN)
     def explodeGrams(df: DataFrame): DataFrame = df
       .select($"doc_id", explode(ngrams($"t", ContamN)).as("g"))
-      .select($"doc_id", gramKey($"g").as("gk"))
+      .select($"doc_id", md5Key($"g", 15).as("gk"))
       .distinct()
     val bench = explodeGrams(docs.filter(isEval))
       .withColumnRenamed("doc_id", "bench_id")
@@ -95,10 +76,9 @@ object Curation {
          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
          |), grams AS (
          |  SELECT DISTINCT doc_id,
-         |    ${gramKeySql("g")} AS gk
+         |    ${md5KeySql("g", 15)} AS gk
          |  FROM (SELECT doc_id,
-         |          unnest(list_transform(range(1, len(t) - ${ContamN - 2}),
-         |                 i -> array_to_string(t[i:i+${ContamN - 1}], ' '))) AS g
+         |          unnest(${ngramsSql("t", ContamN)}) AS g
          |        FROM toks WHERE len(t) >= $ContamN)
          |), hits AS (
          |  SELECT b.doc_id AS bench_id,
@@ -154,7 +134,7 @@ object Curation {
       .filter(size($"t") >= ContamN)
     val bench = docs.filter(isEval)
       .select($"doc_id", explode(ngrams($"t", ContamN)).as("g"))
-      .select($"doc_id", gramKey($"g").as("gk"))
+      .select($"doc_id", md5Key($"g", 15).as("gk"))
       .distinct()
       .withColumnRenamed("doc_id", "bench_id")
     val bloom = bench
@@ -164,7 +144,7 @@ object Curation {
       .head().getAs[Array[Byte]](0)
     val corpusGrams = docs.filter(!isEval)
       .select($"doc_id", explode(ngrams($"t", ContamN)).as("g"))
-      .select($"doc_id", gramKey($"g").as("gk"))
+      .select($"doc_id", md5Key($"g", 15).as("gk"))
     val probe = // empty eval slice => nothing can be contaminated
       if (bloom == null) lit(false)
       else GraftShims.column(BloomFilterMightContain(
@@ -222,8 +202,7 @@ object Curation {
       raw"""SELECT doc_id, CAST(MAX(c) AS DOUBLE) / SUM(c) AS $out
            |  FROM (SELECT doc_id, g, COUNT(*) AS c
            |        FROM (SELECT doc_id,
-           |                unnest(list_transform(range(1, len(t) - ${n - 2}),
-           |                       i -> array_to_string(t[i:i+${n - 1}], ' '))) AS g
+           |                unnest(${ngramsSql("t", n)}) AS g
            |              FROM toks WHERE len(t) >= $n)
            |        GROUP BY doc_id, g)
            |  GROUP BY doc_id""".stripMargin
@@ -321,7 +300,7 @@ object Curation {
     val grams = Par.spread(Tables.documents(s, d), $"doc_id")
       .withColumn("t", tokens($"text"))
       .select($"doc_id", explode(ngrams($"t", DupFracN)).as("g"))
-      .select($"doc_id", gramKey($"g").as("k"))
+      .select($"doc_id", md5Key($"g", 15).as("k"))
       .distinct()
       .persist()
     val dfreq = grams.groupBy($"k").agg(count(lit(1)).as("df"))
@@ -342,10 +321,9 @@ object Curation {
     raw"""WITH toks AS (
          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
          |), grams AS (
-         |  SELECT DISTINCT doc_id, ${gramKeySql("g")} AS k
+         |  SELECT DISTINCT doc_id, ${md5KeySql("g", 15)} AS k
          |  FROM (SELECT doc_id,
-         |          unnest(list_transform(range(1, len(t) - ${DupFracN - 2}),
-         |                 i -> array_to_string(t[i:i+${DupFracN - 1}], ' '))) AS g
+         |          unnest(${ngramsSql("t", DupFracN)}) AS g
          |        FROM toks WHERE len(t) >= $DupFracN)
          |), dfreq AS (
          |  SELECT k, COUNT(*) AS df FROM grams GROUP BY k

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{md5Key, md5KeySql, microNats, microNatsSql, ngrams}
 import graft.functions.TextFunctions._
 import graft.queries.Tables
 
@@ -30,18 +31,6 @@ import graft.queries.Tables
   * oracle replays them bit-identically.
   */
 object Curation2 {
-
-  private def ngrams(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array())
-
-  /** 60-bit md5-prefix key — identical in DuckDB (see [[Curation]]). */
-  private def gramKey(g: Column): Column =
-    conv(substring(md5(g), 1, 15), 16, 10).cast("long")
-  private def gramKeySql(g: String): String =
-    s"CAST(concat('0x', substring(md5($g), 1, 15)) AS BIGINT)"
 
   // ------------------------------------------------ DSIR importance resampling
   private val DsirBuckets = 1024L
@@ -76,7 +65,7 @@ object Curation2 {
     // round-15 noop-sink measurement, 4.1 s -> ~2 s)
     val grams = docs.select($"doc_id",
         explode(concat(ngrams($"t", 1), ngrams($"t", 2))).as("g"))
-      .select($"doc_id", pmod(gramKey($"g"), lit(DsirBuckets)).as("b"),
+      .select($"doc_id", pmod(md5Key($"g", 15), lit(DsirBuckets)).as("b"),
         ($"doc_id" % 10 === 7).as("is_target"))
       .persist()
     val perBucket = grams.groupBy($"b")
@@ -86,8 +75,8 @@ object Curation2 {
     val totals = perBucket.agg(sum($"t_cnt").as("t_tot"), sum($"r_cnt").as("r_tot"))
     val lambda = perBucket.crossJoin(broadcast(totals))
       .select($"b",
-        (round(log(($"t_cnt" + 1).cast("double") / ($"t_tot" + DsirBuckets)) * 1e6).cast("long")
-          - round(log(($"r_cnt" + 1).cast("double") / ($"r_tot" + DsirBuckets)) * 1e6).cast("long"))
+        (microNats(($"t_cnt" + 1).cast("double") / ($"t_tot" + DsirBuckets))
+          - microNats(($"r_cnt" + 1).cast("double") / ($"r_tot" + DsirBuckets)))
           .as("lambda_micro"))
     val weights = grams.join(broadcast(lambda), "b")
       .groupBy($"doc_id")
@@ -104,7 +93,7 @@ object Curation2 {
          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
          |), grams AS (
          |  SELECT doc_id,
-         |    ${gramKeySql("g")} % ${DsirBuckets} AS b,
+         |    ${md5KeySql("g", 15)} % ${DsirBuckets} AS b,
          |    doc_id % 10 = 7 AS is_target
          |  FROM (
          |    SELECT doc_id, unnest(t) AS g FROM toks
@@ -122,8 +111,8 @@ object Curation2 {
          |  FROM per_bucket
          |), lambda AS (
          |  SELECT b,
-         |    CAST(round(ln(CAST(t_cnt + 1 AS DOUBLE) / (t_tot + ${DsirBuckets})) * 1e6) AS BIGINT)
-         |      - CAST(round(ln(CAST(r_cnt + 1 AS DOUBLE) / (r_tot + ${DsirBuckets})) * 1e6) AS BIGINT)
+         |    ${microNatsSql(s"CAST(t_cnt + 1 AS DOUBLE) / (t_tot + $DsirBuckets)")}
+         |      - ${microNatsSql(s"CAST(r_cnt + 1 AS DOUBLE) / (r_tot + $DsirBuckets)")}
          |      AS lambda_micro
          |  FROM per_bucket CROSS JOIN totals
          |), weights AS (
@@ -169,7 +158,7 @@ object Curation2 {
     // twice (surfaced by the round-15 noop-sink measurement)
     val wins = docs
       .select($"doc_id", size($"t").as("n_tokens"), posexplode(ngrams($"t", SubW)))
-      .select($"doc_id", $"n_tokens", ($"pos" + 1).as("p"), gramKey($"col").as("k"))
+      .select($"doc_id", $"n_tokens", ($"pos" + 1).as("p"), md5Key($"col", 15).as("k"))
       .persist()
     val hot = wins.groupBy($"k").agg(count(lit(1)).as("occ")).filter($"occ" >= 2)
     val dupStarts = wins.join(hot, "k").select($"doc_id", $"p")
@@ -195,7 +184,7 @@ object Curation2 {
          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
          |), wins AS (
          |  SELECT doc_id, n_tokens, p,
-         |    ${gramKeySql(s"array_to_string(t[p:p+${SubW - 1}], ' ')")} AS k
+         |    ${md5KeySql(s"array_to_string(t[p:p+${SubW - 1}], ' ')", 15)} AS k
          |  FROM (SELECT doc_id, t, len(t) AS n_tokens,
          |          unnest(range(1, len(t) - ${SubW - 2})) AS p
          |        FROM toks WHERE len(t) >= $SubW)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.cosineSql
 import graft.queries.Tables
 
 /** Round-13 pipeline additions, part 2: snapshot delta computation,
@@ -150,13 +151,7 @@ object Curation4 {
        |  ORDER BY vec_id LIMIT ${Similarity.NProbes}
        |), scored AS (
        |  SELECT p.query_id, e.vec_id, e.label,
-       |    ROUND(
-       |      list_sum(list_transform(range(1, len(e.embedding)+1),
-       |        k -> CAST(e.embedding[k] AS DOUBLE) * CAST(p.qv[k] AS DOUBLE)))
-       |      / (sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
-       |           k -> CAST(e.embedding[k] AS DOUBLE) * CAST(e.embedding[k] AS DOUBLE))))
-       |        * sqrt(list_sum(list_transform(range(1, len(p.qv)+1),
-       |           k -> CAST(p.qv[k] AS DOUBLE) * CAST(p.qv[k] AS DOUBLE))))), 6) AS sim
+       |    ROUND(${cosineSql("e.embedding", "p.qv")}, 6) AS sim
        |  FROM embeddings e CROSS JOIN probes p
        |  WHERE e.vec_id <> p.query_id AND e.label <> p.qlabel
        |), ranked AS (

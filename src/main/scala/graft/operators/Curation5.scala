@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{md5Key, md5KeySql, microNats, microNatsSql}
 import graft.queries.Tables
 
 /** Round-13 pipeline additions, part 3: character-level entropy scoring
@@ -15,13 +16,6 @@ import graft.queries.Tables
   * query hash-gated against a DuckDB oracle.
   */
 object Curation5 {
-
-  /** ln(x)·10⁶ rounded to a long — the micro-nat quantization that makes
-    * a sum of logs order-free and engine-exact (see textPerplexity's
-    * parity note; the residual half-ulp risk is shared and acknowledged
-    * there). */
-  private def lnMicro(c: Column): Column =
-    round(log(c.cast("double")) * 1e6).cast("long")
 
   /** Exploded character k-grams with their 1-based position: one row per
     * (doc, position). A pure narrow map (sequence + substr — both
@@ -72,7 +66,8 @@ object Curation5 {
         $"h.distinct_chars".as("distinct_chars"),
         $"h.s_cnt".as("s_cnt"))
       .withColumn("ent_micro",
-        expr("(n_chars_seen * cast(round(ln(cast(n_chars_seen as double)) * 1e6) as bigint) - s_cnt) div n_chars_seen"))
+        call_function("div",
+          $"n_chars_seen" * microNats($"n_chars_seen") - $"s_cnt", $"n_chars_seen"))
       .select($"doc_id", $"n_chars_seen", $"distinct_chars", $"ent_micro")
       .orderBy($"doc_id")
   }
@@ -86,10 +81,10 @@ object Curation5 {
          |), agg AS (
          |  SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_chars_seen,
          |    COUNT(*) AS distinct_chars,
-         |    CAST(SUM(cnt * CAST(round(ln(CAST(cnt AS DOUBLE)) * 1000000.0) AS BIGINT)) AS BIGINT) AS s_cnt
+         |    CAST(SUM(cnt * ${microNatsSql("cnt")}) AS BIGINT) AS s_cnt
          |  FROM hist GROUP BY doc_id)
          |SELECT doc_id, n_chars_seen, distinct_chars,
-         |  (n_chars_seen * CAST(round(ln(CAST(n_chars_seen AS DOUBLE)) * 1000000.0) AS BIGINT) - s_cnt)
+         |  (n_chars_seen * ${microNatsSql("n_chars_seen")} - s_cnt)
          |    // n_chars_seen AS ent_micro
          |FROM agg ORDER BY doc_id""".stripMargin
 
@@ -142,9 +137,8 @@ object Curation5 {
     // plan-keyed corpus artifact, so it stays cached — see BENCH_NOTES
     // round-13 shakedown)
     val fps = docs
-      .withColumn("hs", expr(
-        s"transform(sequence(1, int(npos)), p -> " +
-          s"cast(conv(substring(md5(substring(text, p, $WinnowK)), 1, 15), 16, 10) as bigint))"))
+      .withColumn("hs", transform(sequence(lit(1), $"npos".cast("int")),
+        p => md5Key(substring($"text", p, lit(WinnowK)), 15)))
       .withColumn("wmin", explode(expr(
         s"array_distinct(transform(sequence(1, int(npos) - ${WinnowW - 1}), p -> " +
           s"array_min(slice(hs, p, $WinnowW))))")))
@@ -163,7 +157,7 @@ object Curation5 {
     val k = WinnowK; val w = WinnowW
     raw"""WITH grams AS (
          |  SELECT doc_id, gs AS pos,
-         |    CAST(concat('0x', substring(md5(substring(text, gs, $k)), 1, 15)) AS BIGINT) AS h
+         |    ${md5KeySql(s"substring(text, gs, $k)", 15)} AS h
          |  FROM documents, UNNEST(generate_series(1, length(text) - ${k - 1})) AS u(gs)
          |  WHERE length(text) >= $k
          |), winmin AS (
@@ -266,8 +260,8 @@ object Curation5 {
       .join(corpusCnt, "w")
       .join(srcTot, "source")
       .withColumn("term", $"cs" *
-        (round(log($"cs".cast("double") / $"ts".cast("double")) * 1e6).cast("long") -
-         round(log($"cc".cast("double") / lit(totC.toDouble)) * 1e6).cast("long")))
+        (microNats($"cs".cast("double") / $"ts".cast("double")) -
+         microNats($"cc".cast("double") / lit(totC.toDouble))))
       .groupBy($"source")
       // Clamp the micro-nat sum at 0 BEFORE dividing: KL >= 0
       // mathematically, but per-term rounding can push the sum a few
@@ -293,8 +287,8 @@ object Curation5 {
          |  SELECT CAST(SUM(cs) AS BIGINT) AS tc FROM sc
          |), terms AS (
          |  SELECT s.source, st.ts,
-         |    s.cs * (CAST(round(ln(CAST(s.cs AS DOUBLE) / CAST(st.ts AS DOUBLE)) * 1000000.0) AS BIGINT)
-         |          - CAST(round(ln(CAST(c.cc AS DOUBLE) / CAST((SELECT tc FROM tot) AS DOUBLE)) * 1000000.0) AS BIGINT)) AS term
+         |    s.cs * (${microNatsSql("CAST(s.cs AS DOUBLE) / CAST(st.ts AS DOUBLE)")}
+         |          - ${microNatsSql("CAST(c.cc AS DOUBLE) / CAST((SELECT tc FROM tot) AS DOUBLE)")}) AS term
          |  FROM sc s JOIN cc c ON s.w = c.w JOIN st ON s.source = st.source)
          |SELECT source, MAX(ts) AS n_tokens,
          |  GREATEST(CAST(SUM(term) AS BIGINT), 0) // MAX(ts) AS kl_micro

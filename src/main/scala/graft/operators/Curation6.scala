@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{md5Key, md5KeySql, ngrams, ngramsSql}
 import graft.queries.Tables
 
 /** Round-13 pipeline additions, part 4: one-pass table profiling and the
@@ -166,8 +167,8 @@ object Curation6 {
     val canon = corpus.join(canonIds, "doc_id")
     def gramKeys(df: DataFrame): DataFrame = df
       .filter(size($"toks") >= Curation.ContamN)
-      .select($"doc_id", explode(Curation.ngrams($"toks", Curation.ContamN)).as("g"))
-      .select($"doc_id", Curation.gramKey($"g").as("gk"))
+      .select($"doc_id", explode(ngrams($"toks", Curation.ContamN)).as("g"))
+      .select($"doc_id", md5Key($"g", 15).as("gk"))
       .distinct()
     val evalGrams = gramKeys(docs.filter($"doc_id" % 10 === 7)
       .withColumn("toks", tokens($"text"))).select($"gk").distinct()
@@ -202,15 +203,13 @@ object Curation6 {
          |  SELECT * FROM corpus
          |  WHERE doc_id IN (SELECT MIN(doc_id) FROM corpus GROUP BY md5(text))
          |), grams AS (
-         |  SELECT DISTINCT doc_id, ${Curation.gramKeySql("g")} AS gk
+         |  SELECT DISTINCT doc_id, ${md5KeySql("g", 15)} AS gk
          |  FROM (SELECT doc_id,
-         |          unnest(list_transform(range(1, len(t) - ${n - 2}),
-         |                 i -> array_to_string(t[i:i+${n - 1}], ' '))) AS g
+         |          unnest(${ngramsSql("t", n)}) AS g
          |        FROM toks WHERE len(t) >= $n AND doc_id % 10 = 7
          |        UNION ALL
          |        SELECT doc_id,
-         |          unnest(list_transform(range(1, len(t) - ${n - 2}),
-         |                 i -> array_to_string(t[i:i+${n - 1}], ' '))) AS g
+         |          unnest(${ngramsSql("t", n)}) AS g
          |        FROM canon WHERE len(t) >= $n)
          |), leaked AS (
          |  SELECT DISTINCT c.doc_id FROM grams c

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{dotSql, md5Key, md5KeySql, normSql}
 import graft.queries.Tables
 
 /** Embedding-space corpus curation — the quality/selection steps a
@@ -41,12 +42,6 @@ object Curation7 {
     * most the whole sample when every other cell is empty). */
   private[graft] val DiversityK = 200
 
-  /** 32-bit uniform hash key — the md5-prefix spelling shared with
-    * [[Sampling]] so DuckDB replays it bit-for-bit. */
-  private def hk(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long")
-  private def hkSql(x: String): String =
-    s"CAST(concat('0x', substring(md5(CAST($x AS VARCHAR)), 1, 8)) AS BIGINT)"
 
   // ------------------------------------------------ embedding outliers
   /** Per-label centroid-distance outliers (`emb_outlier`): for each
@@ -164,7 +159,7 @@ object Curation7 {
     // posexplode recovers the within-cell rank (pos is 0-based)
     val ranked = cells
       .groupBy($"cid")
-      .agg(graft.functions.TopKMinAgg.topkMin(hk($"vec_id"), $"vec_id", DiversityK).as("top"))
+      .agg(graft.functions.TopKMinAgg.topkMin(md5Key($"vec_id", 8), $"vec_id", DiversityK).as("top"))
       .select($"cid", posexplode($"top").as(Seq("p", "kv")))
       .select($"kv.id".as("vec_id"), $"cid", ($"p" + 1).cast("long").as("rn"))
     ranked.orderBy($"rn", $"cid", $"vec_id").limit(DiversityK)
@@ -174,14 +169,11 @@ object Curation7 {
   /** Oracle replays the IVF assignment (same CTEs as `ann_topk_ivf`),
     * ranks within cell by the same md5 hash key, and round-robins. */
   val diversitySampleSql: String = {
-    def dotSql(a: String, b: String) =
-      s"list_sum(list_transform(range(1, len($a)+1), k -> CAST($a[k] AS DOUBLE) * CAST($b[k] AS DOUBLE)))"
-    def nrmSql(a: String) = s"sqrt(${dotSql(a, a)})"
     s"""WITH emb AS (
-       |  SELECT vec_id, embedding, ${nrmSql("embedding")} AS vn FROM embeddings
+       |  SELECT vec_id, embedding, ${normSql("embedding")} AS vn FROM embeddings
        |), cent AS (
        |  SELECT vec_id AS cid, embedding AS cv, vn AS cn FROM emb
-       |  ORDER BY ${hkSql("vec_id")}, vec_id
+       |  ORDER BY ${md5KeySql("vec_id", 8)}, vec_id
        |  LIMIT 16
        |), asg AS (
        |  SELECT vec_id, cid FROM (
@@ -192,7 +184,7 @@ object Curation7 {
        |  WHERE crank = 1
        |), ranked AS (
        |  SELECT vec_id, cid,
-       |    ROW_NUMBER() OVER (PARTITION BY cid ORDER BY ${hkSql("vec_id")}, vec_id) AS rn
+       |    ROW_NUMBER() OVER (PARTITION BY cid ORDER BY ${md5KeySql("vec_id", 8)}, vec_id) AS rn
        |  FROM asg
        |)
        |SELECT vec_id, cid, rn FROM (
@@ -297,7 +289,7 @@ object Curation7 {
     val pos = Dedup.ccCheckpoint(
       Dedup.minhashLshPairs(s, d).select($"a_id", $"b_id"))
     val nPart = math.max(2, s.sparkContext.defaultParallelism)
-    val ring = Tables.documents(s, d).select($"doc_id", hk($"doc_id").as("hkey"))
+    val ring = Tables.documents(s, d).select($"doc_id", md5Key($"doc_id", 8).as("hkey"))
       .repartitionByRange(nPart, $"hkey", $"doc_id")
       .withColumn("pid", spark_partition_id())
     val wIn = Window.partitionBy($"pid").orderBy($"hkey", $"doc_id")
@@ -341,7 +333,7 @@ object Curation7 {
        |  GROUP BY a.doc_id, b.doc_id
        |  HAVING COUNT(*)::DOUBLE / (ANY_VALUE(a.sz) + ANY_VALUE(b.sz) - COUNT(*)) >= ${Dedup.JaccardThreshold}
        |), ring AS (
-       |  SELECT doc_id, ${hkSql("doc_id")} AS hkey FROM documents
+       |  SELECT doc_id, ${md5KeySql("doc_id", 8)} AS hkey FROM documents
        |), nxt AS (
        |  SELECT doc_id,
        |    COALESCE(LEAD(doc_id) OVER (ORDER BY hkey, doc_id),
@@ -387,9 +379,8 @@ object Curation7 {
       s.range(0, JlDim.toLong * 64)
         .select(($"id" / 64).cast("int").as("k"), ($"id" % 64).cast("int").as("pos"))
         .select($"k", $"pos",
-          (lit(1) - lit(2) * (conv(substring(md5(
-            concat($"k".cast("string"), lit(":"), $"pos".cast("string"))), 1, 8), 16, 10)
-            .cast("long") % 2)).as("sgn")))
+          (lit(1) - lit(2) *
+            (md5Key(concat($"k".cast("string"), lit(":"), $"pos".cast("string")), 8) % 2)).as("sgn")))
     val ex = Par.spread(Tables.embeddings(s, d), $"vec_id")
       .select($"vec_id", posexplode($"embedding").as(Seq("pos", "x")))
       .select($"vec_id", $"pos",
@@ -414,7 +405,7 @@ object Curation7 {
        |  FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS u(gs)
        |), signs AS (
        |  SELECT k, pos,
-       |    1 - 2 * (CAST(concat('0x', substring(md5(k || ':' || pos), 1, 8)) AS BIGINT) % 2) AS sgn
+       |    1 - 2 * (${md5KeySql("k || ':' || pos", 8)} % 2) AS sgn
        |  FROM (SELECT unnest(range($JlDim)) AS k), (SELECT unnest(range(64)) AS pos)
        |), proj AS (
        |  SELECT e.vec_id, s.k,

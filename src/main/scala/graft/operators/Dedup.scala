@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity
 import graft.functions.TextFunctions._
 import graft.queries.Tables
 
@@ -362,7 +363,7 @@ object Dedup {
     * verify. */
   val dedupSimhashSql: String =
     raw"""WITH th AS (
-         |  SELECT doc_id, CAST(concat('0x', substring(md5(tok), 1, 16)) AS UBIGINT) AS h
+         |  SELECT doc_id, ${Parity.md5U64Sql("tok")} AS h
          |  FROM (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
          |        FROM documents)
          |), sig AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{cosineSql, md5Key, md5KeySql}
 import graft.functions.TextFunctions.tokens
 import graft.functions.VectorOps
 import graft.queries.Tables
@@ -20,12 +21,6 @@ object Dedup2 {
   // ------------------------------------------------ segment-level dedup
   private val SegLen = 4   // tokens per non-overlapping segment
   private val HotDf = 2    // segments in >= HotDf distinct docs are boilerplate
-
-  /** 60-bit md5 key, computable identically in DuckDB (same trick as
-    * Curation.gramKey): the cross-corpus shuffle carries 8 bytes per
-    * segment, never the text. */
-  private def segKey(g: Column): Column =
-    conv(substring(md5(g), 1, 15), 16, 10).cast("long")
 
   /** Cross-document boilerplate removal: split every document into
     * non-overlapping [[SegLen]]-token segments, count each segment's
@@ -49,7 +44,9 @@ object Dedup2 {
         transform(sequence(lit(0), floor((size($"t") - 1) / SegLen).cast("int")),
           i => array_join(slice($"t", i * SegLen + 1, lit(SegLen)), " ")))
         .as(Seq("idx", "seg")))
-      .withColumn("k", segKey($"seg"))
+      // 60-bit key: the cross-corpus shuffle carries 8 bytes per
+      // segment, never the text
+      .withColumn("k", md5Key($"seg", 15))
     val hot = segs.groupBy($"k")
       .agg(countDistinct($"doc_id").as("df"))
       .filter($"df" >= HotDf)
@@ -69,7 +66,7 @@ object Dedup2 {
          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
          |), segs AS (
          |  SELECT doc_id, s.idx, s.seg,
-         |    CAST(concat('0x', substring(md5(s.seg), 1, 15)) AS BIGINT) AS k
+         |    ${md5KeySql("s.seg", 15)} AS k
          |  FROM (
          |    SELECT doc_id,
          |      unnest(list_transform(range(0, (len(t) - 1) // $SegLen + 1),
@@ -247,15 +244,13 @@ object Dedup2 {
     } finally emb.unpersist()
   }
   val semDedupSql: String = {
-    import Clustering.{dotSql, lloydSql}
-    def nrm(a: String) = s"sqrt(${dotSql(a, a)})"
+    import Clustering.lloydSql
     s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
        |${lloydSql(Clustering.K, Clustering.Iters, 64, "")},
        |dropped AS (
        |  SELECT DISTINCT b.vec_id
        |  FROM fin a JOIN fin b ON a.k = b.k AND a.vec_id < b.vec_id
-       |  WHERE round(${dotSql("a.embedding", "b.embedding")}
-       |          / (${nrm("a.embedding")} * ${nrm("b.embedding")}), 6) >= $SemTheta
+       |  WHERE round(${cosineSql("a.embedding", "b.embedding")}, 6) >= $SemTheta
        |)
        |SELECT f.vec_id, f.k AS cluster, dr.vec_id IS NULL AS is_kept
        |FROM fin f LEFT JOIN dropped dr ON f.vec_id = dr.vec_id
@@ -332,8 +327,7 @@ object Dedup2 {
       // SubK sub-centroids PER oversized cell: md5-ranked members of that
       // cell — a window, never a driver collect (oversized-cell count
       // grows with n; nothing here is driver-sized)
-      val wr = Window.partitionBy($"cell").orderBy(
-        conv(substring(md5($"vec_id".cast("string")), 1, 8), 16, 10).cast("long"), $"vec_id")
+      val wr = Window.partitionBy($"cell").orderBy(md5Key($"vec_id", 8), $"vec_id")
       val cents = big.withColumn("rk", row_number().over(wr)).filter($"rk" <= SemSubK)
         .select($"cell", $"rk".as("sub"), $"embedding".as("cv"), $"vn".as("cn"))
       val wbest = Window.partitionBy($"cell", $"vec_id").orderBy($"csim".desc, $"sub")
@@ -360,14 +354,11 @@ object Dedup2 {
   /** Fixture corpora are below [[SemTarget]], so zero split levels run
     * and the verdict is plain global pairwise at theta. */
   val semDedupBoundedSql: String = {
-    import Clustering.dotSql
-    def nrm(a: String) = s"sqrt(${dotSql(a, a)})"
     s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
        |dropped AS (
        |  SELECT DISTINCT b.vec_id
        |  FROM emb a JOIN emb b ON a.vec_id < b.vec_id
-       |  WHERE round(${dotSql("a.embedding", "b.embedding")}
-       |          / (${nrm("a.embedding")} * ${nrm("b.embedding")}), 6) >= $SemTheta
+       |  WHERE round(${cosineSql("a.embedding", "b.embedding")}, 6) >= $SemTheta
        |)
        |SELECT e.vec_id, dr.vec_id IS NULL AS is_kept
        |FROM emb e LEFT JOIN dropped dr ON e.vec_id = dr.vec_id

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.listSumSql
 import graft.queries.Tables
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with
@@ -90,16 +91,17 @@ object Multimodal {
   /** DuckDB replica of the stub codec: the UTF-8 payload's bytes are
     * recovered by slicing its hex dump in 2-digit pairs; the mean is the
     * same exact-integer sum in one IEEE double division on both engines. */
-  val mmDecodeFeaturesSql: String =
-    """SELECT doc_id,
+  val mmDecodeFeaturesSql: String = {
+    val byteSum = listSumSql("range(0, octet_length(encode(text)))",
+      "i -> CAST(concat('0x', substring(hex(encode(text)), i*2+1, 2)) AS INT)")
+    s"""SELECT doc_id,
       |  CAST(octet_length(encode(text)) AS INT) AS n_bytes,
       |  CASE WHEN octet_length(encode(text)) = 0 THEN 0.0
-      |       ELSE CAST(list_sum(list_transform(range(0, octet_length(encode(text))),
-      |              i -> CAST(concat('0x', substring(hex(encode(text)), i*2+1, 2)) AS INT)))
-      |            AS DOUBLE) / octet_length(encode(text)) END AS mean_byte,
+      |       ELSE CAST($byteSum AS DOUBLE) / octet_length(encode(text)) END AS mean_byte,
       |  CASE WHEN octet_length(encode(text)) = 0 THEN -1
       |       ELSE CAST(concat('0x', substring(hex(encode(text)), 1, 2)) AS INT) END AS head_byte
       |FROM documents ORDER BY doc_id""".stripMargin
+  }
 
   /** Resize planning + content-addressed verification: target dims
     * shrink the manifest dims so the long side is 256 (aspect preserved,
@@ -259,6 +261,11 @@ object Multimodal {
   }
   val mmPhashDedupSql: String = {
     val B = PhashBits
+    val phash = listSumSql(s"range(0, $B)",
+      s"""b ->
+         |      CASE WHEN list_sum(bl[(b*n//$B)+1 : ((b+1)*n)//$B]) * n
+         |                > list_sum(bl) * (((b+1)*n)//$B - (b*n)//$B)
+         |           THEN (1::BIGINT << b) ELSE 0 END""".stripMargin)
     s"""WITH bytes AS (
        |  SELECT doc_id, octet_length(encode(text)) AS n,
        |    list_transform(range(0, octet_length(encode(text))),
@@ -266,10 +273,7 @@ object Multimodal {
        |  FROM documents WHERE octet_length(encode(text)) >= $B
        |), ph AS (
        |  SELECT doc_id,
-       |    list_sum(list_transform(range(0, $B), b ->
-       |      CASE WHEN list_sum(bl[(b*n//$B)+1 : ((b+1)*n)//$B]) * n
-       |                > list_sum(bl) * (((b+1)*n)//$B - (b*n)//$B)
-       |           THEN (1::BIGINT << b) ELSE 0 END)) AS phash
+       |    $phash AS phash
        |  FROM bytes
        |), ck AS (
        |  SELECT doc_id, phash, c, (phash >> (c * 15)) & 32767 AS v

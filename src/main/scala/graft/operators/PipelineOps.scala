@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.Parity.{md5Key, md5KeySql}
 import graft.queries.Tables
 
 /** Training-data pipeline operators beyond dedup/similarity: deterministic
@@ -40,7 +41,7 @@ object PipelineOps {
     import s.implicits._
     Tables.documents(s, d)
       .withColumn("bucket",
-        pmod(conv(substring(md5($"doc_id".cast("string")), 1, 4), 16, 10).cast("long"), lit(100L)))
+        pmod(md5Key($"doc_id", 4), lit(100L)))
       .withColumn("split", when($"bucket" < 90, "train").otherwise("val"))
       .groupBy($"split")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("n_chars"),
@@ -48,7 +49,7 @@ object PipelineOps {
       .orderBy($"split")
   }
   val splitTrainValSql: String =
-    """SELECT CASE WHEN CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 90
+    s"""SELECT CASE WHEN ${md5KeySql("doc_id", 4)} % 100 < 90
       |            THEN 'train' ELSE 'val' END AS split,
       |  COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS n_chars, MIN(doc_id) AS first_doc
       |FROM documents GROUP BY 1 ORDER BY split""".stripMargin
@@ -267,7 +268,7 @@ object PipelineOps {
   def mixWeightedSample(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val bucket =
-      pmod(conv(substring(md5($"doc_id".cast("string")), 1, 4), 16, 10).cast("long"), lit(100L))
+      pmod(md5Key($"doc_id", 4), lit(100L))
     // digitless source names extract '' -> null cast; define them as weight
     // (0 % 4 + 1) * 25 instead of silently never sampling. The digit run is
     // capped at 18 chars BEFORE the cast (18 digits always fit in a signed
@@ -290,7 +291,7 @@ object PipelineOps {
          |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
          |  CAST(SUM(CASE WHEN keep THEN n_chars ELSE 0 END) AS BIGINT) AS chars_sampled
          |FROM (SELECT source, n_chars,
-         |        CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100
+         |        ${md5KeySql("doc_id", 4)} % 100
          |          < (TRY_CAST(substring(COALESCE(NULLIF(regexp_extract(source, '(\d+)', 1), ''), '0'), 1, 18) AS BIGINT) % 4 + 1) * 25 AS keep
          |      FROM documents)
          |GROUP BY source ORDER BY source""".stripMargin
@@ -339,8 +340,7 @@ object PipelineOps {
     * loader consumes. */
   def trainOrder(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val key = conv(substring(md5(concat(lit(OrderSeed + ":"), $"doc_id".cast("string"))), 1, 15), 16, 10)
-      .cast("long")
+    val key = md5Key(concat(lit(OrderSeed + ":"), $"doc_id".cast("string")), 15)
     Tables.documents(s, d)
       .select($"doc_id", $"source", key.as("k"))
       .withColumn("shard", pmod($"k", lit(NShards.toLong)))
@@ -354,7 +354,7 @@ object PipelineOps {
        |  SELECT doc_id, source, k % $NShards AS shard,
        |    ROW_NUMBER() OVER (PARTITION BY k % $NShards ORDER BY k, doc_id) AS pos
        |  FROM (SELECT doc_id, source,
-       |          CAST(concat('0x', substring(md5(concat('$OrderSeed:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS k
+       |          ${md5KeySql(s"concat('$OrderSeed:', CAST(doc_id AS VARCHAR))", 15)} AS k
        |        FROM documents))
        |ORDER BY shard, pos""".stripMargin
 
@@ -467,8 +467,7 @@ object PipelineOps {
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
     val staged = docs.unionByName(
       docs.filter($"doc_id" < 60).select(($"doc_id" + 1000000L).as("doc_id"), $"text"))
-    val bucket = pmod(
-      conv(substring(md5($"doc_id".cast("string")), 1, 4), 16, 10).cast("long"), lit(100L))
+    val bucket = pmod(md5Key($"doc_id", 4), lit(100L))
     staged
       .withColumn("is_train", bucket < 90)
       .groupBy(graft.functions.TextFunctions.fingerprint($"text").as("fp"))
@@ -486,7 +485,7 @@ object PipelineOps {
          |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 60
          |), flagged AS (
          |  SELECT doc_id, text,
-         |    CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 90 AS is_train
+         |    ${md5KeySql("doc_id", 4)} % 100 < 90 AS is_train
          |  FROM staged
          |), grouped AS (
          |  SELECT MIN(doc_id) AS rep_id,
@@ -528,8 +527,7 @@ object PipelineOps {
     // re-join, and a domain that keeps nothing still reports (its
     // conditional aggregates go to 0/NULL naturally)
     val accept =
-      conv(substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
-        .cast("long").cast("double") / 65536.0 <
+      md5Key($"doc_id", 4).cast("double") / 65536.0 <
         least(lit(1.0), sqrt(lit(DomainCap.toDouble) / $"n_in"))
     docs.join(broadcast(counts), "lang")
       .groupBy($"lang", $"n_in")
@@ -544,7 +542,7 @@ object PipelineOps {
        |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_in FROM documents GROUP BY lang
        |), flagged AS (
        |  SELECT d.lang, c.n_in, d.doc_id, d.n_chars,
-       |    CAST(CAST(concat('0x', substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 4)) AS BIGINT) AS DOUBLE) / 65536.0
+       |    CAST(${md5KeySql("d.doc_id", 4)} AS DOUBLE) / 65536.0
        |      < least(1.0, sqrt($DomainCap.0 / c.n_in)) AS accept
        |  FROM documents d JOIN counts c ON d.lang = c.lang)
        |SELECT lang, n_in,

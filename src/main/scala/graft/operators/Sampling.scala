@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{md5Key, md5KeySql}
 import graft.queries.Tables
 
 /** Sampling & dataset-splitting operators — the selection half of a
@@ -15,8 +16,8 @@ import graft.queries.Tables
   * All four are deterministic BY CONSTRUCTION (hash-derived keys, never
   * an RNG), which is what makes them both oracle-checkable and
   * reproducible across reruns/backfills — the property a curation
-  * pipeline actually needs from its sampler. Hash keys use the md5-prefix
-  * spelling every other operator family shares, so DuckDB replays them
+  * pipeline actually needs from its sampler. Hash keys are
+  * [[graft.functions.Parity]] md5-prefix keys, so DuckDB replays them
   * bit-for-bit.
   */
 object Sampling {
@@ -26,13 +27,6 @@ object Sampling {
   private[graft] val StratumK = 40
   private[graft] val WeightedK = 150
 
-  /** 32-bit uniform hash key of a column, the shared md5-prefix spelling
-    * (DuckDB: CAST(concat('0x', substring(md5(CAST(x AS VARCHAR)), 1, 8))
-    * AS BIGINT)). */
-  private def hk(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long")
-  private def hkSql(x: String): String =
-    s"CAST(concat('0x', substring(md5(CAST($x AS VARCHAR)), 1, 8)) AS BIGINT)"
 
   // ------------------------------------------------ consistent sample
   /** Consistent uniform sample (sample_consistent): the K documents with
@@ -50,13 +44,13 @@ object Sampling {
   def sampleConsistent(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, d)
-      .select($"doc_id", $"lang", $"source", $"n_chars", hk($"doc_id").as("hk"))
+      .select($"doc_id", $"lang", $"source", $"n_chars", md5Key($"doc_id", 8).as("hk"))
       .orderBy($"hk", $"doc_id").limit(ConsistentK)
       .orderBy($"doc_id")
   }
   val sampleConsistentSql: String =
     s"""SELECT * FROM (
-       |  SELECT doc_id, lang, source, n_chars, ${hkSql("doc_id")} AS hk
+       |  SELECT doc_id, lang, source, n_chars, ${md5KeySql("doc_id", 8)} AS hk
        |  FROM documents ORDER BY hk, doc_id LIMIT $ConsistentK)
        |ORDER BY doc_id""".stripMargin
 
@@ -80,7 +74,7 @@ object Sampling {
     import s.implicits._
     val w = Window.partitionBy($"lang").orderBy($"hk", $"doc_id")
     Tables.documents(s, d)
-      .select($"doc_id", $"lang", $"n_chars", hk($"doc_id").as("hk"))
+      .select($"doc_id", $"lang", $"n_chars", md5Key($"doc_id", 8).as("hk"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= StratumK)
       .select($"doc_id", $"lang", $"n_chars", $"hk", $"rk".cast("long").as("rk"))
@@ -88,9 +82,9 @@ object Sampling {
   }
   val sampleStratifiedSql: String =
     s"""SELECT doc_id, lang, n_chars, hk, CAST(rk AS BIGINT) AS rk FROM (
-       |  SELECT doc_id, lang, n_chars, ${hkSql("doc_id")} AS hk,
+       |  SELECT doc_id, lang, n_chars, ${md5KeySql("doc_id", 8)} AS hk,
        |    ROW_NUMBER() OVER (PARTITION BY lang
-       |      ORDER BY ${hkSql("doc_id")}, doc_id) AS rk
+       |      ORDER BY ${md5KeySql("doc_id", 8)}, doc_id) AS rk
        |  FROM documents)
        |WHERE rk <= $StratumK ORDER BY lang, rk""".stripMargin
 
@@ -112,7 +106,7 @@ object Sampling {
   def sampleWeighted(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, d)
-      .select($"doc_id", $"n_chars", hk($"doc_id").as("hk"))
+      .select($"doc_id", $"n_chars", md5Key($"doc_id", 8).as("hk"))
       .withColumn("key_w",
         expr("round(ln(4294967296.0 / CAST(hk + 1 AS DOUBLE)) * 1000000000.0)")
           .cast("long").divide($"n_chars").cast("long"))
@@ -124,7 +118,7 @@ object Sampling {
        |  SELECT doc_id, n_chars, hk,
        |    CAST(round(ln(4294967296.0 / CAST(hk + 1 AS DOUBLE)) * 1000000000.0)
        |      AS BIGINT) // n_chars AS key_w
-       |  FROM (SELECT doc_id, n_chars, ${hkSql("doc_id")} AS hk FROM documents)
+       |  FROM (SELECT doc_id, n_chars, ${md5KeySql("doc_id", 8)} AS hk FROM documents)
        |  ORDER BY key_w, doc_id LIMIT $WeightedK)
        |ORDER BY doc_id""".stripMargin
 
@@ -155,7 +149,7 @@ object Sampling {
     Tables.documents(s, d).select($"doc_id", $"n_chars")
       .join(comp, Seq("doc_id"), "left")
       .withColumn("rep", coalesce($"cluster_id", $"doc_id"))
-      .withColumn("bucket", hk($"rep") % 10)
+      .withColumn("bucket", md5Key($"rep", 8) % 10)
       .withColumn("split_name",
         when($"bucket" < 8, "train").when($"bucket" === 8, "val").otherwise("test"))
       .groupBy($"split_name")
@@ -171,7 +165,7 @@ object Sampling {
        |    COALESCE(lab.cluster_id, d.doc_id) AS rep
        |  FROM documents d LEFT JOIN lab ON d.doc_id = lab.doc_id
        |), bucketed AS (
-       |  SELECT *, ${hkSql("rep")} % 10 AS bucket FROM assigned)
+       |  SELECT *, ${md5KeySql("rep", 8)} % 10 AS bucket FROM assigned)
        |SELECT CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val'
        |         ELSE 'test' END AS split_name,
        |  CAST(COUNT(*) AS BIGINT) AS n_docs,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{cosineSql, dotSql, listSumSql, md5Key, md5KeySql, normSql}
 import graft.functions.VectorOps
 import graft.queries.Tables
 
@@ -89,13 +90,7 @@ object Similarity {
       |  WHERE vec_id IN ($probesOracleSql)
       |), scored AS (
       |  SELECT p.query_id, e.vec_id,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, len(e.embedding)+1),
-      |        k -> CAST(e.embedding[k] AS DOUBLE) * CAST(p.qv[k] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
-      |           k -> CAST(e.embedding[k] AS DOUBLE) * CAST(e.embedding[k] AS DOUBLE))))
-      |        * sqrt(list_sum(list_transform(range(1, len(p.qv)+1),
-      |           k -> CAST(p.qv[k] AS DOUBLE) * CAST(p.qv[k] AS DOUBLE))))), 6) AS sim
+      |    ROUND(${cosineSql("e.embedding", "p.qv")}, 6) AS sim
       |  FROM embeddings e CROSS JOIN probes p
       |  WHERE e.vec_id <> p.query_id
       |), ranked AS (
@@ -181,12 +176,7 @@ object Similarity {
     s"""$corpusCte
       |SELECT a.vec_id AS a_id, b.vec_id AS b_id
       |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-      |WHERE list_sum(list_transform(range(1, len(a.embedding)+1),
-      |        k -> CAST(a.embedding[k] AS DOUBLE) * CAST(b.embedding[k] AS DOUBLE)))
-      |   / (sqrt(list_sum(list_transform(range(1, len(a.embedding)+1),
-      |        k -> CAST(a.embedding[k] AS DOUBLE) * CAST(a.embedding[k] AS DOUBLE))))
-      |    * sqrt(list_sum(list_transform(range(1, len(b.embedding)+1),
-      |        k -> CAST(b.embedding[k] AS DOUBLE) * CAST(b.embedding[k] AS DOUBLE))))) >= 0.95
+      |WHERE ${cosineSql("a.embedding", "b.embedding")} >= 0.95
       |ORDER BY a_id, b_id""".stripMargin
 
   /** Exact all-pairs oracle over the raw corpus — the production row. */
@@ -252,9 +242,8 @@ object Similarity {
           .mkString("[", ",", "]")
       }
     }.mkString("[", ",\n         |  ", "]")
-    def dotSql(a: String, b: String) =
-      s"list_sum(list_transform(range(1, len($a)+1), k -> CAST($a[k] AS DOUBLE) * $b[k]))"
-    def nrmSql(a: String) = s"sqrt(${dotSql(a, a)})"
+    val bucketSql = listSumSql(s"range(0, $bits)",
+      s"h -> CASE WHEN ${dotSql("embedding", "p[t*6+h+1]")} >= 0 THEN (1::BIGINT << h) ELSE 0 END")
     raw"""WITH pl(p) AS (SELECT
          |  $planesLit
          |), bucketed AS (
@@ -263,9 +252,7 @@ object Similarity {
          |    SELECT vec_id, embedding,
          |      unnest(list_transform(range(0, $tables), t -> struct_pack(
          |        tbl := t,
-         |        bucket := list_sum(list_transform(range(0, $bits), h ->
-         |          CASE WHEN ${dotSql("embedding", "p[t*6+h+1]")} >= 0
-         |               THEN (1::BIGINT << h) ELSE 0 END))
+         |        bucket := $bucketSql
          |      )), recursive := false) AS s
          |    FROM embeddings CROSS JOIN pl)
          |), cand AS (
@@ -274,8 +261,7 @@ object Similarity {
          |  WHERE p.vec_id IN ($probesOracleSql) AND c.vec_id <> p.vec_id
          |), scored AS (
          |  SELECT cand.query_id, cand.vec_id,
-         |    ROUND(${dotSql("q.embedding", "e.embedding")}
-         |      / (${nrmSql("q.embedding")} * ${nrmSql("e.embedding")}), 6) AS sim
+         |    ROUND(${cosineSql("q.embedding", "e.embedding")}, 6) AS sim
          |  FROM cand
          |  JOIN embeddings q ON q.vec_id = cand.query_id
          |  JOIN embeddings e ON e.vec_id = cand.vec_id
@@ -324,8 +310,7 @@ object Similarity {
     val emb = normedEmb(s, d)
     val centDir = Models.root(s"ivf-centroids|$d|k=$k" +
         s"|in=${Models.inputFingerprint(s"$d/embeddings.parquet")}") { dir =>
-      emb.orderBy(conv(substring(md5($"vec_id".cast("string")), 1, 8), 16, 10).cast("long"),
-          $"vec_id").limit(k)
+      emb.orderBy(md5Key($"vec_id", 8), $"vec_id").limit(k)
         .select($"vec_id".as("cid"), $"embedding".as("cv"), $"vn".as("cn"))
         .coalesce(1).write.mode("overwrite").parquet(dir)
     }
@@ -378,18 +363,14 @@ object Similarity {
     ivfRank(corpus, ivfProbes(s, d))
   }
   /** DuckDB replica of [[annTopKIvf]]: same md5-ranked centroid sample,
-    * same 6dp-rounded argmax assignment, same nprobe equi-join. `dot`/
-    * `nrm` spell the left-to-right double accumulation explicitly. */
+    * same 6dp-rounded argmax assignment, same nprobe equi-join;
+    * [[Parity.dotSql]] spells the left-to-right double accumulation. */
   val annTopKIvfSql: String = {
-    def dotSql(a: String, b: String) =
-      s"""list_sum(list_transform(range(1, len($a)+1),
-         |      k -> CAST($a[k] AS DOUBLE) * CAST($b[k] AS DOUBLE)))""".stripMargin
-    def nrmSql(a: String) = s"sqrt(${dotSql(a, a)})"
     s"""WITH emb AS (
-       |  SELECT vec_id, embedding, ${nrmSql("embedding")} AS vn FROM embeddings
+       |  SELECT vec_id, embedding, ${normSql("embedding")} AS vn FROM embeddings
        |), cent AS (
        |  SELECT vec_id AS cid, embedding AS cv, vn AS cn FROM emb
-       |  ORDER BY CAST(concat('0x', substring(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT), vec_id
+       |  ORDER BY ${md5KeySql("vec_id", 8)}, vec_id
        |  LIMIT 16
        |), scored_all AS (
        |  SELECT e.vec_id, e.embedding, e.vn, c.cid,
@@ -443,8 +424,7 @@ object Similarity {
     val delta = emb.filter($"vec_id" % 10 === 3)
     val centDir = Models.root(s"ivf-centroids-base|$d|k=$k" +
         s"|in=${Models.inputFingerprint(s"$d/embeddings.parquet")}") { dir =>
-      base.orderBy(conv(substring(md5($"vec_id".cast("string")), 1, 8), 16, 10).cast("long"),
-          $"vec_id").limit(k)
+      base.orderBy(md5Key($"vec_id", 8), $"vec_id").limit(k)
         .select($"vec_id".as("cid"), $"embedding".as("cv"), $"vn".as("cn"))
         .coalesce(1).write.mode("overwrite").parquet(dir)
     }
@@ -466,16 +446,12 @@ object Similarity {
   /** DuckDB replica: base-only md5-ranked centroid sample, 6dp argmax
     * assignment of base and delta, per-cluster populations. */
   val annIvfAppendSql: String = {
-    def dotSql(a: String, b: String) =
-      s"""list_sum(list_transform(range(1, len($a)+1),
-         |      k -> CAST($a[k] AS DOUBLE) * CAST($b[k] AS DOUBLE)))""".stripMargin
-    def nrmSql(a: String) = s"sqrt(${dotSql(a, a)})"
     s"""WITH emb AS (
-       |  SELECT vec_id, embedding, ${nrmSql("embedding")} AS vn FROM embeddings
+       |  SELECT vec_id, embedding, ${normSql("embedding")} AS vn FROM embeddings
        |), cent AS (
        |  SELECT vec_id AS cid, embedding AS cv, vn AS cn FROM emb
        |  WHERE vec_id % 10 <> 3
-       |  ORDER BY CAST(concat('0x', substring(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT), vec_id
+       |  ORDER BY ${md5KeySql("vec_id", 8)}, vec_id
        |  LIMIT 16
        |), assigned AS (
        |  SELECT vec_id, cid,
@@ -554,13 +530,7 @@ object Similarity {
        |  WHERE vec_id % 10 = 7 AND vec_id < $EmbEvalCutoff
        |), scored AS (
        |  SELECT ev.eval_id, t.vec_id,
-       |    ROUND(
-       |      list_sum(list_transform(range(1, len(t.embedding)+1),
-       |        k -> CAST(t.embedding[k] AS DOUBLE) * CAST(ev.qv[k] AS DOUBLE)))
-       |      / (sqrt(list_sum(list_transform(range(1, len(t.embedding)+1),
-       |           k -> CAST(t.embedding[k] AS DOUBLE) * CAST(t.embedding[k] AS DOUBLE))))
-       |        * sqrt(list_sum(list_transform(range(1, len(ev.qv)+1),
-       |           k -> CAST(ev.qv[k] AS DOUBLE) * CAST(ev.qv[k] AS DOUBLE))))), 6) AS sim
+       |    ROUND(${cosineSql("t.embedding", "ev.qv")}, 6) AS sim
        |  FROM embeddings t CROSS JOIN ev WHERE t.vec_id % 10 <> 7
        |), agg AS (
        |  SELECT eval_id,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{md5Key, md5KeySql}
 import graft.queries.Tables
 
 /** K-minimum-values (KMV) sketches over per-source shingle sets:
@@ -15,8 +16,8 @@ import graft.queries.Tables
   * `no_oracle`), KMV is hash-gate-exact across engines: the sketch IS
   * the K smallest 32-bit md5-prefix hashes of the shingle strings, and
   * both Spark and DuckDB compute identical md5 bytes — so the DuckDB
-  * oracle replays the whole sketch bit-for-bit (the same replayability
-  * trick as [[graft.functions.SimHash]]'s md5-prefix token hash). All
+  * oracle replays the whole sketch bit-for-bit (the keys are
+  * [[graft.functions.Parity]] md5-prefix keys). All
   * estimator arithmetic is 64-bit integer (floor division, ppm units):
   * no float drift anywhere.
   *
@@ -44,7 +45,7 @@ object Sketches {
     sets.count()
     sets.select($"doc_id", explode($"sh").as("sg"))
       .join(docs.select($"doc_id", $"source"), "doc_id")
-      .select($"source", conv(substring(md5($"sg"), 1, 8), 16, 10).cast("long").as("h"))
+      .select($"source", md5Key($"sg", 8).as("h"))
       .distinct()
   }
 
@@ -78,7 +79,7 @@ object Sketches {
   val sourceKmvDistinctSql: String =
     s"""WITH ${Dedup.ShingleCteSql},
        |sh32 AS (
-       |  SELECT DISTINCT d.source, CAST(concat('0x', substring(md5(e.s), 1, 8)) AS BIGINT) AS h
+       |  SELECT DISTINCT d.source, ${md5KeySql("e.s", 8)} AS h
        |  FROM ex e JOIN documents d ON e.doc_id = d.doc_id),
        |rk AS (
        |  SELECT source, h, ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rk FROM sh32),
@@ -134,7 +135,7 @@ object Sketches {
   val sourceOverlapKmvSql: String =
     s"""WITH ${Dedup.ShingleCteSql},
        |sh32 AS (
-       |  SELECT DISTINCT d.source, CAST(concat('0x', substring(md5(e.s), 1, 8)) AS BIGINT) AS h
+       |  SELECT DISTINCT d.source, ${md5KeySql("e.s", 8)} AS h
        |  FROM ex e JOIN documents d ON e.doc_id = d.doc_id),
        |kmv AS (
        |  SELECT source, h FROM (
@@ -259,8 +260,7 @@ object Sketches {
     def toks = Tables.documents(s, d)
       .select(explode(graft.functions.TextFunctions.tokens(lower($"text"))).as("t"))
     def bucket(seed: Column, t: Column): Column =
-      conv(substring(md5(concat(seed.cast("string"), lit(":"), t)), 1, 8), 16, 10)
-        .cast("long") % CmsWidth
+      md5Key(concat(seed.cast("string"), lit(":"), t), 8) % CmsWidth
     val sketch = toks
       .select($"t", explode(sequence(lit(0), lit(CmsDepth - 1))).as("seed"))
       .select($"seed", bucket($"seed", $"t").as("bucket"))
@@ -286,7 +286,7 @@ object Sketches {
          |), seeds AS (SELECT unnest(range($CmsDepth)) AS seed),
          |sketch AS (
          |  SELECT seed,
-         |    CAST(concat('0x', substring(md5(seed || ':' || t), 1, 8)) AS BIGINT) % $CmsWidth AS bucket,
+         |    ${md5KeySql("seed || ':' || t", 8)} % $CmsWidth AS bucket,
          |    COUNT(*) AS c
          |  FROM toks, seeds GROUP BY 1, 2
          |), probes AS (SELECT DISTINCT t FROM toks ORDER BY t LIMIT 30),
@@ -297,7 +297,7 @@ object Sketches {
          |  SELECT p.t, CAST(MIN(s.c) AS BIGINT) AS cms_est
          |  FROM probes p CROSS JOIN seeds sd
          |  JOIN sketch s ON s.seed = sd.seed
-         |   AND s.bucket = CAST(concat('0x', substring(md5(sd.seed || ':' || p.t), 1, 8)) AS BIGINT) % $CmsWidth
+         |   AND s.bucket = ${md5KeySql("sd.seed || ':' || p.t", 8)} % $CmsWidth
          |  GROUP BY p.t)
          |SELECT e.t AS term, e.exact_n, s.cms_est,
          |  s.cms_est - e.exact_n AS overcount

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity.{listSumSql, microNats, microNatsSql}
 import graft.functions.TextFunctions._
 import graft.queries.Tables
 
@@ -51,7 +52,7 @@ object TextAnalysis {
     val stops = StopWords.map(w => s"'$w'").mkString("[", ", ", "]")
     raw"""SELECT doc_id, LENGTH(text) AS len,
          |  len(toks) AS n_tokens,
-         |  CAST(list_sum(list_transform(toks, t -> LENGTH(t))) AS DOUBLE) / len(toks) AS mean_tok_len,
+         |  CAST(${listSumSql("toks", "t -> LENGTH(t)")} AS DOUBLE) / len(toks) AS mean_tok_len,
          |  CAST(len(list_filter(toks, t -> list_contains($stops, t))) AS DOUBLE) / len(toks) AS stop_ratio,
          |  CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
          |    / LENGTH(text) AS punct_ratio
@@ -183,7 +184,7 @@ object TextAnalysis {
     val total = toks.count()
     toks.join(broadcast(vocab), "tok")
       .withColumn("nll_micro",
-        -round(log($"cnt".cast("double") / lit(total.toDouble)) * 1e6).cast("long"))
+        -microNats($"cnt".cast("double") / lit(total.toDouble)))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_toks"),
         (sum($"nll_micro").cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
@@ -197,7 +198,7 @@ object TextAnalysis {
          |  SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY tok
          |), scored AS (
          |  SELECT t.doc_id,
-         |    -CAST(round(ln(CAST(v.cnt AS DOUBLE) / (SELECT CAST(COUNT(*) AS DOUBLE) FROM toks)) * 1000000.0) AS BIGINT) AS nll_micro
+         |    -${microNatsSql("CAST(v.cnt AS DOUBLE) / (SELECT CAST(COUNT(*) AS DOUBLE) FROM toks)")} AS nll_micro
          |  FROM toks t JOIN vocab v ON t.tok = v.tok
          |)
          |SELECT doc_id, COUNT(*) AS n_toks,
@@ -312,13 +313,18 @@ object TextAnalysis {
     bi.join(lm(big, nTypesL), Seq("w1", "w2"))
       .join(lm(fwd, nFwd), Seq("w1"))
       .join(lm(bwd, nBwd), Seq("w2"))
-      .withColumn("nll_micro", -round(log(p) * 1e6).cast("long"))
+      .withColumn("nll_micro", -microNats(p))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         (sum($"nll_micro").cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
       .orderBy($"doc_id")
   }
-  val textBigramKnSql: String =
+  val textBigramKnSql: String = {
+    val p =
+      """(CAST(big.c AS DOUBLE) - 0.75) / CAST(fwd.ctot AS DOUBLE)
+        |      + (0.75 * CAST(fwd.n1f AS DOUBLE) / CAST(fwd.ctot AS DOUBLE))
+        |        * (CAST(bwd.n1b AS DOUBLE)
+        |           / (SELECT CAST(COUNT(*) AS DOUBLE) FROM big))""".stripMargin
     raw"""WITH toks AS (
          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
          |), idx AS (
@@ -334,12 +340,7 @@ object TextAnalysis {
          |  SELECT w2, COUNT(*) AS n1b FROM big GROUP BY w2
          |), scored AS (
          |  SELECT bi.doc_id,
-         |    -CAST(round(ln(
-         |      (CAST(big.c AS DOUBLE) - 0.75) / CAST(fwd.ctot AS DOUBLE)
-         |      + (0.75 * CAST(fwd.n1f AS DOUBLE) / CAST(fwd.ctot AS DOUBLE))
-         |        * (CAST(bwd.n1b AS DOUBLE)
-         |           / (SELECT CAST(COUNT(*) AS DOUBLE) FROM big))
-         |    ) * 1000000.0) AS BIGINT) AS nll_micro
+         |    -${microNatsSql(p)} AS nll_micro
          |  FROM bi
          |  JOIN big ON bi.w1 = big.w1 AND bi.w2 = big.w2
          |  JOIN fwd ON bi.w1 = fwd.w1
@@ -348,6 +349,7 @@ object TextAnalysis {
          |SELECT doc_id, COUNT(*) AS n_bigrams,
          |  CAST(SUM(nll_micro) AS DOUBLE) / (COUNT(*) * 1000000.0) AS avg_nll
          |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
+  }
 
   /** Top-K collocations by pointwise mutual information
     * (`text_pmi_top`): the classic collocation extractor a corpus
@@ -389,14 +391,17 @@ object TextAnalysis {
     big.filter($"c" >= PmiMinCount)
       .join(mar(fwd, nFwd), Seq("w1"))
       .join(mar(bwd, nBwd), Seq("w2"))
-      .withColumn("pmi_micro", round(log(
+      .withColumn("pmi_micro", microNats(
         ($"c".cast("double") * lit(nTotL.toDouble)) /
-          ($"c1".cast("double") * $"c2".cast("double"))) * 1e6).cast("long"))
+          ($"c1".cast("double") * $"c2".cast("double"))))
       .select($"w1", $"w2", $"c", $"pmi_micro")
       .orderBy($"pmi_micro".desc, $"w1", $"w2")
       .limit(PmiTopK)
   }
-  val textPmiTopSql: String =
+  val textPmiTopSql: String = {
+    val pmi =
+      """(CAST(big.c AS DOUBLE) * (SELECT CAST(SUM(c) AS DOUBLE) FROM big))
+        |    / (CAST(fwd.c1 AS DOUBLE) * CAST(bwd.c2 AS DOUBLE))""".stripMargin
     raw"""WITH toks AS (
          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
          |), idx AS (
@@ -411,15 +416,13 @@ object TextAnalysis {
          |  SELECT w2, CAST(SUM(c) AS BIGINT) AS c2 FROM big GROUP BY w2
          |)
          |SELECT big.w1, big.w2, big.c,
-         |  CAST(round(ln(
-         |    (CAST(big.c AS DOUBLE) * (SELECT CAST(SUM(c) AS DOUBLE) FROM big))
-         |    / (CAST(fwd.c1 AS DOUBLE) * CAST(bwd.c2 AS DOUBLE))
-         |  ) * 1000000.0) AS BIGINT) AS pmi_micro
+         |  ${microNatsSql(pmi)} AS pmi_micro
          |FROM big
          |JOIN fwd ON big.w1 = fwd.w1
          |JOIN bwd ON big.w2 = bwd.w2
          |WHERE big.c >= $PmiMinCount
          |ORDER BY pmi_micro DESC, big.w1, big.w2 LIMIT $PmiTopK""".stripMargin
+  }
 
   // ------------------------------------------------ corpus heavy hitters
   /** Corpus-level heavy hitters: the [[NgramTopK]] adjacent bigrams with

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.functions.Parity
 import graft.sources.InMemoryQueueRegistry
 
 /** Round-2 streaming surface over the `graft-files` source: session
@@ -633,7 +634,7 @@ object Streaming2 {
           val hashed = sets.select(col("doc_id"), explode(col("sh")).as("sg"))
             .join(batch.select(col("doc_id"), col("source")), "doc_id")
             .select(col("source"),
-              conv(substring(md5(col("sg")), 1, 8), 16, 10).cast("long").as("h"))
+              Parity.md5Key(col("sg"), 8).as("h"))
             .distinct()
           val w = Window.partitionBy(col("source")).orderBy(col("h"))
           val sketch = hashed.withColumn("rk", row_number().over(w))
@@ -673,7 +674,7 @@ object Streaming2 {
     val K = graft.operators.Sketches.K
     s"""WITH ${graft.operators.Dedup.shingleCteSql("")},
        |sh32 AS (
-       |  SELECT DISTINCT d.source, CAST(concat('0x', substring(md5(e.s), 1, 8)) AS BIGINT) AS h
+       |  SELECT DISTINCT d.source, ${Parity.md5KeySql("e.s", 8)} AS h
        |  FROM ex e JOIN documents d ON e.doc_id = d.doc_id),
        |rk AS (
        |  SELECT source, h, ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rk FROM sh32),

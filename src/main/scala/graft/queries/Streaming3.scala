@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import graft.functions.Parity
 import graft.sources.InMemoryQueueRegistry
 
 /** Spark-4-native arbitrary state: the `transformWithState` API (the
@@ -313,8 +314,8 @@ object Streaming3 {
       .load()
       .select($"event_type", explode(sequence(lit(0), lit(depth - 1))).as("seed"))
       .select($"seed",
-        (conv(substring(md5(concat($"seed".cast("string"), lit(":"), $"event_type")), 1, 8), 16, 10)
-          .cast("long") % width).as("bucket"))
+        (Parity.md5Key(concat($"seed".cast("string"), lit(":"), $"event_type"), 8) % width)
+          .as("bucket"))
       .groupBy($"seed", $"bucket").agg(count(lit(1)).as("c"))
       .writeStream.format("memory").queryName(sinkName)
       .outputMode("complete").start()
@@ -326,7 +327,7 @@ object Streaming3 {
     s.table(sinkName).orderBy($"seed", $"bucket")
   }
   val streamCmsMonitorSql: String =
-    s"""SELECT seed, CAST(CAST(concat('0x', substring(md5(seed || ':' || event_type), 1, 8)) AS BIGINT)
+    s"""SELECT seed, CAST(${Parity.md5KeySql("seed || ':' || event_type", 8)}
        |    % ${graft.operators.Sketches.CmsWidth} AS BIGINT) AS bucket,
        |  CAST(COUNT(*) AS BIGINT) AS c
        |FROM events CROSS JOIN (SELECT unnest(range(${graft.operators.Sketches.CmsDepth})) AS seed) s
@@ -365,7 +366,7 @@ object Streaming3 {
       .option("minFilesForFirstBatch", files.length.toString)
       .load()
       .select($"event_id",
-        conv(substring(md5($"event_id".cast("string")), 1, 8), 16, 10).cast("long").as("hk"))
+        Parity.md5Key($"event_id", 8).as("hk"))
       .agg(graft.functions.TopKMinAgg.topkMin($"hk", $"event_id", StreamSampleK).as("tk"))
       .writeStream.format("memory").queryName(sinkName)
       .outputMode("complete").start()
@@ -382,7 +383,7 @@ object Streaming3 {
   val streamSampleConsistentSql: String =
     s"""SELECT event_id, hk FROM (
        |  SELECT event_id,
-       |    CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT) AS hk
+       |    ${Parity.md5KeySql("event_id", 8)} AS hk
        |  FROM events WHERE event_id < $CUTOFF
        |  ORDER BY hk, event_id LIMIT $StreamSampleK)
        |ORDER BY hk, event_id""".stripMargin
@@ -1159,8 +1160,8 @@ object Streaming3 {
     def grams(df: DataFrame): DataFrame = df
       .select($"doc_id", graft.functions.TextFunctions.tokens($"text").as("t"))
       .filter(size($"t") >= Curation.ContamN)
-      .select($"doc_id", explode(Curation.ngrams($"t", Curation.ContamN)).as("g"))
-      .select($"doc_id", Curation.gramKey($"g").as("gk"))
+      .select($"doc_id", explode(Parity.ngrams($"t", Curation.ContamN)).as("g"))
+      .select($"doc_id", Parity.md5Key($"g", 15).as("gk"))
       .distinct()
     // the standing eval index — a TRAIN-ONCE Models artifact (r22;
     // benchmarks are fixed, so their gram index is the canonical

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Parity
 import graft.sources.InMemoryQueueRegistry
 
 /** Streaming consumers of standing MODEL artifacts: rows where the
@@ -183,7 +184,7 @@ object Streaming4 {
             (lit(KnDiscount) * $"n1f".cast("double") / $"ctot".cast("double")) * $"pc")
           .otherwise($"pc")
         val scores = parts
-          .withColumn("nll_micro", -round(log(p) * 1e6).cast("long"))
+          .withColumn("nll_micro", -Parity.microNats(p))
           .groupBy($"doc_id")
           .agg(count(lit(1)).as("n_bigrams"),
             (sum($"nll_micro").cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
@@ -214,7 +215,18 @@ object Streaming4 {
 
   /** Batch-equivalent oracle: standing-LM KN scoring of the held-out
     * slice, backoff ladder spelled with the same parenthesization. */
-  val streamLmScoreSql: String =
+  val streamLmScoreSql: String = {
+    // interpolated Kneser-Ney probability, the same three cases as the
+    // Spark side's `p`
+    val p =
+      """CASE
+        |        WHEN c IS NOT NULL THEN
+        |          (CAST(c AS DOUBLE) - 0.75) / CAST(ctot AS DOUBLE)
+        |          + (0.75 * CAST(n1f AS DOUBLE) / CAST(ctot AS DOUBLE)) * pc
+        |        WHEN ctot IS NOT NULL THEN
+        |          (0.75 * CAST(n1f AS DOUBLE) / CAST(ctot AS DOUBLE)) * pc
+        |        ELSE pc
+        |      END""".stripMargin
     raw"""WITH toks AS (
          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
          |), train_idx AS (
@@ -248,20 +260,13 @@ object Streaming4 {
          |  LEFT JOIN bwd ON e.w2 = bwd.w2
          |), scored AS (
          |  SELECT doc_id,
-         |    -CAST(round(ln(
-         |      CASE
-         |        WHEN c IS NOT NULL THEN
-         |          (CAST(c AS DOUBLE) - 0.75) / CAST(ctot AS DOUBLE)
-         |          + (0.75 * CAST(n1f AS DOUBLE) / CAST(ctot AS DOUBLE)) * pc
-         |        WHEN ctot IS NOT NULL THEN
-         |          (0.75 * CAST(n1f AS DOUBLE) / CAST(ctot AS DOUBLE)) * pc
-         |        ELSE pc
-         |      END) * 1000000.0) AS BIGINT) AS nll_micro
+         |    -${Parity.microNatsSql(p)} AS nll_micro
          |  FROM parts
          |)
          |SELECT doc_id, COUNT(*) AS n_bigrams,
          |  CAST(SUM(nll_micro) AS DOUBLE) / (COUNT(*) * 1000000.0) AS avg_nll
          |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_lm_score" -> streamLmScore _,

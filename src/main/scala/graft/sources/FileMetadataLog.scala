@@ -32,10 +32,14 @@ trait FileMetadataLog extends AutoCloseable {
   def getFile(path: String): Option[FileEntry]
   /** Remove batches entirely below the horizon; bounded per call. */
   def purgeBefore(horizonMs: Long): Int
-  /** Operational counters as one JSON object (live batches, compactions,
-    * restore reads); logged by the source at every commit so log
-    * behavior is observable at runtime, not only spec-asserted. */
-  def metricsJson: String = "{}"
+  /** Operational counters (live batches, compactions, restore reads);
+    * published in the source's progress metrics. */
+  def metrics: Seq[(String, Long)] = Seq.empty
+
+  /** [[metrics]] as one JSON object; logged by the source at every commit
+    * so log behavior is observable at runtime, not only spec-asserted. */
+  def metricsJson: String =
+    metrics.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 }
 
 object FileBackedMetadataLog {
@@ -408,9 +412,10 @@ final class FileBackedMetadataLog(
     removed
   }
 
-  override def metricsJson: String =
-    s"""{"batches":${batches.size()},"compactions":$compactions,""" +
-      s""""lastRestoreFilesRead":$lastRestoreFilesRead}"""
+  override def metrics: Seq[(String, Long)] = Seq(
+    "batches" -> batches.size().toLong,
+    "compactions" -> compactions,
+    "lastRestoreFilesRead" -> lastRestoreFilesRead.toLong)
 
   override def close(): Unit = ()
 }

@@ -89,25 +89,23 @@ class GraftFileSource(
     }
   }
 
-  private val queueClient: AsyncQueueClient = options.queueType match {
-    case ConnectorOptions.QUEUE_TYPE_IN_MEMORY =>
-      new InMemoryQueueClient(options.queueName, consume, options.maxFilesPerTrigger,
-        options.visibilityTimeoutSeconds, options.maxConcurrency,
-        options.keepMessageOnConsumerError)
-    case ConnectorOptions.QUEUE_TYPE_SQS =>
-      // SDK-free SQS wire binding: queueName carries the full queue URL;
-      // same fetch discipline as the in-memory transport via QueueFetchClient.
-      // The signing region follows the URL's region when it names one
-      // (cross-region queue access), falling back to the configured region.
-      val raw = new SqsHttpQueue(options.queueName,
-        SqsHttpQueue.regionForQueueUrl(options.queueName, options.region),
-        options.credentialsProvider(), options.longPollWaitSeconds,
-        maxRetries = options.queueMaxRetries)
-      new QueueFetchClient(raw, options.queueName, consume, options.maxFilesPerTrigger,
-        options.visibilityTimeoutSeconds, options.maxConcurrency,
-        options.keepMessageOnConsumerError)
-    case other =>
-      throw new GraftUnsupportedQueueTypeException(other)
+  private val queueClient: QueueFetchClient = {
+    val transport: RawQueue = options.queueType match {
+      case ConnectorOptions.QUEUE_TYPE_IN_MEMORY => InMemoryQueueRegistry.queue(options.queueName)
+      case ConnectorOptions.QUEUE_TYPE_SQS =>
+        // SDK-free SQS wire binding: queueName carries the full queue URL.
+        // The signing region follows the URL's region when it names one
+        // (cross-region queue access), falling back to the configured region.
+        new SqsHttpQueue(options.queueName,
+          SqsHttpQueue.regionForQueueUrl(options.queueName, options.region),
+          options.credentialsProvider(), options.longPollWaitSeconds,
+          maxRetries = options.queueMaxRetries)
+      case other =>
+        throw new GraftUnsupportedQueueTypeException(other)
+    }
+    new QueueFetchClient(transport, options.queueName, consume, options.maxFilesPerTrigger,
+      options.visibilityTimeoutSeconds, options.maxConcurrency,
+      options.keepMessageOnConsumerError)
   }
 
   fileCache.purge()
@@ -322,10 +320,7 @@ class GraftFileSource(
       : java.util.Map[String, String] = {
     val m = new java.util.LinkedHashMap[String, String]()
     queueClient.metrics.snapshot.foreach { case (k, v) => m.put(s"queue.$k", v.toString) }
-    // the log's metrics (batches, compactions, restore reads) are one
-    // flat JSON object — flatten its fields
-    GraftFileSource.flatJsonFields(metadataLog.metricsJson)
-      .foreach { case (k, v) => m.put(s"log.$k", v) }
+    metadataLog.metrics.foreach { case (k, v) => m.put(s"log.$k", v.toString) }
     m.put("pendingFiles", fileCache.size.toString)
     m
   }
@@ -337,16 +332,4 @@ class GraftFileSource(
 
   override def toString: String =
     s"GraftFileSource[queue=${options.queueName}, format=${options.fileFormat}]"
-}
-
-object GraftFileSource {
-  /** Fields of a FLAT one-level JSON object (the shape the metadata log's
-    * `metricsJson` emits: string keys, numeric values) as key ->
-    * rendered-value pairs, in document order. Not a general JSON parser —
-    * nested objects/arrays would be surfaced as raw text, which the log
-    * never produces. */
-  private[sources] def flatJsonFields(json: String): Seq[(String, String)] = {
-    val Field = """"([^"]+)"\s*:\s*([^,{}\[\]]+)""".r
-    Field.findAllMatchIn(json).map(m => m.group(1) -> m.group(2).trim).toSeq
-  }
 }

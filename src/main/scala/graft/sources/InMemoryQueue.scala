@@ -85,21 +85,28 @@ object InMemoryQueueRegistry {
   * the caller blocks at most `waitTimeoutSeconds` and the round continues
   * in the background (overlap of ingest with query execution). The delete
   * path carries the reference's partial-failure discipline
-  * (AsyncSqsClientImpl.scala:238-289) regardless of transport.
+  * (AsyncSqsClientImpl.scala:238-289) regardless of transport. The one
+  * client class of the source (reference: AsyncQueueClient.scala:26-52);
+  * tests drive it over an [[InMemoryQueue]].
   */
-class QueueFetchClient(
+final class QueueFetchClient(
     queue: RawQueue,
     label: String,
     consumer: FileMetadata => Unit,
     maxFilesPerFetch: Option[Int],
     visibilityTimeoutSeconds: Int,
     maxConcurrency: Int,
-    keepMessageOnConsumerError: Boolean) extends AsyncQueueClient {
+    keepMessageOnConsumerError: Boolean) extends AutoCloseable {
 
   val metrics = new QueueClientMetrics
   private val receiveFailureStreak = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  override def consecutiveReceiveFailures: Int = receiveFailureStreak.get()
+  /** Number of fetch rounds in a row that ended in a receive failure; any
+    * round that talks to the queue successfully resets it. The source
+    * compares this against its error budget to fail the query loudly
+    * instead of letting a dead queue look like an idle (or, during an
+    * AvailableNow drain, a fully-drained) one. */
+  def consecutiveReceiveFailures: Int = receiveFailureStreak.get()
 
   private val pool = Executors.newFixedThreadPool(math.max(2, math.min(maxConcurrency, 16)), r => {
     val t = new Thread(r, s"graft-queue-fetch-$label")
@@ -110,7 +117,9 @@ class QueueFetchClient(
 
   private val ReceiveBatch = 10 // SQS receive hard limit, kept for parity
 
-  override def asyncFetch(waitTimeoutSeconds: Long): Future[Seq[ConsumeResult]] = {
+  /** Kick one fetch round-trip; the returned future completes when the
+    * round finishes (caller may stop waiting early and let it continue). */
+  def asyncFetch(waitTimeoutSeconds: Long): Future[Seq[ConsumeResult]] = {
     metrics.fetchThreadCounter.increment()
     val fut = Future {
       val results = mutable.ArrayBuffer[ConsumeResult]()
@@ -172,7 +181,7 @@ class QueueFetchClient(
     fut
   }
 
-  override def deleteMessage(messageId: String): Unit = {
+  def deleteMessage(messageId: String): Unit = {
     try {
       if (queue.delete(messageId)) metrics.deleteMessageCounter.increment()
       else metrics.deleteMessageFailedCounter.increment()
@@ -186,7 +195,7 @@ class QueueFetchClient(
     * failed ENTRY is counted and dropped (the message redelivers and is
     * re-acked later), while a failed CALL falls back to per-message
     * deletes so one broken batch endpoint can't strand a whole chunk. */
-  override def deleteMessageBatch(messageIds: Seq[String]): Unit =
+  def deleteMessageBatch(messageIds: Seq[String]): Unit =
     messageIds.grouped(ReceiveBatch).foreach { chunk =>
       try {
         queue.deleteBatch(chunk).foreach { case (_, ok) =>
@@ -198,7 +207,7 @@ class QueueFetchClient(
       }
     }
 
-  override def setMessageVisibility(messageId: String, timeoutSeconds: Int): Unit = {
+  def setMessageVisibility(messageId: String, timeoutSeconds: Int): Unit = {
     try {
       if (queue.changeVisibility(messageId, timeoutSeconds)) metrics.setVisibilityCounter.increment()
       else metrics.setVisibilityFailedCounter.increment()
@@ -207,7 +216,8 @@ class QueueFetchClient(
     }
   }
 
-  override def handleProcessedMessageBatch(messageIds: Seq[String]): Unit =
+  /** Ack a committed batch: delete all its messages (chunked). */
+  def handleProcessedMessageBatch(messageIds: Seq[String]): Unit =
     deleteMessageBatch(messageIds)
 
   override def close(): Unit = {
@@ -215,15 +225,3 @@ class QueueFetchClient(
     queue.close()
   }
 }
-
-/** The in-memory binding: same fetch discipline, process-local transport. */
-final class InMemoryQueueClient(
-    queueName: String,
-    consumer: FileMetadata => Unit,
-    maxFilesPerFetch: Option[Int],
-    visibilityTimeoutSeconds: Int,
-    maxConcurrency: Int,
-    keepMessageOnConsumerError: Boolean)
-  extends QueueFetchClient(
-    InMemoryQueueRegistry.queue(queueName), queueName, consumer, maxFilesPerFetch,
-    visibilityTimeoutSeconds, maxConcurrency, keepMessageOnConsumerError)

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util.concurrent.atomic.LongAdder
 
-import scala.concurrent.Future
-
 /** Counter set mirroring the reference's 14 queue-client metrics
   * (AsyncClientMetrics.scala:22-38, AsyncSqsClientMetricsImpl.scala:25-76). */
 final class QueueClientMetrics {
@@ -59,29 +57,4 @@ trait RawQueue extends AutoCloseable {
   def deleteBatch(messageIds: Seq[String]): Map[String, Boolean]
   def changeVisibility(messageId: String, timeoutSeconds: Int): Boolean
   override def close(): Unit = {}
-}
-
-/** Pluggable async queue-ingest seam (reference: AsyncQueueClient.scala:26-52).
-  *
-  * Implementations: [[InMemoryQueueClient]] (hermetic tests / local e2e) and
-  * [[QueueFetchClient]] over [[SqsHttpQueue]] (the SQS wire binding).
-  */
-trait AsyncQueueClient extends AutoCloseable {
-  /** Kick one fetch round-trip; the returned future completes when the
-    * round finishes (caller may stop waiting early and let it continue). */
-  def asyncFetch(waitTimeoutSeconds: Long): Future[Seq[ConsumeResult]]
-
-  /** Number of fetch rounds in a row that ended in a receive failure; any
-    * round that talks to the queue successfully resets it. The source
-    * compares this against its error budget to fail the query loudly
-    * instead of letting a dead queue look like an idle (or, during an
-    * AvailableNow drain, a fully-drained) one. */
-  def consecutiveReceiveFailures: Int
-
-  def deleteMessage(messageId: String): Unit
-  def deleteMessageBatch(messageIds: Seq[String]): Unit
-  def setMessageVisibility(messageId: String, timeoutSeconds: Int): Unit
-  /** Ack a committed batch: delete all its messages (chunked). */
-  def handleProcessedMessageBatch(messageIds: Seq[String]): Unit
-  def metrics: QueueClientMetrics
 }

@@ -1,5 +1,8 @@
 package org.apache.spark.sql.graftshim
 
+import java.util.concurrent.TimeoutException
+
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -39,4 +42,12 @@ object GraftShims {
     val rdd: RDD[InternalRow] = cs.sparkContext.emptyRDD[InternalRow]
     cs.internalCreateDataFrame(rdd, schema, isStreaming = true)
   }
+
+  /** Block until every listener has handled every event posted so far,
+    * for at most `timeoutMs`; false if the bus was still busy then. The
+    * bus delivers asynchronously, so a listener's counters read right
+    * after an action may miss that action's last task and stage events. */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long): Boolean =
+    try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: TimeoutException => false }
 }

@@ -58,6 +58,35 @@ class ShimSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.schema == schema)
   }
 
+  test("GraftShims.drainListenerBus: a slow listener has seen every task end of a job") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    assert(GraftShims.drainListenerBus(sc, 30000)) // earlier tests' events
+    val stages = new ConcurrentLinkedQueue[Integer]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        Thread.sleep(50) // slower than the tasks: events queue up on the bus
+        stages.add(e.stageId)
+      }
+    }
+    sc.addSparkListener(listener)
+    def runJob(): Seq[Int] = {
+      stages.clear()
+      sc.parallelize(1 to 8, 8).count()
+      assert(GraftShims.drainListenerBus(sc, 30000))
+      stages.toArray.toSeq.map(_.asInstanceOf[Integer].intValue)
+    }
+    try {
+      val first = runJob()
+      assert(first.size == 8, "all 8 task ends delivered once the drain returns")
+      val second = runJob()
+      assert(second.size == 8)
+      assert(second.toSet.intersect(first.toSet).isEmpty,
+        "no task end of the first job is counted against the next")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("DataSource.resolveRelation + LogicalRelation + ofRows: the getBatch spelling") {
     val dir = Files.createTempDirectory("graft-shim").toString
     spark.range(7).toDF("v").write.parquet(s"$dir/t.parquet")

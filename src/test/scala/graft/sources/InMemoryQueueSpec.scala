@@ -36,7 +36,7 @@ class InMemoryQueueSpec extends AnyFunSuite {
     (1 to 25).foreach(i => q.send(s"""{"path":"f$i","timestampMs":$i}"""))
     q.send("garbage")
     var seen = List.empty[String]
-    val client = new InMemoryQueueClient("fetch-1",
+    val client = new QueueFetchClient(q, "fetch-1",
       m => seen.synchronized { seen = m.filePath :: seen },
       maxFilesPerFetch = None, visibilityTimeoutSeconds = 60,
       maxConcurrency = 4, keepMessageOnConsumerError = false)
@@ -57,7 +57,7 @@ class InMemoryQueueSpec extends AnyFunSuite {
     q.clear()
     (1 to 30).foreach(i => q.send(s"""{"path":"g$i","timestampMs":$i}"""))
     var n = 0
-    val client = new InMemoryQueueClient("fetch-2", _ => n.synchronized { n += 1 },
+    val client = new QueueFetchClient(q, "fetch-2", _ => n.synchronized { n += 1 },
       maxFilesPerFetch = Some(12), visibilityTimeoutSeconds = 60,
       maxConcurrency = 4, keepMessageOnConsumerError = false)
     Await.result(client.asyncFetch(10), Duration(30, TimeUnit.SECONDS))
@@ -69,7 +69,7 @@ class InMemoryQueueSpec extends AnyFunSuite {
     val q = InMemoryQueueRegistry.queue("fetch-3")
     q.clear()
     q.send("""{"path":"bad","timestampMs":1}""")
-    val client = new InMemoryQueueClient("fetch-3",
+    val client = new QueueFetchClient(q, "fetch-3",
       _ => throw new RuntimeException("boom"),
       None, 60, 2, keepMessageOnConsumerError = false)
     val res = Await.result(client.asyncFetch(10), Duration(30, TimeUnit.SECONDS))
@@ -79,7 +79,7 @@ class InMemoryQueueSpec extends AnyFunSuite {
     client.close()
 
     q.send("""{"path":"bad2","timestampMs":1}""")
-    val keeper = new InMemoryQueueClient("fetch-3",
+    val keeper = new QueueFetchClient(q, "fetch-3",
       _ => throw new RuntimeException("boom"),
       None, 60, 2, keepMessageOnConsumerError = true)
     Await.result(keeper.asyncFetch(10), Duration(30, TimeUnit.SECONDS))
@@ -91,7 +91,7 @@ class InMemoryQueueSpec extends AnyFunSuite {
     val q = InMemoryQueueRegistry.queue("batch-del")
     q.clear()
     val ids = (1 to 25).map(i => q.send(s"""{"path":"d$i","timestampMs":$i}"""))
-    val client = new InMemoryQueueClient("batch-del", _ => (),
+    val client = new QueueFetchClient(q, "batch-del", _ => (),
       None, 60, 2, keepMessageOnConsumerError = false)
     // one unknown id in the middle: a failed ENTRY, not a failed call
     client.deleteMessageBatch(ids.take(10) :+ "no-such-id")
@@ -112,7 +112,7 @@ class InMemoryQueueSpec extends AnyFunSuite {
     q.clear()
     q.send("""{"path":"later","timestampMs":1}""")
     var consumed = 0
-    val client = new InMemoryQueueClient("fetch-fail", _ => consumed.synchronized { consumed += 1 },
+    val client = new QueueFetchClient(q, "fetch-fail", _ => consumed.synchronized { consumed += 1 },
       None, 60, 2, keepMessageOnConsumerError = false)
     q.failReceives = true
     (1 to 3).foreach { i =>
