@@ -1,11 +1,12 @@
 package graft.sources
 
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import scala.collection.mutable
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
+import scala.util.Try
 import scala.util.control.NonFatal
 
 /** A process-local message broker with SQS-like semantics: at-least-once
@@ -79,15 +80,27 @@ object InMemoryQueueRegistry {
 }
 
 /** Queue client over any [[RawQueue]] transport, implementing the
-  * reference's fetch semantics (AsyncSqsClientImpl.scala:61-167): a fetch
-  * round receives, parses, and consumes concurrently; the loop stops when a
-  * round comes back empty or `maxFilesPerTrigger` messages were consumed;
-  * the caller blocks at most `waitTimeoutSeconds` and the round continues
-  * in the background (overlap of ingest with query execution). The delete
-  * path carries the reference's partial-failure discipline
-  * (AsyncSqsClientImpl.scala:238-289) regardless of transport. The one
-  * client class of the source (reference: AsyncQueueClient.scala:26-52);
-  * tests drive it over an [[InMemoryQueue]].
+  * reference's fetch semantics (AsyncSqsClientImpl.scala:61-167) with up to
+  * `maxConcurrency` wire calls in flight at once.
+  *
+  * A fetch round is a chain of waves of concurrent receives. It starts with
+  * one receive, so an idle or failing queue costs one call per round (each
+  * is billed on real SQS). While every receive of the last wave came back
+  * full, the next wave issues min(maxConcurrency, ceil(remaining / 10))
+  * receives together, never asking for more than the round's remaining
+  * `maxFilesPerFetch` in total; after a partly full wave the next is one
+  * receive again. Each wave's messages are then parsed and consumed one
+  * after another, in receive order. The round ends at the budget, when a
+  * receive comes back empty (`ReceiveEmpty`) or when one throws (one
+  * `ReceiveException` per wave). The caller blocks at most
+  * `waitTimeoutSeconds` and the round continues in the background (overlap
+  * of ingest with query execution).
+  *
+  * The delete path carries the reference's partial-failure discipline
+  * (AsyncSqsClientImpl.scala:238-289) regardless of transport and sends a
+  * batch's 10-entry chunks concurrently. The one client class of the source
+  * (reference: AsyncQueueClient.scala:26-52); tests drive it over an
+  * [[InMemoryQueue]] and over [[SqsHttpQueue]].
   */
 final class QueueFetchClient(
     queue: RawQueue,
@@ -108,70 +121,56 @@ final class QueueFetchClient(
     * AvailableNow drain, a fully-drained) one. */
   def consecutiveReceiveFailures: Int = receiveFailureStreak.get()
 
-  private val pool = Executors.newFixedThreadPool(math.max(2, math.min(maxConcurrency, 16)), r => {
-    val t = new Thread(r, s"graft-queue-fetch-$label")
-    t.setDaemon(true)
-    t
-  })
-  private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+  // One pool thread per in-flight wire call. No pool thread ever waits on
+  // another pool task, so overlapping rounds cannot starve the pool.
+  private val pool = {
+    val p = new ThreadPoolExecutor(maxConcurrency, maxConcurrency, 60L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-queue-fetch-$label")
+        t.setDaemon(true)
+        t.setUncaughtExceptionHandler { (th, e) =>
+          metrics.fetchThreadUncaughtExceptionCounter.increment()
+          th.getThreadGroup.uncaughtException(th, e)
+        }
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+  // Every step that does work runs through onPool; the glue between steps
+  // only starts the next one, on the thread that finished the previous.
+  private implicit val glue: ExecutionContext = ExecutionContext.parasitic
 
   private val ReceiveBatch = 10 // SQS receive hard limit, kept for parity
 
-  /** Kick one fetch round-trip; the returned future completes when the
-    * round finishes (caller may stop waiting early and let it continue). */
+  /** How long a caller waits for the wire calls it fanned out (a batch's
+    * deletes; in-flight calls at close). A call still running after the
+    * visibility timeout has lost its messages' lease anyway: they are
+    * redelivered and acked again. */
+  private val callWaitSeconds = math.max(1L, visibilityTimeoutSeconds.toLong)
+
+  /** Runs `body` on the pool. `Future.apply` never completes its future when
+    * the body throws a fatal error; here any throwable fails the future, and
+    * a fatal one is rethrown afterwards so it still reaches the thread's
+    * uncaught-exception handler. A closed pool fails the future too. */
+  private def onPool[A](body: => A): Future[A] = {
+    val p = Promise[A]()
+    try {
+      pool.execute { () =>
+        try p.success(body)
+        catch { case t: Throwable => p.failure(t); if (!NonFatal(t)) throw t }
+      }
+    } catch { case NonFatal(e) => p.failure(e) }
+    p.future
+  }
+
+  /** Kick one fetch round; the returned future completes when the round
+    * finishes (caller may stop waiting early and let it continue). */
   def asyncFetch(waitTimeoutSeconds: Long): Future[Seq[ConsumeResult]] = {
     metrics.fetchThreadCounter.increment()
-    val fut = Future {
-      val results = mutable.ArrayBuffer[ConsumeResult]()
-      var consumed = 0
-      var done = false
-      val budget = maxFilesPerFetch.getOrElse(Int.MaxValue)
-      while (!done && consumed < budget) {
-        val received =
-          try {
-            val msgs =
-              queue.receive(math.min(ReceiveBatch, budget - consumed), visibilityTimeoutSeconds)
-            receiveFailureStreak.set(0) // the queue answered: streak over
-            msgs
-          } catch {
-            case NonFatal(_) =>
-              metrics.receiveMessageFailedCounter.increment()
-              receiveFailureStreak.incrementAndGet()
-              results += ConsumeResult.ReceiveException
-              done = true
-              Seq.empty[QueueMessage]
-          }
-        if (received.isEmpty) {
-          if (!done) results += ConsumeResult.ReceiveEmpty
-          done = true
-        } else {
-          metrics.receiveMessageCounter.add(received.size)
-          received.foreach { msg =>
-            EventParser.parse(msg) match {
-              case Some(meta) =>
-                metrics.parseMessageCounter.increment()
-                try {
-                  consumer(meta)
-                  metrics.consumeMessageCounter.increment()
-                  results += ConsumeResult.Ok
-                } catch {
-                  case NonFatal(_) =>
-                    metrics.consumeMessageFailedCounter.increment()
-                    results += ConsumeResult.ConsumerException
-                    if (!keepMessageOnConsumerError) deleteMessage(msg.messageId)
-                }
-              case None =>
-                // unparsable / non-create events are dropped immediately
-                metrics.parseMessageFailedCounter.increment()
-                metrics.discardedMessageCounter.increment()
-                deleteMessage(msg.messageId)
-                results += ConsumeResult.ParseNone
-            }
-            consumed += 1
-          }
-        }
-      }
-      results.toSeq
+    val fut = fetchRound().transform { r =>
+      if (r.isFailure) metrics.fetchThreadFailedCounter.increment()
+      r
     }
     // block the trigger thread at most waitTimeoutSeconds; on timeout the
     // fetch keeps running and its results land in the cache for the next
@@ -180,6 +179,67 @@ final class QueueFetchClient(
     catch { case _: java.util.concurrent.TimeoutException => () }
     fut
   }
+
+  private def fetchRound(): Future[Seq[ConsumeResult]] = {
+    val budget = maxFilesPerFetch.getOrElse(Int.MaxValue)
+    val results = mutable.ArrayBuffer[ConsumeResult]()
+    var received = 0 // messages received so far, charged against the budget
+
+    // consume one wave in receive order; the next wave's width, 0 to stop
+    def settle(asked: Seq[Int], replies: Seq[Try[Seq[QueueMessage]]]): Int = {
+      replies.foreach(_.foreach { msgs =>
+        metrics.receiveMessageCounter.add(msgs.size)
+        msgs.foreach(msg => results += consume(msg))
+        received += msgs.size
+      })
+      val failed = replies.count(_.isFailure)
+      if (failed > 0) {
+        metrics.receiveMessageFailedCounter.add(failed)
+        receiveFailureStreak.incrementAndGet()
+        results += ConsumeResult.ReceiveException
+        0
+      } else {
+        receiveFailureStreak.set(0) // the queue answered: streak over
+        val got = replies.map(_.get.size)
+        if (got.contains(0)) { results += ConsumeResult.ReceiveEmpty; 0 }
+        else if (received >= budget) 0
+        else if (got == asked) math.min(maxConcurrency, (budget - received - 1) / ReceiveBatch + 1)
+        else 1
+      }
+    }
+
+    def wave(width: Int): Future[Seq[ConsumeResult]] = {
+      val remaining = budget - received
+      val asked = Seq.tabulate(width)(i => math.min(ReceiveBatch, remaining - i * ReceiveBatch))
+      Future.traverse(asked)(n => onPool(Try(queue.receive(n, visibilityTimeoutSeconds))))
+        .flatMap(replies => onPool(settle(asked, replies)))
+        .flatMap(next => if (next > 0) wave(next) else Future.successful(results.toSeq))
+    }
+
+    wave(1)
+  }
+
+  private def consume(msg: QueueMessage): ConsumeResult =
+    EventParser.parse(msg) match {
+      case Some(meta) =>
+        metrics.parseMessageCounter.increment()
+        try {
+          consumer(meta)
+          metrics.consumeMessageCounter.increment()
+          ConsumeResult.Ok
+        } catch {
+          case NonFatal(_) =>
+            metrics.consumeMessageFailedCounter.increment()
+            if (!keepMessageOnConsumerError) deleteMessage(msg.messageId)
+            ConsumeResult.ConsumerException
+        }
+      case None =>
+        // unparsable / non-create events are dropped immediately
+        metrics.parseMessageFailedCounter.increment()
+        metrics.discardedMessageCounter.increment()
+        deleteMessage(msg.messageId)
+        ConsumeResult.ParseNone
+    }
 
   def deleteMessage(messageId: String): Unit = {
     try {
@@ -194,17 +254,27 @@ final class QueueFetchClient(
     * partial-failure discipline (AsyncSqsClientImpl.scala:238-289): a
     * failed ENTRY is counted and dropped (the message redelivers and is
     * re-acked later), while a failed CALL falls back to per-message
-    * deletes so one broken batch endpoint can't strand a whole chunk. */
-  def deleteMessageBatch(messageIds: Seq[String]): Unit =
-    messageIds.grouped(ReceiveBatch).foreach { chunk =>
-      try {
-        queue.deleteBatch(chunk).foreach { case (_, ok) =>
-          if (ok) metrics.deleteMessageCounter.increment()
-          else metrics.deleteMessageFailedCounter.increment()
-        }
-      } catch {
-        case NonFatal(_) => chunk.foreach(deleteMessage)
+    * deletes so one broken batch endpoint can't strand a whole chunk.
+    * Several chunks go out concurrently and the caller waits for them at
+    * most `callWaitSeconds`; a single chunk runs on the caller's thread. */
+  def deleteMessageBatch(messageIds: Seq[String]): Unit = {
+    val chunks = messageIds.grouped(ReceiveBatch).toSeq
+    if (chunks.lengthCompare(1) <= 0) chunks.foreach(deleteChunk)
+    else {
+      val all = Future.traverse(chunks)(chunk => onPool(deleteChunk(chunk)))
+      try Await.ready(all, Duration(callWaitSeconds, TimeUnit.SECONDS))
+      catch { case _: java.util.concurrent.TimeoutException => () }
+    }
+  }
+
+  private def deleteChunk(chunk: Seq[String]): Unit =
+    try {
+      queue.deleteBatch(chunk).foreach { case (_, ok) =>
+        if (ok) metrics.deleteMessageCounter.increment()
+        else metrics.deleteMessageFailedCounter.increment()
       }
+    } catch {
+      case NonFatal(_) => chunk.foreach(deleteMessage)
     }
 
   def setMessageVisibility(messageId: String, timeoutSeconds: Int): Unit = {
@@ -220,8 +290,14 @@ final class QueueFetchClient(
   def handleProcessedMessageBatch(messageIds: Seq[String]): Unit =
     deleteMessageBatch(messageIds)
 
+  /** Stops new work, waits at most `callWaitSeconds` for in-flight wire
+    * calls so none signs with credentials the transport is about to close,
+    * then closes the transport. A round whose next step the closed pool
+    * refuses fails instead of consuming. */
   override def close(): Unit = {
     pool.shutdown()
+    try pool.awaitTermination(callWaitSeconds, TimeUnit.SECONDS)
+    catch { case _: InterruptedException => Thread.currentThread().interrupt() }
     queue.close()
   }
 }

@@ -1,11 +1,45 @@
 package graft.sources
 
 import java.util.concurrent.TimeUnit
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable
 import scala.concurrent.Await
-import scala.concurrent.duration.Duration
+import scala.concurrent.duration._
 
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Delegates to `q`, recording each receive's requested size and the most
+  * receives in flight at once. Each receive takes `delayMs`; the
+  * `failCall`-th receive (1-based) throws instead of receiving. */
+private final class CountingQueue(q: RawQueue, delayMs: Long = 0L, failCall: Int = 0)
+    extends RawQueue {
+  private val asked = mutable.ArrayBuffer[Int]()
+  private val calls = new AtomicInteger(0)
+  private val inFlight = new AtomicInteger(0)
+  private val inFlightMax = new AtomicInteger(0)
+
+  def receiveCalls: Int = calls.get()
+  def inFlightPeak: Int = inFlightMax.get()
+  /** Sizes asked since the last call, in call order. */
+  def takeAsked(): Seq[Int] = asked.synchronized { val a = asked.toSeq; asked.clear(); a }
+
+  override def receive(max: Int, visibilityTimeoutSeconds: Int): Seq[QueueMessage] = {
+    val n = calls.incrementAndGet()
+    asked.synchronized(asked += max)
+    inFlightMax.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+    try {
+      if (delayMs > 0) Thread.sleep(delayMs)
+      if (n == failCall) throw new RuntimeException(s"injected failure of receive $n")
+      q.receive(max, visibilityTimeoutSeconds)
+    } finally inFlight.decrementAndGet()
+  }
+  override def delete(messageId: String): Boolean = q.delete(messageId)
+  override def deleteBatch(messageIds: Seq[String]): Map[String, Boolean] = q.deleteBatch(messageIds)
+  override def changeVisibility(messageId: String, timeoutSeconds: Int): Boolean =
+    q.changeVisibility(messageId, timeoutSeconds)
+}
 
 class InMemoryQueueSpec extends AnyFunSuite {
 
@@ -127,5 +161,88 @@ class InMemoryQueueSpec extends AnyFunSuite {
     assert(ok.contains(ConsumeResult.Ok) && consumed == 1)
     assert(client.consecutiveReceiveFailures == 0)
     client.close()
+  }
+
+  private def filled(name: String, n: Int): InMemoryQueue = {
+    val q = new InMemoryQueue(name)
+    (1 to n).foreach(i => q.send(s"""{"path":"$name-$i","timestampMs":$i}"""))
+    q
+  }
+
+  private def countingClient(q: RawQueue, maxFiles: Option[Int], maxConcurrency: Int) =
+    new QueueFetchClient(q, "counting", _ => (), maxFiles, visibilityTimeoutSeconds = 60,
+      maxConcurrency = maxConcurrency, keepMessageOnConsumerError = false)
+
+  private def round(c: QueueFetchClient): Seq[ConsumeResult] =
+    Await.result(c.asyncFetch(10), 30.seconds)
+
+  test("round accounting: an empty queue costs one receive per round") {
+    val q = new CountingQueue(new InMemoryQueue("acct-empty"))
+    val c = countingClient(q, None, maxConcurrency = 8)
+    (1 to 3).foreach { i =>
+      assert(round(c) == Seq(ConsumeResult.ReceiveEmpty))
+      assert(q.receiveCalls == i)
+    }
+    c.close()
+  }
+
+  test("round accounting: no round asks for more than maxFilesPerFetch") {
+    val q = new CountingQueue(filled("acct-budget", 100))
+    val c = countingClient(q, Some(25), maxConcurrency = 8)
+    (1 to 4).foreach { _ =>
+      val res = round(c)
+      assert(res.count(_ == ConsumeResult.Ok) == 25)
+      // a full probe of 10, then one wave asking for exactly the other 15
+      assert(q.takeAsked().sorted == Seq(5, 10, 10))
+    }
+    assert(round(c) == Seq(ConsumeResult.ReceiveEmpty))
+    c.close()
+  }
+
+  test("round accounting: a full probe is followed by a wider wave") {
+    val q = new CountingQueue(filled("acct-wave", 35), delayMs = 50)
+    val c = countingClient(q, None, maxConcurrency = 4)
+    val res = round(c)
+    assert(res.count(_ == ConsumeResult.Ok) == 35)
+    assert(res.last == ConsumeResult.ReceiveEmpty)
+    assert(q.takeAsked() == Seq.fill(5)(10), "probe, then a wave of maxConcurrency receives")
+    assert(q.inFlightPeak > 1, "the wave's receives were in flight together")
+    c.close()
+  }
+
+  test("round accounting: one throwing receive in a wave fails the wave once") {
+    // receive 3 is the second of the wave that follows the full probe
+    val q = new CountingQueue(filled("acct-fail", 40), delayMs = 20, failCall = 3)
+    val c = countingClient(q, None, maxConcurrency = 4)
+    val res = round(c)
+    assert(q.receiveCalls == 5)
+    assert(res.count(_ == ConsumeResult.Ok) == 40, "the other receives' messages are consumed")
+    assert(res.count(_ == ConsumeResult.ReceiveException) == 1)
+    assert(res.last == ConsumeResult.ReceiveException)
+    assert(c.consecutiveReceiveFailures == 1)
+    assert(c.metrics.receiveMessageFailedCounter.sum() == 1)
+    c.close()
+  }
+
+  test("a fatal error in receive fails the round instead of hanging it") {
+    val fatal = new RawQueue { // NonFatal does not match a LinkageError
+      override def receive(max: Int, visibilityTimeoutSeconds: Int): Seq[QueueMessage] =
+        throw new LinkageError("injected fatal receive error")
+      override def delete(messageId: String): Boolean = false
+      override def deleteBatch(messageIds: Seq[String]): Map[String, Boolean] = Map.empty
+      override def changeVisibility(messageId: String, timeoutSeconds: Int): Boolean = false
+    }
+    val c = countingClient(fatal, None, maxConcurrency = 2)
+    val fut = c.asyncFetch(0)
+    Await.ready(fut, 10.seconds) // a TimeoutException here is the hang
+    // a Promise boxes a fatal error in an ExecutionException
+    val failure = fut.value.flatMap(_.failed.toOption)
+    assert(failure.exists(_.getCause.isInstanceOf[LinkageError]), s"round ended with $failure")
+    assert(c.metrics.fetchThreadFailedCounter.sum() == 1)
+    // the fatal error is rethrown on its pool thread after failing the round
+    eventually(timeout(5.seconds)) {
+      assert(c.metrics.fetchThreadUncaughtExceptionCounter.sum() == 1)
+    }
+    c.close()
   }
 }

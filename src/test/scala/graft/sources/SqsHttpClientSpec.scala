@@ -1,7 +1,9 @@
 package graft.sources
 
 import java.util.concurrent.TimeUnit
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
@@ -167,6 +169,62 @@ class SqsHttpClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c.consecutiveReceiveFailures == 0)
     stub.queue.clear()
     c.close()
+  }
+
+  test("concurrent receives over the wire: every file consumed once, the ack empties the queue") {
+    val slow = new SqsStubServer(Map(Akid -> Secret), replyDelayMs = 30)
+    try {
+      (1 to 200).foreach(i => slow.queue.send(s"""{"path":"w$i","timestampMs":$i}"""))
+      val consumed = mutable.Map[String, Int]()
+      val ids = mutable.ArrayBuffer[String]()
+      val c = new QueueFetchClient(
+        new SqsHttpQueue(slow.queueUrl, "us-east-1", StaticCredentialsProvider(creds),
+          longPollWaitSeconds = 0),
+        "sqs-wide", m => consumed.synchronized {
+          consumed(m.filePath) = consumed.getOrElse(m.filePath, 0) + 1
+          ids += m.messageId
+        },
+        maxFilesPerFetch = Some(50), visibilityTimeoutSeconds = 60, maxConcurrency = 8,
+        keepMessageOnConsumerError = false)
+      var rounds = 0
+      while (!fetch(c).contains(ConsumeResult.ReceiveEmpty)) {
+        rounds += 1
+        assert(rounds <= 4, "50 files a round")
+      }
+      assert(consumed.size == 200 && consumed.values.forall(_ == 1), "no file admitted twice")
+      assert(slow.inFlightPeak > 1, "receives of one wave were on the wire together")
+      c.handleProcessedMessageBatch(ids.toSeq)
+      assert(slow.queue.approximateSize == 0)
+      assert(c.metrics.deleteMessageCounter.sum() == 200)
+      assert(slow.rejectedSignatures == 0)
+      c.close()
+    } finally slow.stop()
+  }
+
+  test("close mid-wave waits for in-flight calls; none signs after the transport closed") {
+    val slow = new SqsStubServer(Map(Akid -> Secret), replyDelayMs = 200)
+    val signedAfterClose = new AtomicInteger(0)
+    val provider = new ConnectorCredentialsProvider {
+      @volatile private var closed = false
+      override def resolve(): QueueCredentials = {
+        if (closed) signedAfterClose.incrementAndGet()
+        creds
+      }
+      override def close(): Unit = closed = true
+    }
+    try {
+      (1 to 100).foreach(i => slow.queue.send(s"""{"path":"x$i","timestampMs":$i}"""))
+      val c = new QueueFetchClient(
+        new SqsHttpQueue(slow.queueUrl, "us-east-1", provider, longPollWaitSeconds = 0),
+        "sqs-close", _ => (), None, 60, 8, keepMessageOnConsumerError = false)
+      val round = c.asyncFetch(0)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (slow.inFlightPeak < 2 && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(slow.inFlightPeak >= 2, "the wave after the probe is on the wire")
+      c.close() // must not throw
+      assert(round.isCompleted, "close waited for the wave's calls")
+      assert(signedAfterClose.get() == 0)
+    } finally slow.stop()
   }
 
   test("long-poll wait is forwarded on the wire") {

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.control.NonFatal
 
@@ -18,13 +20,25 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * signed headers, x-amz-date) against the secret for the claimed access
   * key, and answers 403 on mismatch — so a canonicalization bug on either
   * side fails loudly instead of passing vacuously.
+  *
+  * Requests are handled concurrently; `replyDelayMs` holds each one that
+  * long before it is handled (a round trip), and `inFlightPeak` is the
+  * most requests the stub held at once.
   */
-final class SqsStubServer(secretsByAccessKey: Map[String, String], region: String = "us-east-1") {
+final class SqsStubServer(
+    secretsByAccessKey: Map[String, String],
+    region: String = "us-east-1",
+    replyDelayMs: Long = 0L) {
 
   val queue = new InMemoryQueue("sqs-stub")
   @volatile var lastWaitTimeSeconds: Option[Int] = None
-  @volatile var rejectedSignatures: Int = 0
-  @volatile var requestCount: Int = 0
+  private val rejected = new AtomicInteger(0)
+  private val requests = new AtomicInteger(0)
+  private val inFlight = new AtomicInteger(0)
+  private val inFlightMax = new AtomicInteger(0)
+  def rejectedSignatures: Int = rejected.get()
+  def requestCount: Int = requests.get()
+  def inFlightPeak: Int = inFlightMax.get()
   /** Chaos hook: the next N requests are answered with `transientStatus`
     * before any handling (the outage-then-recovery shape a wire retry
     * must absorb). */
@@ -32,14 +46,23 @@ final class SqsStubServer(secretsByAccessKey: Map[String, String], region: Strin
   @volatile var transientStatus: Int = 503
   @volatile var transientFailuresServed: Int = 0
 
+  private val handlers = Executors.newFixedThreadPool(16, r => {
+    val t = new Thread(r, "sqs-stub-handler")
+    t.setDaemon(true)
+    t
+  })
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.createContext("/", (exchange: HttpExchange) => handle(exchange))
-  server.setExecutor(null)
+  server.setExecutor(handlers)
   server.start()
 
   def port: Int = server.getAddress.getPort
   def queueUrl: String = s"http://127.0.0.1:$port/123456789012/graft-stub-queue"
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    handlers.shutdownNow()
+    handlers.awaitTermination(5, TimeUnit.SECONDS)
+  }
 
   private def xmlEscape(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
@@ -91,7 +114,15 @@ final class SqsStubServer(secretsByAccessKey: Map[String, String], region: Strin
     }.toMap
 
   private def handle(ex: HttpExchange): Unit = {
-    requestCount += 1
+    requests.incrementAndGet()
+    inFlightMax.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+    try {
+      if (replyDelayMs > 0) Thread.sleep(replyDelayMs)
+      dispatch(ex)
+    } finally inFlight.decrementAndGet()
+  }
+
+  private def dispatch(ex: HttpExchange): Unit = {
     if (transientFailuresRemaining > 0) {
       transientFailuresRemaining -= 1
       transientFailuresServed += 1
@@ -102,7 +133,7 @@ final class SqsStubServer(secretsByAccessKey: Map[String, String], region: Strin
       val payload = ex.getRequestBody.readAllBytes()
       verifySignature(ex, payload) match {
         case Some(reason) =>
-          rejectedSignatures += 1
+          rejected.incrementAndGet()
           error(ex, 403, "SignatureDoesNotMatch", reason)
         case None =>
           val params = formDecode(new String(payload, StandardCharsets.UTF_8))
