@@ -116,19 +116,7 @@ object Bench {
           sys.error(s"rounds argument must be an integer, got: '$s'")
       }
     }.getOrElse(1)
-    // default to the real core count (capped at 32): every query is
-    // decimal-exact by construction, so parallelism never changes results
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the 128-column minhash signature aggregate must stay inside
-      // whole-stage codegen (default field cap is 100)
-      .config("spark.sql.codegen.maxFields", "256")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val calibStartMs = calibrationSpinMs()

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.timestamp_micros
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.streaming.Trigger
@@ -68,114 +68,109 @@ object PerfHarness {
     }
   }
 
+  /** Announce `paths` on the in-memory queue `queue`. */
+  private def announce(queue: String, paths: Seq[String]): Unit = {
+    val q = InMemoryQueueRegistry.queue(queue)
+    paths.foreach(p => q.send(s"""{"path":"$p","timestampMs":${System.currentTimeMillis()}}"""))
+  }
+
+  /** The push side: csv files announced on `queue`, read by graft-files. */
+  private def pushSource(spark: SparkSession, queue: String, mfpt: Option[Int]): DataFrame = {
+    val reader = spark.readStream.format("graft-files").schema(harnessSchema)
+      .option("fileFormat", "csv").option("queueName", queue)
+      .option("queueFetchWaitTimeoutSeconds", "5")
+    mfpt.foreach(m => reader.option("maxFilesPerTrigger", m.toString))
+    reader.load()
+  }
+
+  /** The listing side: Spark's built-in csv source over `dir`. */
+  private def listingSource(spark: SparkSession, dir: Path, mfpt: Option[Int]): DataFrame = {
+    val reader = spark.readStream.format("csv").schema(harnessSchema)
+    mfpt.foreach(m => reader.option("maxFilesPerTrigger", m.toString))
+    reader.load(dir.toString)
+  }
+
+  /** Drain `src` with one AvailableNow query into the csv sink `out` on
+    * checkpoint `cp`; returns the wall seconds, the source's resolution
+    * included. A restart on the same checkpoint resumes where the last
+    * drain stopped. */
+  private def drain(out: Path, cp: Path, src: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    src.writeStream.format("csv")
+      .option("path", out.toString)
+      .option("checkpointLocation", cp.toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Untimed warm-up of BOTH paths under `root`: the first streaming
+    * query in a JVM pays one-time costs (codegen, sink committers,
+    * state-store classes) that would otherwise bias whichever side runs
+    * first. */
+  private def warmUp(spark: SparkSession, root: Path): Unit = {
+    val warmDir = Files.createDirectory(root.resolve("warm"))
+    val queue = s"pt-warm-${System.nanoTime()}"
+    announce(queue, generate(warmDir, 0, 1, 1))
+    try drain(root.resolve("warmOutG"), root.resolve("warmCpG"), pushSource(spark, queue, None))
+    finally InMemoryQueueRegistry.remove(queue)
+    drain(root.resolve("warmOutF"), root.resolve("warmCpF"), listingSource(spark, warmDir, None))
+  }
+
   def run(spark: SparkSession, nFiles: Int, rowsPerFile: Int): Result = {
     val root = Files.createTempDirectory("graft-pt")
     val dataDir = Files.createDirectory(root.resolve("data"))
     val paths = generate(dataDir, 0, nFiles, rowsPerFile)
+    warmUp(spark, root)
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def drain(out: Path, cp: Path, build: => org.apache.spark.sql.DataFrame): Double = timed {
-      val q = build.writeStream.format("csv")
-        .option("path", out.toString)
-        .option("checkpointLocation", cp.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    // untimed warmup of BOTH paths: the first streaming query in a JVM
-    // pays one-time costs (codegen, sink committers, state-store classes)
-    // that would otherwise bias whichever side runs first
-    val warmDir = Files.createDirectory(root.resolve("warm"))
-    val warmPath = generate(warmDir, 0, 1, 1).head
-    val warmQ = s"pt-warm-${System.nanoTime()}"
-    InMemoryQueueRegistry.queue(warmQ)
-      .send(s"""{"path":"$warmPath","timestampMs":${System.currentTimeMillis()}}""")
-    drain(root.resolve("warmOutG"), root.resolve("warmCpG"),
-      spark.readStream.format("graft-files").schema(harnessSchema)
-        .option("fileFormat", "csv").option("queueName", warmQ)
-        .option("queueFetchWaitTimeoutSeconds", "5").load())
-    drain(root.resolve("warmOutF"), root.resolve("warmCpF"),
-      spark.readStream.format("csv").schema(harnessSchema).load(warmDir.toString))
-
+    val mfpt = Some(5000)
     // push-based: the backlog is announced up front, AvailableNow drains it
     val queueName = s"pt-${System.nanoTime()}"
-    val queue = InMemoryQueueRegistry.queue(queueName)
-    paths.foreach(p => queue.send(s"""{"path":"$p","timestampMs":${System.currentTimeMillis()}}"""))
-    val graftSec = drain(root.resolve("outGraft"), root.resolve("cpGraft"),
-      spark.readStream.format("graft-files").schema(harnessSchema)
-        .option("fileFormat", "csv")
-        .option("queueName", queueName)
-        .option("maxFilesPerTrigger", "5000")
-        .option("queueFetchWaitTimeoutSeconds", "5")
-        .load())
+    def drainBoth(): (Double, Double) = (
+      drain(root.resolve("outGraft"), root.resolve("cpGraft"), pushSource(spark, queueName, mfpt)),
+      // baseline: Spark's built-in csv stream source, identical pipeline
+      drain(root.resolve("outFile"), root.resolve("cpFile"), listingSource(spark, dataDir, mfpt)))
+    try {
+      announce(queueName, paths)
+      val (graftSec, fileSec) = drainBoth()
 
-    // baseline: Spark's built-in csv stream source, identical pipeline
-    val fileSec = drain(root.resolve("outFile"), root.resolve("cpFile"),
-      spark.readStream.format("csv").schema(harnessSchema)
-        .option("maxFilesPerTrigger", "5000")
-        .load(dataDir.toString))
+      // incremental phase — where push-based discovery earns its keep: a few
+      // NEW files land in the now-large directory each round. The push source
+      // processes O(new) per drain; the listing source re-LISTS the whole
+      // directory (O(total files)) before finding them. Checkpoints carry
+      // over, so each drain is exactly the steady-state trigger cost.
+      // 10 rounds: enough per-trigger samples for a meaningful p95 (the
+      // tail claim) while keeping the listing side's O(backlog) cost sane
+      val rounds = 10
+      val newPerRound = 8
+      // untimed settling round first: streaming recovery replays the LAST
+      // committed batch's getBatch on every query start, so without this the
+      // first timed round would be charged O(last bulk chunk) restart work —
+      // a cost that varies with backlog%maxFilesPerTrigger, not with the
+      // discovery mechanism under test. After settling, every timed round
+      // restarts from a constant 8-file batch on both sides.
+      announce(queueName, generate(dataDir, nFiles, newPerRound, rowsPerFile))
+      drainBoth()
+      val incRounds = (0 until rounds).map { r =>
+        announce(queueName,
+          generate(dataDir, nFiles + (r + 1) * newPerRound, newPerRound, rowsPerFile))
+        drainBoth()
+      }
+      val (graftIncRounds, fileIncRounds) = incRounds.unzip
 
-    // incremental phase — where push-based discovery earns its keep: a few
-    // NEW files land in the now-large directory each round. The push source
-    // processes O(new) per drain; the listing source re-LISTS the whole
-    // directory (O(total files)) before finding them. Checkpoints carry
-    // over, so each drain is exactly the steady-state trigger cost.
-    // 10 rounds: enough per-trigger samples for a meaningful p95 (the
-    // tail claim) while keeping the listing side's O(backlog) cost sane
-    val rounds = 10
-    val newPerRound = 8
-    // untimed settling round first: streaming recovery replays the LAST
-    // committed batch's getBatch on every query start, so without this the
-    // first timed round would be charged O(last bulk chunk) restart work —
-    // a cost that varies with backlog%maxFilesPerTrigger, not with the
-    // discovery mechanism under test. After settling, every timed round
-    // restarts from a constant 8-file batch on both sides.
-    locally {
-      val settle = generate(dataDir, nFiles, newPerRound, rowsPerFile)
-      settle.foreach(p => queue.send(s"""{"path":"$p","timestampMs":${System.currentTimeMillis()}}"""))
-      drain(root.resolve("outGraft"), root.resolve("cpGraft"),
-        spark.readStream.format("graft-files").schema(harnessSchema)
-          .option("fileFormat", "csv").option("queueName", queueName)
-          .option("maxFilesPerTrigger", "5000")
-          .option("queueFetchWaitTimeoutSeconds", "5").load())
-      drain(root.resolve("outFile"), root.resolve("cpFile"),
-        spark.readStream.format("csv").schema(harnessSchema)
-          .option("maxFilesPerTrigger", "5000").load(dataDir.toString))
-    }
-    val graftRounds = Vector.newBuilder[Double]
-    val fileRounds = Vector.newBuilder[Double]
-    (0 until rounds).foreach { r =>
-      val added = generate(dataDir, nFiles + (r + 1) * newPerRound, newPerRound, rowsPerFile)
-      added.foreach(p => queue.send(s"""{"path":"$p","timestampMs":${System.currentTimeMillis()}}"""))
-      graftRounds += drain(root.resolve("outGraft"), root.resolve("cpGraft"),
-        spark.readStream.format("graft-files").schema(harnessSchema)
-          .option("fileFormat", "csv")
-          .option("queueName", queueName)
-          .option("maxFilesPerTrigger", "5000")
-          .option("queueFetchWaitTimeoutSeconds", "5")
-          .load())
-      fileRounds += drain(root.resolve("outFile"), root.resolve("cpFile"),
-        spark.readStream.format("csv").schema(harnessSchema)
-          .option("maxFilesPerTrigger", "5000")
-          .load(dataDir.toString))
-    }
-    val graftIncRounds = graftRounds.result()
-    val fileIncRounds = fileRounds.result()
-
-    // validator: both sinks hold exactly the generated rows (settling
-    // round included: its files flow through both pipelines too)
-    val expected = (nFiles + (rounds + 1) * newPerRound).toLong * rowsPerFile
-    def sink(p: Path) = spark.read.schema(harnessSchema).csv(p.toString)
-    val (gCnt, fCnt) = (sink(root.resolve("outGraft")).count(), sink(root.resolve("outFile")).count())
-    val gSum = sink(root.resolve("outGraft")).agg(org.apache.spark.sql.functions.sum("valInt")).head.getLong(0)
-    val fSum = sink(root.resolve("outFile")).agg(org.apache.spark.sql.functions.sum("valInt")).head.getLong(0)
-    val checkSum = expected * (expected - 1) / 2
-    Result(graftSec, fileSec, graftIncRounds.sum, fileIncRounds.sum,
-      graftIncRounds, fileIncRounds, expected,
-      valid = gCnt == expected && fCnt == expected && gSum == checkSum && fSum == checkSum)
+      // validator: both sinks hold exactly the generated rows (settling
+      // round included: its files flow through both pipelines too)
+      val expected = (nFiles + (rounds + 1) * newPerRound).toLong * rowsPerFile
+      def sink(p: Path) = spark.read.schema(harnessSchema).csv(p.toString)
+      val (gCnt, fCnt) = (sink(root.resolve("outGraft")).count(), sink(root.resolve("outFile")).count())
+      val gSum = sink(root.resolve("outGraft")).agg(org.apache.spark.sql.functions.sum("valInt")).head.getLong(0)
+      val fSum = sink(root.resolve("outFile")).agg(org.apache.spark.sql.functions.sum("valInt")).head.getLong(0)
+      val checkSum = expected * (expected - 1) / 2
+      Result(graftSec, fileSec, graftIncRounds.sum, fileIncRounds.sum,
+        graftIncRounds, fileIncRounds, expected,
+        valid = gCnt == expected && fCnt == expected && gSum == checkSum && fSum == checkSum)
+    } finally InMemoryQueueRegistry.remove(queueName)
   }
 
   /** Backlog-size sweep: same pipeline at several directory sizes, so the
@@ -264,45 +259,18 @@ object PerfHarness {
     val dataDir = Files.createDirectory(root.resolve("data"))
     val paths = generate(dataDir, 0, nFiles, rowsPerFile)
     val expected = nFiles.toLong * rowsPerFile
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def drain(out: Path, cp: Path, build: => org.apache.spark.sql.DataFrame): Double = timed {
-      val q = build.writeStream.format("csv")
-        .option("path", out.toString)
-        .option("checkpointLocation", cp.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     // one-time JVM warmup (codegen, committers) so config 1 isn't biased
-    val warmDir = Files.createDirectory(root.resolve("warm"))
-    val warmPath = generate(warmDir, 0, 1, 1).head
-    val warmQ = s"bulk-warm-${System.nanoTime()}"
-    InMemoryQueueRegistry.queue(warmQ)
-      .send(s"""{"path":"$warmPath","timestampMs":${System.currentTimeMillis()}}""")
-    drain(root.resolve("warmOutG"), root.resolve("warmCpG"),
-      spark.readStream.format("graft-files").schema(harnessSchema)
-        .option("fileFormat", "csv").option("queueName", warmQ)
-        .option("queueFetchWaitTimeoutSeconds", "5").load())
-    drain(root.resolve("warmOutF"), root.resolve("warmCpF"),
-      spark.readStream.format("csv").schema(harnessSchema).load(warmDir.toString))
+    warmUp(spark, root)
     val series = mfpts.map { mfpt =>
       val tag = s"m$mfpt"
       val queueName = s"bulk-$tag-${System.nanoTime()}"
-      val queue = InMemoryQueueRegistry.queue(queueName)
-      paths.foreach(p => queue.send(
-        s"""{"path":"$p","timestampMs":${System.currentTimeMillis()}}"""))
-      val graftSec = drain(root.resolve(s"outG$tag"), root.resolve(s"cpG$tag"),
-        spark.readStream.format("graft-files").schema(harnessSchema)
-          .option("fileFormat", "csv").option("queueName", queueName)
-          .option("maxFilesPerTrigger", mfpt.toString)
-          .option("queueFetchWaitTimeoutSeconds", "5").load())
-      val fileSec = drain(root.resolve(s"outF$tag"), root.resolve(s"cpF$tag"),
-        spark.readStream.format("csv").schema(harnessSchema)
-          .option("maxFilesPerTrigger", mfpt.toString)
-          .load(dataDir.toString))
-      InMemoryQueueRegistry.remove(queueName)
+      val (graftSec, fileSec) = try {
+        announce(queueName, paths)
+        (drain(root.resolve(s"outG$tag"), root.resolve(s"cpG$tag"),
+          pushSource(spark, queueName, Some(mfpt))),
+          drain(root.resolve(s"outF$tag"), root.resolve(s"cpF$tag"),
+            listingSource(spark, dataDir, Some(mfpt))))
+      } finally InMemoryQueueRegistry.remove(queueName)
       def cnt(p: Path) = spark.read.schema(harnessSchema).csv(p.toString).count()
       val valid = cnt(root.resolve(s"outG$tag")) == expected &&
         cnt(root.resolve(s"outF$tag")) == expected

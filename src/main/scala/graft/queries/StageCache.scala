@@ -28,17 +28,11 @@ import graft.operators.Models
   * need a fixture pays the staging inside its own timed region, exactly
   * as before.
   *
-  * `SPARK_GRAFT_STREAM_STAGE_CACHE=0` disables reuse (every call stages
-  * a fresh directory — the pre-r22 behavior) for A/B measurement.
-  *
   * Per-gate staging wall-seconds are recorded (cache hits included — a
   * hit costs only the fingerprint walk) so the bench record can print
   * the staging/prep/query split the r21 verdict asked for.
   */
 private[graft] object StageCache {
-  private val enabled: Boolean =
-    sys.env.get("SPARK_GRAFT_STREAM_STAGE_CACHE").forall(_ != "0")
-
   /** Cumulative staging wall charged to each gate row this JVM. */
   private val stagingSecs = new ConcurrentHashMap[String, java.lang.Double]()
 
@@ -62,15 +56,8 @@ private[graft] object StageCache {
   def dir(gate: String, key: String, fingerprintPaths: Seq[String])
       (write: String => Unit): String = {
     val t0 = System.nanoTime()
-    try {
-      if (enabled)
-        Models.root(s"stream-stage|$key|in=${Models.inputFingerprint(fingerprintPaths: _*)}")(write)
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft-stage").toString
-        write(d)
-        d
-      }
-    } finally recordStaging(gate, (System.nanoTime() - t0) / 1e9)
+    try Models.root(s"stream-stage|$key|in=${Models.inputFingerprint(fingerprintPaths: _*)}")(write)
+    finally recordStaging(gate, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Copy every `.parquet` file of `from` into `to` (the dual-directory

@@ -1,12 +1,10 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.InMemoryQueueRegistry
+import StreamRun.Feed
 
 /** Streaming-source queries for the correctness gate: each runs a real
   * micro-batch streaming query over the push-based `graft-files` source
@@ -19,8 +17,6 @@ import graft.sources.InMemoryQueueRegistry
   * unit-tested component.
   */
 object Streaming {
-  private val seq = new AtomicInteger(0)
-
   /** Run `body` with the state shuffle sized to the micro-batch load.
     * Stateful streaming operators create one state store per shuffle
     * partition per batch; at this fixture scale 32 stores are pure
@@ -63,6 +59,13 @@ object Streaming {
     StructField("event_id", LongType), StructField("ts", TimestampNTZType),
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
+
+  /** The documents table's columns, as the document-streaming rows
+    * declare them to the source. */
+  private[queries] val docsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
 
   /** Streamed `ts` as a watermarkable TimestampType column (exact: UTC
     * session zone pinned by every entry point). */
@@ -107,13 +110,11 @@ object Streaming {
       java.nio.file.Files.createFile(java.nio.file.Paths.get(out, "_SUCCESS"))
     }
 
-  /** Write the events subset as N parquet files, announce them on a fresh
-    * queue, and run the source to completion; returns the sink table name.
-    * `gateName` keys the micro-batch plan captured for [[StreamPlans]]. */
-  private def runStream(s: SparkSession, dir: String, gateName: String, nFiles: Int,
-      transform: DataFrame => DataFrame, extraOptions: Map[String, String] = Map.empty): String = {
-    val runId = s"stream${seq.incrementAndGet()}_${System.nanoTime()}"
-    val stage = StageCache.dir(gateName,
+  /** The `events < CUTOFF` slice staged as `nFiles` hash-partitioned
+    * files; one [[StageCache]] entry per layout, shared by every row of
+    * the streaming modules that streams it. */
+  private[queries] def stageEvents(s: SparkSession, dir: String, gate: String, nFiles: Int): String =
+    StageCache.dir(gate,
         s"$dir|events|lt$CUTOFF|hash:$nFiles:event_id", Seq(s"$dir/events.parquet")) { out =>
       eventsNtz(s, dir)
         .filter(col("event_id") < CUTOFF)
@@ -121,38 +122,14 @@ object Streaming {
         .write.mode("overwrite").parquet(out)
     }
 
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val files = new java.io.File(stage).listFiles()
-      .filter(f => f.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    files.foreach { f =>
-      queue.send(s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${f.lastModified()}}""")
-    }
-
-    val reader = s.readStream.format("graft-files")
-      .schema(eventsSchema)
-      .option("fileFormat", "parquet")
-      .option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-    extraOptions.foreach { case (k, v) => reader.option(k, v) }
-    val sinkName = s"sink_$runId"
-    val query = transform(reader.load()).writeStream
-      .format("memory").queryName(sinkName).outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture(gateName, query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    sinkName
-  }
-
   /** O4/O12/O13 e2e: every announced row arrives exactly once. Announces
     * 4 files with maxFilesPerTrigger=2 so the result spans >=2 micro-batch
     * offsets (exercising offset arithmetic, not just one getBatch). */
-  def streamSourceRead(s: SparkSession, dir: String): DataFrame = {
-    val sink = runStream(s, dir, "stream_source_read", nFiles = 4, transform = identity,
-      extraOptions = Map("maxFilesPerTrigger" -> "2"))
-    s.table(sink)
+  def streamSourceRead(s: SparkSession, dir: String): DataFrame =
+      StreamRun(s, "stream_source_read") { run =>
+    val stage = stageEvents(s, dir, run.gate, nFiles = 4)
+    run.memory(run.source(eventsSchema, Seq(Feed(stage, StreamRun.modified)),
+        "maxFilesPerTrigger" -> "2"), "append")
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
   }
@@ -172,36 +149,13 @@ object Streaming {
     withRocksDBStateStore(s)(streamExactlyOnceOn(s, dir, "stream_exactly_once_rocksdb"))
 
   private def streamExactlyOnceOn(s: SparkSession, dir: String, gateName: String): DataFrame =
-      withStateShuffle(s, 4) {
-    val runId = s"dedup${seq.incrementAndGet()}_${System.nanoTime()}"
-    val stage = StageCache.dir(gateName,
-        s"$dir|events|lt$CUTOFF|hash:3:event_id", Seq(s"$dir/events.parquet")) { out =>
-      eventsNtz(s, dir).filter(col("event_id") < CUTOFF)
-        .repartition(3, col("event_id"))
-        .write.mode("overwrite").parquet(out)
-    }
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.foreach { f => // announce every file twice
-      val msg = s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${f.lastModified()}}"""
-      queue.send(msg); queue.send(msg)
-    }
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .load()
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName(sinkName).outputMode("complete").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture(gateName, query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName).orderBy(col("event_type"))
-  }
+      withStateShuffle(s, 4) { StreamRun(s, gateName) { run =>
+    val stage = stageEvents(s, dir, gateName, nFiles = 3)
+    // announce every file twice
+    val events = run.source(eventsSchema, Seq(Feed(stage, StreamRun.modified, copies = 2)))
+    run.memory(events.groupBy(col("event_type")).agg(count(lit(1)).as("n")), "complete")
+      .orderBy(col("event_type"))
+  }}
   val streamExactlyOnceSql: String =
     s"""SELECT event_type, COUNT(*) AS n FROM events
        |WHERE event_id < $CUTOFF GROUP BY event_type ORDER BY event_type""".stripMargin
@@ -212,54 +166,29 @@ object Streaming {
     * real window so append mode emits them; the sentinel's own window is
     * filtered out of the result. */
   def streamWindowAgg(s: SparkSession, dir: String): DataFrame = withStateShuffle(s, 4) {
-    val runId = s"winagg${seq.incrementAndGet()}_${System.nanoTime()}"
-    val stage = StageCache.dir("stream_window_agg",
-        s"$dir|events|lt$CUTOFF|hash:2:event_id", Seq(s"$dir/events.parquet")) { out =>
-      eventsNtz(s, dir).filter(col("event_id") < CUTOFF)
-        .repartition(2, col("event_id")).write.mode("overwrite").parquet(out)
-    }
-    val sentStage = sentinelEventsDir(s, "stream_window_agg", userId = 0L)
-
-    val queue = InMemoryQueueRegistry.queue(runId)
-    def filesOf(d: String) = new java.io.File(d).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val nReal = filesOf(stage).length
-    filesOf(stage).foreach(f =>
-      queue.send(s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
-    filesOf(sentStage).foreach(f =>
-      queue.send(s"""{"path":"file:${f.getAbsolutePath}","timestampMs":2000}"""))
-
-    val sinkName = s"sink_$runId"
-    // deterministic batching: wait for ALL announced files (real +
-    // sentinel), then cut batch 1 = the oldest-timestamped real files and
-    // batch 2 = the sentinel — a timing-dependent split would let the
-    // sentinel advance the watermark past real rows still in flight
-    val streamed = s.readStream.format("graft-files").schema(eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      // real data first, sentinel in a later micro-batch, oldest-first
-      .option("maxFilesPerTrigger", nReal.toString)
-      .option("sortBatchByTimestamp", "true")
-      .option("minFilesForFirstBatch", (nReal + 1).toString)
-      .load()
+      StreamRun(s, "stream_window_agg") { run =>
+    val stage = stageEvents(s, dir, run.gate, nFiles = 2)
+    val sentStage = sentinelEventsDir(s, run.gate, userId = 0L)
+    val nReal = StreamRun.parquetFiles(stage).length
+    // deterministic batching: the first batch waits for ALL announced
+    // files (real + sentinel), then batch 1 = the oldest-timestamped real
+    // files and batch 2 = the sentinel — a timing-dependent split would
+    // let the sentinel advance the watermark past real rows still in flight
+    val streamed = run.source(eventsSchema,
+        Seq(Feed(stage, StreamRun.at(1000L)), Feed(sentStage, StreamRun.at(2000L))),
+        // real data first, sentinel in a later micro-batch, oldest-first
+        "maxFilesPerTrigger" -> nReal.toString, "sortBatchByTimestamp" -> "true")
       .withColumn("event_ts", eventTs)
       .withWatermark("event_ts", "1 minute")
       .groupBy(window(col("event_ts"), "1 hour"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(12, 2))).cast("double").as("total"))
-    val query = streamed.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_window_agg", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName)
+    run.memory(streamed, "append")
       .filter(year(col("window.start")) < 2099) // drop the sentinel's window
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("n"), col("total"))
       .orderBy(col("win_start"))
-  }
+  }}
   val streamWindowAggSql: String =
     s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS win_start,
        |  COUNT(*) AS n,
@@ -267,38 +196,26 @@ object Streaming {
        |FROM events WHERE event_id < $CUTOFF
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** The same rows announced from two staged copies (distinct paths) one
+    * file per trigger, so duplicates arrive in a later micro-batch and
+    * only the row-level dedup state can remove them. */
+  private def dualEvents(s: SparkSession, dir: String, run: StreamRun): DataFrame = {
+    val dual = dualEventsDir(s, dir, run.gate)
+    run.source(eventsSchema,
+      Seq(Feed(s"$dual/a", StreamRun.modified), Feed(s"$dual/b", StreamRun.modified)),
+      "maxFilesPerTrigger" -> "1")
+  }
+
   /** Row-level streaming dedup (`dropDuplicates` state across batches):
     * the same rows are staged in two separate files announced separately,
     * so duplicates span micro-batches and only the dedup state removes
     * them. Complements the connector's file-level exactly-once. */
   def streamDropDuplicates(s: SparkSession, dir: String): DataFrame = withStateShuffle(s, 4) {
-    val runId = s"dropdup${seq.incrementAndGet()}_${System.nanoTime()}"
-    val dual = dualEventsDir(s, dir, "stream_drop_duplicates")
-    val stage1 = s"$dual/a"
-    val stage2 = s"$dual/b" // same rows again, distinct paths
-    val queue = InMemoryQueueRegistry.queue(runId)
-    Seq(stage1, stage2).foreach { st =>
-      new java.io.File(st).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => queue.send(
-          s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${f.lastModified()}}"""))
-    }
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1") // duplicates arrive in a later batch
-      .load()
-      .dropDuplicates("event_id")
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_drop_duplicates", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName)
+      StreamRun(s, "stream_drop_duplicates") { run =>
+    run.memory(dualEvents(s, dir, run).dropDuplicates("event_id"), "append")
       .select(col("event_id"), col("user_id"), col("value"))
       .orderBy(col("event_id"))
-  }
+  }}
   val streamDropDuplicatesSql: String =
     """SELECT event_id, user_id, value FROM events
       |WHERE event_id < 500 ORDER BY event_id""".stripMargin
@@ -315,23 +232,8 @@ object Streaming {
     * sight (append mode), so the result is the distinct set regardless
     * of batch slicing. */
   def streamDedupWithinWatermark(s: SparkSession, dir: String): DataFrame =
-      withStateShuffle(s, 4) {
-    val runId = s"dedupww${seq.incrementAndGet()}_${System.nanoTime()}"
-    val dual = dualEventsDir(s, dir, "stream_dedup_within_watermark")
-    val stage1 = s"$dual/a"
-    val stage2 = s"$dual/b" // same rows again, distinct paths
-    val queue = InMemoryQueueRegistry.queue(runId)
-    Seq(stage1, stage2).foreach { st =>
-      new java.io.File(st).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => queue.send(
-          s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${f.lastModified()}}"""))
-    }
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1") // duplicates arrive in a later batch
-      .load()
+      withStateShuffle(s, 4) { StreamRun(s, "stream_dedup_within_watermark") { run =>
+    val deduped = dualEvents(s, dir, run)
       .withColumn("event_ts", eventTs)
       // wide enough that the fixture's whole event-time span stays inside
       // one watermark window: nothing is "late", so removal is genuinely
@@ -339,50 +241,30 @@ object Streaming {
       // pinned in GraftStatefulStreamingSpec)
       .withWatermark("event_ts", "3650 days")
       .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_dedup_within_watermark", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName)
+    run.memory(deduped, "append")
       .select(col("event_id"), col("user_id"), col("value"))
       .orderBy(col("event_id"))
-  }
+  }}
   val streamDedupWithinWatermarkSql: String =
     """SELECT event_id, user_id, value FROM events
       |WHERE event_id < 500 ORDER BY event_id""".stripMargin
 
   /** Stream-static join: streamed events enriched against the static
     * customer dim inside the micro-batch plan (broadcast per batch). */
-  def streamStaticJoin(s: SparkSession, dir: String): DataFrame = {
-    val runId = s"ssjoin${seq.incrementAndGet()}_${System.nanoTime()}"
-    val stage = StageCache.dir("stream_static_join",
+  def streamStaticJoin(s: SparkSession, dir: String): DataFrame =
+      StreamRun(s, "stream_static_join") { run =>
+    val stage = StageCache.dir(run.gate,
         s"$dir|events|lt1000|hash:2:event_id", Seq(s"$dir/events.parquet")) { out =>
       eventsNtz(s, dir).filter(col("event_id") < 1000)
         .repartition(2, col("event_id"))
         .write.mode("overwrite").parquet(out)
     }
-    val queue = InMemoryQueueRegistry.queue(runId)
-    new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet"))
-      .foreach(f => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${f.lastModified()}}"""))
     val customers = broadcast(Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment")))
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .load()
+    val joined = run.source(eventsSchema, Seq(Feed(stage, StreamRun.modified)))
       .join(customers, col("user_id") === col("c_custkey"))
       .select(col("event_id"), col("user_id"), col("c_name"), col("c_mktsegment"))
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_static_join", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName).orderBy(col("event_id"))
+    run.memory(joined, "append").orderBy(col("event_id"))
   }
   val streamStaticJoinSql: String =
     """SELECT event_id, user_id, c_name, c_mktsegment

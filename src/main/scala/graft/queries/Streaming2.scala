@@ -1,16 +1,12 @@
 package graft.queries
 
-import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 import graft.functions.Parity
-import graft.sources.InMemoryQueueRegistry
+import StreamRun.Feed
 
 /** Round-2 streaming surface over the `graft-files` source: session
   * windows, stream-stream interval join, and custom session state via
@@ -19,7 +15,6 @@ import graft.sources.InMemoryQueueRegistry
   * memory sink the DuckDB oracle can hash-check against the static table.
   */
 object Streaming2 {
-  private val seq = new AtomicInteger(0)
   private val CUTOFF = 2000L
   /** Session gap: events are sparse (~1 per user per 11 h), so a 12 h gap
     * actually merges events (688 sessions from 2000 rows at sf0.01) —
@@ -30,28 +25,6 @@ object Streaming2 {
     * events.ts is parquet timestamp[us] / TIMESTAMP_NTZ. */
   private val eventsSchema = Streaming.eventsSchema
 
-  /** Returns the number of files announced, so callers can pin the
-    * deterministic-first-batch gate (minFilesForFirstBatch) to it. */
-  private def stageAndAnnounce(s: SparkSession, dir: String, gate: String,
-      runId: String, nFiles: Int, tsMs: Long = 1000L): Int = {
-    val stage = StageCache.dir(gate,
-        s"$dir|events|lt$CUTOFF|hash:$nFiles:event_id", Seq(s"$dir/events.parquet")) { out =>
-      Streaming.eventsNtz(s, dir).filter(col("event_id") < CUTOFF)
-        .repartition(nFiles, col("event_id"))
-        .write.mode("overwrite").parquet(out)
-    }
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.foreach(f => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":$tsMs"""  + "}"))
-    files.length
-  }
-
-  private def reader(s: SparkSession, runId: String) =
-    s.readStream.format("graft-files").schema(eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
 
   // ------------------------------------------------------ session window
   /** Native session windows (merging state windows) per user with a
@@ -61,44 +34,30 @@ object Streaming2 {
     * STRICTLY below the gap duration — the oracle's islands start at
     * gap >= 12 h to match. */
   def streamSessionWindow(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_session_window") { run =>
     import s.implicits._
-    val runId = s"sesswin${seq.incrementAndGet()}_${System.nanoTime()}"
-    val nReal = stageAndAnnounce(s, dir, "stream_session_window", runId, nFiles = 2)
+    val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
+    val nReal = StreamRun.parquetFiles(stage).length
     // sentinel: year 2100, its own later micro-batch (timestampMs orders it)
-    val sentStage = Streaming.sentinelEventsDir(s, "stream_session_window", userId = 0L)
-    val queue = InMemoryQueueRegistry.queue(runId)
-    new java.io.File(sentStage).listFiles().filter(_.getName.endsWith(".parquet"))
-      .foreach(f => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":2000}"""))
-
-    val sinkName = s"sink_$runId"
-    // gate on ALL announced files (real + sentinel): batch 1 is then
-    // exactly the oldest-timestamped real files, batch 2 the sentinel —
-    // no queue-timing window where a late real file lands after the
-    // sentinel has advanced the watermark (the r12 flake)
-    val query = reader(s, runId)
-      .option("maxFilesPerTrigger", nReal.toString)
-      .option("sortBatchByTimestamp", "true")
-      .option("minFilesForFirstBatch", (nReal + 1).toString)
-      .load()
+    val sentStage = Streaming.sentinelEventsDir(s, run.gate, userId = 0L)
+    // the first batch waits for ALL announced files (real + sentinel):
+    // batch 1 is then exactly the oldest-timestamped real files, batch 2
+    // the sentinel — no queue-timing window where a late real file lands
+    // after the sentinel has advanced the watermark (the r12 flake)
+    val sessions = run.source(eventsSchema,
+        Seq(Feed(stage), Feed(sentStage, StreamRun.at(2000L))),
+        "maxFilesPerTrigger" -> nReal.toString, "sortBatchByTimestamp" -> "true")
       .withColumn("event_ts", Streaming.eventTs)
       .withWatermark("event_ts", "1 minute")
       .groupBy($"user_id", session_window($"event_ts", s"$GapHours hours"))
       .agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_session_window", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName)
+    run.memory(sessions, "append")
       .filter(year($"session_window.start") < 2099) // drop the sentinel's
       .select($"user_id",
         date_format($"session_window.start", "yyyy-MM-dd HH:mm:ss").as("win_start"),
         $"n")
       .orderBy($"user_id", $"win_start")
-  }
+  }}
   val streamSessionWindowSql: String =
     s"""SELECT user_id,
        |  strftime(make_timestamp(MIN(ts_us)), '%Y-%m-%d %H:%M:%S') AS win_start,
@@ -124,38 +83,27 @@ object Streaming2 {
     * past the watermark + interval. Inner joins emit as matches arrive,
     * so no sentinel is needed. */
   def streamStreamJoin(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_stream_join") { run =>
     import s.implicits._
-    val runA = s"ssjA${seq.incrementAndGet()}_${System.nanoTime()}"
-    val runB = s"ssjB${seq.incrementAndGet()}_${System.nanoTime()}"
-    val nA = stageAndAnnounce(s, dir, "stream_stream_join", runA, nFiles = 2)
-    val nB = stageAndAnnounce(s, dir, "stream_stream_join", runB, nFiles = 2)
-    // each side admits its whole announced set in batch 1, so neither
-    // watermark can advance past rows still in flight on the other side
-    val purchases = reader(s, runA)
-      .option("minFilesForFirstBatch", nA.toString).load()
+    val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
+    // two queues over the same staged files; each side admits its whole
+    // announced set in batch 1, so neither watermark can advance past
+    // rows still in flight on the other side
+    val purchases = run.source(eventsSchema, Seq(Feed(stage)))
       .filter($"event_type" === "purchase")
       .select($"user_id".as("p_user"), $"event_id".as("p_id"),
         Streaming.eventTs.as("p_ts"))
       .withWatermark("p_ts", "1 minute")
-    val clicks = reader(s, runB)
-      .option("minFilesForFirstBatch", nB.toString).load()
+    val clicks = run.source(eventsSchema, Seq(Feed(stage)))
       .filter($"event_type" === "click")
       .select($"user_id".as("c_user"), $"event_id".as("c_id"),
         Streaming.eventTs.as("c_ts"))
       .withWatermark("c_ts", "1 minute")
-    val sinkName = s"sink_$runA"
-    val query = purchases.join(clicks,
+    val pairs = purchases.join(clicks,
         expr(s"p_user = c_user AND c_ts >= p_ts - INTERVAL $GapHours HOURS AND c_ts <= p_ts"))
       .select($"p_id", $"c_id", $"p_user".as("user_id"))
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_stream_join", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runA); InMemoryQueueRegistry.remove(runB)
-    s.table(sinkName).orderBy($"p_id", $"c_id")
-  }
+    run.memory(pairs, "append").orderBy($"p_id", $"c_id")
+  }}
   val streamStreamJoinSql: String =
     s"""SELECT p.event_id AS p_id, c.event_id AS c_id, p.user_id
        |FROM (SELECT * FROM events WHERE event_id < $CUTOFF AND event_type = 'purchase') p
@@ -174,10 +122,9 @@ object Streaming2 {
     * hash gate, while GraftStatefulStreamingSpec covers the cross-batch
     * state path. */
   def streamMgwsSession(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_mgws_session") { run =>
     import s.implicits._
-    val runId = s"mgws${seq.incrementAndGet()}_${System.nanoTime()}"
-    val nReal = stageAndAnnounce(s, dir, "stream_mgws_session", runId, nFiles = 2)
+    val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
     val gapUs = GapHours.toLong * 3600L * 1000000L
     val sessionize = (user: Long, it: Iterator[(Long, Long, Long)],
         state: GroupState[Long]) => {
@@ -194,24 +141,16 @@ object Streaming2 {
       if (n > 0) out += ((user, sessId, n, last - start))
       out.iterator
     }
-    val sinkName = s"sink_$runId"
-    // the per-batch sessionizer needs every event in ONE batch — gate the
-    // first batch on the full announced set (deterministic, not timing)
-    val query = reader(s, runId)
-      .option("minFilesForFirstBatch", nReal.toString).load()
+    // the per-batch sessionizer needs every event in ONE batch: the run
+    // gates the first batch on the full announced set (not on timing)
+    val sessions = run.source(eventsSchema, Seq(Feed(stage)))
       .select($"event_id", unix_micros(Streaming.eventTs).as("ts_us"), $"user_id")
       .as[(Long, Long, Long)]
       .groupByKey(_._3)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(sessionize)
       .toDF("user_id", "session_id", "n_events", "duration_us")
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_mgws_session", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName).orderBy($"user_id", $"session_id")
-  }
+    run.memory(sessions, "append").orderBy($"user_id", $"session_id")
+  }}
   val streamMgwsSessionSql: String =
     s"""SELECT user_id, CAST(sess AS BIGINT) AS session_id, COUNT(*) AS n_events,
        |  MAX(ts_us) - MIN(ts_us) AS duration_us
@@ -232,10 +171,6 @@ object Streaming2 {
     * whole table rides (500 docs); at sf0.1 the gate streams a 2000-doc
     * slice — the pipeline shape is what's under test, not table size. */
   private val DocCutoff = 2000L
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   /** The standing-corpus shingle-set index (docs < DocCutoff, doc_id %
     * 5 != 0) as a train-once [[graft.operators.Models]] artifact —
@@ -249,6 +184,18 @@ object Streaming2 {
           s"|sh=${graft.operators.Dedup.ShingleSize}" +
           s"|in=${graft.operators.Models.inputFingerprint(s"$dir/documents.parquet")}") { out =>
       graft.operators.Dedup2.shingleSets(corpus.filter(col("doc_id") % 5 =!= 0))
+        .write.mode("overwrite").parquet(out)
+    }
+
+  /** The arriving slice (docs < DocCutoff, doc_id % 5 == 0) staged as 4
+    * files -> 2 micro-batches at maxFilesPerTrigger=2; shared by the
+    * incremental-dedup and novelty rows. */
+  private def stageDeltaDocs(s: SparkSession, dir: String, gate: String,
+      corpus: DataFrame): String =
+    StageCache.dir(gate,
+        s"$dir|docs|lt$DocCutoff|mod5eq0|hash:4:doc_id", Seq(s"$dir/documents.parquet")) { out =>
+      corpus.filter(col("doc_id") % 5 === 0)
+        .repartition(4, col("doc_id"))
         .write.mode("overwrite").parquet(out)
     }
 
@@ -274,25 +221,14 @@ object Streaming2 {
     * per-task scheduling constants dominate otherwise. At production
     * scale this is the same knob, sized to maxFilesPerTrigger. */
   def streamIncrementalDedup(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 8) {
+      Streaming.withStateShuffle(s, 8) { StreamRun(s, "stream_incremental_dedup") { run =>
     import s.implicits._
-    val runId = s"incdedup${seq.incrementAndGet()}_${System.nanoTime()}"
-    StreamPlans.resetIngest("stream_incremental_dedup")
+    StreamPlans.resetIngest(run.gate)
     // corpus bounded like every streaming gate (the CUTOFF discipline):
     // the point is the pipeline shape, not re-shingling the whole table
     val corpus = Tables.documents(s, dir).filter($"doc_id" < DocCutoff)
     // delta slice staged as 4 files -> 2 micro-batches at maxFilesPerTrigger=2
-    val stage = StageCache.dir("stream_incremental_dedup",
-        s"$dir|docs|lt$DocCutoff|mod5eq0|hash:4:doc_id", Seq(s"$dir/documents.parquet")) { out =>
-      corpus.filter($"doc_id" % 5 === 0)
-        .repartition(4, $"doc_id")
-        .write.mode("overwrite").parquet(out)
-    }
-    val queue = InMemoryQueueRegistry.queue(runId)
-    new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .foreach(f => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
+    val stage = stageDeltaDocs(s, dir, run.gate, corpus)
 
     // standing-corpus shingle index: a TRAIN-ONCE Models artifact (r22 —
     // production: a standing table on storage; until r22 it was
@@ -303,44 +239,32 @@ object Streaming2 {
     val prepT0 = System.nanoTime()
     val baseSets = s.read.parquet(shingleIdxDir(s, dir, corpus)).persist()
     baseSets.count() // materialize before the stream races it
-    StreamPlans.recordPrep("stream_incremental_dedup",
-      (System.nanoTime() - prepT0) / 1e9)
+    StreamPlans.recordPrep(run.gate, (System.nanoTime() - prepT0) / 1e9)
     val baseEx = graft.operators.Dedup2.explodeSets(baseSets)
-    val outDir = Files.createTempDirectory(s"graft-$runId-out").toString
-    val query = s.readStream.format("graft-files").schema(docsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "2")
-      .load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ingestT0 = System.nanoTime()
-        val bytes0 = StreamPlans.dirBytes(outDir)
-        val deltaSets = graft.operators.Dedup2.shingleSets(batch).persist()
-        try {
-          val ex = graft.operators.Dedup2.explodeSets(deltaSets)
-            .select(col("doc_id").as("d_id"), col("sz").as("sz_d"), col("s"))
-          val verdicts =
-            graft.operators.Dedup2.incrementalVerdicts(batch.select("doc_id"), ex, baseEx)
-          // the per-batch transform is the interesting plan here, and it is
-          // invisible to lastExecution (which sees only the source scan)
-          StreamPlans.capturePlan("stream_incremental_dedup", verdicts)
-          verdicts.write.mode("append").parquet(outDir)
-          // one verdict row per ARRIVING doc: appends track the batch,
-          // never the standing corpus (asserted by StateInvarianceSpec)
-          StreamPlans.recordIngest("stream_incremental_dedup", id,
-            StreamPlans.dirBytes(outDir) - bytes0,
-            (System.nanoTime() - ingestT0) / 1e9)
-        } finally deltaSets.unpersist()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$runId-cp").toString)
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    baseSets.unpersist()
+    val outDir = run.tempDir("out")
+    val delta = run.source(Streaming.docsSchema, Seq(Feed(stage)), "maxFilesPerTrigger" -> "2")
+    try run.foreachBatch(delta) { (batch, id) =>
+      val ingestT0 = System.nanoTime()
+      val bytes0 = StreamPlans.dirBytes(outDir)
+      val deltaSets = graft.operators.Dedup2.shingleSets(batch).persist()
+      try {
+        val ex = graft.operators.Dedup2.explodeSets(deltaSets)
+          .select(col("doc_id").as("d_id"), col("sz").as("sz_d"), col("s"))
+        val verdicts =
+          graft.operators.Dedup2.incrementalVerdicts(batch.select("doc_id"), ex, baseEx)
+        // the per-batch transform is the interesting plan here, and it is
+        // invisible to lastExecution (which sees only the source scan)
+        StreamPlans.capturePlan(run.gate, verdicts)
+        verdicts.write.mode("append").parquet(outDir)
+        // one verdict row per ARRIVING doc: appends track the batch,
+        // never the standing corpus (asserted by StateInvarianceSpec)
+        StreamPlans.recordIngest(run.gate, id,
+          StreamPlans.dirBytes(outDir) - bytes0,
+          (System.nanoTime() - ingestT0) / 1e9)
+      } finally deltaSets.unpersist()
+    } finally baseSets.unpersist()
     s.read.parquet(outDir).orderBy($"doc_id")
-  }
+  }}
   /** The batch operator's oracle over the same bounded corpus slice:
     * stream/batch parity IS the gate. */
   val streamIncrementalDedupSql: String =
@@ -384,21 +308,10 @@ object Streaming2 {
     * back into the per-doc aggregate (zero shuffle of the corpus side
     * per batch; round-18 respell, before/after in BENCH_NOTES). */
   def streamNgramNovelty(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 8) {
+      Streaming.withStateShuffle(s, 8) { StreamRun(s, "stream_ngram_novelty") { run =>
     import s.implicits._
-    val runId = s"novelty${seq.incrementAndGet()}_${System.nanoTime()}"
     val corpus = Tables.documents(s, dir).filter($"doc_id" < DocCutoff)
-    val stage = StageCache.dir("stream_ngram_novelty",
-        s"$dir|docs|lt$DocCutoff|mod5eq0|hash:4:doc_id", Seq(s"$dir/documents.parquet")) { out =>
-      corpus.filter($"doc_id" % 5 === 0)
-        .repartition(4, $"doc_id")
-        .write.mode("overwrite").parquet(out)
-    }
-    val queue = InMemoryQueueRegistry.queue(runId)
-    new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .foreach(f => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
+    val stage = stageDeltaDocs(s, dir, run.gate, corpus)
 
     // standing-corpus distinct-shingle index: a TRAIN-ONCE Models
     // artifact derived from the shared shingle-set artifact (r22;
@@ -416,56 +329,44 @@ object Streaming2 {
     }
     val baseShingles = s.read.parquet(distDir).persist()
     baseShingles.count() // materialize the pin before the stream races it
-    StreamPlans.recordPrep("stream_ngram_novelty",
-      (System.nanoTime() - prepT0) / 1e9)
+    StreamPlans.recordPrep(run.gate, (System.nanoTime() - prepT0) / 1e9)
 
-    val outDir = Files.createTempDirectory(s"graft-$runId-out").toString
-    val query = s.readStream.format("graft-files").schema(docsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "2")
-      .load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val deltaSets = graft.operators.Dedup2.shingleSets(batch).persist()
-        try {
-          // no eager count (the stream_kmv_distinct rationale): the
-          // persist boundary blocks tokenizer fusing by itself, and both
-          // consumers (the broadcast batch-shingle set and the scored
-          // aggregate) materialize inside the one write action below,
-          // filling the cache on first touch
-          val deltaEx = graft.operators.Dedup2.explodeSets(deltaSets)
-          // the standing set is CORPUS-sized and the batch is bounded:
-          // never shuffle (or broadcast) the corpus side per batch.
-          // Semi-join the standing scan against the BROADCAST batch
-          // shingle set — the delta-bounded "known" subset — and
-          // broadcast that back into the per-doc novelty aggregate, so
-          // each micro-batch costs one columnar scan of the standing
-          // set and zero shuffles of it (the stream_cc_delta
-          // batch-touched-bucket discipline applied to novelty)
-          val deltaS = deltaEx.select(col("s")).distinct()
-          val known = baseShingles
-            .join(broadcast(deltaS), Seq("s"), "leftsemi")
-            .withColumn("known", lit(1))
-          val scored = deltaEx
-            .join(broadcast(known), Seq("s"), "left")
-            .groupBy(col("doc_id"))
-            .agg(
-              (sum(when(col("known").isNull, 1L).otherwise(0L)).cast("double")
-                / count(lit(1))).as("novelty"),
-              count(lit(1)).as("n_shingles"))
-          StreamPlans.capturePlan("stream_ngram_novelty", scored)
-          scored.write.mode("append").parquet(outDir)
-        } finally deltaSets.unpersist()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$runId-cp").toString)
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    baseShingles.unpersist()
+    val outDir = run.tempDir("out")
+    val delta = run.source(Streaming.docsSchema, Seq(Feed(stage)), "maxFilesPerTrigger" -> "2")
+    try run.foreachBatch(delta) { (batch, _) =>
+      val deltaSets = graft.operators.Dedup2.shingleSets(batch).persist()
+      try {
+        // no eager count (the stream_kmv_distinct rationale): the
+        // persist boundary blocks tokenizer fusing by itself, and both
+        // consumers (the broadcast batch-shingle set and the scored
+        // aggregate) materialize inside the one write action below,
+        // filling the cache on first touch
+        val deltaEx = graft.operators.Dedup2.explodeSets(deltaSets)
+        // the standing set is CORPUS-sized and the batch is bounded:
+        // never shuffle (or broadcast) the corpus side per batch.
+        // Semi-join the standing scan against the BROADCAST batch
+        // shingle set — the delta-bounded "known" subset — and
+        // broadcast that back into the per-doc novelty aggregate, so
+        // each micro-batch costs one columnar scan of the standing
+        // set and zero shuffles of it (the stream_cc_delta
+        // batch-touched-bucket discipline applied to novelty)
+        val deltaS = deltaEx.select(col("s")).distinct()
+        val known = baseShingles
+          .join(broadcast(deltaS), Seq("s"), "leftsemi")
+          .withColumn("known", lit(1))
+        val scored = deltaEx
+          .join(broadcast(known), Seq("s"), "left")
+          .groupBy(col("doc_id"))
+          .agg(
+            (sum(when(col("known").isNull, 1L).otherwise(0L)).cast("double")
+              / count(lit(1))).as("novelty"),
+            count(lit(1)).as("n_shingles"))
+        StreamPlans.capturePlan(run.gate, scored)
+        scored.write.mode("append").parquet(outDir)
+      } finally deltaSets.unpersist()
+    } finally baseShingles.unpersist()
     s.read.parquet(outDir).orderBy($"doc_id")
-  }
+  }}
   /** Batch oracle over the same slice: delta docs' shingles LEFT-joined
     * against the standing corpus's distinct shingle set. */
   val streamNgramNoveltySql: String =
@@ -479,20 +380,19 @@ object Streaming2 {
        |WHERE e.doc_id % 5 = 0
        |GROUP BY e.doc_id ORDER BY e.doc_id""".stripMargin
 
-  /** Full documents table staged as 3 hash-partitioned files (the
-    * 3-micro-batch feed shared by the chunk/cascade/kmv rows). */
-  private def stageDocs3(s: SparkSession, dir: String, gate: String): String =
-    StageCache.dir(gate, s"$dir|docs|hash:3:doc_id", Seq(s"$dir/documents.parquet")) { out =>
+  /** Full documents table staged as 3 hash-partitioned files and read
+    * 1 per trigger (the 3-micro-batch feed shared by the
+    * chunk/cascade/kmv rows). */
+  private def docs3(s: SparkSession, dir: String, run: StreamRun): DataFrame = {
+    val stage = StageCache.dir(run.gate, s"$dir|docs|hash:3:doc_id",
+        Seq(s"$dir/documents.parquet")) { out =>
       Tables.documents(s, dir).repartition(3, col("doc_id"))
         .write.mode("overwrite").parquet(out)
     }
+    run.source(Streaming.docsSchema, Seq(Feed(stage)), "maxFilesPerTrigger" -> "1")
+  }
 
   // ---------------------------------------------------- chunk at ingest
-  private val documentsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** Streaming RAG chunking: documents arrive through the push-based
     * source (3 staged files, 1 per trigger ⇒ 3 micro-batches) and are
     * chunked by the SAME narrow-map expressions as the batch operator
@@ -504,22 +404,11 @@ object Streaming2 {
     * is the shape chunking deploys as at 100 TB — chunk-at-ingest on
     * the stream, each document chunked exactly once as it lands, not a
     * second full-corpus pass after the fact. */
-  def streamChunkDocuments(s: SparkSession, dir: String): DataFrame = {
+  def streamChunkDocuments(s: SparkSession, dir: String): DataFrame =
+      StreamRun(s, "stream_chunk_documents") { run =>
     import s.implicits._
     import graft.operators.PipelineOps.{ChunkStep, ChunkWindow}
-    val runId = s"chunk${seq.incrementAndGet()}_${System.nanoTime()}"
-    val stage = stageDocs3(s, dir, "stream_chunk_documents")
-    val queue = InMemoryQueueRegistry.queue(runId)
-    new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .foreach(f => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(documentsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .load()
+    val chunks = docs3(s, dir, run)
       .select($"doc_id", $"text",
         explode(sequence(lit(1), greatest(length($"text"), lit(1)), lit(ChunkStep)))
           .as("start"))
@@ -528,13 +417,7 @@ object Streaming2 {
         $"start".cast("long").as("char_start"),
         $"text".substr($"start", lit(ChunkWindow)).as("chunk_text"))
       .withColumn("chunk_len", length($"chunk_text").cast("long"))
-      .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_chunk_documents", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName).orderBy($"doc_id", $"chunk_id")
+    run.memory(chunks, "append").orderBy($"doc_id", $"chunk_id")
   }
 
   // ------------------------------------------- attrition at ingest
@@ -551,34 +434,17 @@ object Streaming2 {
     * output is batch-id-addressed and overwritten (the idempotent-sink
     * pattern `ScalePatternsSpec` pins), so a retried micro-batch cannot
     * double-count its slice. */
-  def streamFilterCascade(s: SparkSession, dir: String): DataFrame = {
+  def streamFilterCascade(s: SparkSession, dir: String): DataFrame =
+      StreamRun(s, "stream_filter_cascade") { run =>
     import s.implicits._
-    val runId = s"cascade${seq.incrementAndGet()}_${System.nanoTime()}"
-    val stage = stageDocs3(s, dir, "stream_filter_cascade")
-    val queue = InMemoryQueueRegistry.queue(runId)
-    new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .foreach(f => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
-    val outDir = Files.createTempDirectory(s"graft-$runId-out").toString
-    val query = s.readStream.format("graft-files").schema(documentsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val agg = graft.operators.Curation.cascadeVerdictAgg(batch)
-        StreamPlans.capturePlan("stream_filter_cascade", agg)
-        // batch-id-addressed + overwrite: a retried micro-batch replaces
-        // its own directory instead of double-counting the attrition
-        agg.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$runId-cp").toString)
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
+    val outDir = run.tempDir("out")
+    run.foreachBatch(docs3(s, dir, run)) { (batch, id) =>
+      val agg = graft.operators.Curation.cascadeVerdictAgg(batch)
+      StreamPlans.capturePlan(run.gate, agg)
+      // batch-id-addressed + overwrite: a retried micro-batch replaces
+      // its own directory instead of double-counting the attrition
+      agg.write.mode("overwrite").parquet(s"$outDir/batch=$id")
+    }
     val merged = s.read.parquet(outDir).groupBy($"rule")
       .agg(sum($"n_docs").as("n_docs"), sum($"n_chars").as("n_chars"),
         min($"first_doc").as("first_doc"))
@@ -600,60 +466,42 @@ object Streaming2 {
     * estimate. The oracle replays the same sketch over the whole corpus
     * in DuckDB, bit-for-bit (md5-prefix hashes — the Sketches trick). */
   def streamKmvDistinct(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 8) {
+      Streaming.withStateShuffle(s, 8) { StreamRun(s, "stream_kmv_distinct") { run =>
     import s.implicits._
     import graft.operators.{Dedup2, Sketches}
-    val runId = s"kmv${seq.incrementAndGet()}_${System.nanoTime()}"
-    StreamPlans.resetIngest("stream_kmv_distinct")
-    val stage = stageDocs3(s, dir, "stream_kmv_distinct")
-    val queue = InMemoryQueueRegistry.queue(runId)
-    new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .foreach(f => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
-    val outDir = Files.createTempDirectory(s"graft-$runId-out").toString
+    StreamPlans.resetIngest(run.gate)
+    val outDir = run.tempDir("out")
     val K = Sketches.K
-    val query = s.readStream.format("graft-files").schema(documentsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ingestT0 = System.nanoTime()
-        val bytes0 = StreamPlans.dirBytes(outDir)
-        val sets = Dedup2.shingleSets(batch).persist()
-        try {
-          // no eager count: the persist boundary alone is the
-          // anti-fusing barrier shingleSets requires (InMemoryRelation
-          // enters the plan at analysis, materialized or not), and the
-          // sketch write below is the batch's one consumer — the old
-          // count was one extra full job per micro-batch
-          // md5-prefix 32-bit hash of the shingle STRING — must match
-          // Sketches.sourceHashes so the merged sketch replays in DuckDB
-          val hashed = sets.select(col("doc_id"), explode(col("sh")).as("sg"))
-            .join(batch.select(col("doc_id"), col("source")), "doc_id")
-            .select(col("source"),
-              Parity.md5Key(col("sg"), 8).as("h"))
-            .distinct()
-          val w = Window.partitionBy(col("source")).orderBy(col("h"))
-          val sketch = hashed.withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= K).select(col("source"), col("h"))
-          StreamPlans.capturePlan("stream_kmv_distinct", sketch)
-          sketch.write.mode("append").parquet(outDir)
-          // the sketch invariant: each batch appends <= K x #sources
-          // rows no matter how big the batch — SKETCH-bounded, not
-          // batch- or history-proportional (StateInvarianceSpec pins it)
-          StreamPlans.recordIngest("stream_kmv_distinct", id,
-            StreamPlans.dirBytes(outDir) - bytes0,
-            (System.nanoTime() - ingestT0) / 1e9)
-        } finally sets.unpersist()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$runId-cp").toString)
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
+    run.foreachBatch(docs3(s, dir, run)) { (batch, id) =>
+      val ingestT0 = System.nanoTime()
+      val bytes0 = StreamPlans.dirBytes(outDir)
+      val sets = Dedup2.shingleSets(batch).persist()
+      try {
+        // no eager count: the persist boundary alone is the
+        // anti-fusing barrier shingleSets requires (InMemoryRelation
+        // enters the plan at analysis, materialized or not), and the
+        // sketch write below is the batch's one consumer — the old
+        // count was one extra full job per micro-batch
+        // md5-prefix 32-bit hash of the shingle STRING — must match
+        // Sketches.sourceHashes so the merged sketch replays in DuckDB
+        val hashed = sets.select(col("doc_id"), explode(col("sh")).as("sg"))
+          .join(batch.select(col("doc_id"), col("source")), "doc_id")
+          .select(col("source"),
+            Parity.md5Key(col("sg"), 8).as("h"))
+          .distinct()
+        val w = Window.partitionBy(col("source")).orderBy(col("h"))
+        val sketch = hashed.withColumn("rk", row_number().over(w))
+          .filter(col("rk") <= K).select(col("source"), col("h"))
+        StreamPlans.capturePlan(run.gate, sketch)
+        sketch.write.mode("append").parquet(outDir)
+        // the sketch invariant: each batch appends <= K x #sources
+        // rows no matter how big the batch — SKETCH-bounded, not
+        // batch- or history-proportional (StateInvarianceSpec pins it)
+        StreamPlans.recordIngest(run.gate, id,
+          StreamPlans.dirBytes(outDir) - bytes0,
+          (System.nanoTime() - ingestT0) / 1e9)
+      } finally sets.unpersist()
+    }
     // merge: K smallest of the distinct union of the per-batch sketches
     val w = Window.partitionBy($"source").orderBy($"h")
     s.read.parquet(outDir).distinct()
@@ -666,7 +514,7 @@ object Streaming2 {
           .otherwise($"sketch_n"))
       .select($"source", $"sketch_n", $"est_distinct")
       .orderBy($"source")
-  }
+  }}
   /** Batch replay: the same K-smallest sketch per source over the whole
     * corpus — equal to the streamed merge because KMV merge is exactly
     * "K smallest of the distinct union". */

@@ -1,15 +1,12 @@
 package graft.queries
 
-import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.functions.Parity
-import graft.sources.InMemoryQueueRegistry
+import StreamRun.{Feed, from}
 
 /** Spark-4-native arbitrary state: the `transformWithState` API (the
   * successor to map/flatMapGroupsWithState) over the `graft-files`
@@ -19,20 +16,14 @@ import graft.sources.InMemoryQueueRegistry
   * must hash-equal batch SQL over the same slice.
   */
 object Streaming3 {
-  private val seq = new AtomicInteger(0)
   private val CUTOFF = 2000L
 
-  /** The `events < CUTOFF` slice staged as 2 hash-partitioned files —
-    * the two-file 1-per-trigger feed shared by six rows in this file
-    * (and, via the same [[StageCache]] key, by the Streaming/Streaming2
-    * rows staging the identical fixture). */
-  private def stageEvents2(s: SparkSession, dir: String, gate: String): String =
-    StageCache.dir(gate, s"$dir|events|lt$CUTOFF|hash:2:event_id",
-        Seq(s"$dir/events.parquet")) { out =>
-      Streaming.eventsNtz(s, dir).filter(col("event_id") < CUTOFF)
-        .repartition(2, col("event_id"))
-        .write.mode("overwrite").parquet(out)
-    }
+  /** `feeds` read one file per trigger in announcement-timestamp order:
+    * with [[StreamRun.from]] stamps the batch sequence is the files' name
+    * order, deterministic under any queue timing. */
+  private def inOrder(run: StreamRun, schema: org.apache.spark.sql.types.StructType,
+      feeds: Feed*): DataFrame =
+    run.source(schema, feeds, "maxFilesPerTrigger" -> "1", "sortBatchByTimestamp" -> "true")
 
   /** Full documents table RANGE-staged by doc_id as 2 files (ids arrive
     * monotonically under timestamp-ordered single-file batches) — shared
@@ -119,31 +110,15 @@ object Streaming3 {
       Streaming.withStateShuffle(s, 4) {
     import s.implicits._
     // transformWithState requires the RocksDB provider
-    Streaming.withRocksDBStateStore(s) {
-      val runId = s"tws${seq.incrementAndGet()}_${System.nanoTime()}"
-      val queue = InMemoryQueueRegistry.queue(runId)
+    Streaming.withRocksDBStateStore(s) { StreamRun(s, "stream_tws_profile") { run =>
       // two real files announced at increasing timestamps -> with
       // sortBatchByTimestamp and 1 file/trigger the batch sequence is
       // deterministic: fileA, fileB, sentinel — genuine cross-batch
       // accumulation, no timing window
-      val stage = stageEvents2(s, dir, "stream_tws_profile")
-      val files = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-      val sentStage = Streaming.sentinelEventsDir(s, "stream_tws_profile", userId = -1L)
-      new java.io.File(sentStage).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => queue.send(
-          s"""{"path":"file:${f.getAbsolutePath}","timestampMs":2000}"""))
-
-      val sinkName = s"sink_$runId"
-      val query = s.readStream.format("graft-files").schema(Streaming.eventsSchema)
-        .option("fileFormat", "parquet").option("queueName", runId)
-        .option("queueFetchWaitTimeoutSeconds", "10")
-        .option("maxFilesPerTrigger", "1")
-        .option("sortBatchByTimestamp", "true")
-        .option("minFilesForFirstBatch", (files.length + 1).toString)
-        .load()
+      val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
+      val sentStage = Streaming.sentinelEventsDir(s, run.gate, userId = -1L)
+      val profiles = inOrder(run, Streaming.eventsSchema,
+          Feed(stage, from(1000L)), Feed(sentStage, StreamRun.at(2000L)))
         .withColumn("event_ts", Streaming.eventTs)
         .withWatermark("event_ts", "1 minute")
         .select($"event_id", unix_micros($"event_ts").as("ts_us"),
@@ -154,15 +129,8 @@ object Streaming3 {
           TimeMode.EventTime(), OutputMode.Append())
         .toDF("user_id", "n_events", "n_types", "first_us", "last_us")
         .filter($"user_id" =!= -1) // the sentinel's own key (fixture user_ids start at 0)
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").start()
-      try {
-        query.processAllAvailable()
-        StreamPlans.capture("stream_tws_profile", query)
-      } finally query.stop()
-      InMemoryQueueRegistry.remove(runId)
-      s.table(sinkName).orderBy($"user_id")
-    }
+      run.memory(profiles, "append").orderBy($"user_id")
+    }}
   }
   val streamTwsProfileSql: String =
     s"""SELECT user_id, COUNT(*) AS n_events,
@@ -189,24 +157,10 @@ object Streaming3 {
     * output O(changed keys); state is O(live keys) — the compaction
     * point of q60 — not O(history). */
   def streamLatestByKey(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_latest_by_key") { run =>
     import s.implicits._
-    val runId = s"slbk${seq.incrementAndGet()}_${System.nanoTime()}"
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val stage = stageEvents2(s, dir, "stream_latest_by_key")
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(Streaming.eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .option("sortBatchByTimestamp", "true")
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
+    val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
+    val latest = inOrder(run, Streaming.eventsSchema, Feed(stage, from(1000L)))
       .withColumn("event_ts", Streaming.eventTs)
       .select($"user_id", $"event_type",
         unix_micros($"event_ts").as("ts_us"), $"event_id", $"value")
@@ -216,15 +170,8 @@ object Streaming3 {
       .select($"user_id", $"event_type", $"n_versions",
         $"last.ts_us".as("last_ts_us"), $"last.event_id".as("last_event_id"),
         $"last.value".as("last_value"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("complete").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_latest_by_key", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName).orderBy($"user_id", $"event_type")
-  }
+    run.memory(latest, "complete").orderBy($"user_id", $"event_type")
+  }}
   val streamLatestByKeySql: String =
     s"""WITH rk AS (
        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id, value,
@@ -245,35 +192,13 @@ object Streaming3 {
     * accumulated sums — batch-invariant BY CONSTRUCTION). The two-file
     * 1-per-trigger feed forces genuine cross-batch accumulation. */
   def streamAbMonitor(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_ab_monitor") { run =>
     import s.implicits._
-    val runId = s"sab${seq.incrementAndGet()}_${System.nanoTime()}"
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val stage = stageEvents2(s, dir, "stream_ab_monitor")
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-    val sinkName = s"sink_$runId"
-    val src = s.readStream.format("graft-files").schema(Streaming.eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .option("sortBatchByTimestamp", "true")
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
+    val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
+    val src = inOrder(run, Streaming.eventsSchema, Feed(stage, from(1000L)))
       .select($"event_type", $"user_id", $"value")
-    val query = Relational3.abAgg(src)
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("complete").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_ab_monitor", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName).orderBy($"event_type")
-  }
+    run.memory(Relational3.abAgg(src), "complete").orderBy($"event_type")
+  }}
   val streamAbMonitorSql: String =
     // the batch oracle restricted to the streamed slice, via the
     // parameterized predicate seam (no string surgery on the inner SQL)
@@ -292,40 +217,19 @@ object Streaming3 {
     * the md5-prefix spelling, so DuckDB replays the counter table
     * bit-for-bit. */
   def streamCmsMonitor(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_cms_monitor") { run =>
     import s.implicits._
-    val runId = s"scms${seq.incrementAndGet()}_${System.nanoTime()}"
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val stage = stageEvents2(s, dir, "stream_cms_monitor")
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-    val sinkName = s"sink_$runId"
+    val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
     val depth = graft.operators.Sketches.CmsDepth
     val width = graft.operators.Sketches.CmsWidth
-    val query = s.readStream.format("graft-files").schema(Streaming.eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .option("sortBatchByTimestamp", "true")
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
+    val counters = inOrder(run, Streaming.eventsSchema, Feed(stage, from(1000L)))
       .select($"event_type", explode(sequence(lit(0), lit(depth - 1))).as("seed"))
       .select($"seed",
         (Parity.md5Key(concat($"seed".cast("string"), lit(":"), $"event_type"), 8) % width)
           .as("bucket"))
       .groupBy($"seed", $"bucket").agg(count(lit(1)).as("c"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("complete").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_cms_monitor", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName).orderBy($"seed", $"bucket")
-  }
+    run.memory(counters, "complete").orderBy($"seed", $"bucket")
+  }}
   val streamCmsMonitorSql: String =
     s"""SELECT seed, CAST(${Parity.md5KeySql("seed || ':' || event_type", 8)}
        |    % ${graft.operators.Sketches.CmsWidth} AS BIGINT) AS bucket,
@@ -347,39 +251,18 @@ object Streaming3 {
     * state; this is O(K). */
   private val StreamSampleK = 100
   def streamSampleConsistent(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_sample_consistent") { run =>
     import s.implicits._
-    val runId = s"sscons${seq.incrementAndGet()}_${System.nanoTime()}"
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val stage = stageEvents2(s, dir, "stream_sample_consistent")
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(Streaming.eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .option("sortBatchByTimestamp", "true")
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
+    val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
+    val sample = inOrder(run, Streaming.eventsSchema, Feed(stage, from(1000L)))
       .select($"event_id",
         Parity.md5Key($"event_id", 8).as("hk"))
       .agg(graft.functions.TopKMinAgg.topkMin($"hk", $"event_id", StreamSampleK).as("tk"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("complete").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_sample_consistent", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName)
+    run.memory(sample, "complete")
       .select(explode($"tk").as("p"))
       .select($"p.id".as("event_id"), $"p.key".as("hk"))
       .orderBy($"hk", $"event_id")
-  }
+  }}
   val streamSampleConsistentSql: String =
     s"""SELECT event_id, hk FROM (
        |  SELECT event_id,
@@ -413,44 +296,25 @@ object Streaming3 {
     * The fixed-point spelling is [[graft.operators.Clustering]]'s, so
     * DuckDB replays the running means bit-for-bit. */
   def streamEmbDrift(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_emb_drift") { run =>
     import s.implicits._
-    val runId = s"sedrift${seq.incrementAndGet()}_${System.nanoTime()}"
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val stage = StageCache.dir("stream_emb_drift",
+    val stage = StageCache.dir(run.gate,
         s"$dir|emb|hash:2:vec_id", Seq(s"$dir/embeddings.parquet")) { out =>
       Tables.embeddings(s, dir).repartition(2, col("vec_id"))
         .write.mode("overwrite").parquet(out)
     }
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(embeddingsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
+    val centroids = run.source(embeddingsSchema, Seq(Feed(stage, from(1000L))),
+        "maxFilesPerTrigger" -> "1")
       .select($"label", posexplode($"embedding").as(Seq("pos", "x")))
       .select($"label", $"pos".cast("long").as("pos"),
         round($"x".cast("double") * DriftQ).cast("long").as("fx"))
       .groupBy($"label", $"pos")
       .agg(count(lit(1)).as("n_vecs"), sum($"fx").as("fxs"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("complete").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_emb_drift", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName)
+    run.memory(centroids, "complete")
       .select($"label", $"pos", $"n_vecs",
         ($"fxs".cast("double") / ($"n_vecs" * DriftQ)).as("mean_val"))
       .orderBy($"label", $"pos")
-  }
+  }}
   val streamEmbDriftSql: String =
     s"""WITH x AS (
        |  SELECT label, CAST(gs - 1 AS BIGINT) AS pos,
@@ -460,12 +324,6 @@ object Streaming3 {
        |  CAST(CAST(SUM(fx) AS BIGINT) AS DOUBLE) / (COUNT(*) * $DriftQ) AS mean_val
        |FROM x GROUP BY label, pos ORDER BY label, pos""".stripMargin
 
-  private val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
 
   /** Streaming corpus-stats monitor (`stream_corpus_stats`): per-language
     * doc/token/char tallies maintained over streamed document batches as
@@ -475,41 +333,22 @@ object Streaming3 {
     * over the same slice after any micro-batch split (the standing
     * batch-invariance law). */
   def streamCorpusStats(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_corpus_stats") { run =>
     import s.implicits._
-    val runId = s"scstats${seq.incrementAndGet()}_${System.nanoTime()}"
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val stage = StageCache.dir("stream_corpus_stats",
+    val stage = StageCache.dir(run.gate,
         s"$dir|docs|hash:2:doc_id", Seq(s"$dir/documents.parquet")) { out =>
       Tables.documents(s, dir).repartition(2, col("doc_id"))
         .write.mode("overwrite").parquet(out)
     }
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(docsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
+    val stats = run.source(Streaming.docsSchema, Seq(Feed(stage, from(1000L))),
+        "maxFilesPerTrigger" -> "1")
       .select($"lang", $"n_chars",
         size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("n_tokens"),
         sum($"n_chars").as("sum_chars"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("complete").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_corpus_stats", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    s.table(sinkName).orderBy($"lang")
-  }
+    run.memory(stats, "complete").orderBy($"lang")
+  }}
   val streamCorpusStatsSql: String =
     raw"""SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens,
@@ -558,25 +397,11 @@ object Streaming3 {
   def streamShardManifest(s: SparkSession, dir: String): DataFrame =
       Streaming.withStateShuffle(s, 4) {
     import s.implicits._
-    Streaming.withRocksDBStateStore(s) {
-      val runId = s"sshard${seq.incrementAndGet()}_${System.nanoTime()}"
-      val queue = InMemoryQueueRegistry.queue(runId)
+    Streaming.withRocksDBStateStore(s) { StreamRun(s, "stream_shard_manifest") { run =>
       // RANGE staging: part-00000 carries the low doc_id range, so
       // timestamp-ordered single-file batches deliver ids in order
-      val stage = stageDocsRange2(s, dir, "stream_shard_manifest")
-      val files = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-      val sinkName = s"sink_$runId"
-      val query = s.readStream.format("graft-files").schema(docsSchema)
-        .option("fileFormat", "parquet").option("queueName", runId)
-        .option("queueFetchWaitTimeoutSeconds", "10")
-        .option("maxFilesPerTrigger", "1")
-        .option("sortBatchByTimestamp", "true")
-        .option("minFilesForFirstBatch", files.length.toString)
-        .load()
+      val stage = stageDocsRange2(s, dir, run.gate)
+      val manifest = inOrder(run, Streaming.docsSchema, Feed(stage, from(1000L)))
         .select($"doc_id",
           size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
         .as[(Long, Long)]
@@ -584,19 +409,12 @@ object Streaming3 {
         .transformWithState(new ShardManifestProcessor,
           TimeMode.None(), OutputMode.Append())
         .toDF("doc_id", "shard_id", "ntok")
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").start()
-      try {
-        query.processAllAvailable()
-        StreamPlans.capture("stream_shard_manifest", query)
-      } finally query.stop()
-      InMemoryQueueRegistry.remove(runId)
-      s.table(sinkName)
+      run.memory(manifest, "append")
         .groupBy($"shard_id")
         .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("sum_tokens"),
           min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
         .orderBy($"shard_id")
-    }
+    }}
   }
   /** Oracle: the batch prefix-sum shard plan over the same corpus. */
   val streamShardManifestSql: String = graft.operators.Curation7.shardPlanSql
@@ -641,28 +459,14 @@ object Streaming3 {
   def streamJourneyMarkov(s: SparkSession, dir: String): DataFrame =
       Streaming.withStateShuffle(s, 4) {
     import s.implicits._
-    Streaming.withRocksDBStateStore(s) {
-      val runId = s"sjm${seq.incrementAndGet()}_${System.nanoTime()}"
-      val queue = InMemoryQueueRegistry.queue(runId)
-      val stage = StageCache.dir("stream_journey_markov",
+    Streaming.withRocksDBStateStore(s) { StreamRun(s, "stream_journey_markov") { run =>
+      val stage = StageCache.dir(run.gate,
           s"$dir|events|lt$CUTOFF|rangeByTs:2", Seq(s"$dir/events.parquet")) { out =>
         Streaming.eventsNtz(s, dir).filter(col("event_id") < CUTOFF)
           .repartitionByRange(2, col("ts"))
           .write.mode("overwrite").parquet(out)
       }
-      val files = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-      val sinkName = s"sink_$runId"
-      val query = s.readStream.format("graft-files").schema(Streaming.eventsSchema)
-        .option("fileFormat", "parquet").option("queueName", runId)
-        .option("queueFetchWaitTimeoutSeconds", "10")
-        .option("maxFilesPerTrigger", "1")
-        .option("sortBatchByTimestamp", "true")
-        .option("minFilesForFirstBatch", files.length.toString)
-        .load()
+      val transitions = inOrder(run, Streaming.eventsSchema, Feed(stage, from(1000L)))
         .withColumn("ts_us", unix_micros(Streaming.eventTs))
         .select($"user_id", $"ts_us", $"event_id", $"event_type")
         .as[(Long, Long, Long, String)]
@@ -670,24 +474,18 @@ object Streaming3 {
         .transformWithState(new JourneyChainProcessor,
           TimeMode.None(), OutputMode.Append())
         .toDF("from_type", "to_type")
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").start()
-      try {
-        query.processAllAvailable()
-        StreamPlans.capture("stream_journey_markov", query)
-      } finally query.stop()
-      InMemoryQueueRegistry.remove(runId)
+      val sink = run.memory(transitions, "append")
       val wFrom = org.apache.spark.sql.expressions.Window.partitionBy($"from_type")
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      s.table(sinkName)
+      sink
         .groupBy($"from_type", $"to_type")
         .agg(count(lit(1)).as("n_transitions"))
         .withColumn("from_total", sum($"n_transitions").over(wFrom))
         .withColumn("p_ppm", expr("(n_transitions * 1000000) div from_total"))
         .select($"from_type", $"to_type", $"n_transitions", $"p_ppm")
         .orderBy($"from_type", $"to_type")
-    }
+    }}
   }
   val streamJourneyMarkovSql: String =
     s"""WITH t AS (
@@ -711,42 +509,22 @@ object Streaming3 {
     * q69 over the same slice. The always-on incident detector: state
     * stays bounded while events stream past it. */
   def streamValueAnomaly(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 4) {
+      Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_value_anomaly") { run =>
     import s.implicits._
-    val runId = s"svan${seq.incrementAndGet()}_${System.nanoTime()}"
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val stage = stageEvents2(s, dir, "stream_value_anomaly")
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.zipWithIndex.foreach { case (f, i) => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-    val sinkName = s"sink_$runId"
-    val query = s.readStream.format("graft-files").schema(Streaming.eventsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "1")
-      .option("sortBatchByTimestamp", "true")
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
+    val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
+    val dailySums = inOrder(run, Streaming.eventsSchema, Feed(stage, from(1000L)))
       .withColumn("ts_us", unix_micros(Streaming.eventTs))
       .select($"event_type", expr("ts_us div 86400000000").as("day_idx"),
         round($"value" * 1e6).cast("long").as("v_micro"))
       .groupBy($"event_type", $"day_idx")
       .agg(sum($"v_micro").as("day_sum_micro"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("complete").start()
-    try {
-      query.processAllAvailable()
-      StreamPlans.capture("stream_value_anomaly", query)
-    } finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
+    val sink = run.memory(dailySums, "complete")
     // rank-rule median/MAD verdicts over the accumulated (bounded) table —
     // the exact batch q69 read-side. The sink view is re-materialized as a
     // fresh local frame (it is types × retention-days rows BY CONSTRUCTION)
     // so the med/mad self-joins don't alias the memory sink's attributes.
     val daily = {
-      val acc = s.table(sinkName).collect()
+      val acc = sink.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
       acc.toDF("event_type", "day_idx", "day_sum_micro")
     }
@@ -774,7 +552,7 @@ object Streaming3 {
       .select($"event_type", $"day_idx", $"day_sum_micro", $"med_micro",
         $"mad_micro", $"is_anomaly")
       .orderBy($"event_type", $"day_idx")
-  }
+  }}
   val streamValueAnomalySql: String =
     s"""WITH daily AS (
        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day_idx,
@@ -846,23 +624,9 @@ object Streaming3 {
   def streamPipelineCurate(s: SparkSession, dir: String): DataFrame =
       Streaming.withStateShuffle(s, 4) {
     import s.implicits._
-    Streaming.withRocksDBStateStore(s) {
-      val runId = s"spc${seq.incrementAndGet()}_${System.nanoTime()}"
-      val queue = InMemoryQueueRegistry.queue(runId)
-      val stage = stageDocsRange2(s, dir, "stream_pipeline_curate")
-      val files = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) => queue.send(
-        s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${1000 + i}}""") }
-
-      val sinkName = s"sink_$runId"
-      val query = s.readStream.format("graft-files").schema(docsSchema)
-        .option("fileFormat", "parquet").option("queueName", runId)
-        .option("queueFetchWaitTimeoutSeconds", "10")
-        .option("maxFilesPerTrigger", "1")
-        .option("sortBatchByTimestamp", "true")
-        .option("minFilesForFirstBatch", files.length.toString)
-        .load()
+    Streaming.withRocksDBStateStore(s) { StreamRun(s, "stream_pipeline_curate") { run =>
+      val stage = stageDocsRange2(s, dir, run.gate)
+      val manifest = inOrder(run, Streaming.docsSchema, Feed(stage, from(1000L)))
         // stage 1: the quality cascade, stateless (projected tokens so
         // the tokenizer runs once — the CollapseProject discipline)
         .withColumn("toks", graft.functions.TextFunctions.tokens($"text"))
@@ -879,19 +643,12 @@ object Streaming3 {
         .transformWithState(new ShardManifestProcessor,
           TimeMode.None(), OutputMode.Append())
         .toDF("doc_id", "shard_id", "ntok")
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").start()
-      try {
-        query.processAllAvailable()
-        StreamPlans.capture("stream_pipeline_curate", query)
-      } finally query.stop()
-      InMemoryQueueRegistry.remove(runId)
-      s.table(sinkName)
+      run.memory(manifest, "append")
         .groupBy($"shard_id")
         .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("sum_tokens"),
           min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
         .orderBy($"shard_id")
-    }
+    }}
   }
   /** The batch composition, replayed: cascade-pass → first-copy-per-
     * fingerprint → doc_id-ordered prefix-sum shards. */
@@ -971,11 +728,10 @@ object Streaming3 {
     * label fixpoint). */
   private[graft] def streamCcDeltaRun(s: SparkSession, dir: String,
       nStageFiles: Int, maxFilesPerTrigger: Int, compactAfter: Int = 4)
-      : DataFrame = Streaming.withStateShuffle(s, 8) {
+      : DataFrame = Streaming.withStateShuffle(s, 8) { StreamRun(s, "stream_cc_delta") { run =>
     import s.implicits._
     import graft.operators.Dedup
-    val runId = s"sccd${seq.incrementAndGet()}_${System.nanoTime()}"
-    StreamPlans.resetIngest("stream_cc_delta")
+    StreamPlans.resetIngest(run.gate)
     val prepT0 = System.nanoTime()
     val all = Tables.documents(s, dir)
     // standing artifacts a prior ingest committed — read from the Models
@@ -983,141 +739,120 @@ object Streaming3 {
     // materialized, so the stream cannot race their build
     val (corpusSh, corpusBands, standingEdges, standingMap) =
       Dedup.ccStandingArtifacts(s, dir)
-    StreamPlans.recordPrep("stream_cc_delta", (System.nanoTime() - prepT0) / 1e9)
+    StreamPlans.recordPrep(run.gate, (System.nanoTime() - prepT0) / 1e9)
 
     // delta staged as nStageFiles files -> ceil(n/mfpt) micro-batches
-    val stage = StageCache.dir("stream_cc_delta",
+    val stage = StageCache.dir(run.gate,
         s"$dir|docs|mod5eq0|hash:$nStageFiles:doc_id", Seq(s"$dir/documents.parquet")) { out =>
       all.filter($"doc_id" % 5 === 0)
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
         .repartition(nStageFiles, $"doc_id")
         .write.mode("overwrite").parquet(out)
     }
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.foreach(f => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
-
-    val seenShDir = Files.createTempDirectory(s"graft-$runId-sh").toString
-    val seenBandsDir = Files.createTempDirectory(s"graft-$runId-bands").toString
-    val edgesDir = Files.createTempDirectory(s"graft-$runId-edges").toString
-    val query = s.readStream.format("graft-files").schema(docsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      // pre-enqueued corpus: block the first offset until the async
-      // fetch loop has admitted every staged file, or
-      // processAllAvailable() can return on an early no-data trigger
-      // and silently drop part of the corpus (the r12 flake class,
-      // GraftFileSource admission notes)
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // on-storage state accounting: batch boundaries exist only here,
-        // so the harness itself records what each batch appends (the
-        // StateInvarianceSpec claim "appends ∝ batch, not history")
-        val ingestT0 = System.nanoTime()
-        // resolve any mid-swap compaction debris from a crashed earlier
-        // run BEFORE reading markers or writing generations (no-op on
-        // healthy dirs — see StreamPlans.recoverCompaction)
-        Seq(seenShDir, seenBandsDir, edgesDir)
-          .foreach(StreamPlans.recoverCompaction)
-        val bytes0 = Seq(seenShDir, seenBandsDir, edgesDir)
-          .map(StreamPlans.dirBytes).sum
-        val batchSh = Dedup.docShinglesOf(batch)
-        val batchBands = Dedup.lshBands(Dedup.lshSignatures(batchSh)).persist()
-        try {
-          // grow the standing tables by exactly this batch's docs — one
-          // batch-id generation each. Replay overwrites its own gen —
-          // UNLESS a compaction has already folded this id's gen away
-          // (the _compacted_upto marker), in which case the rows live in
-          // the compacted gen and a rewrite would DUPLICATE them; see
-          // StreamPlans.markCompactedUpto for why duplicated band rows
-          // (unlike duplicated edges) are not harmless
-          if (id > StreamPlans.compactedUpto(seenShDir))
-            batchSh.write.mode("overwrite").parquet(s"$seenShDir/gen=$id")
-          if (id > StreamPlans.compactedUpto(seenBandsDir))
-            batchBands.write.mode("overwrite").parquet(s"$seenBandsDir/gen=$id")
-          // only buckets this batch landed in can yield new pairs, and
-          // the candidate rank is bucket-local — restrict the rank +
-          // pair join to batch-touched buckets (the dedupCcDelta
-          // incremental-candidate discipline; broadcast for the same
-          // union-partitioning reason documented there)
-          val batchKeys = batchBands.select(col("band_idx"), col("band_key")).distinct()
-          val seenBands = corpusBands
-            .unionByName(s.read.parquet(seenBandsDir)
-              .select(col("doc_id"), col("band_idx"), col("band_key")))
-            .join(broadcast(batchKeys), Seq("band_idx", "band_key"), "leftsemi")
-          val batchIds = batch.select(col("doc_id"))
-          // every pair emits exactly once: in the batch its LATER
-          // endpoint arrives in (the earlier batch can't see it — the
-          // other endpoint isn't in the standing tables yet). Batches
-          // are hash-staged, so the later arrival can sit on EITHER
-          // side of the a<b candidate ordering — filter on both.
-          // LAZY checkpoint (r21, the ccFixpoint discipline): the
-          // candidate list feeds BOTH union branches below, and without
-          // the checkpoint the whole candidate pipeline (bucket
-          // semi-join + rank window + pair self-join) executed twice
-          // per micro-batch; lazy so it materializes inside the first
-          // branch's job through the normal AQE path.
-          val cand = Dedup.ccCheckpoint(Dedup.lshCandidates(seenBands))
-          val touching = cand
-            .join(batchIds.withColumnRenamed("doc_id", "a_id"), Seq("a_id"), "leftsemi")
-            .unionByName(cand
-              .join(batchIds.withColumnRenamed("doc_id", "b_id"), Seq("b_id"), "leftsemi"))
-            .distinct()
-          val allSh = corpusSh.unionByName(
-            s.read.parquet(seenShDir).select(col("doc_id"), col("sh")))
-          val fresh = Dedup.lshVerify(touching, allSh).select(col("a_id"), col("b_id"))
-          StreamPlans.capturePlan("stream_cc_delta", fresh)
-          // edge replays past a compaction would merely duplicate edge
-          // rows (absorbed by the label fixpoint), but skip symmetrically
-          // so the append accounting stays exact under replay too
-          if (id > StreamPlans.compactedUpto(edgesDir))
-            fresh.write.mode("overwrite").parquet(s"$edgesDir/batch=$id")
-          // deterministic per-batch release of the candidate checkpoint:
-          // everything derived from it is on storage now, and waiting on
-          // the GC accumulates one block set per micro-batch on a
-          // long-running stream (r21 ADVICE)
-          graft.operators.Par.releaseLocalCheckpoint(cand)
-          // standing-dir GC: compact once the generation count passes the
-          // cap, so file counts stay bounded over an unbounded batch
-          // stream. The crash-window contract (stale-.next sweep, marker
-          // committing atomically with the swap, max-carry-forward) lives
-          // in StreamPlans.compactGenerations, asserted by
-          // CompactionReplaySpec.
-          var compacted = false
-          if (StreamPlans.generationCount(seenShDir) > compactAfter) {
-            compacted = true
-            StreamPlans.compactGenerations(s, seenShDir,
-              s"gen=${-(id + 1)}", Seq("doc_id", "sh"), id)
-          }
-          if (StreamPlans.generationCount(seenBandsDir) > compactAfter) {
-            compacted = true
-            StreamPlans.compactGenerations(s, seenBandsDir,
-              s"gen=${-(id + 1)}", Seq("doc_id", "band_idx", "band_key"), id)
-          }
-          if (StreamPlans.generationCount(edgesDir) > compactAfter) {
-            compacted = true
-            StreamPlans.compactGenerations(s, edgesDir,
-              s"batch=${-(id + 1)}", Seq("a_id", "b_id"), id)
-          }
-          StreamPlans.recordIngest("stream_cc_delta", id,
-            Seq(seenShDir, seenBandsDir, edgesDir)
-              .map(StreamPlans.dirBytes).sum - bytes0,
-            (System.nanoTime() - ingestT0) / 1e9,
-            compacted = compacted,
-            filesAfter = Seq(seenShDir, seenBandsDir, edgesDir)
-              .map(StreamPlans.parquetFileCount).sum)
-        } finally { batchSh.unpersist(); batchBands.unpersist() }
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$runId-cp").toString)
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
+    val seenShDir = run.tempDir("sh")
+    val seenBandsDir = run.tempDir("bands")
+    val edgesDir = run.tempDir("edges")
+    val delta = run.source(Streaming.docsSchema, Seq(Feed(stage)),
+      "maxFilesPerTrigger" -> maxFilesPerTrigger.toString)
+    run.foreachBatch(delta) { (batch, id) =>
+      // on-storage state accounting: batch boundaries exist only here,
+      // so the harness itself records what each batch appends (the
+      // StateInvarianceSpec claim "appends ∝ batch, not history")
+      val ingestT0 = System.nanoTime()
+      // resolve any mid-swap compaction debris from a crashed earlier
+      // run BEFORE reading markers or writing generations (no-op on
+      // healthy dirs — see StreamPlans.recoverCompaction)
+      Seq(seenShDir, seenBandsDir, edgesDir)
+        .foreach(StreamPlans.recoverCompaction)
+      val bytes0 = Seq(seenShDir, seenBandsDir, edgesDir)
+        .map(StreamPlans.dirBytes).sum
+      val batchSh = Dedup.docShinglesOf(batch)
+      val batchBands = Dedup.lshBands(Dedup.lshSignatures(batchSh)).persist()
+      try {
+        // grow the standing tables by exactly this batch's docs — one
+        // batch-id generation each. Replay overwrites its own gen —
+        // UNLESS a compaction has already folded this id's gen away
+        // (the _compacted_upto marker), in which case the rows live in
+        // the compacted gen and a rewrite would DUPLICATE them; see
+        // StreamPlans.markCompactedUpto for why duplicated band rows
+        // (unlike duplicated edges) are not harmless
+        if (id > StreamPlans.compactedUpto(seenShDir))
+          batchSh.write.mode("overwrite").parquet(s"$seenShDir/gen=$id")
+        if (id > StreamPlans.compactedUpto(seenBandsDir))
+          batchBands.write.mode("overwrite").parquet(s"$seenBandsDir/gen=$id")
+        // only buckets this batch landed in can yield new pairs, and
+        // the candidate rank is bucket-local — restrict the rank +
+        // pair join to batch-touched buckets (the dedupCcDelta
+        // incremental-candidate discipline; broadcast for the same
+        // union-partitioning reason documented there)
+        val batchKeys = batchBands.select(col("band_idx"), col("band_key")).distinct()
+        val seenBands = corpusBands
+          .unionByName(s.read.parquet(seenBandsDir)
+            .select(col("doc_id"), col("band_idx"), col("band_key")))
+          .join(broadcast(batchKeys), Seq("band_idx", "band_key"), "leftsemi")
+        val batchIds = batch.select(col("doc_id"))
+        // every pair emits exactly once: in the batch its LATER
+        // endpoint arrives in (the earlier batch can't see it — the
+        // other endpoint isn't in the standing tables yet). Batches
+        // are hash-staged, so the later arrival can sit on EITHER
+        // side of the a<b candidate ordering — filter on both.
+        // LAZY checkpoint (r21, the ccFixpoint discipline): the
+        // candidate list feeds BOTH union branches below, and without
+        // the checkpoint the whole candidate pipeline (bucket
+        // semi-join + rank window + pair self-join) executed twice
+        // per micro-batch; lazy so it materializes inside the first
+        // branch's job through the normal AQE path.
+        val cand = Dedup.ccCheckpoint(Dedup.lshCandidates(seenBands))
+        val touching = cand
+          .join(batchIds.withColumnRenamed("doc_id", "a_id"), Seq("a_id"), "leftsemi")
+          .unionByName(cand
+            .join(batchIds.withColumnRenamed("doc_id", "b_id"), Seq("b_id"), "leftsemi"))
+          .distinct()
+        val allSh = corpusSh.unionByName(
+          s.read.parquet(seenShDir).select(col("doc_id"), col("sh")))
+        val fresh = Dedup.lshVerify(touching, allSh).select(col("a_id"), col("b_id"))
+        StreamPlans.capturePlan(run.gate, fresh)
+        // edge replays past a compaction would merely duplicate edge
+        // rows (absorbed by the label fixpoint), but skip symmetrically
+        // so the append accounting stays exact under replay too
+        if (id > StreamPlans.compactedUpto(edgesDir))
+          fresh.write.mode("overwrite").parquet(s"$edgesDir/batch=$id")
+        // deterministic per-batch release of the candidate checkpoint:
+        // everything derived from it is on storage now, and waiting on
+        // the GC accumulates one block set per micro-batch on a
+        // long-running stream (r21 ADVICE)
+        graft.operators.Par.releaseLocalCheckpoint(cand)
+        // standing-dir GC: compact once the generation count passes the
+        // cap, so file counts stay bounded over an unbounded batch
+        // stream. The crash-window contract (stale-.next sweep, marker
+        // committing atomically with the swap, max-carry-forward) lives
+        // in StreamPlans.compactGenerations, asserted by
+        // CompactionReplaySpec.
+        var compacted = false
+        if (StreamPlans.generationCount(seenShDir) > compactAfter) {
+          compacted = true
+          StreamPlans.compactGenerations(s, seenShDir,
+            s"gen=${-(id + 1)}", Seq("doc_id", "sh"), id)
+        }
+        if (StreamPlans.generationCount(seenBandsDir) > compactAfter) {
+          compacted = true
+          StreamPlans.compactGenerations(s, seenBandsDir,
+            s"gen=${-(id + 1)}", Seq("doc_id", "band_idx", "band_key"), id)
+        }
+        if (StreamPlans.generationCount(edgesDir) > compactAfter) {
+          compacted = true
+          StreamPlans.compactGenerations(s, edgesDir,
+            s"batch=${-(id + 1)}", Seq("a_id", "b_id"), id)
+        }
+        StreamPlans.recordIngest(run.gate, id,
+          Seq(seenShDir, seenBandsDir, edgesDir)
+            .map(StreamPlans.dirBytes).sum - bytes0,
+          (System.nanoTime() - ingestT0) / 1e9,
+          compacted = compacted,
+          filesAfter = Seq(seenShDir, seenBandsDir, edgesDir)
+            .map(StreamPlans.parquetFileCount).sum)
+      } finally { batchSh.unpersist(); batchBands.unpersist() }
+    }
     // persisted (the delta merge reads the edge frame several times);
     // no eager count — the merge's first guard action fills the cache
     val acc = s.read.parquet(edgesDir).select($"a_id", $"b_id").persist()
@@ -1125,12 +860,12 @@ object Streaming3 {
     // release every cache this run pinned — the returned frame reads
     // the committed artifact, so nothing leaks into the session
     val merged = Dedup.ccFixpointDelta(standingMap, standingEdges, acc)
-    val mapDir = Files.createTempDirectory(s"graft-$runId-map").toString
+    val mapDir = run.tempDir("map")
     merged.write.mode("overwrite").parquet(mapDir)
     merged.unpersist()
     acc.unpersist()
     s.read.parquet(mapDir).orderBy($"doc_id")
-  }
+  }}
   /** Full-rebuild oracle: the shared CC recursive CTE. */
   val streamCcDeltaSql: String = graft.operators.Dedup.dedupClustersSql
 
@@ -1150,11 +885,10 @@ object Streaming3 {
     * check: contamination is known the moment a document lands, not at
     * the end of the crawl. */
   def streamDecontaminate(s: SparkSession, dir: String): DataFrame =
-      Streaming.withStateShuffle(s, 8) {
+      Streaming.withStateShuffle(s, 8) { StreamRun(s, "stream_decontaminate") { run =>
     import s.implicits._
     import graft.operators.Curation
-    val runId = s"sdecon${seq.incrementAndGet()}_${System.nanoTime()}"
-    StreamPlans.resetIngest("stream_decontaminate")
+    StreamPlans.resetIngest(run.gate)
     val prepT0 = System.nanoTime()
     val docs = Tables.documents(s, dir)
     def grams(df: DataFrame): DataFrame = df
@@ -1178,50 +912,29 @@ object Streaming3 {
     bench.count() // materialize before the stream races it
     // recorded so the invariance spec can assert per-batch cost excludes
     // an eval-index REBUILD (the build is this prep, paid once)
-    StreamPlans.recordPrep("stream_decontaminate",
-      (System.nanoTime() - prepT0) / 1e9)
+    StreamPlans.recordPrep(run.gate, (System.nanoTime() - prepT0) / 1e9)
 
     // training corpus staged as 4 files -> 2 micro-batches
-    val stage = StageCache.dir("stream_decontaminate",
+    val stage = StageCache.dir(run.gate,
         s"$dir|docs|mod10ne7|hash:4:doc_id", Seq(s"$dir/documents.parquet")) { out =>
       docs.filter($"doc_id" % 10 =!= 7)
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
         .repartition(4, $"doc_id")
         .write.mode("overwrite").parquet(out)
     }
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.foreach(f => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
-
-    val hitsDir = Files.createTempDirectory(s"graft-$runId-hits").toString
-    val query = s.readStream.format("graft-files").schema(docsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "2")
-      // same admission guard as stream_cc_delta: all staged files must
-      // be admitted before the first offset is cut
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ingestT0 = System.nanoTime()
-        val bytes0 = StreamPlans.dirBytes(hitsDir)
-        val hits = grams(batch).join(broadcast(bench), "gk")
-          .select(col("bench_id"), col("doc_id"), col("gk"))
-        StreamPlans.capturePlan("stream_decontaminate", hits)
-        hits.write.mode("overwrite").parquet(s"$hitsDir/batch=$id")
-        StreamPlans.recordIngest("stream_decontaminate", id,
-          StreamPlans.dirBytes(hitsDir) - bytes0,
-          (System.nanoTime() - ingestT0) / 1e9)
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$runId-cp").toString)
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    InMemoryQueueRegistry.remove(runId)
-    bench.unpersist()
+    val hitsDir = run.tempDir("hits")
+    val training = run.source(Streaming.docsSchema, Seq(Feed(stage)), "maxFilesPerTrigger" -> "2")
+    try run.foreachBatch(training) { (batch, id) =>
+      val ingestT0 = System.nanoTime()
+      val bytes0 = StreamPlans.dirBytes(hitsDir)
+      val hits = grams(batch).join(broadcast(bench), "gk")
+        .select(col("bench_id"), col("doc_id"), col("gk"))
+      StreamPlans.capturePlan(run.gate, hits)
+      hits.write.mode("overwrite").parquet(s"$hitsDir/batch=$id")
+      StreamPlans.recordIngest(run.gate, id,
+        StreamPlans.dirBytes(hitsDir) - bytes0,
+        (System.nanoTime() - ingestT0) / 1e9)
+    } finally bench.unpersist()
     val acc = s.read.parquet(hitsDir)
       .groupBy($"bench_id")
       .agg(countDistinct($"doc_id").as("n_contaminated_docs"),
@@ -1233,7 +946,7 @@ object Streaming3 {
         coalesce($"n_contaminated_docs", lit(0L)).as("n_contaminated_docs"),
         coalesce($"n_shared_grams", lit(0L)).as("n_shared_grams"))
       .orderBy($"bench_id")
-  }
+  }}
   /** Stream/batch parity IS the gate: the batch report's oracle. */
   val streamDecontaminateSql: String = graft.operators.Curation.decontaminateSql
 

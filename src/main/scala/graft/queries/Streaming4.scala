@@ -1,13 +1,10 @@
 package graft.queries
 
-import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Parity
-import graft.sources.InMemoryQueueRegistry
+import StreamRun.Feed
 
 /** Streaming consumers of standing MODEL artifacts: rows where the
   * expensive thing (an n-gram LM, an index) is trained once on the
@@ -18,15 +15,6 @@ import graft.sources.InMemoryQueueRegistry
   * accumulated sink must hash-equal batch SQL over the same slice.
   */
 object Streaming4 {
-  private val seq = new AtomicInteger(0)
-
-  private val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
-
   private val KnDiscount = 0.75
 
   /** Streaming LM quality gate (`stream_lm_score`): the interpolated
@@ -64,10 +52,9 @@ object Streaming4 {
 
   private[graft] def streamLmScoreWith(s: SparkSession, dir: String,
       maxTypes: Long): DataFrame =
-      Streaming.withStateShuffle(s, 8) {
+      Streaming.withStateShuffle(s, 8) { StreamRun(s, "stream_lm_score") { run =>
     import s.implicits._
-    val runId = s"slm${seq.incrementAndGet()}_${System.nanoTime()}"
-    StreamPlans.resetIngest("stream_lm_score")
+    StreamPlans.resetIngest(run.gate)
     val prepT0 = System.nanoTime()
     val docs = Tables.documents(s, dir)
     def bigramsOfToks(df: DataFrame): DataFrame = df
@@ -133,85 +120,64 @@ object Streaming4 {
       if (rows <= maxTypes) broadcast(df) else df
     // materialize the pins before the stream races them
     big.count(); fwd.count(); bwd.count()
-    StreamPlans.recordPrep("stream_lm_score", (System.nanoTime() - prepT0) / 1e9)
+    StreamPlans.recordPrep(run.gate, (System.nanoTime() - prepT0) / 1e9)
 
     // ---- arriving corpus staged as 4 files -> 2 micro-batches
-    val stage = StageCache.dir("stream_lm_score",
+    val stage = StageCache.dir(run.gate,
         s"$dir|docs|mod5eq0|hash:4:doc_id", Seq(s"$dir/documents.parquet")) { out =>
       docs.filter($"doc_id" % 5 === 0)
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
         .repartition(4, $"doc_id")
         .write.mode("overwrite").parquet(out)
     }
-    val queue = InMemoryQueueRegistry.queue(runId)
-    val files = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    files.foreach(f => queue.send(
-      s"""{"path":"file:${f.getAbsolutePath}","timestampMs":1000}"""))
-
-    val scoresDir = Files.createTempDirectory(s"graft-$runId-scores").toString
-    val query = s.readStream.format("graft-files").schema(docsSchema)
-      .option("fileFormat", "parquet").option("queueName", runId)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-      .option("maxFilesPerTrigger", "2")
-      .option("minFilesForFirstBatch", files.length.toString)
-      .load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val ingestT0 = System.nanoTime()
-        val bytes0 = StreamPlans.dirBytes(scoresDir)
-        // Pc materialized as a column FIRST so both engines build the
-        // identical expression tree (the oracle's `parts` CTE)
-        // One left-join ladder serves BOTH regimes: under the guard
-        // each table broadcasts; above it the oversized table's join
-        // falls back to an AQE shuffle equi-join on the token strings
-        // (the gram-key respell was measured WORSE — see the batch
-        // row's regime comment + BENCH_NOTES round 18; regime equality
-        // of this fallback is pinned by StreamingLmRegimeSpec through
-        // the maxTypes parameter).
-        val parts = bigrams(batch)
-          .join(lm(big, nTypesL), Seq("w1", "w2"), "left")
-          .join(lm(fwd, nFwd), Seq("w1"), "left")
-          .join(lm(bwd, nBwd), Seq("w2"), "left")
-          .withColumn("pc",
-            when($"n1b".isNotNull, $"n1b".cast("double") / lit(nTypes))
-              .otherwise(lit(1.0) / lit(vSize + 1.0)))
-        val p =
-          when($"c".isNotNull,
-            ($"c".cast("double") - KnDiscount) / $"ctot".cast("double") +
-              (lit(KnDiscount) * $"n1f".cast("double") / $"ctot".cast("double")) * $"pc")
-          .when($"ctot".isNotNull,
+    val scoresDir = run.tempDir("scores")
+    val arriving = run.source(Streaming.docsSchema, Seq(Feed(stage)), "maxFilesPerTrigger" -> "2")
+    // the three session-lived LM caches must release even when the
+    // stream FAILS — after the run they would leak for the session on
+    // any processAllAvailable() error
+    try run.foreachBatch(arriving) { (batch, id) =>
+      val ingestT0 = System.nanoTime()
+      val bytes0 = StreamPlans.dirBytes(scoresDir)
+      // Pc materialized as a column FIRST so both engines build the
+      // identical expression tree (the oracle's `parts` CTE)
+      // One left-join ladder serves BOTH regimes: under the guard
+      // each table broadcasts; above it the oversized table's join
+      // falls back to an AQE shuffle equi-join on the token strings
+      // (the gram-key respell was measured WORSE — see the batch
+      // row's regime comment + BENCH_NOTES round 18; regime equality
+      // of this fallback is pinned by StreamingLmRegimeSpec through
+      // the maxTypes parameter).
+      val parts = bigrams(batch)
+        .join(lm(big, nTypesL), Seq("w1", "w2"), "left")
+        .join(lm(fwd, nFwd), Seq("w1"), "left")
+        .join(lm(bwd, nBwd), Seq("w2"), "left")
+        .withColumn("pc",
+          when($"n1b".isNotNull, $"n1b".cast("double") / lit(nTypes))
+            .otherwise(lit(1.0) / lit(vSize + 1.0)))
+      val p =
+        when($"c".isNotNull,
+          ($"c".cast("double") - KnDiscount) / $"ctot".cast("double") +
             (lit(KnDiscount) * $"n1f".cast("double") / $"ctot".cast("double")) * $"pc")
-          .otherwise($"pc")
-        val scores = parts
-          .withColumn("nll_micro", -Parity.microNats(p))
-          .groupBy($"doc_id")
-          .agg(count(lit(1)).as("n_bigrams"),
-            (sum($"nll_micro").cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
-        StreamPlans.capturePlan("stream_lm_score", scores)
-        scores.write.mode("overwrite").parquet(s"$scoresDir/batch=$id")
-        StreamPlans.recordIngest("stream_lm_score", id,
-          StreamPlans.dirBytes(scoresDir) - bytes0,
-          (System.nanoTime() - ingestT0) / 1e9)
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-$runId-cp").toString)
-      .start()
-    // queue registration and the three session-lived LM caches must
-    // release even when the stream FAILS — outside the finally they
-    // leak for the session on any processAllAvailable() error
-    try {
-      try query.processAllAvailable() finally query.stop()
-    } finally {
-      InMemoryQueueRegistry.remove(runId)
-      big.unpersist(); fwd.unpersist(); bwd.unpersist()
-    }
+        .when($"ctot".isNotNull,
+          (lit(KnDiscount) * $"n1f".cast("double") / $"ctot".cast("double")) * $"pc")
+        .otherwise($"pc")
+      val scores = parts
+        .withColumn("nll_micro", -Parity.microNats(p))
+        .groupBy($"doc_id")
+        .agg(count(lit(1)).as("n_bigrams"),
+          (sum($"nll_micro").cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
+      StreamPlans.capturePlan(run.gate, scores)
+      scores.write.mode("overwrite").parquet(s"$scoresDir/batch=$id")
+      StreamPlans.recordIngest(run.gate, id,
+        StreamPlans.dirBytes(scoresDir) - bytes0,
+        (System.nanoTime() - ingestT0) / 1e9)
+    } finally { big.unpersist(); fwd.unpersist(); bwd.unpersist() }
     // each arriving doc lives in exactly one staged file, so the
     // accumulated sink is one row per doc already — no re-aggregation
     s.read.parquet(scoresDir)
       .select($"doc_id", $"n_bigrams", $"avg_nll")
       .orderBy($"doc_id")
-  }
+  }}
 
   /** Batch-equivalent oracle: standing-LM KN scoring of the held-out
     * slice, backoff ladder spelled with the same parenthesization. */

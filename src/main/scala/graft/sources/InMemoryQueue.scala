@@ -77,6 +77,11 @@ object InMemoryQueueRegistry {
   def queue(name: String): InMemoryQueue =
     queues.computeIfAbsent(name, new InMemoryQueue(_))
   def remove(name: String): Unit = queues.remove(name)
+  /** Names of the queues registered now (leak checks in tests). */
+  private[graft] def names: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    queues.keySet.asScala.toSet
+  }
 }
 
 /** Queue client over any [[RawQueue]] transport, implementing the

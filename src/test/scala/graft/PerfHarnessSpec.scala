@@ -29,6 +29,14 @@ class PerfHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
       PerfHarness.percentile(r.graftIncRounds, 0.95))
   }
 
+  test("bulk sweep: each maxFilesPerTrigger drains the backlog to validated sinks") {
+    val out = PerfHarness.bulkSweep(spark, nFiles = 12, rowsPerFile = 5, mfpts = Seq(5, 12))
+    assert(out.contains(""""metric":"bulk_sweep","backlog_files":12"""), out)
+    assert(out.contains(""""max_files_per_trigger":5,"triggers":3,"""), out)
+    assert(out.contains(""""max_files_per_trigger":12,"triggers":1,"""), out)
+    assert(""""valid":true""".r.findAllIn(out).size == 2, s"both configs must validate: $out")
+  }
+
   test("layout soak: churned sessions agree on results and report the cache split") {
     val out = PerfHarness.layoutSoak(spark, "/root/testdata/sf0.001", sessions = 3, rounds = 2)
     assert(out.contains(""""metric":"layout_soak""""), out)
