@@ -624,13 +624,6 @@ object PerfHarness {
     def swap(from: String, to: String): Unit =
       require(new java.io.File(from).renameTo(new java.io.File(to)),
         s"artifact swap failed: rename $from -> $to")
-    def rmdir(f: java.io.File): Unit = {
-      // null-guard like the sibling walkers: listFiles() is null on a
-      // vanished/erroring dir and must not NPE the soak mid-run
-      if (f.isDirectory) Option(f.listFiles())
-        .getOrElse(Array.empty[java.io.File]).foreach(rmdir)
-      f.delete()
-    }
     // standing init: the artifacts a prior ingest committed
     Dedup.docShinglesOf(docs.filter(col("doc_id") < nBase))
       .write.parquet(s"$root/sh/gen=0")
@@ -674,7 +667,7 @@ object PerfHarness {
         merged.write.parquet(s"$root/map.next")
         fresh.write.mode("append").parquet(s"$root/pairs")
         fresh.unpersist()
-        rmdir(new java.io.File(s"$root/map"))
+        TempDirs.delete(new java.io.File(s"$root/map"))
         swap(s"$root/map.next", s"$root/map")
         // amortized compaction: bound the generation count (and with it
         // the artifact file count) regardless of how many deltas arrive
@@ -685,7 +678,7 @@ object PerfHarness {
             val all = spark.read.parquet(s"$root/$sub")
               .drop("gen").repartition(spark.sparkContext.defaultParallelism)
             all.write.parquet(s"$root/$sub.next/gen=0")
-            rmdir(new java.io.File(s"$root/$sub"))
+            TempDirs.delete(new java.io.File(s"$root/$sub"))
             swap(s"$root/$sub.next", s"$root/$sub")
           }
         }

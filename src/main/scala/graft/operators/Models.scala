@@ -3,6 +3,8 @@ package graft.operators
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.TempDirs
+
 /** Train-once / query-many store for trained ANN structures (PQ
   * codebooks, IVF coarse centroids).
   *
@@ -43,11 +45,7 @@ private[graft] object Models {
     * the train-once law asserts this stays at 1 across invocations. */
   private val built = new ConcurrentHashMap[String, Integer]()
 
-  private val tempRoots = ConcurrentHashMap.newKeySet[String]()
-  sys.addShutdownHook(deleteTempRoots())
-
-  private def committed(dir: String): Boolean =
-    Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
+  private val tempRoots = new TempDirs
 
   /** One lock object per key: builds of DIFFERENT keys proceed fully in
     * parallel, and the long Spark train+write never runs inside a
@@ -84,15 +82,14 @@ private[graft] object Models {
     * (which must commit parquet into the passed dir) on first use or
     * after the previous artifact was lost/torn. */
   def root(key: String)(write: String => Unit): String = {
-    def ok(v: String) = v != null && committed(v)
+    def ok(v: String) = v != null && TempDirs.committed(v)
     val hit = roots.get(key)
     if (ok(hit)) hit
     else keyLocks.computeIfAbsent(key, _ => new Object).synchronized {
       val cur = roots.get(key)
       if (ok(cur)) cur
       else {
-        val dir = Files.createTempDirectory("graft-model").toString
-        tempRoots.add(dir)
+        val dir = tempRoots.create("graft-model")
         write(dir)
         built.merge(key, 1, (a, b) => a + b)
         mem.remove(key) // a deserialized copy of the LOST artifact, if any
@@ -117,19 +114,6 @@ private[graft] object Models {
   /** Drop all cached models and delete their backing dirs (tests). */
   private[graft] def reset(): Unit = {
     roots.clear(); mem.clear(); built.clear()
-    deleteTempRoots()
-  }
-
-  private def deleteTempRoots(): Unit = {
-    val it = tempRoots.iterator()
-    while (it.hasNext) {
-      val root = java.nio.file.Paths.get(it.next()); it.remove()
-      if (Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        val walk = Files.walk(root)
-        try walk.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
+    tempRoots.deleteAll()
   }
 }

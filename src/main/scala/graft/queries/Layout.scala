@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.TempDirs
+
 /** Storage-layout queries: the two layout techniques that remove whole
   * cost classes at 100 TB — bucketed co-located joins (the join's
   * shuffle disappears because both sides are pre-hashed into the same
@@ -45,12 +47,6 @@ object Layout {
     * layout. */
   private val prepared = new ConcurrentHashMap[String, String]()
 
-  /** Spark's committer renames `_SUCCESS` into the output root only
-    * after every task committed: its absence is exactly the torn-write
-    * signal a half-written layout leaves behind. */
-  private def committed(dir: String): Boolean =
-    Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-
   /** Cache lookup that re-validates before trusting: a hit is served
     * only if every expected output dir under the cached value still
     * carries `_SUCCESS` AND the layout's extra liveness check (catalog
@@ -61,7 +57,7 @@ object Layout {
   private def preparedRoot(key: String, outDirs: String => Seq[String],
       alsoValid: String => Boolean = _ => true)(build: => String): String = {
     def ok(v: String): Boolean =
-      v != null && outDirs(v).forall(committed) && alsoValid(v)
+      v != null && outDirs(v).forall(TempDirs.committed) && alsoValid(v)
     val hit = prepared.get(key)
     if (ok(hit)) hit
     else prepared.compute(key, (_, cur) => if (ok(cur)) cur else build)
@@ -70,29 +66,7 @@ object Layout {
   /** Layout temp dirs created this JVM, deleted on [[cleanup]] or JVM
     * shutdown — a long-lived driver must not accrete one rewrite per
     * (session, dir) forever. */
-  private val tempRoots = ConcurrentHashMap.newKeySet[String]()
-  sys.addShutdownHook(deleteTempRoots())
-
-  private def newTempRoot(prefix: String): String = {
-    val root = Files.createTempDirectory(prefix).toString
-    tempRoots.add(root)
-    root
-  }
-
-  private def deleteTempRoots(): Unit = {
-    val it = tempRoots.iterator()
-    while (it.hasNext) {
-      val root = java.nio.file.Paths.get(it.next()); it.remove()
-      if (Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        // Files.walk holds a directory handle until closed; leaking one
-        // per cleanup can make the deletes themselves fail on some FSes
-        val walk = Files.walk(root)
-        try walk.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
-  }
+  private val tempRoots = new TempDirs
 
   /** Drop every layout table this session registered and delete all
     * layout temp dirs. Idempotent; the next query call re-prepares. */
@@ -101,7 +75,7 @@ object Layout {
       .filter(_.name.startsWith("graft_bucketed_"))
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
     prepared.clear()
-    deleteTempRoots()
+    tempRoots.deleteAll()
   }
 
   /** Collision-safe per-dir name component: 16 hex chars of SHA-256 of
@@ -127,7 +101,7 @@ object Layout {
     preparedRoot(s"$d|bucketed",
       root => Seq(s"$root/orders", s"$root/customer"),
       _ => s.catalog.tableExists(ot) && s.catalog.tableExists(ct)) {
-      val root = newTempRoot("graft-layout-bucketed")
+      val root = tempRoots.create("graft-layout-bucketed")
       s.read.parquet(s"$d/orders.parquet")
         .write.mode("overwrite")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
@@ -145,7 +119,7 @@ object Layout {
     * directories — partition pruning needs no catalog. */
   private[graft] def partitionedEvents(s: SparkSession, d: String): String =
     preparedRoot(s"$d|events_by_type", dir => Seq(dir)) {
-      val root = newTempRoot("graft-layout-parts")
+      val root = tempRoots.create("graft-layout-parts")
       s.read.parquet(s"$d/events.parquet")
         .write.mode("overwrite").partitionBy("event_type")
         .parquet(s"$root/events_by_type")
@@ -214,7 +188,7 @@ object Layout {
   private[graft] def compactedEvents(s: SparkSession, d: String): (String, String) = {
     val root = preparedRoot(s"$d|events_compacted",
       r => Seq(s"$r/events_small", s"$r/events_compact")) {
-      val r = newTempRoot("graft-layout-compact")
+      val r = tempRoots.create("graft-layout-compact")
       s.read.parquet(s"$d/events.parquet")
         .repartition(256)
         .write.mode("overwrite").parquet(s"$r/events_small")
@@ -341,7 +315,7 @@ object Layout {
   private[graft] val ZorderBuckets = 32
   private[graft] def zorderedEvents(s: SparkSession, d: String): String =
     preparedRoot(s"$d|events_zorder", dir => Seq(dir)) {
-      val r = newTempRoot("graft-layout-zorder")
+      val r = tempRoots.create("graft-layout-zorder")
       val ev = s.read.parquet(s"$d/events.parquet")
       val b = ev.agg(min(col("user_id")), max(col("user_id")),
         min(col("event_id")), max(col("event_id"))).head()
@@ -398,7 +372,7 @@ object Layout {
     * the partitioned fact at runtime. */
   private[graft] def eventTypeDim(s: SparkSession, d: String): String =
     preparedRoot(s"$d|event_type_dim", dir => Seq(dir)) {
-      val r = newTempRoot("graft-layout-dim")
+      val r = tempRoots.create("graft-layout-dim")
       s.read.parquet(s"$d/events.parquet")
         .select(col("event_type")).distinct()
         .withColumn("category",
@@ -514,7 +488,7 @@ object Layout {
     val it = s"graft_bucketed_shingle_index_${suffix(d)}"
     preparedRoot(s"$d|shingle_index",
       root => Seq(s"$root/index"), _ => s.catalog.tableExists(it)) {
-      val root = newTempRoot("graft-layout-shidx")
+      val root = tempRoots.create("graft-layout-shidx")
       val base = s.read.parquet(s"$d/documents.parquet")
         .filter(col("doc_id") % 5 =!= 0)
       val sets = graft.operators.Dedup2.shingleSets(base).persist()
@@ -563,7 +537,7 @@ object Layout {
   private[graft] def ivfLayoutDir(s: SparkSession, d: String): String = {
     import s.implicits._
     val root = preparedRoot(s"$d|emb_ivf", r => Seq(s"$r/emb_by_cluster")) {
-      val r = newTempRoot("graft-layout-ivf")
+      val r = tempRoots.create("graft-layout-ivf")
       val centroids = graft.operators.Similarity.ivfCentroids(s, d)
       graft.operators.Similarity
         .ivfAssign(centroids, graft.operators.Similarity.normedEmb(s, d), "vec_id", 1)

@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, Stream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.TempDirs
+
 /** Capture point for the last micro-batch physical plan of each streaming
   * gate query, so `PlanLawSpec` can sweep the `stream_*` inventory with
   * the same cartesian/BNLJ laws it enforces on the batch plans.
@@ -115,13 +117,6 @@ object StreamPlans {
     walk(new java.io.File(path))
   }
 
-  /** Recursive delete (no-op on a missing path). */
-  private[queries] def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles())
-      .getOrElse(Array.empty[java.io.File]).foreach(rmTree)
-    f.delete()
-  }
-
   /** Number of generation subdirectories under a standing dir (0 if
     * absent) — the compaction trigger reading. */
   private[queries] def generationCount(dir: String): Int =
@@ -159,8 +154,8 @@ object StreamPlans {
       }
     }
     if (cur.exists()) {
-      if (old.exists()) rmTree(old)
-      if (next.exists()) rmTree(next)
+      if (old.exists()) TempDirs.delete(old)
+      if (next.exists()) TempDirs.delete(next)
       // a crash between markCompactedUpto's createTempFile and its
       // ATOMIC_MOVE abandons a `._compacted_upto*.tmp` in the staging
       // dir; the swap then carries it into `d`, where nothing else
@@ -206,7 +201,7 @@ object StreamPlans {
       s"compaction step-aside failed: $d")
     require(next.renameTo(new java.io.File(d)),
       s"compaction swap failed: $d")
-    rmTree(old)
+    TempDirs.delete(old)
   }
 
   /** Replay-idempotence marker for batch-generation standing dirs.

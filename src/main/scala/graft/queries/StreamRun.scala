@@ -9,6 +9,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.TempDirs
 import graft.sources.InMemoryQueueRegistry
 
 /** The one path from queue announcement to sink for the `stream_*` rows.
@@ -89,26 +90,26 @@ private[graft] final class StreamRun private (s: SparkSession, val gate: String)
     try query.processAllAvailable() finally query.stop()
   }
 
-  /** A fresh output dir named after the run. Not released: the frame a
-    * row returns reads it. */
-  def tempDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$id-$tag").toString
+  /** A fresh output dir named after the run. Not released with the run,
+    * because the frame a row returns reads it; deleted at JVM exit. */
+  def tempDir(tag: String): String = StreamRun.outputs.create(s"graft-$id-$tag")
 
   private def release(): Unit = {
     queues.foreach(InMemoryQueueRegistry.remove)
-    checkpoint.foreach(StreamPlans.rmTree)
+    checkpoint.foreach(TempDirs.delete)
   }
 }
 
 private[graft] object StreamRun {
   private val seq = new AtomicInteger(0)
+  private val outputs = new TempDirs
 
   /** Announcement timestamp of the `i`-th file (name order) of a feed. */
   type Stamp = (File, Int) => Long
   val modified: Stamp = (f, _) => f.lastModified()
   def at(ms: Long): Stamp = (_, _) => ms
-  /** `ms`, `ms + 1`, ...: with `sortBatchByTimestamp` the files then
-    * arrive one batch each in name order. */
+  /** `ms`, `ms + 1`, ...: batches are cut oldest first, so at one file
+    * per trigger the files arrive one batch each in name order. */
   def from(ms: Long): Stamp = (_, i) => ms + i
 
   /** The `.parquet` files of a staged `dir`, announced `copies` times each. */

@@ -176,8 +176,8 @@ object Streaming {
     // let the sentinel advance the watermark past real rows still in flight
     val streamed = run.source(eventsSchema,
         Seq(Feed(stage, StreamRun.at(1000L)), Feed(sentStage, StreamRun.at(2000L))),
-        // real data first, sentinel in a later micro-batch, oldest-first
-        "maxFilesPerTrigger" -> nReal.toString, "sortBatchByTimestamp" -> "true")
+        // real data first, sentinel in a later micro-batch (batches are oldest first)
+        "maxFilesPerTrigger" -> nReal.toString)
       .withColumn("event_ts", eventTs)
       .withWatermark("event_ts", "1 minute")
       .groupBy(window(col("event_ts"), "1 hour"))

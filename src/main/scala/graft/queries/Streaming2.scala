@@ -46,7 +46,7 @@ object Streaming2 {
     // after the sentinel has advanced the watermark (the r12 flake)
     val sessions = run.source(eventsSchema,
         Seq(Feed(stage), Feed(sentStage, StreamRun.at(2000L))),
-        "maxFilesPerTrigger" -> nReal.toString, "sortBatchByTimestamp" -> "true")
+        "maxFilesPerTrigger" -> nReal.toString)
       .withColumn("event_ts", Streaming.eventTs)
       .withWatermark("event_ts", "1 minute")
       .groupBy($"user_id", session_window($"event_ts", s"$GapHours hours"))

@@ -23,7 +23,7 @@ object Streaming3 {
     * order, deterministic under any queue timing. */
   private def inOrder(run: StreamRun, schema: org.apache.spark.sql.types.StructType,
       feeds: Feed*): DataFrame =
-    run.source(schema, feeds, "maxFilesPerTrigger" -> "1", "sortBatchByTimestamp" -> "true")
+    run.source(schema, feeds, "maxFilesPerTrigger" -> "1")
 
   /** Full documents table RANGE-staged by doc_id as 2 files (ids arrive
     * monotonically under timestamp-ordered single-file batches) — shared
@@ -112,7 +112,7 @@ object Streaming3 {
     // transformWithState requires the RocksDB provider
     Streaming.withRocksDBStateStore(s) { StreamRun(s, "stream_tws_profile") { run =>
       // two real files announced at increasing timestamps -> with
-      // sortBatchByTimestamp and 1 file/trigger the batch sequence is
+      // oldest-first batches of 1 file/trigger the batch sequence is
       // deterministic: fileA, fileB, sentinel — genuine cross-batch
       // accumulation, no timing window
       val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)

@@ -31,7 +31,6 @@ final case class ConnectorOptions(
     reprocessStartBatchId: Option[Long],
     reprocessEndBatchId: Option[Long],
     reprocessDryRun: Boolean,
-    sortBatchByTimestamp: Boolean,
     minFilesForFirstBatch: Option[Int],
     fetchErrorBudget: Int,
     queueMaxRetries: Int,
@@ -87,7 +86,7 @@ object ConnectorOptions {
   val REPROCESS_START_BATCH_ID = "reprocessstartbatchid"
   val REPROCESS_END_BATCH_ID = "reprocessendbatchid"
   val REPROCESS_DRY_RUN = "reprocessdryrun"
-  val SORT_BATCH_BY_TIMESTAMP = "sortbatchbytimestamp"
+  val SORT_BATCH_BY_TIMESTAMP = "sortbatchbytimestamp" // accepted, inert: batches are oldest first
   val MIN_FILES_FOR_FIRST_BATCH = "minfilesforfirstbatch"
   val METADATA_LOG = "metadatalog" // "file", the only metadata log
   val FETCH_ERROR_BUDGET = "queue.fetcherrorbudget"
@@ -111,6 +110,16 @@ object ConnectorOptions {
   val DEFAULT_FETCH_ERROR_BUDGET = 3
   val DEFAULT_MAX_RETRIES: Int = SqsHttpQueue.DefaultMaxRetries
   val DEFAULT_REGION = "us-east-1"
+
+  /** Keys the source owns (lowercase, `spark.graft.` stripped); all others
+    * pass through to the format reader. */
+  val ownKeys: Set[String] = Set(FILE_FORMAT, QUEUE_TYPE, QUEUE_NAME, QUEUE_URL,
+    MAX_FILES_PER_TRIGGER, MAX_FILE_AGE, PATH_GLOB_FILTER, PARTITION_COLUMNS, BASE_PATH,
+    QUEUE_FETCH_WAIT_TIMEOUT_SECONDS, LONG_POLL_WAIT_SECONDS, MAX_CONCURRENCY,
+    VISIBILITY_TIMEOUT_SECONDS, KEEP_MESSAGE_ON_CONSUMER_ERROR,
+    REPROCESS_START_BATCH_ID, REPROCESS_END_BATCH_ID, REPROCESS_DRY_RUN,
+    SORT_BATCH_BY_TIMESTAMP, MIN_FILES_FOR_FIRST_BATCH, METADATA_LOG, FETCH_ERROR_BUDGET,
+    MAX_RETRIES, REGION, ACCESS_KEY_ID, SECRET_ACCESS_KEY, SESSION_TOKEN)
 
   /** Parse a duration like "15d", "2h", "30m", "45s", "500ms", bare = ms. */
   def durationMs(s: String): Long = {
@@ -185,13 +194,6 @@ object ConnectorOptions {
     }
 
     // anything we don't own passes through to the file format reader
-    val ownKeys = Set(FILE_FORMAT, QUEUE_TYPE, QUEUE_NAME, QUEUE_URL, MAX_FILES_PER_TRIGGER,
-      MAX_FILE_AGE, PATH_GLOB_FILTER, PARTITION_COLUMNS, BASE_PATH,
-      QUEUE_FETCH_WAIT_TIMEOUT_SECONDS, LONG_POLL_WAIT_SECONDS, MAX_CONCURRENCY,
-      VISIBILITY_TIMEOUT_SECONDS, KEEP_MESSAGE_ON_CONSUMER_ERROR,
-      REPROCESS_START_BATCH_ID, REPROCESS_END_BATCH_ID, REPROCESS_DRY_RUN,
-      SORT_BATCH_BY_TIMESTAMP, MIN_FILES_FOR_FIRST_BATCH, METADATA_LOG, FETCH_ERROR_BUDGET,
-      MAX_RETRIES, REGION, ACCESS_KEY_ID, SECRET_ACCESS_KEY, SESSION_TOKEN)
     val formatOptions = params.filterNot { case (k, _) => ownKeys.contains(k) }
 
     ConnectorOptions(
@@ -213,7 +215,6 @@ object ConnectorOptions {
       reprocessStartBatchId = reStart,
       reprocessEndBatchId = reEnd,
       reprocessDryRun = get(REPROCESS_DRY_RUN).forall(_.trim.equalsIgnoreCase("true")),
-      sortBatchByTimestamp = get(SORT_BATCH_BY_TIMESTAMP).exists(_.trim.equalsIgnoreCase("true")),
       minFilesForFirstBatch = get(MIN_FILES_FOR_FIRST_BATCH).map { v =>
         val n = v.trim.toInt
         require(n > 0, s"$MIN_FILES_FOR_FIRST_BATCH must be positive, got $n")

@@ -1,100 +1,92 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-
-import scala.jdk.CollectionConverters._
-
-/** Driver-side pending-file cache: thread-safe path -> descriptor map with a
-  * monotonic event-time high-water mark and an age-based purge horizon.
+/** Driver-side set of pending files: announced and admitted, not yet
+  * logged into a batch. Ordered oldest first by `(timestampMs, path)`,
+  * with a monotonic event-time high-water mark and an age-based purge
+  * horizon.
   *
   * Semantics follow the reference (S3ConnectorFileCache.scala:36-164):
-  *  - `latestTimestamp` only moves forward (CAS loop);
-  *  - a file is droppable once older than `latestTimestamp - maxAgeMs`;
-  *  - `getUnprocessedFiles` takes up to `maxFiles` unexpired, unprocessed
-  *    entries, optionally in event-time order;
-  *  - `purge()` evicts expired entries and returns the count.
+  *  - the high-water mark only moves forward;
+  *  - a file is droppable once older than the mark minus `maxAgeMs`;
+  *  - `getUnprocessedFiles` takes the oldest `maxFiles` unexpired pending
+  *    files, in O(log n + maxFiles) (the reference's `shouldSortFiles`
+  *    order, :98-105, is the only order);
+  *  - `purge()` evicts expired entries from the head and returns the count.
   *
-  * The cache synchronizes the async queue-consumer threads with the
-  * stream-execution thread. It holds pending files AND processed ones:
-  * `markProcessed` only flags an entry, and `purge()` evicts by age, so
-  * every file admitted within the `maxAgeMs` horizon stays cached. Its
-  * size is bounded by the file arrival rate times the age horizon, not
-  * by ingest lag or total history.
+  * A file leaves the set through `markProcessed` once the metadata log has
+  * persisted the batch holding it: from then on the log's index is the
+  * only record of it, so the set is bounded by ingest lag, not by the
+  * arrival rate times the age horizon. Every method holds the instance's
+  * monitor; a caller that must check and insert as one step (admission,
+  * [[FileValidator.admit]]) holds it across both.
   */
 final class FileCache(maxAgeMs: Long) {
   require(maxAgeMs > 0, s"maxAgeMs must be positive, got $maxAgeMs")
 
-  private val cache = new ConcurrentHashMap[String, QueueMessageDesc]()
-  private val latest = new AtomicLong(-1L)
-  private val admitted = new AtomicLong(0L)
+  private val byPath = new java.util.HashMap[String, FileMetadata]()
+  private val oldestFirst = new java.util.TreeSet[FileMetadata](FileCache.Order)
+  private var latest = -1L
+  private var admitted = 0L
 
-  /** Cumulative count of distinct files ever admitted (insertions, not
-    * current size — markProcessed/purge don't decrement). Backs the
-    * source's deterministic-first-batch gate. */
-  def totalAdmitted: Long = admitted.get()
-
-  /** Monotonically advance the event-time high-water mark. */
-  private def observe(timestampMs: Long): Unit = {
-    var cur = latest.get()
-    while (timestampMs > cur && !latest.compareAndSet(cur, timestampMs)) {
-      cur = latest.get()
-    }
-  }
-
-  def latestTimestamp: Long = latest.get()
+  /** Files ever inserted (markProcessed/purge don't decrement); backs
+    * the source's deterministic-first-batch gate. */
+  def totalAdmitted: Long = synchronized(admitted)
 
   /** Files strictly older than this are expired. Never negative. */
-  def lastPurgeTimestamp: Long = math.max(0L, latest.get() - maxAgeMs)
+  def lastPurgeTimestamp: Long = synchronized(math.max(0L, latest - maxAgeMs))
 
   def isExpired(timestampMs: Long): Boolean = timestampMs < lastPurgeTimestamp
 
-  def add(path: String, desc: QueueMessageDesc): Unit = {
-    if (cache.put(path, desc) == null) admitted.incrementAndGet()
-    observe(desc.timestampMs)
+  /** Insert a pending file unless its path is pending already; true if
+    * inserted. The high-water mark observes the timestamp either way. */
+  def addIfAbsent(path: String, desc: QueueMessageDesc): Boolean = synchronized {
+    latest = math.max(latest, desc.timestampMs)
+    if (byPath.containsKey(path)) false
+    else {
+      val f = FileMetadata(path, desc.timestampMs, desc.messageId)
+      byPath.put(path, f)
+      oldestFirst.add(f)
+      admitted += 1
+      true
+    }
   }
 
-  /** CAS insert; returns true if we won the race (entry was absent). */
-  def addIfAbsent(path: String, desc: QueueMessageDesc): Boolean = {
-    val prev = cache.putIfAbsent(path, desc)
-    observe(desc.timestampMs)
-    if (prev == null) admitted.incrementAndGet()
-    prev == null
+  def isPending(path: String): Boolean = synchronized(byPath.containsKey(path))
+
+  /** Drop `path` from the pending set; call once the log holds it. */
+  def markProcessed(path: String): Unit = synchronized {
+    val f = byPath.remove(path)
+    if (f != null) oldestFirst.remove(f)
   }
 
-  def get(path: String): Option[QueueMessageDesc] = Option(cache.get(path))
-
-  def isNewFile(path: String): Boolean = !cache.containsKey(path)
-
-  def markProcessed(path: String): Unit =
-    cache.computeIfPresent(path, (_, d) => d.copy(isProcessed = true))
-
-  /** Up to maxFiles unprocessed, unexpired files; sorted=true gives the
-    * oldest-first top-K (reference's shouldSortFiles mode, :98-105). */
-  def getUnprocessedFiles(maxFiles: Option[Int], sorted: Boolean = false): Seq[FileMetadata] = {
-    val horizon = lastPurgeTimestamp
-    val pending = cache.entrySet().iterator().asScala.collect {
-      case e if !e.getValue.isProcessed && e.getValue.timestampMs >= horizon =>
-        FileMetadata(e.getKey, e.getValue.timestampMs, e.getValue.messageId)
-    }
-    if (sorted) {
-      val all = pending.toSeq.sortBy(f => (f.timestampMs, f.filePath))
-      maxFiles.fold(all)(all.take)
-    } else {
-      maxFiles.fold(pending.toSeq)(pending.take(_).toSeq)
-    }
+  /** The oldest `maxFiles` unexpired pending files (all of them if None). */
+  def getUnprocessedFiles(maxFiles: Option[Int]): Seq[FileMetadata] = synchronized {
+    val live = oldestFirst.tailSet(FileMetadata("", lastPurgeTimestamp, ""), true).iterator()
+    val out = Seq.newBuilder[FileMetadata]
+    var n = maxFiles.getOrElse(Int.MaxValue)
+    while (n > 0 && live.hasNext) { out += live.next(); n -= 1 }
+    out.result()
   }
 
   /** Evict expired entries; returns the number removed. */
-  def purge(): Int = {
+  def purge(): Int = synchronized {
     val horizon = lastPurgeTimestamp
     var removed = 0
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getValue.timestampMs < horizon) { it.remove(); removed += 1 }
+    while (!oldestFirst.isEmpty && oldestFirst.first().timestampMs < horizon) {
+      byPath.remove(oldestFirst.pollFirst().filePath)
+      removed += 1
     }
     removed
   }
 
-  def size: Int = cache.size()
+  def size: Int = synchronized(byPath.size())
+}
+
+object FileCache {
+  /** Oldest first; the path breaks ties, so equal timestamps keep a
+    * deterministic batch composition. */
+  private val Order: java.util.Comparator[FileMetadata] = (a, b) => {
+    val byTime = java.lang.Long.compare(a.timestampMs, b.timestampMs)
+    if (byTime != 0) byTime else a.filePath.compareTo(b.filePath)
+  }
 }

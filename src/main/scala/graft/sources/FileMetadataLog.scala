@@ -153,7 +153,8 @@ final class FileBackedMetadataLog(
       try {
         val (ids, all) = readCompactFile(cid)
         val grouped = all.groupBy(_.batchId)
-        ids.foreach { id =>
+        // a batch purged after this compact folded it stays purged
+        ids.filterNot(purgedIds).foreach { id =>
           val entries = grouped.getOrElse(id, Array.empty[FileEntry])
           batches.put(id, entries)
           entries.foreach(e => fileIndex.put(e.path, e))

@@ -30,8 +30,9 @@ import org.apache.spark.sql.types.StructType
   * machinery, so Catalyst pushdown/pruning and the vectorized parquet
   * reader apply downstream unchanged.
   *
-  * Scale notes (100 TB): driver state is file *metadata* only, bounded by
-  * the maxFileAge horizon; executors read rows directly from storage; the
+  * Scale notes (100 TB): driver state is file *metadata* only: the
+  * pending set is bounded by ingest lag, the log's index by the
+  * maxFileAge horizon; executors read rows directly from storage; the
   * queue fetch overlaps query execution (asyncFetch timeout-then-
   * background); per-trigger admission is bounded by maxFilesPerTrigger.
   */
@@ -69,17 +70,15 @@ class GraftFileSource(
   @volatile private var reprocessing = false
   @volatile private var availableNowDrained = false
 
-  /** Validate -> cache consumer run on the queue client's fetch threads
-    * (reference: S3ConnectorSource.scala:76-101). The validate/insert
-    * non-atomicity is resolved by queue redelivery: losing the CAS race
-    * just re-arms the message's visibility. */
+  /** Admit -> queue action, run on the queue client's fetch threads
+    * (reference: S3ConnectorSource.scala:76-101). [[FileValidator.admit]]
+    * validates and inserts as one step against the trigger's
+    * `markProcessed`, so duplicate announcements racing each other or a
+    * trigger admit a path at most once; the queue calls run after it. */
   private def consume(meta: FileMetadata): Unit = {
     import FileValidResult._
-    validator.isValidNewFile(meta.filePath, meta.timestampMs) match {
-      case Ok =>
-        val won = fileCache.addIfAbsent(meta.filePath,
-          QueueMessageDesc(meta.timestampMs, isProcessed = false, meta.messageId))
-        if (!won) queueClient.setMessageVisibility(meta.messageId, options.visibilityTimeoutSeconds)
+    validator.admit(meta) match {
+      case Ok => ()
       case ExistInCacheNotProcessed =>
         // pending in another message: retry later rather than dropping
         queueClient.setMessageVisibility(meta.messageId, options.visibilityTimeoutSeconds)
@@ -108,7 +107,6 @@ class GraftFileSource(
       options.keepMessageOnConsumerError)
   }
 
-  fileCache.purge()
   handleReprocessing()
 
   // ---- reprocess / replay (reference: S3ConnectorSource.scala:112-154) --
@@ -135,7 +133,8 @@ class GraftFileSource(
         } catch { case t: Throwable => out.cancel(); throw t }
         val files = replayFiles()
         files.foreach { e =>
-          fileCache.add(e.path, QueueMessageDesc(e.timestampMs, isProcessed = false, "reprocess"))
+          fileCache.addIfAbsent(e.path,
+            QueueMessageDesc(e.timestampMs, isProcessed = false, "reprocess"))
         }
         reprocessing = true
         logInfo(s"reprocessing ${files.length} files from batches " +
@@ -225,18 +224,18 @@ class GraftFileSource(
         }
       }
     }
-    val files =
-      fileCache.getUnprocessedFiles(options.maxFilesPerTrigger, options.sortBatchByTimestamp)
+    val files = fileCache.getUnprocessedFiles(options.maxFilesPerTrigger)
     if (files.nonEmpty) {
       metadataLogCurrentOffset += 1
       val entries =
         files.map(f => FileEntry(f.filePath, f.timestampMs, metadataLogCurrentOffset)).toArray
       metadataLog.add(metadataLogCurrentOffset, entries)
       logInfo(s"batch $metadataLogCurrentOffset: ${entries.length} files admitted")
+      // the log holds them now: it alone records them from here on
       files.foreach(f => fileCache.markProcessed(f.filePath))
       queueClient.handleProcessedMessageBatch(
         files.map(_.messageId).filterNot(_ == "reprocess"))
-      if (reprocessing && fileCache.getUnprocessedFiles(None).isEmpty) {
+      if (reprocessing && fileCache.getUnprocessedFiles(Some(1)).isEmpty) {
         reprocessing = false
         logInfo("reprocess drained; resuming queue consumption")
       }
@@ -311,8 +310,9 @@ class GraftFileSource(
     * through the engine's own progress path — `query.lastProgress
     * .sources[i].metrics` carries the 14 queue counters (prefixed
     * `queue.`), the metadata-log commit metrics (prefixed `log.`), and
-    * the pending-cache size, so an operator watching StreamingQuery
-    * progress (or a StreamingQueryListener feeding a metrics system)
+    * the files admitted but not yet logged (`pendingFiles`), so an
+    * operator watching StreamingQuery progress (or a
+    * StreamingQueryListener feeding a metrics system)
     * sees queue health per trigger without log scraping (reference
     * surface: AsyncClientMetrics.scala:22-38, exposed there via
     * periodic logging only). */

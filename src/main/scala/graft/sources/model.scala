@@ -11,7 +11,9 @@ package graft.sources
 /** A file announced by the queue: where it is and when it was created. */
 final case class FileMetadata(filePath: String, timestampMs: Long, messageId: String)
 
-/** Cache entry for an announced file awaiting (or done) processing. */
+/** Cache entry for an announced file awaiting processing. `isProcessed`
+  * is ignored: [[FileCache]] holds pending files only, and a processed
+  * file is recorded by the metadata log alone. */
 final case class QueueMessageDesc(timestampMs: Long, isProcessed: Boolean, messageId: String)
 
 /** A file as persisted in the metadata log, tagged with its batch. */
@@ -21,13 +23,13 @@ final case class FileEntry(path: String, timestampMs: Long, batchId: Long)
 final case class QueueMessage(messageId: String, body: String)
 
 /** Verdicts for admission of an announced file
-  * (reference: S3ConnectorFileValidator.scala:58-61). */
+  * (reference: S3ConnectorFileValidator.scala:58-61, less its
+  * `ExistInCacheProcessed`: a processed file is answered by the log). */
 sealed trait FileValidResult
 object FileValidResult {
   case object Ok extends FileValidResult
   case object PatternNotMatch extends FileValidResult
   case object FileExpired extends FileValidResult
-  case object ExistInCacheProcessed extends FileValidResult
   case object ExistInCacheNotProcessed extends FileValidResult
   case object PersistedInMetadataLog extends FileValidResult
 }

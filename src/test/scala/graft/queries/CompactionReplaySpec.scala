@@ -204,7 +204,7 @@ class CompactionReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("doc_id", "sh"), upToBatchId = 4L)
     val after = rows(d)
 
-    // simulate the crash between the second rename and rmTree(d.old)
+    // simulate the crash between the second rename and the delete of d.old
     Files.createDirectories(Paths.get(s"$d.old").resolve("gen=0"))
     Files.writeString(Paths.get(s"$d.old", "gen=0").resolve("stale.parquet"), "x")
 
@@ -230,7 +230,7 @@ class CompactionReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     def foldPrefix(upTo: Long): Unit = {
       // the real fold steps, stopped before the first rename
       val next = new java.io.File(s"$d.next")
-      if (next.exists()) StreamPlans.rmTree(next)
+      if (next.exists()) graft.TempDirs.delete(next)
       spark.read.parquet(d).select(Seq("doc_id", "sh").map(col): _*)
         .coalesce(2).write.parquet(s"$d.next/gen=${-(upTo + 1)}")
       StreamPlans.markCompactedUpto(s"$d.next",

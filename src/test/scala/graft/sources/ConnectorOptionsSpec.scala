@@ -13,7 +13,11 @@ class ConnectorOptionsSpec extends AnyFunSuite {
     assert(o.maxFileAgeMs == 15L * 24 * 3600 * 1000)
     assert(o.queueFetchWaitTimeoutSeconds == 2 * o.longPollWaitSeconds)
     assert(o.reprocessState == ConnectorOptions.NoReprocess)
-    assert(!o.sortBatchByTimestamp)
+  }
+
+  test("sortBatchByTimestamp stays owned: accepted, never passed to the format reader") {
+    val o = ConnectorOptions(base + ("sortBatchByTimestamp" -> "true"))
+    assert(!o.formatOptions.contains(ConnectorOptions.SORT_BATCH_BY_TIMESTAMP))
   }
 
   test("fileFormat required") {

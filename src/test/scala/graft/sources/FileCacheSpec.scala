@@ -3,66 +3,68 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 
 class FileCacheSpec extends AnyFunSuite {
-  private def desc(ts: Long, processed: Boolean = false, id: String = "m") =
-    QueueMessageDesc(ts, processed, id)
+  private def desc(ts: Long, id: String = "m") = QueueMessageDesc(ts, isProcessed = false, id)
 
-  test("isNewFile / add / addIfAbsent CAS") {
+  test("isPending / addIfAbsent: the first insert wins") {
     val c = new FileCache(1000L)
-    assert(c.isNewFile("a"))
+    assert(!c.isPending("a"))
     assert(c.addIfAbsent("a", desc(10)))
     assert(!c.addIfAbsent("a", desc(11))) // lost race
-    assert(!c.isNewFile("a"))
-    assert(c.get("a").get.timestampMs == 10)
+    assert(c.isPending("a"))
+    assert(c.getUnprocessedFiles(None).map(_.timestampMs) == Seq(10L))
   }
 
   test("latestTimestamp is monotonic; purge horizon derives from it") {
     val c = new FileCache(100L)
-    c.add("a", desc(1000))
-    c.add("b", desc(500)) // older arrival does not move the mark back
-    assert(c.latestTimestamp == 1000)
+    c.addIfAbsent("a", desc(1000))
+    c.addIfAbsent("b", desc(500)) // older arrival does not move the mark back
     assert(c.lastPurgeTimestamp == 900)
     assert(c.isExpired(899) && !c.isExpired(900))
   }
 
   test("getUnprocessedFiles: limit, sort mode, skips processed + expired") {
     val c = new FileCache(1000L)
-    c.add("f1", desc(100)); c.add("f2", desc(300)); c.add("f3", desc(200))
-    c.add("f4", desc(400, processed = true))
-    val sorted = c.getUnprocessedFiles(None, sorted = true)
-    assert(sorted.map(_.filePath) == Seq("f1", "f3", "f2"))
-    assert(c.getUnprocessedFiles(Some(2), sorted = true).map(_.filePath) == Seq("f1", "f3"))
-    assert(c.getUnprocessedFiles(Some(2)).size == 2)
-    // expire f1: a much newer file moves the horizon past it
-    c.add("f9", desc(2000))
-    assert(!c.getUnprocessedFiles(None).map(_.filePath).contains("f1"))
+    c.addIfAbsent("f2", desc(300)); c.addIfAbsent("f3", desc(200))
+    c.addIfAbsent("f1", desc(100)); c.addIfAbsent("e3", desc(200))
+    assert(c.getUnprocessedFiles(None).map(_.filePath) == Seq("f1", "e3", "f3", "f2"))
+    assert(c.getUnprocessedFiles(Some(2)).map(_.filePath) == Seq("f1", "e3"))
+    c.markProcessed("e3")
+    assert(c.getUnprocessedFiles(Some(2)).map(_.filePath) == Seq("f1", "f3"))
+    // a much newer file moves the horizon (1000) past every older one
+    c.addIfAbsent("f9", desc(2000))
+    assert(c.getUnprocessedFiles(Some(1)).map(_.filePath) == Seq("f9"))
+    c.addIfAbsent("f8", desc(1500))
+    assert(c.getUnprocessedFiles(None).map(_.filePath) == Seq("f8", "f9"))
   }
 
-  test("markProcessed flips the flag") {
+  test("markProcessed removes the file; the path may be inserted again") {
     val c = new FileCache(1000L)
-    c.add("a", desc(10))
+    c.addIfAbsent("a", desc(10)); c.addIfAbsent("b", desc(20))
     c.markProcessed("a")
-    assert(c.get("a").get.isProcessed)
-    assert(c.getUnprocessedFiles(None).isEmpty)
+    c.markProcessed("never-added") // no-op
+    assert(!c.isPending("a") && c.size == 1)
+    assert(c.getUnprocessedFiles(None).map(_.filePath) == Seq("b"))
+    assert(c.addIfAbsent("a", desc(30)))
+    assert(c.getUnprocessedFiles(None).map(_.filePath) == Seq("b", "a"))
   }
 
   test("purge evicts expired entries and reports the count") {
     val c = new FileCache(100L)
-    c.add("old1", desc(1)); c.add("old2", desc(2)); c.add("new", desc(1000))
+    c.addIfAbsent("old1", desc(1)); c.addIfAbsent("old2", desc(2))
+    c.addIfAbsent("new", desc(1000))
     assert(c.purge() == 2)
-    assert(c.size == 1)
+    assert(c.size == 1 && c.isPending("new") && !c.isPending("old1"))
+    assert(c.purge() == 0)
   }
 
   test("totalAdmitted counts distinct insertions, never decrements") {
     val c = new FileCache(100L)
     assert(c.totalAdmitted == 0L)
-    c.add("a", desc(1))
-    c.add("a", desc(2))            // overwrite, not a new admission
+    assert(c.addIfAbsent("a", desc(1)))
+    assert(!c.addIfAbsent("a", desc(2))) // lost race: no count
     assert(c.totalAdmitted == 1L)
-    assert(c.addIfAbsent("b", desc(3)))
-    assert(!c.addIfAbsent("b", desc(4))) // lost CAS: no count
-    assert(c.totalAdmitted == 2L)
     c.markProcessed("a")
-    c.add("far", desc(100000)); c.purge() // expiry must not decrement
-    assert(c.totalAdmitted >= 3L)
+    c.addIfAbsent("far", desc(100000)); c.purge() // removal must not decrement
+    assert(c.totalAdmitted == 2L)
   }
 }

@@ -2,9 +2,9 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Six-verdict admission matrix (mirrors the reference's
-  * S3ConnectorFileValidatorSuite). Uses a stub metadata log so the
-  * validator is exercised in isolation. */
+/** Five-verdict admission matrix (mirrors the reference's
+  * S3ConnectorFileValidatorSuite, less its processed-in-cache verdict).
+  * Uses a stub metadata log so the validator is exercised in isolation. */
 class FileValidatorSpec extends AnyFunSuite {
   import FileValidResult._
 
@@ -34,25 +34,39 @@ class FileValidatorSpec extends AnyFunSuite {
     assert(v.isValidNewFile("bucket/part=1/a.json", 1) == PatternNotMatch)
   }
 
+  private def seed(cache: FileCache, path: String, ts: Long): Unit =
+    cache.addIfAbsent(path, QueueMessageDesc(ts, isProcessed = false, "m"))
+
   test("FileExpired when older than the purge horizon") {
     val cache = new FileCache(100)
-    cache.add("seed", QueueMessageDesc(10_000, isProcessed = false, "m"))
+    seed(cache, "seed", 10_000)
     val v = new FileValidator(cache, new StubLog(Map.empty), None)
     assert(v.isValidNewFile("f", 10) == FileExpired)
   }
 
-  test("ExistInCache verdicts split on processed flag") {
+  test("a pending path retries; a processed one is answered by the log") {
     val cache = new FileCache(10_000)
-    cache.add("pending", QueueMessageDesc(10, isProcessed = false, "m1"))
-    cache.add("done", QueueMessageDesc(20, isProcessed = true, "m2"))
-    val v = new FileValidator(cache, new StubLog(Map.empty), None)
+    seed(cache, "pending", 10)
+    seed(cache, "done", 20)
+    cache.markProcessed("done") // the log holds it from here on
+    val v = new FileValidator(cache, new StubLog(Map("done" -> 20L)), None)
     assert(v.isValidNewFile("pending", 10) == ExistInCacheNotProcessed)
-    assert(v.isValidNewFile("done", 20) == ExistInCacheProcessed)
+    assert(v.isValidNewFile("done", 20) == PersistedInMetadataLog)
+  }
+
+  test("admit inserts on Ok only, and a second announcement retries") {
+    val cache = new FileCache(10_000)
+    val v = new FileValidator(cache, new StubLog(Map("logged" -> 5L)), None)
+    assert(v.admit(FileMetadata("a", 10, "m1")) == Ok)
+    assert(cache.isPending("a"))
+    assert(v.admit(FileMetadata("a", 10, "m2")) == ExistInCacheNotProcessed)
+    assert(v.admit(FileMetadata("logged", 5, "m3")) == PersistedInMetadataLog)
+    assert(cache.getUnprocessedFiles(None) == Seq(FileMetadata("a", 10, "m1")))
   }
 
   test("PersistedInMetadataLog within horizon; resurrection past horizon") {
     val cache = new FileCache(100)
-    cache.add("seed", QueueMessageDesc(10_000, isProcessed = false, "m"))
+    seed(cache, "seed", 10_000)
     // horizon = 9_900; logged at 50 => no longer vouched for => new again
     val v = new FileValidator(cache, new StubLog(Map("logged" -> 9_950L, "ancient" -> 50L)), None)
     assert(v.isValidNewFile("logged", 9_950) == PersistedInMetadataLog)
