@@ -101,15 +101,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val filter: Option[Set[String]] = args.lift(0).map(_.split(",").toSet)
     // a typo'd name must not silently bench an empty set and record a
-    // bogus {} baseline — fail loudly naming the unknown queries
-    filter.foreach { f =>
-      val unknown = f -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}; " +
-          s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    }
+    // bogus {} baseline — the lookup fails naming the unknown queries
+    val selected = args.lift(0).fold(SparkEntry.queries.toSeq)(f =>
+      SparkEntry.lookup(f.split(",").toSeq.distinct)).sortBy(_._1)
     val rounds = args.lift(1).map { s =>
       try s.toInt catch {
         case _: NumberFormatException =>
@@ -168,8 +163,6 @@ object Bench {
       GraftShims.drainListenerBus(spark.sparkContext, DrainTimeoutMs)
       (sec, n, (taskTimeMs.get() - task0) / 1e3)
     }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => filter.forall(_.contains(name)) }
     // mid-run calibration spins (one every ~50 queries, full-run mode):
     // the r20 driver record proved a mid-run load burst defeats
     // two-endpoint correction (the burst subsided before the end spin,

@@ -18,11 +18,10 @@ package graft
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").toSeq
+    val selected = SparkEntry.lookup(args(1).split(",").toSeq)
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
+    selected.foreach { case (name, fn) =>
       println(s"==== $name ====")
       println(fn(spark, sfDir).queryExecution.executedPlan.toString)
     }

@@ -216,7 +216,7 @@ object PerfHarness {
     * round: a rebuild would still be correct, a torn root would not. */
   def layoutSoak(spark: SparkSession, sfDir: String, sessions: Int, rounds: Int): String = {
     val names = Seq("q49_compact_small_files", "q50_zorder_cluster", "q52_dpp_prune")
-    val qs = graft.queries.Layout.queries
+    val qs = graft.queries.Layout.rows.map(d => d.name -> d.run).toMap
     val counts = scala.collection.mutable.Map[String, Long]()
     var valid = true
     // per query: (session index, round index, seconds)
@@ -436,7 +436,7 @@ object PerfHarness {
     // the harness used to leak one dir per corpus per JVM (r19 ADVICE)
     val scratch = scala.collection.mutable.ArrayBuffer.empty[Path]
     // scale-only comparison arms that are deliberately NOT gate queries
-    val qs = SparkEntry.queries ++ Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame](
+    val qs = SparkEntry.lookup(opNames, Map[String, QueryDef.Run](
       "dedup_cc_uncapped" -> ((s, d) => graft.operators.Dedup.dedupClustersUncapped(s, d)),
       // the PRODUCTION decontamination regime: eval pinned at the x1
       // slice (doc_id < 5000, the scale corpus's base size) while the
@@ -481,7 +481,7 @@ object PerfHarness {
         })
         graft.operators.Graph.pagerankOn(
           s.read.parquet(pairsPath), graft.operators.Graph.PrIters)
-      }))
+      }))).toMap
     try {
       val baseDocs = 5000L; val baseVecs = 2000L
       val perScale = scales.map { k =>
@@ -780,10 +780,6 @@ object PerfHarness {
         val scales = args.lift(1).getOrElse("1,10,100").split(",").toSeq.map(_.trim.toInt)
         val ops = args.lift(2).map(_.split(",").toSeq.map(_.trim)).getOrElse(Seq(
           "dedup_cc", "dedup_minhash_lsh", "heavy_hitters", "budget_select", "ann_topk_ivf"))
-        val unknown = ops.toSet -- SparkEntry.queries.keySet -
-          "dedup_cc_uncapped" - "cluster_map_build" - "pagerank_iters" -
-          "decon_fixed_eval" - "decon_fixed_eval_bloom"
-        require(unknown.isEmpty, s"unknown ops: ${unknown.mkString(", ")}")
         val reps = args.lift(3).map(_.toInt).getOrElse(2)
         println(scaleRun(spark, scales, ops, reps))
       } else if (soakMode) {

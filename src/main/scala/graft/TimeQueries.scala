@@ -13,7 +13,7 @@ import org.apache.spark.sql.graftshim.GraftShims
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").toSeq
+    val selected = SparkEntry.lookup(args(1).split(",").toSeq)
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
@@ -38,8 +38,7 @@ object TimeQueries {
       GraftShims.drainListenerBus(spark.sparkContext, Bench.DrainTimeoutMs)
       shufW.sum()
     }
-    try names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
+    try selected.foreach { case (name, fn) =>
       // rows via one untimed count (sanity), timing via the noop sink —
       // count() lets Catalyst prune row-count-preserving tails (left
       // joins against unique aggregates vanish entirely; see Bench)

@@ -6,13 +6,15 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated query-name filter (local iteration)]
     val sfDir = args(0); val outDir = args(1)
-    val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
+    // a filtered dump holds only the selected rows and their oracles, so
+    // check_oracle.py reports on exactly those; an unknown name fails
+    val selected =
+      if (args.length > 2) SparkEntry.lookup(args(2).split(",").toSeq.distinct)
+      else SparkEntry.queries.toSeq
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -31,7 +33,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val names = selected.map(_._1).toSet
+    val json = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // drop the layout queries' catalog tables + temp dirs before exit

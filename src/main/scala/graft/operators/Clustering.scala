@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.functions.Parity.dotSql
 import graft.functions.VectorOps
 import graft.queries.Tables
@@ -615,23 +616,15 @@ object Clustering {
        |WHERE vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 64)
        |ORDER BY vec_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_pca_project" -> embPcaProject _,
-    "emb_top_pc" -> embTopPc _,
-    "source_centroids" -> sourceCentroids _,
-    "emb_kmeans" -> embKmeans _,
-    "emb_pq" -> embPq _,
-    "ann_topk_pq" -> annTopKPq _,
-  )
   /** Full DuckDB replicas of both Lloyd loops: fixed-point arithmetic
     * makes every step a single identical IEEE operation on both engines,
     * so even iterative clustering is hash-gated. */
-  val oracles: Map[String, String] = Map(
-    "emb_pca_project" -> embPcaProjectSql,
-    "emb_top_pc" -> embTopPcSql,
-    "source_centroids" -> sourceCentroidsSql,
-    "emb_kmeans" -> embKmeansSql,
-    "emb_pq" -> embPqSql,
-    "ann_topk_pq" -> annTopKPqSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("emb_pca_project", embPcaProject _, embPcaProjectSql),
+    QueryDef("emb_top_pc", embTopPc _, embTopPcSql),
+    QueryDef("source_centroids", sourceCentroids _, sourceCentroidsSql),
+    QueryDef("emb_kmeans", embKmeans _, embKmeansSql),
+    QueryDef("emb_pq", embPq _, embPqSql),
+    QueryDef("ann_topk_pq", annTopKPq _, annTopKPqSql),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{md5Key, md5KeySql, ngrams, ngramsSql}
 import graft.functions.TextFunctions._
 import graft.queries.Tables
@@ -441,22 +442,14 @@ object Curation {
          |ORDER BY s.stage""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "decontaminate" -> decontaminate _,
-    "decontaminate_bloom" -> decontaminateBloom _,
-    "doc_dup_frac" -> docDupFrac _,
-    "filter_cascade" -> filterCascade _,
-    "text_repetition" -> textRepetition _,
-    "text_cooccur" -> textCooccur _,
-  )
-  val oracles: Map[String, String] = Map(
-    "decontaminate" -> decontaminateSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("decontaminate", decontaminate _, decontaminateSql),
     // identical semantics by construction (bloom is a pre-filter only;
     // the exact join runs on survivors) => shares the exact oracle
-    "decontaminate_bloom" -> decontaminateSql,
-    "doc_dup_frac" -> docDupFracSql,
-    "filter_cascade" -> filterCascadeSql,
-    "text_repetition" -> textRepetitionSql,
-    "text_cooccur" -> textCooccurSql,
+    QueryDef("decontaminate_bloom", decontaminateBloom _, decontaminateSql),
+    QueryDef("doc_dup_frac", docDupFrac _, docDupFracSql),
+    QueryDef("filter_cascade", filterCascade _, filterCascadeSql),
+    QueryDef("text_repetition", textRepetition _, textRepetitionSql),
+    QueryDef("text_cooccur", textCooccur _, textCooccurSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{md5Key, md5KeySql, microNats, microNatsSql, ngrams}
 import graft.functions.TextFunctions._
 import graft.queries.Tables
@@ -217,12 +218,8 @@ object Curation2 {
          |FROM toks t LEFT JOIN per_doc s ON t.doc_id = s.doc_id
          |ORDER BY t.doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dsir_resample" -> dsirResample _,
-    "dedup_substrings" -> dedupSubstrings _,
-  )
-  val oracles: Map[String, String] = Map(
-    "dsir_resample" -> dsirResampleSql,
-    "dedup_substrings" -> dedupSubstringsSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("dsir_resample", dsirResample _, dsirResampleSql),
+    QueryDef("dedup_substrings", dedupSubstrings _, dedupSubstringsSql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.queries.Tables
 
 /** Round-13 curation additions: containment dedup, n-gram novelty
@@ -17,8 +18,6 @@ import graft.queries.Tables
   * against a DuckDB oracle.
   */
 object Curation3 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Shingle-exploded corpus behind the [[Dedup.docShingles]] cache
     * discipline: persist the shingle-set frame, materialize it, and
     * LEAVE it cached — the cache is logical-plan-keyed, so every
@@ -227,16 +226,10 @@ object Curation3 {
        |  CAST(fl + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc
        |FROM final ORDER BY source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dedup_containment" -> dedupContainment _,
-    "ngram_novelty" -> ngramNovelty _,
-    "emb_standardize" -> embStandardize _,
-    "mix_temperature_sample" -> mixTemperatureSample _,
-  )
-  val oracles: Map[String, String] = Map(
-    "dedup_containment" -> dedupContainmentSql,
-    "ngram_novelty" -> ngramNoveltySql,
-    "emb_standardize" -> embStandardizeSql,
-    "mix_temperature_sample" -> mixTemperatureSampleSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("dedup_containment", dedupContainment _, dedupContainmentSql),
+    QueryDef("ngram_novelty", ngramNovelty _, ngramNoveltySql),
+    QueryDef("emb_standardize", embStandardize _, embStandardizeSql),
+    QueryDef("mix_temperature_sample", mixTemperatureSample _, mixTemperatureSampleSql),
   )
 }

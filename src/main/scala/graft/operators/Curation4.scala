@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.cosineSql
 import graft.queries.Tables
 
@@ -210,16 +211,10 @@ object Curation4 {
          |GROUP BY cap ORDER BY cap""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_delta" -> corpusDelta _,
-    "dup_source_matrix" -> dupSourceMatrix _,
-    "ann_hard_negatives" -> annHardNegatives _,
-    "length_bucket_pack" -> lengthBucketPack _,
-  )
-  val oracles: Map[String, String] = Map(
-    "corpus_delta" -> corpusDeltaSql,
-    "dup_source_matrix" -> dupSourceMatrixSql,
-    "ann_hard_negatives" -> annHardNegativesSql,
-    "length_bucket_pack" -> lengthBucketPackSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("corpus_delta", corpusDelta _, corpusDeltaSql),
+    QueryDef("dup_source_matrix", dupSourceMatrix _, dupSourceMatrixSql),
+    QueryDef("ann_hard_negatives", annHardNegatives _, annHardNegativesSql),
+    QueryDef("length_bucket_pack", lengthBucketPack _, lengthBucketPackSql),
   )
 }

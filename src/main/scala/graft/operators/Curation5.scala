@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{md5Key, md5KeySql, microNats, microNatsSql}
 import graft.queries.Tables
 
@@ -294,16 +295,10 @@ object Curation5 {
          |  GREATEST(CAST(SUM(term) AS BIGINT), 0) // MAX(ts) AS kl_micro
          |FROM terms GROUP BY source ORDER BY source""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_entropy" -> textEntropy _,
-    "winnow_fingerprint" -> winnowFingerprint _,
-    "quality_calibrate" -> qualityCalibrate _,
-    "source_divergence" -> sourceDivergence _,
-  )
-  val oracles: Map[String, String] = Map(
-    "text_entropy" -> textEntropySql,
-    "winnow_fingerprint" -> winnowFingerprintSql,
-    "quality_calibrate" -> qualityCalibrateSql,
-    "source_divergence" -> sourceDivergenceSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("text_entropy", textEntropy _, textEntropySql),
+    QueryDef("winnow_fingerprint", winnowFingerprint _, winnowFingerprintSql),
+    QueryDef("quality_calibrate", qualityCalibrate _, qualityCalibrateSql),
+    QueryDef("source_divergence", sourceDivergence _, sourceDivergenceSql),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{md5Key, md5KeySql, ngrams, ngramsSql}
 import graft.queries.Tables
 
@@ -363,20 +364,12 @@ object Curation6 {
          |FROM verdict GROUP BY source, rule ORDER BY source, rule""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "source_quality_matrix" -> sourceQualityMatrix _,
-    "skew_report" -> skewReport _,
-    "agg_delta_merge" -> aggDeltaMerge _,
-    "pipeline_e2e" -> pipelineE2e _,
-    "profile_columns" -> profileColumns _,
-    "fuzzy_join_wildcard" -> fuzzyJoinWildcard _,
-  )
-  val oracles: Map[String, String] = Map(
-    "source_quality_matrix" -> sourceQualityMatrixSql,
-    "skew_report" -> skewReportSql,
-    "agg_delta_merge" -> aggDeltaMergeSql,
-    "pipeline_e2e" -> pipelineE2eSql,
-    "profile_columns" -> profileColumnsSql,
-    "fuzzy_join_wildcard" -> fuzzyJoinWildcardSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("source_quality_matrix", sourceQualityMatrix _, sourceQualityMatrixSql),
+    QueryDef("skew_report", skewReport _, skewReportSql),
+    QueryDef("agg_delta_merge", aggDeltaMerge _, aggDeltaMergeSql),
+    QueryDef("pipeline_e2e", pipelineE2e _, pipelineE2eSql),
+    QueryDef("profile_columns", profileColumns _, profileColumnsSql),
+    QueryDef("fuzzy_join_wildcard", fuzzyJoinWildcard _, fuzzyJoinWildcardSql),
   )
 }

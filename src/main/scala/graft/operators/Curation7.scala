@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{dotSql, md5Key, md5KeySql, normSql}
 import graft.queries.Tables
 
@@ -821,32 +822,18 @@ object Curation7 {
        |  MAX(n_ref) * MAX(n_cur) AS l1_den
        |FROM g GROUP BY label ORDER BY label""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_drift_score" -> embDriftScore _,
-    "pipeline_shards" -> pipelineShards _,
-    "vocab_growth_curve" -> vocabGrowthCurve _,
-    "length_outlier_trim" -> lengthOutlierTrim _,
-    "emb_coverage_audit" -> embCoverageAudit _,
-    "shard_plan" -> shardPlan _,
-    "emb_random_projection" -> embRandomProjection _,
-    "epoch_plan" -> epochPlan _,
-    "contrastive_pairs" -> contrastivePairs _,
-    "emb_outlier" -> embOutlier _,
-    "diversity_sample" -> diversitySample _,
-    "dedup_cross_corpus" -> dedupCrossCorpus _,
-  )
-  val oracles: Map[String, String] = Map(
-    "emb_drift_score" -> embDriftScoreSql,
-    "pipeline_shards" -> pipelineShardsSql,
-    "vocab_growth_curve" -> vocabGrowthCurveSql,
-    "length_outlier_trim" -> lengthOutlierTrimSql,
-    "emb_coverage_audit" -> embCoverageAuditSql,
-    "shard_plan" -> shardPlanSql,
-    "emb_random_projection" -> embRandomProjectionSql,
-    "epoch_plan" -> epochPlanSql,
-    "contrastive_pairs" -> contrastivePairsSql,
-    "emb_outlier" -> embOutlierSql,
-    "diversity_sample" -> diversitySampleSql,
-    "dedup_cross_corpus" -> dedupCrossCorpusSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("emb_drift_score", embDriftScore _, embDriftScoreSql),
+    QueryDef("pipeline_shards", pipelineShards _, pipelineShardsSql),
+    QueryDef("vocab_growth_curve", vocabGrowthCurve _, vocabGrowthCurveSql),
+    QueryDef("length_outlier_trim", lengthOutlierTrim _, lengthOutlierTrimSql),
+    QueryDef("emb_coverage_audit", embCoverageAudit _, embCoverageAuditSql),
+    QueryDef("shard_plan", shardPlan _, shardPlanSql),
+    QueryDef("emb_random_projection", embRandomProjection _, embRandomProjectionSql),
+    QueryDef("epoch_plan", epochPlan _, epochPlanSql),
+    QueryDef("contrastive_pairs", contrastivePairs _, contrastivePairsSql),
+    QueryDef("emb_outlier", embOutlier _, embOutlierSql),
+    QueryDef("diversity_sample", diversitySample _, diversitySampleSql),
+    QueryDef("dedup_cross_corpus", dedupCrossCorpus _, dedupCrossCorpusSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity
 import graft.functions.TextFunctions._
 import graft.queries.Tables
@@ -1003,32 +1004,19 @@ object Dedup {
        |  UNION ALL SELECT cluster_size, n_clusters, n_docs FROM hist)
        |ORDER BY cluster_size""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_cluster_stats" -> dedupClusterStats _,
-    "dedup_exact" -> dedupExact _,
-    "dedup_fingerprint" -> dedupFingerprint _,
-    "dedup_ngram_jaccard" -> dedupNgramJaccard _,
-    "dedup_minhash_lsh" -> dedupMinhashLsh _,
-    "minhash_est_bound" -> minhashEstBound _,
-    "dedup_simhash" -> dedupSimhash _,
-    "dedup_cc" -> dedupClusters _,
-    "dedup_cc_lsh" -> dedupClustersLsh _,
-    "dedup_cc_delta" -> dedupCcDelta _,
-    "dedup_keep_canonical" -> dedupKeepCanonical _,
-  )
-  val oracles: Map[String, String] = Map(
-    "dedup_cluster_stats" -> dedupClusterStatsSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_fingerprint" -> dedupFingerprintSql,
-    "dedup_ngram_jaccard" -> dedupNgramJaccardSql,
-    "dedup_minhash_lsh" -> dedupMinhashLshSql,
-    "minhash_est_bound" -> minhashEstBoundSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_cc" -> dedupClustersSql,
-    "dedup_cc_lsh" -> dedupClustersSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("dedup_cluster_stats", dedupClusterStats _, dedupClusterStatsSql),
+    QueryDef("dedup_exact", dedupExact _, dedupExactSql),
+    QueryDef("dedup_fingerprint", dedupFingerprint _, dedupFingerprintSql),
+    QueryDef("dedup_ngram_jaccard", dedupNgramJaccard _, dedupNgramJaccardSql),
+    QueryDef("dedup_minhash_lsh", dedupMinhashLsh _, dedupMinhashLshSql),
+    QueryDef("minhash_est_bound", minhashEstBound _, minhashEstBoundSql),
+    QueryDef("dedup_simhash", dedupSimhash _, dedupSimhashSql),
+    QueryDef("dedup_cc", dedupClusters _, dedupClustersSql),
+    QueryDef("dedup_cc_lsh", dedupClustersLsh _, dedupClustersSql),
     // identical components by construction (standing ∪ delta-touching
     // pairs = all pairs) => shares the CC oracle
-    "dedup_cc_delta" -> dedupClustersSql,
-    "dedup_keep_canonical" -> dedupKeepCanonicalSql,
+    QueryDef("dedup_cc_delta", dedupCcDelta _, dedupClustersSql),
+    QueryDef("dedup_keep_canonical", dedupKeepCanonical _, dedupKeepCanonicalSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{cosineSql, md5Key, md5KeySql}
 import graft.functions.TextFunctions.tokens
 import graft.functions.VectorOps
@@ -365,16 +366,10 @@ object Dedup2 {
        |ORDER BY e.vec_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_segments" -> dedupSegments _,
-    "dedup_incremental" -> dedupIncremental _,
-    "semdedup" -> semDedup _,
-    "semdedup_bounded" -> semDedupBounded _,
-  )
-  val oracles: Map[String, String] = Map(
-    "dedup_segments" -> dedupSegmentsSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "semdedup" -> semDedupSql,
-    "semdedup_bounded" -> semDedupBoundedSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("dedup_segments", dedupSegments _, dedupSegmentsSql),
+    QueryDef("dedup_incremental", dedupIncremental _, dedupIncrementalSql),
+    QueryDef("semdedup", semDedup _, semDedupSql),
+    QueryDef("semdedup_bounded", semDedupBounded _, semDedupBoundedSql),
   )
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+
 /** Graph-importance propagation over the near-dup similarity graph —
   * the curation family BETWEEN connected components and survivor
   * selection. CC answers "which documents are interchangeable copies";
@@ -227,12 +229,8 @@ object Graph {
        |FROM cc c JOIN r$PrIters r ON c.doc_id = r.doc_id
        |ORDER BY c.doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_pagerank" -> graphPagerank _,
-    "dedup_keep_central" -> dedupKeepCentral _,
-  )
-  val oracles: Map[String, String] = Map(
-    "graph_pagerank" -> graphPagerankSql,
-    "dedup_keep_central" -> dedupKeepCentralSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("graph_pagerank", graphPagerank _, graphPagerankSql),
+    QueryDef("dedup_keep_central", dedupKeepCentral _, dedupKeepCentralSql),
   )
 }

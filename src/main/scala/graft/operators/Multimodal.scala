@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.listSumSql
 import graft.queries.Tables
 
@@ -323,22 +324,13 @@ object Multimodal {
        |  MIN(doc_id) AS first_id, MAX(doc_id) AS last_id
        |FROM c GROUP BY 1 ORDER BY shard_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_shard_pack" -> mmShardPack _,
-    "mm_phash_dedup" -> mmPhashDedup _,
-    "mm_manifest" -> mmManifest _,
-    "mm_frame_sample" -> mmFrameSample _,
-    "mm_decode_features" -> mmDecodeFeatures _,
-    "mm_resize" -> mmResize _,
-    "mm_dedup_payload" -> mmDedupPayload _,
-  )
-  val oracles: Map[String, String] = Map(
-    "mm_shard_pack" -> mmShardPackSql,
-    "mm_phash_dedup" -> mmPhashDedupSql,
-    "mm_manifest" -> mmManifestSql,
-    "mm_frame_sample" -> mmFrameSampleSql,
-    "mm_resize" -> mmResizeSql,
-    "mm_dedup_payload" -> mmDedupPayloadSql,
-    "mm_decode_features" -> mmDecodeFeaturesSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("mm_shard_pack", mmShardPack _, mmShardPackSql),
+    QueryDef("mm_phash_dedup", mmPhashDedup _, mmPhashDedupSql),
+    QueryDef("mm_manifest", mmManifest _, mmManifestSql),
+    QueryDef("mm_frame_sample", mmFrameSample _, mmFrameSampleSql),
+    QueryDef("mm_decode_features", mmDecodeFeatures _, mmDecodeFeaturesSql),
+    QueryDef("mm_resize", mmResize _, mmResizeSql),
+    QueryDef("mm_dedup_payload", mmDedupPayload _, mmDedupPayloadSql),
   )
 }

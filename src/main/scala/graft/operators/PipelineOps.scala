@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.QueryDef
 import graft.functions.Parity.{md5Key, md5KeySql}
 import graft.queries.Tables
 
@@ -30,8 +31,6 @@ import graft.queries.Tables
   *    downstream consumer by 4x, which is the point of the operator.
   */
 object PipelineOps {
-  type Q = (SparkSession, String) => DataFrame
-
   // ------------------------------------------------------- train/val split
   /** Deterministic 90/10 split on md5(doc_id): the first 4 hex digits form
     * a uniform 16-bit bucket; bucket %% 100 < 90 ⇒ train. Content-
@@ -553,34 +552,19 @@ object PipelineOps {
        |ORDER BY lang""".stripMargin
 
   // ----------------------------------------------------------------
-  val queries: Map[String, Q] = Map(
-    "split_leakage" -> splitLeakage _,
-    "domain_cap_sample" -> domainCapSample _,
-    "budget_select" -> budgetSelect _,
-    "chunk_documents" -> chunkDocuments _,
-    "stratified_sample" -> stratifiedSample _,
-    "split_train_val" -> splitTrainVal _,
-    "pack_sequences" -> packSequences _,
-    "tfidf_top_terms" -> tfidfTopTerms _,
-    "pii_redact" -> piiRedact _,
-    "emb_quantize_int8" -> embQuantizeInt8 _,
-    "mix_weighted_sample" -> mixWeightedSample _,
-    "corpus_stats" -> corpusStats _,
-    "train_order" -> trainOrder _,
-  )
-  val oracles: Map[String, String] = Map(
-    "split_leakage" -> splitLeakageSql,
-    "domain_cap_sample" -> domainCapSampleSql,
-    "budget_select" -> budgetSelectSql,
-    "chunk_documents" -> chunkDocumentsSql,
-    "stratified_sample" -> stratifiedSampleSql,
-    "split_train_val" -> splitTrainValSql,
-    "pack_sequences" -> packSequencesSql,
-    "tfidf_top_terms" -> tfidfTopTermsSql,
-    "pii_redact" -> piiRedactSql,
-    "emb_quantize_int8" -> embQuantizeInt8Sql,
-    "mix_weighted_sample" -> mixWeightedSampleSql,
-    "corpus_stats" -> corpusStatsSql,
-    "train_order" -> trainOrderSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("split_leakage", splitLeakage _, splitLeakageSql),
+    QueryDef("domain_cap_sample", domainCapSample _, domainCapSampleSql),
+    QueryDef("budget_select", budgetSelect _, budgetSelectSql),
+    QueryDef("chunk_documents", chunkDocuments _, chunkDocumentsSql),
+    QueryDef("stratified_sample", stratifiedSample _, stratifiedSampleSql),
+    QueryDef("split_train_val", splitTrainVal _, splitTrainValSql),
+    QueryDef("pack_sequences", packSequences _, packSequencesSql),
+    QueryDef("tfidf_top_terms", tfidfTopTerms _, tfidfTopTermsSql),
+    QueryDef("pii_redact", piiRedact _, piiRedactSql),
+    QueryDef("emb_quantize_int8", embQuantizeInt8 _, embQuantizeInt8Sql),
+    QueryDef("mix_weighted_sample", mixWeightedSample _, mixWeightedSampleSql),
+    QueryDef("corpus_stats", corpusStats _, corpusStatsSql),
+    QueryDef("train_order", trainOrder _, trainOrderSql),
   )
 }

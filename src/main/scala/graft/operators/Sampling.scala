@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{md5Key, md5KeySql}
 import graft.queries.Tables
 
@@ -173,16 +174,10 @@ object Sampling {
        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
        |FROM bucketed GROUP BY 1 ORDER BY split_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sample_consistent" -> sampleConsistent _,
-    "sample_stratified" -> sampleStratified _,
-    "sample_weighted" -> sampleWeighted _,
-    "split_leakage_safe" -> splitLeakageSafe _,
-  )
-  val oracles: Map[String, String] = Map(
-    "sample_consistent" -> sampleConsistentSql,
-    "sample_stratified" -> sampleStratifiedSql,
-    "sample_weighted" -> sampleWeightedSql,
-    "split_leakage_safe" -> splitLeakageSafeSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("sample_consistent", sampleConsistent _, sampleConsistentSql),
+    QueryDef("sample_stratified", sampleStratified _, sampleStratifiedSql),
+    QueryDef("sample_weighted", sampleWeighted _, sampleWeightedSql),
+    QueryDef("split_leakage_safe", splitLeakageSafe _, splitLeakageSafeSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{cosineSql, dotSql, listSumSql, md5Key, md5KeySql, normSql}
 import graft.functions.VectorOps
 import graft.queries.Tables
@@ -656,31 +657,20 @@ object Similarity {
        |FROM terms GROUP BY query_id ORDER BY query_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_ndcg" -> annNdcg _,
-    "ann_recall" -> annRecall _,
-    "ann_lsh_recall" -> annLshRecall _,
-    "decontaminate_emb" -> decontaminateEmb _,
-    "ann_topk_brute" -> annTopKBrute _,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("ann_ndcg", annNdcg _, annNdcgSql),
+    QueryDef("ann_recall", annRecall _, annRecallSql),
+    QueryDef("ann_lsh_recall", annLshRecall _, annLshRecallSql),
+    QueryDef("decontaminate_emb", decontaminateEmb _, decontaminateEmbSql),
+    QueryDef("ann_topk_brute", annTopKBrute _, annTopKBruteSql),
     // production operator, corpus-faithful (empty on the raw fixture —
     // still hash-gated: an LSH false positive would fail the row)
-    "dedup_embedding_cosine" -> dedupEmbeddingCosine _,
+    QueryDef("dedup_embedding_cosine", dedupEmbeddingCosine _, dedupEmbeddingCosineSql),
     // staged-fixture gate: 20 planted pairs keep the 0.95 check non-vacuous
-    "dedup_embedding_cosine_gate" -> dedupEmbeddingCosineGate _,
-    "ann_topk_lsh" -> annTopKLsh _,
-    "ann_topk_ivf" -> annTopKIvf _,
-    "ann_ivf_append" -> annIvfAppend _,
-  )
-  val oracles: Map[String, String] = Map(
-    "ann_ndcg" -> annNdcgSql,
-    "ann_recall" -> annRecallSql,
-    "ann_lsh_recall" -> annLshRecallSql,
-    "decontaminate_emb" -> decontaminateEmbSql,
-    "ann_topk_brute" -> annTopKBruteSql,
-    "dedup_embedding_cosine" -> dedupEmbeddingCosineSql,
-    "dedup_embedding_cosine_gate" -> dedupEmbeddingCosineGateSql,
-    "ann_topk_ivf" -> annTopKIvfSql,
-    "ann_ivf_append" -> annIvfAppendSql,
-    "ann_topk_lsh" -> annTopKLshSql,
+    QueryDef("dedup_embedding_cosine_gate", dedupEmbeddingCosineGate _,
+      dedupEmbeddingCosineGateSql),
+    QueryDef("ann_topk_lsh", annTopKLsh _, annTopKLshSql),
+    QueryDef("ann_topk_ivf", annTopKIvf _, annTopKIvfSql),
+    QueryDef("ann_ivf_append", annIvfAppend _, annIvfAppendSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{md5Key, md5KeySql}
 import graft.queries.Tables
 
@@ -304,16 +305,10 @@ object Sketches {
          |FROM exact e JOIN est s ON e.t = s.t
          |ORDER BY term""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cms_freq_estimate" -> cmsFreqEstimate _,
-    "heavy_hitters" -> heavyHitters _,
-    "source_kmv_distinct" -> sourceKmvDistinct _,
-    "source_overlap_kmv" -> sourceOverlapKmv _,
-  )
-  val oracles: Map[String, String] = Map(
-    "cms_freq_estimate" -> cmsFreqEstimateSql,
-    "heavy_hitters" -> heavyHittersSql,
-    "source_kmv_distinct" -> sourceKmvDistinctSql,
-    "source_overlap_kmv" -> sourceOverlapKmvSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("cms_freq_estimate", cmsFreqEstimate _, cmsFreqEstimateSql),
+    QueryDef("heavy_hitters", heavyHitters _, heavyHittersSql),
+    QueryDef("source_kmv_distinct", sourceKmvDistinct _, sourceKmvDistinctSql),
+    QueryDef("source_overlap_kmv", sourceOverlapKmv _, sourceOverlapKmvSql),
   )
 }

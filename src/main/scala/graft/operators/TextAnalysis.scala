@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity.{listSumSql, microNats, microNatsSql}
 import graft.functions.TextFunctions._
 import graft.queries.Tables
@@ -759,32 +760,18 @@ object TextAnalysis {
          |FROM ($bpeEncodeSql) b JOIN documents d USING (doc_id)
          |GROUP BY d.lang ORDER BY d.lang""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tokenizer_fertility" -> tokenizerFertility _,
-    "bpe_vocab_learn" -> bpeVocabLearn _,
-    "bpe_encode" -> bpeEncode _,
-    "bpe_pair_counts" -> bpePairCounts _,
-    "top_ngrams" -> topNgrams _,
-    "text_token_count" -> textTokenCount _,
-    "text_quality" -> textQuality _,
-    "text_fingerprint_groups" -> textFingerprintGroups _,
-    "text_lang_id" -> textLangId _,
-    "text_perplexity" -> textPerplexity _,
-    "text_bigram_kn" -> textBigramKn _,
-    "text_pmi_top" -> textPmiTop _,
-  )
-  val oracles: Map[String, String] = Map(
-    "tokenizer_fertility" -> tokenizerFertilitySql,
-    "bpe_vocab_learn" -> bpeVocabLearnSql,
-    "bpe_encode" -> bpeEncodeSql,
-    "bpe_pair_counts" -> bpePairCountsSql,
-    "top_ngrams" -> topNgramsSql,
-    "text_token_count" -> textTokenCountSql,
-    "text_quality" -> textQualitySql,
-    "text_fingerprint_groups" -> textFingerprintGroupsSql,
-    "text_lang_id" -> textLangIdSql,
-    "text_perplexity" -> textPerplexitySql,
-    "text_bigram_kn" -> textBigramKnSql,
-    "text_pmi_top" -> textPmiTopSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("tokenizer_fertility", tokenizerFertility _, tokenizerFertilitySql),
+    QueryDef("bpe_vocab_learn", bpeVocabLearn _, bpeVocabLearnSql),
+    QueryDef("bpe_encode", bpeEncode _, bpeEncodeSql),
+    QueryDef("bpe_pair_counts", bpePairCounts _, bpePairCountsSql),
+    QueryDef("top_ngrams", topNgrams _, topNgramsSql),
+    QueryDef("text_token_count", textTokenCount _, textTokenCountSql),
+    QueryDef("text_quality", textQuality _, textQualitySql),
+    QueryDef("text_fingerprint_groups", textFingerprintGroups _, textFingerprintGroupsSql),
+    QueryDef("text_lang_id", textLangId _, textLangIdSql),
+    QueryDef("text_perplexity", textPerplexity _, textPerplexitySql),
+    QueryDef("text_bigram_kn", textBigramKn _, textBigramKnSql),
+    QueryDef("text_pmi_top", textPmiTop _, textPmiTopSql),
   )
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.TempDirs
 
 /** Storage-layout queries: the two layout techniques that remove whole
@@ -27,7 +28,6 @@ import graft.TempDirs
 object Layout {
   private val D = DecimalType(12, 2)
   private def dec(c: Column): Column = c.cast(D)
-  type Q = (SparkSession, String) => DataFrame
 
   /** One rewrite per (sf dir, layout kind); values are layout roots
     * (temp dirs). Bench's min-of-two re-run and repeated spec calls hit
@@ -566,34 +566,21 @@ object Layout {
   }
 
   // ----------------------------------------------------------------
-  val queries: Map[String, Q] = Map(
-    "q62_ivf_layout" -> q62IvfLayout _,
-    "q58_dedup_index" -> q58DedupIndex _,
-    "q55_bucketed_window" -> q55BucketedWindow _,
-    "q54_bucketed_agg" -> q54BucketedAgg _,
-    "q46_bucketed_join" -> q46BucketedJoin _,
-    "q47_partition_prune" -> q47PartitionPrune _,
-    "q48_skew_join" -> q48SkewJoin _,
-    "q49_compact_small_files" -> q49CompactSmallFiles _,
-    "q50_zorder_cluster" -> q50ZorderCluster _,
-    "q52_dpp_prune" -> q52DppPrune _,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val rows: Seq[QueryDef] = Seq(
     // shared with ann_topk_ivf: identical neighbors from the raw table
     // prove the cluster-partitioned layout lossless + the pruned search
     // complete
-    "q62_ivf_layout" -> graft.operators.Similarity.annTopKIvfSql,
+    QueryDef("q62_ivf_layout", q62IvfLayout _, graft.operators.Similarity.annTopKIvfSql),
     // shared with dedup_incremental: identical verdict semantics from the
     // raw table prove the bucketed index layout lossless
-    "q58_dedup_index" -> graft.operators.Dedup2.dedupIncrementalSql,
-    "q55_bucketed_window" -> q55Sql,
-    "q54_bucketed_agg" -> q54Sql,
-    "q46_bucketed_join" -> q46Sql,
-    "q47_partition_prune" -> q47Sql,
-    "q48_skew_join" -> q48Sql,
-    "q49_compact_small_files" -> q49Sql,
-    "q50_zorder_cluster" -> q50Sql,
-    "q52_dpp_prune" -> q52Sql,
+    QueryDef("q58_dedup_index", q58DedupIndex _, graft.operators.Dedup2.dedupIncrementalSql),
+    QueryDef("q55_bucketed_window", q55BucketedWindow _, q55Sql),
+    QueryDef("q54_bucketed_agg", q54BucketedAgg _, q54Sql),
+    QueryDef("q46_bucketed_join", q46BucketedJoin _, q46Sql),
+    QueryDef("q47_partition_prune", q47PartitionPrune _, q47Sql),
+    QueryDef("q48_skew_join", q48SkewJoin _, q48Sql),
+    QueryDef("q49_compact_small_files", q49CompactSmallFiles _, q49Sql),
+    QueryDef("q50_zorder_cluster", q50ZorderCluster _, q50Sql),
+    QueryDef("q52_dpp_prune", q52DppPrune _, q52Sql),
   )
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
+
 /** The delegated relational surface (SURVEY.md §2.2): scans, projection,
   * filter, aggregation, joins of every flavor, window functions, sorts,
   * set ops, scalar functions, grouping sets, pivot, subquery shapes.
@@ -35,8 +37,6 @@ object Relational {
     (dec(ep) * (lit(1) - dec(disc))).cast(DecimalType(18, 4))
   private val REV_SQL =
     "CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2))) AS DECIMAL(18,4))"
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ---------------------------------------------------------------- q01
   /** TPC-H Q1 shape: filtered scan -> partial+final hash aggregate.
@@ -624,73 +624,38 @@ object Relational {
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ----------------------------------------------------------------
-  val queries: Map[String, Q] = Map(
-    "q01_pricing_summary" -> q01PricingSummary _,
-    "q02_filter_project" -> q02FilterProject _,
-    "q03_top_revenue" -> q03TopRevenue _,
-    "q04_dim_join" -> q04DimJoin _,
-    "q05_semi_join" -> q05SemiJoin _,
-    "q06_anti_join" -> q06AntiJoin _,
-    "q07_window_topn" -> q07WindowTopN _,
-    "q08_window_running" -> q08WindowRunning _,
-    "q09_window_lag" -> q09WindowLag _,
-    "q10_distinct" -> q10Distinct _,
-    "q11_topk" -> q11TopK _,
-    "q12_union" -> q12Union _,
-    "q13_intersect" -> q13Intersect _,
-    "q14_except" -> q14Except _,
-    "q15_count_distinct" -> q15CountDistinct _,
-    "q16_case_when" -> q16CaseWhen _,
-    "q17_math_agg" -> q17MathAgg _,
-    "q18_string_fns" -> q18StringFns _,
-    "q19_date_agg" -> q19DateAgg _,
-    "q20_having" -> q20Having _,
-    "q21_in_subquery" -> q21InSubquery _,
-    "q22_rollup" -> q22Rollup _,
-    "q23_pivot" -> q23Pivot _,
-    "q24_theta_join" -> q24ThetaJoin _,
-    "q25_json" -> q25Json _,
-    "q26_revenue_by_nation" -> q26RevenueByNation _,
-    "q27_full_outer" -> q27FullOuter _,
-    "q28_above_avg" -> q28AboveAvg _,
-    "q29_sessionize" -> q29Sessionize _,
-    "q30_array_fns" -> q30ArrayFns _,
-    "q31_regexp" -> q31Regexp _,
-    "q32_salted_agg" -> q32SaltedAgg _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_filter_project" -> q02Sql,
-    "q03_top_revenue" -> q03Sql,
-    "q04_dim_join" -> q04Sql,
-    "q05_semi_join" -> q05Sql,
-    "q06_anti_join" -> q06Sql,
-    "q07_window_topn" -> q07Sql,
-    "q08_window_running" -> q08Sql,
-    "q09_window_lag" -> q09Sql,
-    "q10_distinct" -> q10Sql,
-    "q11_topk" -> q11Sql,
-    "q12_union" -> q12Sql,
-    "q13_intersect" -> q13Sql,
-    "q14_except" -> q14Sql,
-    "q15_count_distinct" -> q15Sql,
-    "q16_case_when" -> q16Sql,
-    "q17_math_agg" -> q17Sql,
-    "q18_string_fns" -> q18Sql,
-    "q19_date_agg" -> q19Sql,
-    "q20_having" -> q20Sql,
-    "q21_in_subquery" -> q21Sql,
-    "q22_rollup" -> q22Sql,
-    "q23_pivot" -> q23Sql,
-    "q24_theta_join" -> q24Sql,
-    "q25_json" -> q25Sql,
-    "q26_revenue_by_nation" -> q26Sql,
-    "q27_full_outer" -> q27Sql,
-    "q28_above_avg" -> q28Sql,
-    "q29_sessionize" -> q29Sql,
-    "q30_array_fns" -> q30Sql,
-    "q31_regexp" -> q31Sql,
-    "q32_salted_agg" -> q32Sql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("q01_pricing_summary", q01PricingSummary _, q01Sql),
+    QueryDef("q02_filter_project", q02FilterProject _, q02Sql),
+    QueryDef("q03_top_revenue", q03TopRevenue _, q03Sql),
+    QueryDef("q04_dim_join", q04DimJoin _, q04Sql),
+    QueryDef("q05_semi_join", q05SemiJoin _, q05Sql),
+    QueryDef("q06_anti_join", q06AntiJoin _, q06Sql),
+    QueryDef("q07_window_topn", q07WindowTopN _, q07Sql),
+    QueryDef("q08_window_running", q08WindowRunning _, q08Sql),
+    QueryDef("q09_window_lag", q09WindowLag _, q09Sql),
+    QueryDef("q10_distinct", q10Distinct _, q10Sql),
+    QueryDef("q11_topk", q11TopK _, q11Sql),
+    QueryDef("q12_union", q12Union _, q12Sql),
+    QueryDef("q13_intersect", q13Intersect _, q13Sql),
+    QueryDef("q14_except", q14Except _, q14Sql),
+    QueryDef("q15_count_distinct", q15CountDistinct _, q15Sql),
+    QueryDef("q16_case_when", q16CaseWhen _, q16Sql),
+    QueryDef("q17_math_agg", q17MathAgg _, q17Sql),
+    QueryDef("q18_string_fns", q18StringFns _, q18Sql),
+    QueryDef("q19_date_agg", q19DateAgg _, q19Sql),
+    QueryDef("q20_having", q20Having _, q20Sql),
+    QueryDef("q21_in_subquery", q21InSubquery _, q21Sql),
+    QueryDef("q22_rollup", q22Rollup _, q22Sql),
+    QueryDef("q23_pivot", q23Pivot _, q23Sql),
+    QueryDef("q24_theta_join", q24ThetaJoin _, q24Sql),
+    QueryDef("q25_json", q25Json _, q25Sql),
+    QueryDef("q26_revenue_by_nation", q26RevenueByNation _, q26Sql),
+    QueryDef("q27_full_outer", q27FullOuter _, q27Sql),
+    QueryDef("q28_above_avg", q28AboveAvg _, q28Sql),
+    QueryDef("q29_sessionize", q29Sessionize _, q29Sql),
+    QueryDef("q30_array_fns", q30ArrayFns _, q30Sql),
+    QueryDef("q31_regexp", q31Regexp _, q31Sql),
+    QueryDef("q32_salted_agg", q32SaltedAgg _, q32Sql),
   )
 }

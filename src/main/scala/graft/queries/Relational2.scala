@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
+import graft.QueryDef.noOracle
+
 /** Round-2 relational surface: percentiles, as-of join, range join,
   * grouping sets, correlated EXISTS, navigation-window suite.
   *
@@ -21,7 +24,6 @@ import org.apache.spark.sql.types.DecimalType
 object Relational2 {
   private val D = DecimalType(12, 2)
   private def dec(c: Column): Column = c.cast(D)
-  type Q = (SparkSession, String) => DataFrame
 
   /** All event-time arithmetic happens in microseconds — the engines'
     * common precision. [[Tables.tsUs]] dispatches on the fixture
@@ -671,51 +673,32 @@ object Relational2 {
        |FROM rev ORDER BY n_name""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q57_reuse_exchange" -> q57ReuseExchange _,
-    "q56_funnel" -> q56Funnel _,
-    "q33_percentiles" -> q33Percentiles _,
-    "q34_asof_join" -> q34AsofJoin _,
-    "q35_range_join" -> q35RangeJoin _,
-    "q36_grouping_sets" -> q36GroupingSets _,
-    "q37_exists" -> q37Exists _,
-    "q38_window_suite" -> q38WindowSuite _,
-    "q39_bloom_semi" -> q39BloomSemi _,
-    "q40_datetime_suite" -> q40DatetimeSuite _,
-    "q41_string_bitwise" -> q41StringBitwise _,
-    "q42_approx_sketches" -> q42ApproxSketches _,
-    "q42_sketch_bound" -> q42SketchBound _,
-    "q43_null_numeric" -> q43NullNumeric _,
-    "q44_nested_agg" -> q44NestedAgg _,
-    "q45_set_all" -> q45SetAll _,
-    "q51_approx_quantiles" -> q51ApproxQuantiles _,
-    "q51_quantile_bound" -> q51QuantileBound _,
-    "q53_bloom_join" -> q53BloomJoin _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q57_reuse_exchange" -> q57Sql,
-    "q56_funnel" -> q56Sql,
-    "q33_percentiles" -> q33Sql,
-    "q34_asof_join" -> q34Sql,
-    "q35_range_join" -> q35Sql,
-    "q36_grouping_sets" -> q36Sql,
-    "q37_exists" -> q37Sql,
-    "q38_window_suite" -> q38Sql,
-    "q39_bloom_semi" -> q39Sql,
-    "q40_datetime_suite" -> q40Sql,
-    "q41_string_bitwise" -> q41Sql,
-    // q42_approx_sketches: intentionally no oracle (sketch output;
-    // HLL impls differ engine-to-engine) — its accuracy claim is gated
-    // by q42_sketch_bound below and error-bounded in Round2OpsSpec
-    "q42_sketch_bound" -> q42BoundSql,
-    "q43_null_numeric" -> q43Sql,
-    "q44_nested_agg" -> q44Sql,
-    "q45_set_all" -> q45Sql,
-    // q51_approx_quantiles: intentionally no oracle (GK sketch output
-    // differs engine-to-engine) — its accuracy claim is gated by
-    // q51_quantile_bound below
-    "q51_quantile_bound" -> q51BoundSql,
-    "q53_bloom_join" -> q53Sql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("q57_reuse_exchange", q57ReuseExchange _, q57Sql),
+    QueryDef("q56_funnel", q56Funnel _, q56Sql),
+    QueryDef("q33_percentiles", q33Percentiles _, q33Sql),
+    QueryDef("q34_asof_join", q34AsofJoin _, q34Sql),
+    QueryDef("q35_range_join", q35RangeJoin _, q35Sql),
+    QueryDef("q36_grouping_sets", q36GroupingSets _, q36Sql),
+    QueryDef("q37_exists", q37Exists _, q37Sql),
+    QueryDef("q38_window_suite", q38WindowSuite _, q38Sql),
+    QueryDef("q39_bloom_semi", q39BloomSemi _, q39Sql),
+    QueryDef("q40_datetime_suite", q40DatetimeSuite _, q40Sql),
+    QueryDef("q41_string_bitwise", q41StringBitwise _, q41Sql),
+    // intentionally no oracle (sketch output; HLL impls differ
+    // engine-to-engine) — its accuracy claim is gated by q42_sketch_bound
+    // below and error-bounded in Round2OpsSpec
+    QueryDef("q42_approx_sketches", q42ApproxSketches _,
+      noOracle(boundBy = "q42_sketch_bound")),
+    QueryDef("q42_sketch_bound", q42SketchBound _, q42BoundSql),
+    QueryDef("q43_null_numeric", q43NullNumeric _, q43Sql),
+    QueryDef("q44_nested_agg", q44NestedAgg _, q44Sql),
+    QueryDef("q45_set_all", q45SetAll _, q45Sql),
+    // intentionally no oracle (GK sketch output differs engine-to-engine)
+    // — its accuracy claim is gated by q51_quantile_bound below
+    QueryDef("q51_approx_quantiles", q51ApproxQuantiles _,
+      noOracle(boundBy = "q51_quantile_bound")),
+    QueryDef("q51_quantile_bound", q51QuantileBound _, q51BoundSql),
+    QueryDef("q53_bloom_join", q53BloomJoin _, q53Sql),
   )
 }

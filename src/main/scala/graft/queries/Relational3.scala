@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
+
 /** Round-13 relational additions, part 3: interval algebra over event
   * time. Same contract as [[Relational]]/[[Relational2]]: every query is
   * a declarative DataFrame plan with a DuckDB oracle, event time derived
@@ -1023,44 +1025,24 @@ object Relational3 {
     ).mkString("", "\nUNION ALL\n", "\nORDER BY table_key")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q72_pk_uniqueness" -> q72PkUniqueness _,
-    "q71_fk_integrity" -> q71FkIntegrity _,
-    "q70_seasonal_baseline" -> q70SeasonalBaseline _,
-    "q69_value_anomaly" -> q69ValueAnomaly _,
-    "q67_cumulative_unique" -> q67CumulativeUnique _,
-    "q68_journey_markov" -> q68JourneyMarkov _,
-    "q66_period_movers" -> q66PeriodMovers _,
-    "twa_value" -> twaValue _,
-    "gap_fill_ffill" -> gapFillFfill _,
-    "attribution_linear" -> attributionLinear _,
-    "forget_users" -> forgetUsers _,
-    "q65_skyline" -> q65Skyline _,
-    "ab_test_report" -> abTestReport _,
-    "q64_retention_cohorts" -> q64RetentionCohorts _,
-    "q63_rolling_active" -> q63RollingActive _,
-    "q59_interval_union" -> q59IntervalUnion _,
-    "q60_latest_by_key" -> q60LatestByKey _,
-    "q61_asof_nearest" -> q61AsofNearest _,
-  )
-  val oracles: Map[String, String] = Map(
-    "q67_cumulative_unique" -> q67CumulativeUniqueSql,
-    "q68_journey_markov" -> q68JourneyMarkovSql,
-    "q69_value_anomaly" -> q69ValueAnomalySql,
-    "q70_seasonal_baseline" -> q70SeasonalBaselineSql,
-    "q71_fk_integrity" -> q71FkIntegritySql,
-    "q72_pk_uniqueness" -> q72PkUniquenessSql,
-    "q66_period_movers" -> q66PeriodMoversSql,
-    "twa_value" -> twaValueSql,
-    "gap_fill_ffill" -> gapFillFfillSql,
-    "attribution_linear" -> attributionLinearSql,
-    "forget_users" -> forgetUsersSql,
-    "q65_skyline" -> q65SkylineSql,
-    "ab_test_report" -> abTestReportSql,
-    "q64_retention_cohorts" -> q64RetentionCohortsSql,
-    "q63_rolling_active" -> q63RollingActiveSql,
-    "q59_interval_union" -> q59IntervalUnionSql,
-    "q60_latest_by_key" -> q60LatestByKeySql,
-    "q61_asof_nearest" -> q61AsofNearestSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("q72_pk_uniqueness", q72PkUniqueness _, q72PkUniquenessSql),
+    QueryDef("q71_fk_integrity", q71FkIntegrity _, q71FkIntegritySql),
+    QueryDef("q70_seasonal_baseline", q70SeasonalBaseline _, q70SeasonalBaselineSql),
+    QueryDef("q69_value_anomaly", q69ValueAnomaly _, q69ValueAnomalySql),
+    QueryDef("q67_cumulative_unique", q67CumulativeUnique _, q67CumulativeUniqueSql),
+    QueryDef("q68_journey_markov", q68JourneyMarkov _, q68JourneyMarkovSql),
+    QueryDef("q66_period_movers", q66PeriodMovers _, q66PeriodMoversSql),
+    QueryDef("twa_value", twaValue _, twaValueSql),
+    QueryDef("gap_fill_ffill", gapFillFfill _, gapFillFfillSql),
+    QueryDef("attribution_linear", attributionLinear _, attributionLinearSql),
+    QueryDef("forget_users", forgetUsers _, forgetUsersSql),
+    QueryDef("q65_skyline", q65Skyline _, q65SkylineSql),
+    QueryDef("ab_test_report", abTestReport _, abTestReportSql),
+    QueryDef("q64_retention_cohorts", q64RetentionCohorts _, q64RetentionCohortsSql),
+    QueryDef("q63_rolling_active", q63RollingActive _, q63RollingActiveSql),
+    QueryDef("q59_interval_union", q59IntervalUnion _, q59IntervalUnionSql),
+    QueryDef("q60_latest_by_key", q60LatestByKey _, q60LatestByKeySql),
+    QueryDef("q61_asof_nearest", q61AsofNearest _, q61AsofNearestSql),
   )
 }

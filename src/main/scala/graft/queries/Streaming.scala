@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef
 import StreamRun.Feed
 
 /** Streaming-source queries for the correctness gate: each runs a real
@@ -271,22 +272,14 @@ object Streaming {
       |FROM events JOIN customer ON user_id = c_custkey
       |WHERE event_id < 1000 ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_static_join" -> streamStaticJoin _,
-    "stream_source_read" -> streamSourceRead _,
-    "stream_exactly_once" -> streamExactlyOnce _,
-    "stream_exactly_once_rocksdb" -> streamExactlyOnceRocksdb _,
-    "stream_window_agg" -> streamWindowAgg _,
-    "stream_drop_duplicates" -> streamDropDuplicates _,
-    "stream_dedup_within_watermark" -> streamDedupWithinWatermark _,
-  )
-  val oracles: Map[String, String] = Map(
-    "stream_static_join" -> streamStaticJoinSql,
-    "stream_source_read" -> streamSourceReadSql,
-    "stream_exactly_once" -> streamExactlyOnceSql,
-    "stream_exactly_once_rocksdb" -> streamExactlyOnceSql,
-    "stream_window_agg" -> streamWindowAggSql,
-    "stream_drop_duplicates" -> streamDropDuplicatesSql,
-    "stream_dedup_within_watermark" -> streamDedupWithinWatermarkSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("stream_static_join", streamStaticJoin _, streamStaticJoinSql),
+    QueryDef("stream_source_read", streamSourceRead _, streamSourceReadSql),
+    QueryDef("stream_exactly_once", streamExactlyOnce _, streamExactlyOnceSql),
+    QueryDef("stream_exactly_once_rocksdb", streamExactlyOnceRocksdb _, streamExactlyOnceSql),
+    QueryDef("stream_window_agg", streamWindowAgg _, streamWindowAggSql),
+    QueryDef("stream_drop_duplicates", streamDropDuplicates _, streamDropDuplicatesSql),
+    QueryDef("stream_dedup_within_watermark", streamDedupWithinWatermark _,
+      streamDedupWithinWatermarkSql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.QueryDef
 import graft.functions.Parity
 import StreamRun.Feed
 
@@ -536,28 +537,20 @@ object Streaming2 {
        |FROM st ORDER BY source""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_kmv_distinct" -> streamKmvDistinct _,
-    "stream_session_window" -> streamSessionWindow _,
-    "stream_stream_join" -> streamStreamJoin _,
-    "stream_mgws_session" -> streamMgwsSession _,
-    "stream_incremental_dedup" -> streamIncrementalDedup _,
-    "stream_ngram_novelty" -> streamNgramNovelty _,
-    "stream_chunk_documents" -> streamChunkDocuments _,
-    "stream_filter_cascade" -> streamFilterCascade _,
-  )
-  val oracles: Map[String, String] = Map(
-    "stream_kmv_distinct" -> streamKmvDistinctSql,
-    "stream_session_window" -> streamSessionWindowSql,
-    "stream_stream_join" -> streamStreamJoinSql,
-    "stream_mgws_session" -> streamMgwsSessionSql,
-    "stream_incremental_dedup" -> streamIncrementalDedupSql,
-    "stream_ngram_novelty" -> streamNgramNoveltySql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("stream_kmv_distinct", streamKmvDistinct _, streamKmvDistinctSql),
+    QueryDef("stream_session_window", streamSessionWindow _, streamSessionWindowSql),
+    QueryDef("stream_stream_join", streamStreamJoin _, streamStreamJoinSql),
+    QueryDef("stream_mgws_session", streamMgwsSession _, streamMgwsSessionSql),
+    QueryDef("stream_incremental_dedup", streamIncrementalDedup _, streamIncrementalDedupSql),
+    QueryDef("stream_ngram_novelty", streamNgramNovelty _, streamNgramNoveltySql),
     // stateless parity: the stream must land exactly the batch chunker's
     // rows, so it shares chunk_documents' oracle verbatim
-    "stream_chunk_documents" -> graft.operators.PipelineOps.chunkDocumentsSql,
+    QueryDef("stream_chunk_documents", streamChunkDocuments _,
+      graft.operators.PipelineOps.chunkDocumentsSql),
     // merged per-batch aggregates must equal the batch cascade exactly
     // (associative merge), so it shares filter_cascade's oracle verbatim
-    "stream_filter_cascade" -> graft.operators.Curation.filterCascadeSql,
+    QueryDef("stream_filter_cascade", streamFilterCascade _,
+      graft.operators.Curation.filterCascadeSql),
   )
 }

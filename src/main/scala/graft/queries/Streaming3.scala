@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import graft.QueryDef
 import graft.functions.Parity
 import StreamRun.{Feed, from}
 
@@ -950,34 +951,19 @@ object Streaming3 {
   /** Stream/batch parity IS the gate: the batch report's oracle. */
   val streamDecontaminateSql: String = graft.operators.Curation.decontaminateSql
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_decontaminate" -> streamDecontaminate _,
-    "stream_cc_delta" -> streamCcDelta _,
-    "stream_pipeline_curate" -> streamPipelineCurate _,
-    "stream_value_anomaly" -> streamValueAnomaly _,
-    "stream_journey_markov" -> streamJourneyMarkov _,
-    "stream_shard_manifest" -> streamShardManifest _,
-    "stream_corpus_stats" -> streamCorpusStats _,
-    "stream_emb_drift" -> streamEmbDrift _,
-    "stream_sample_consistent" -> streamSampleConsistent _,
-    "stream_cms_monitor" -> streamCmsMonitor _,
-    "stream_tws_profile" -> streamTwsProfile _,
-    "stream_latest_by_key" -> streamLatestByKey _,
-    "stream_ab_monitor" -> streamAbMonitor _,
-  )
-  val oracles: Map[String, String] = Map(
-    "stream_decontaminate" -> streamDecontaminateSql,
-    "stream_cc_delta" -> streamCcDeltaSql,
-    "stream_pipeline_curate" -> streamPipelineCurateSql,
-    "stream_value_anomaly" -> streamValueAnomalySql,
-    "stream_journey_markov" -> streamJourneyMarkovSql,
-    "stream_shard_manifest" -> streamShardManifestSql,
-    "stream_corpus_stats" -> streamCorpusStatsSql,
-    "stream_emb_drift" -> streamEmbDriftSql,
-    "stream_sample_consistent" -> streamSampleConsistentSql,
-    "stream_cms_monitor" -> streamCmsMonitorSql,
-    "stream_tws_profile" -> streamTwsProfileSql,
-    "stream_latest_by_key" -> streamLatestByKeySql,
-    "stream_ab_monitor" -> streamAbMonitorSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("stream_decontaminate", streamDecontaminate _, streamDecontaminateSql),
+    QueryDef("stream_cc_delta", streamCcDelta _, streamCcDeltaSql),
+    QueryDef("stream_pipeline_curate", streamPipelineCurate _, streamPipelineCurateSql),
+    QueryDef("stream_value_anomaly", streamValueAnomaly _, streamValueAnomalySql),
+    QueryDef("stream_journey_markov", streamJourneyMarkov _, streamJourneyMarkovSql),
+    QueryDef("stream_shard_manifest", streamShardManifest _, streamShardManifestSql),
+    QueryDef("stream_corpus_stats", streamCorpusStats _, streamCorpusStatsSql),
+    QueryDef("stream_emb_drift", streamEmbDrift _, streamEmbDriftSql),
+    QueryDef("stream_sample_consistent", streamSampleConsistent _, streamSampleConsistentSql),
+    QueryDef("stream_cms_monitor", streamCmsMonitor _, streamCmsMonitorSql),
+    QueryDef("stream_tws_profile", streamTwsProfile _, streamTwsProfileSql),
+    QueryDef("stream_latest_by_key", streamLatestByKey _, streamLatestByKeySql),
+    QueryDef("stream_ab_monitor", streamAbMonitor _, streamAbMonitorSql),
   )
 }

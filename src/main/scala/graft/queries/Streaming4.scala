@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.Parity
 import StreamRun.Feed
 
@@ -234,10 +235,7 @@ object Streaming4 {
          |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_lm_score" -> streamLmScore _,
-  )
-  val oracles: Map[String, String] = Map(
-    "stream_lm_score" -> streamLmScoreSql,
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("stream_lm_score", streamLmScore _, streamLmScoreSql),
   )
 }

@@ -19,13 +19,17 @@ package graft.sources
   * arrival rate times the age horizon. Every method holds the instance's
   * monitor; a caller that must check and insert as one step (admission,
   * [[FileValidator.admit]]) holds it across both.
+  *
+  * `restoredLatestMs` seeds the high-water mark: a restarted source passes
+  * the newest timestamp its restored log holds, so it keeps the horizon
+  * it had instead of starting at 0 until the first admission.
   */
-final class FileCache(maxAgeMs: Long) {
+final class FileCache(maxAgeMs: Long, restoredLatestMs: Long = -1L) {
   require(maxAgeMs > 0, s"maxAgeMs must be positive, got $maxAgeMs")
 
   private val byPath = new java.util.HashMap[String, FileMetadata]()
   private val oldestFirst = new java.util.TreeSet[FileMetadata](FileCache.Order)
-  private var latest = -1L
+  private var latest = restoredLatestMs
   private var admitted = 0L
 
   /** Files ever inserted (markProcessed/purge don't decrement); backs

@@ -30,6 +30,8 @@ trait FileMetadataLog extends AutoCloseable {
     * horizon (the log no longer vouches for expired files). */
   def isNewFile(path: String, lastPurgeTimestampMs: Long): Boolean
   def getFile(path: String): Option[FileEntry]
+  /** The newest timestamp among the logged files; -1 when none. */
+  def newestTimestampMs: Long
   /** Remove batches entirely below the horizon; bounded per call. */
   def purgeBefore(horizonMs: Long): Int
   /** Operational counters (live batches, compactions, restore reads);
@@ -382,6 +384,9 @@ final class FileBackedMetadataLog(
   }
 
   override def getFile(path: String): Option[FileEntry] = Option(fileIndex.get(path))
+
+  override def newestTimestampMs: Long =
+    fileIndex.values().asScala.foldLeft(-1L)((m, e) => math.max(m, e.timestampMs))
 
   override def purgeBefore(horizonMs: Long): Int = synchronized {
     var removed = 0

@@ -61,7 +61,7 @@ class GraftFileSource(
     }
   }
   private val metadataLog: FileMetadataLog = new FileBackedMetadataLog(metadataPath, hadoopConf)
-  private val fileCache = new FileCache(options.maxFileAgeMs)
+  private val fileCache = new FileCache(options.maxFileAgeMs, metadataLog.newestTimestampMs)
   private val validator = new FileValidator(fileCache, metadataLog, options.pathGlobFilter)
 
   // restore the offset from the persisted log (exactly-once on restart)
@@ -235,10 +235,12 @@ class GraftFileSource(
       files.foreach(f => fileCache.markProcessed(f.filePath))
       queueClient.handleProcessedMessageBatch(
         files.map(_.messageId).filterNot(_ == "reprocess"))
-      if (reprocessing && fileCache.getUnprocessedFiles(Some(1)).isEmpty) {
-        reprocessing = false
-        logInfo("reprocess drained; resuming queue consumption")
-      }
+    }
+    // checked with or without a batch: replayed files the horizon has
+    // expired are never selected, and must not stop queue consumption
+    if (reprocessing && fileCache.getUnprocessedFiles(Some(1)).isEmpty) {
+      reprocessing = false
+      logInfo("reprocess drained; resuming queue consumption")
     }
     fileCache.purge()
     if (metadataLogCurrentOffset >= 0) Some(FileStreamSourceOffset(metadataLogCurrentOffset))

@@ -120,7 +120,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("plan law: the samplers compile to a K-heap (TakeOrderedAndProject), no global sort") {
     for (name <- Seq("sample_consistent", "sample_weighted")) {
-      val plan = Sampling.queries(name)(spark, "/root/testdata/sf0.001")
+      val plan = graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
         .queryExecution.executedPlan.toString
       assert(plan.contains("TakeOrderedAndProject"),
         s"$name must plan as a K-heap, not a global sort:\n$plan")

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import scala.collection.immutable.SortedMap
 
 import org.apache.hadoop.conf.Configuration
@@ -16,17 +14,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * agree. Uses raw ScalaCheck Gens with fixed seeds, as
   * [[ConcurrencyAndPropertySpec]] does (the scalatest bridge artifact is
   * not in the offline cache). */
-class AdmissionModelSpec extends AnyFunSuite {
+class AdmissionModelSpec extends AnyFunSuite with SuiteTempDirs {
   import AdmissionModelSpec._
   import FileValidResult._
 
   /** The code under test, wired as `GraftFileSource` wires it, over a
-    * fresh checkpoint dir that [[close]] deletes. */
+    * fresh checkpoint dir. */
   private final class Sut extends AutoCloseable {
-    private val dir = Files.createTempDirectory("graft-admission-model").toString
+    private val dir = tempDir("graft-admission-model").toString
     private def open() = new FileBackedMetadataLog(dir, new Configuration(), compactInterval = 3)
     var log: FileBackedMetadataLog = open()
-    var cache = new FileCache(MaxAgeMs)
+    var cache = new FileCache(MaxAgeMs, log.newestTimestampMs)
     var validator = new FileValidator(cache, log, None)
     var batch: Long = log.getLatestBatchId.getOrElse(-1L)
 
@@ -52,16 +50,17 @@ class AdmissionModelSpec extends AnyFunSuite {
       log.purgeBefore(cache.lastPurgeTimestamp)
     }
 
-    /** A new source over the same checkpoint: restored log, empty cache. */
+    /** A new source over the same checkpoint: restored log, empty cache
+      * whose high-water mark is the log's newest timestamp. */
     def restart(): Unit = {
       log.close()
       log = open()
-      cache = new FileCache(MaxAgeMs)
+      cache = new FileCache(MaxAgeMs, log.newestTimestampMs)
       validator = new FileValidator(cache, log, None)
       batch = log.getLatestBatchId.getOrElse(-1L)
     }
 
-    override def close(): Unit = try log.close() finally graft.TempDirs.delete(new java.io.File(dir))
+    override def close(): Unit = log.close()
   }
 
   private def run(ops: Seq[Op]): Unit = {
@@ -118,6 +117,24 @@ class AdmissionModelSpec extends AnyFunSuite {
     // restart must not restore it, or f0 would be dropped as persisted
     run(Seq(Announce(0, 1000, 0), Trigger(1), Announce(1, 1, 0), Trigger(1),
       Announce(2, 200, 0), Trigger(1), Commit, Restart, Announce(0, 0, 0)))
+  }
+
+  test("a restart keeps the age horizon of the restored log") {
+    // f0 is logged at 1000, f1 at 1200 (horizon 1100); after the restart
+    // the horizon is still 1100, not 0: f0's entry no longer vouches for
+    // it, and a stamp below the horizon is expired
+    run(Seq(Announce(0, 1000, 0), Trigger(10), Announce(1, 200, 0), Trigger(10), Restart,
+      Announce(0, 0, 0)))
+    val sut = new Sut
+    try {
+      assert(sut.announce("f0", 1000) == Ok)
+      sut.trigger(10)
+      assert(sut.announce("f1", 1200) == Ok)
+      sut.trigger(10)
+      sut.restart()
+      assert(sut.announce("f2", 1050) == FileExpired)
+      assert(sut.announce("f0", 1200) == Ok)
+    } finally sut.close()
   }
 }
 
@@ -193,6 +210,9 @@ object AdmissionModelSpec {
         index = index.filterNot { case (_, (_, b)) => gone(b) })
     }
 
-    def restart: Model = copy(latest = -1L, pending = Map.empty)
+    /** Pending files are lost; the mark restarts at the newest live
+      * logged timestamp. */
+    def restart: Model =
+      copy(latest = index.values.map(_._1).maxOption.getOrElse(-1L), pending = Map.empty)
   }
 }

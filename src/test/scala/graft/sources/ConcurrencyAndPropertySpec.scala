@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -14,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (going a step past the reference's example-based suites, SURVEY §5).
   * Uses raw ScalaCheck Gens with a fixed seed (the scalatest bridge
   * artifact is not in the offline cache). */
-class ConcurrencyAndPropertySpec extends AnyFunSuite {
+class ConcurrencyAndPropertySpec extends AnyFunSuite with SuiteTempDirs {
 
   /** Deterministic sampling: 200 values from a seeded generator. */
   private def samples[A](gen: Gen[A], n: Int = 200): Seq[A] =
@@ -48,7 +47,7 @@ class ConcurrencyAndPropertySpec extends AnyFunSuite {
   }
 
   test("admit: duplicate announcements racing triggers land in exactly one logged batch") {
-    val dir = Files.createTempDirectory("graft-admit-race").toString
+    val dir = tempDir("graft-admit-race").toString
     val log = new FileBackedMetadataLog(dir, new Configuration())
     val cache = new FileCache(Long.MaxValue / 2)
     val validator = new FileValidator(cache, log, None)
@@ -88,7 +87,7 @@ class ConcurrencyAndPropertySpec extends AnyFunSuite {
       val logged = log.get(0L, batch).toSeq.flatMap(_._2.map(_.path))
       assert(logged.sorted == paths.sorted, "every path logged exactly once")
       assert(cache.size == 0 && cache.getUnprocessedFiles(None).isEmpty)
-    } finally try log.close() finally graft.TempDirs.delete(new java.io.File(dir))
+    } finally log.close()
   }
 
   test("generated: durationMs parses every unit consistently") {

@@ -46,9 +46,9 @@ object FailingCompactFileManager {
   val LimitKey = "graft.test.compactFailAfterBytes"
 }
 
-class FileMetadataLogSpec extends AnyFunSuite {
+class FileMetadataLogSpec extends AnyFunSuite with SuiteTempDirs {
   private def withLog(f: (FileBackedMetadataLog, String) => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val log = new FileBackedMetadataLog(dir, new Configuration())
     try f(log, dir) finally log.close()
   }
@@ -85,7 +85,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("restart restores offset and file index from disk") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val log1 = new FileBackedMetadataLog(dir, new Configuration())
     log1.add(0, entries(0, "p1" -> 100L))
     log1.add(1, entries(1, "p2" -> 200L))
@@ -99,7 +99,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("compaction: restart after 25 batches reads O(1) files, state intact") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val log1 = new FileBackedMetadataLog(dir, new Configuration())
     (0L until 25L).foreach(i => log1.add(i, entries(i, s"p$i" -> (100L + i))))
     log1.close()
@@ -120,7 +120,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("compaction preserves zero-entry batches: get and latest survive restart") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val log = new FileBackedMetadataLog(dir, new Configuration())
     log.add(0, entries(0, "p0" -> 100L))
     // empty batch (a trigger that admitted no files still advances the
@@ -137,7 +137,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("compact bytes are the v2 JSON that earlier builds write and read") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val log = new FileBackedMetadataLog(dir, new Configuration())
     log.add(0, entries(0, "s3://b/dt=1/a.parquet" -> 100L, "s3://b/dt=1/b \"q\".parquet" -> 101L))
     log.add(1, Array.empty[FileEntry])
@@ -158,7 +158,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("a compact that fails mid-write never becomes visible; restore reads the batch files") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val failing = new Configuration()
     failing.set("spark.sql.streaming.checkpointFileManagerClass",
       classOf[FailingCompactFileManager].getName)
@@ -188,7 +188,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("compaction interleaves with purge: purged batches stay gone from the live log") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val log = new FileBackedMetadataLog(dir, new Configuration())
     (0L until 10L).foreach(i => log.add(i, entries(i, s"x$i" -> (10L + i))))
     // purge everything except the latest (horizon above all timestamps)
@@ -203,7 +203,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("restore migrates a legacy v1 bare-array compact file (pre-versioned checkpoint)") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     // hand-write the pre-round-4 compact shape: a bare JSON array of
     // entries, no version marker, no batchIds boundary list
     val logDir = java.nio.file.Paths.get(dir, "graft-batches")
@@ -231,7 +231,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("restore fails descriptively on a future compact format version") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val logDir = java.nio.file.Paths.get(dir, "graft-batches")
     Files.createDirectories(logDir)
     Files.write(logDir.resolve("4.compact"),
@@ -241,7 +241,7 @@ class FileMetadataLogSpec extends AnyFunSuite {
   }
 
   test("restore fails descriptively on an unrecognized compact shape, not an NPE") {
-    val dir = Files.createTempDirectory("graft-metalog").toString
+    val dir = tempDir("graft-metalog").toString
     val logDir = java.nio.file.Paths.get(dir, "graft-batches")
     Files.createDirectories(logDir)
     Files.write(logDir.resolve("4.compact"), """{"what":"is-this"}""".getBytes("UTF-8"))

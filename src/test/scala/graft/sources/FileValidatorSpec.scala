@@ -17,6 +17,7 @@ class FileValidatorSpec extends AnyFunSuite {
       !known.contains(path) || known(path) < horizon
     def getFile(path: String): Option[FileEntry] =
       known.get(path).map(ts => FileEntry(path, ts, 0))
+    def newestTimestampMs: Long = known.values.maxOption.getOrElse(-1L)
     def purgeBefore(horizonMs: Long): Int = 0
     def close(): Unit = ()
   }

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path => JPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end streaming over the push-based source: files announced
@@ -14,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * duplicate-announcement dedup, maxFilesPerTrigger batching, glob filter,
   * partitioned dirs, checkpoint restart without reprocessing.
   */
-class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraftFileSourceE2ESpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +23,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType), StructField("name", StringType)))
@@ -64,7 +63,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("t1 slice: announced json files answer a select/where streaming query") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     announce(q, writeJson(dir, "a.json", Seq(1 -> "james", 2 -> "michael")))
     announce(q, writeJson(dir, "b.json", Seq(3 -> "robert", 4 -> "maria")))
     val df = streamDF(qn).where("id >= 2").select("name", "id")
@@ -75,7 +74,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("exactly-once: duplicate announcements of the same path load once") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     val p = writeJson(dir, "dup.json", Seq(1 -> "x"))
     announce(q, p); announce(q, p); announce(q, p)
     announce(q, writeJson(dir, "other.json", Seq(2 -> "y")))
@@ -85,7 +84,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("maxFilesPerTrigger bounds each micro-batch") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     (1 to 5).foreach(i => announce(q, writeJson(dir, s"f$i.json", Seq(i -> s"n$i"))))
     val df = streamDF(qn, Map("maxFilesPerTrigger" -> "2"))
     val query = df.writeStream.format("memory").queryName("mfptout").outputMode("append").start()
@@ -97,7 +96,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pathGlobFilter rejects non-matching announcements") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     announce(q, writeJson(dir, "keep.json", Seq(1 -> "keep")))
     announce(q, writeJson(dir, "skip.txt", Seq(2 -> "skip")))
     runToMemory(streamDF(qn, Map("pathGlobFilter" -> "*.json")), "globout")
@@ -107,7 +106,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hive-partitioned dirs surface partition columns in rows") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     val p1 = dir.resolve("pcol=a"); val p2 = dir.resolve("pcol=b")
     Files.createDirectories(p1); Files.createDirectories(p2)
     announce(q, writeJson(p1, "x.json", Seq(1 -> "one")))
@@ -126,9 +125,9 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("checkpoint restart: committed batches are not re-read; dedup survives restart") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val out = Files.createTempDirectory("graft-out").toString
+    val dir = tempDir("graft-e2e")
+    val ckpt = tempDir("graft-ckpt").toString
+    val out = tempDir("graft-out").toString
     def runOnce(): Unit = {
       val query = streamDF(qn).writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
@@ -151,7 +150,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("csv format options pass through (header, custom sep)") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     val f = dir.resolve("c.csv")
     Files.write(f, "id|name\n7|seven\n8|eight\n".getBytes("UTF-8"))
     announce(q, "file:" + f.toString)
@@ -167,7 +166,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   test("Trigger.AvailableNow drains the announced backlog and terminates") {
     import org.apache.spark.sql.streaming.Trigger
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     (1 to 3).foreach(i => announce(q, writeJson(dir, s"t$i.json", Seq(i -> s"v$i"))))
     val query = streamDF(qn, Map("maxFilesPerTrigger" -> "1"))
       .writeStream.format("memory").queryName("avnow").outputMode("append")
@@ -198,7 +197,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val (qn, q) = freshQueue()
     q.failReceives = true
     val src = new GraftFileSource(spark.sqlContext,
-      Files.createTempDirectory("graft-backoff").toString, schema,
+      tempDir("graft-backoff").toString, schema,
       Map("fileformat" -> "json", "queuename" -> qn,
         "queuefetchwaittimeoutseconds" -> "5", "queue.fetcherrorbudget" -> "3"))
     val t0 = System.nanoTime()
@@ -215,7 +214,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a checkpoint left by the removed RocksDB log fails construction instead of restoring empty") {
     val (qn, _) = freshQueue()
-    val metadataPath = Files.createTempDirectory("graft-legacy-rocksdb")
+    val metadataPath = tempDir("graft-legacy-rocksdb")
     Files.createDirectories(metadataPath.resolve("rocksdb").resolve("SSTs"))
     val e = intercept[GraftSourceException](new GraftFileSource(spark.sqlContext,
       metadataPath.toString, schema, Map("fileformat" -> "json", "queuename" -> qn)))
@@ -228,7 +227,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // orc
     val (qn1, q1) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     val orcDir = dir.resolve("orc").toString
     Seq((1, "o1"), (2, "o2")).toDF("id", "name").coalesce(1).write.orc(orcDir)
     new java.io.File(orcDir).listFiles().filter(_.getName.endsWith(".orc"))
@@ -251,7 +250,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("csv schema mismatch: permissive null-fill vs DROPMALFORMED empty (reference A4)") {
     val (qn1, q1) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     val f = dir.resolve("mism.csv")
     Files.write(f, "james,true,3000\nmichael,false,5000\n".getBytes("UTF-8"))
     val intOnly = StructType(Seq(StructField("testInt", IntegerType)))
@@ -273,7 +272,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("maxFileAge: announcements older than the horizon are rejected") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     val now = System.currentTimeMillis()
     // fresh file first establishes the high-water mark, then an ancient one
     announce(q, writeJson(dir, "fresh.json", Seq(1 -> "fresh")), ts = now)
@@ -286,7 +285,7 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("queue + metadata-log metrics surface through StreamingQueryProgress") {
     val (qn, q) = freshQueue()
-    val dir = Files.createTempDirectory("graft-e2e")
+    val dir = tempDir("graft-e2e")
     announce(q, writeJson(dir, "m1.json", Seq(1 -> "ada")))
     announce(q, writeJson(dir, "m2.json", Seq(2 -> "grace")))
     val query = streamDF(qn).writeStream.format("memory").queryName("metricsout")

@@ -5,14 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Replay semantics (reference: S3ConnectorSource.scala:112-154 +
   * S3ConnectorSourceItSuite reprocess scenarios): dry-run lists and
   * aborts, in-action re-emits committed batches as new batch ids behind
   * a lock file, and a second reprocess fails until the lock is removed. */
-class ReprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ReprocessSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -20,7 +19,7 @@ class ReprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType), StructField("name", StringType)))
@@ -44,9 +43,9 @@ class ReprocessSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("reprocess: dry-run aborts, in-action replays behind a lock, lock blocks reruns") {
     val qn = s"repro-${System.nanoTime()}"
     val queue = InMemoryQueueRegistry.queue(qn)
-    val dir = Files.createTempDirectory("repro")
-    val out = Files.createTempDirectory("repro-out").toString
-    val ckpt = Files.createTempDirectory("repro-ckpt").toString
+    val dir = tempDir("repro")
+    val out = tempDir("repro-out").toString
+    val ckpt = tempDir("repro-ckpt").toString
 
     // two committed batches (maxFilesPerTrigger=1 forces one file per batch)
     queue.send(s"""{"path":"${writeJson(dir, "a.json", Seq(1 -> "a"))}","timestampMs":1000}""")

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.{Encoder, Encoders, ForeachWriter, Row, SparkSession}
@@ -8,7 +7,6 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sink + trigger surface the reference exercises that the gate queries
@@ -17,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * triggers (DataConsumer.scala:78, S3ConnectorSourceItSuite.scala:105),
   * and the typed Aggregator API.
   */
-class SinksAndTriggersSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SinksAndTriggersSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -25,14 +23,14 @@ class SinksAndTriggersSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("v", LongType)))
 
   private def stage(n: Int): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snk").toString
+    val dir = tempDir("graft-snk").toString
     (0L until n).map(i => (i, i * 2)).toDF("id", "v")
       .coalesce(1).write.mode("overwrite").parquet(dir)
     dir
@@ -62,8 +60,8 @@ class SinksAndTriggersSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("csv file sink with Trigger.AvailableNow writes all rows then stops") {
     val dir = stage(30)
-    val out = Files.createTempDirectory("graft-csvout").toString
-    val ckpt = Files.createTempDirectory("graft-csvck").toString
+    val out = tempDir("graft-csvout").toString
+    val ckpt = tempDir("graft-csvck").toString
     val q = spark.readStream.schema(schema).parquet(dir)
       .writeStream.format("csv")
       .option("path", out).option("checkpointLocation", ckpt)

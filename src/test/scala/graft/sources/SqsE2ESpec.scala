@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path => JPath}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end: the full streaming source fed over the SQS WIRE protocol —
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * memory sink. This is the reference's headline IT scenario
   * (S3ConnectorSourceItSuite) with the real wire format and zero egress.
   */
-class SqsE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
+class SqsE2ESpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -26,10 +25,10 @@ class SqsE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   private val Secret = "e2e-secret"
   private val stub = new SqsStubServer(Map(Akid -> Secret))
 
-  override def afterAll(): Unit = {
+  override def afterAll(): Unit = try {
     stub.stop()
     spark.stop()
-  }
+  } finally super.afterAll()
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType), StructField("name", StringType)))
@@ -42,7 +41,7 @@ class SqsE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming query over the wire: announce, sign, fetch, dedup, read") {
-    val dir = Files.createTempDirectory("graft-sqs-e2e")
+    val dir = tempDir("graft-sqs-e2e")
     val p1 = writeJson(dir, "a.json", Seq(1 -> "ada", 2 -> "grace"))
     val p2 = writeJson(dir, "b.json", Seq(3 -> "edsger"))
     stub.queue.send(s"""{"path":"$p1","timestampMs":1}""")
@@ -75,7 +74,7 @@ class SqsE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     // own stub with its own credentials and eu-west-1 signature scope
     val xStub = new SqsStubServer(Map("AKIDXACCT" -> "xacct-secret"), region = "eu-west-1")
     try {
-      val dir = Files.createTempDirectory("graft-sqs-xacct")
+      val dir = tempDir("graft-sqs-xacct")
       val p1 = writeJson(dir, "x1.json", Seq(10 -> "hopper"))
       val p2 = writeJson(dir, "x2.json", Seq(11 -> "lovelace"))
       xStub.queue.send(s"""{"path":"$p1","timestampMs":1}""")

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Custom stateful processing over the push-based source:
@@ -14,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * lists for our extensions). Two files forced into two separate batches
   * prove state carries across batch boundaries.
   */
-class StatefulStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StatefulStreamingSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,13 +21,13 @@ class StatefulStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("mapGroupsWithState accumulates per-user counts across micro-batches") {
     import spark.implicits._
     val qn = s"state-${System.nanoTime()}"
     val queue = InMemoryQueueRegistry.queue(qn)
-    val dir = Files.createTempDirectory("state")
+    val dir = tempDir("state")
     def put(name: String, rows: Seq[(Long, Double)]): String = {
       val f = dir.resolve(name)
       val body = rows.map { case (u, v) => s"""{"user_id":$u,"value":$v}""" }.mkString("\n")
@@ -70,9 +69,9 @@ class StatefulStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     val qn = s"winrst-${System.nanoTime()}"
     val queue = InMemoryQueueRegistry.queue(qn)
-    val dir = Files.createTempDirectory("winrst")
-    val ckpt = Files.createTempDirectory("winrst-ck").toString
-    val out = Files.createTempDirectory("winrst-out").toString
+    val dir = tempDir("winrst")
+    val ckpt = tempDir("winrst-ck").toString
+    val out = tempDir("winrst-out").toString
     val schema = StructType(Seq(StructField("id", LongType)))
     def put(name: String, ids: Seq[Long]): Unit = {
       val f = dir.resolve(name)
@@ -115,7 +114,7 @@ class StatefulStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     val qn = s"dedupww-${System.nanoTime()}"
     val queue = InMemoryQueueRegistry.queue(qn)
-    val dir = Files.createTempDirectory("dedupww")
+    val dir = tempDir("dedupww")
     def put(name: String, rows: Seq[(Long, String)]): String = {
       val f = dir.resolve(name)
       val body = rows.map { case (id, ts) => s"""{"id":$id,"ts":"$ts"}""" }.mkString("\n")

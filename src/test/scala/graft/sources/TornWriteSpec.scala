@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * never continues from silently-partial state (which would re-admit
   * already-ingested files at the source).
   */
-class TornWriteSpec extends AnyFunSuite {
+class TornWriteSpec extends AnyFunSuite with SuiteTempDirs {
 
   private def entries(batchId: Long, paths: (String, Long)*): Array[FileEntry] =
     paths.map { case (p, ts) => FileEntry(p, ts, batchId) }.toArray
@@ -30,7 +30,7 @@ class TornWriteSpec extends AnyFunSuite {
   }
 
   test("file log: torn newest compact falls back to the previous compact + full tail") {
-    val dir = Files.createTempDirectory("graft-torn").toString
+    val dir = tempDir("graft-torn").toString
     val log = new FileBackedMetadataLog(dir, new Configuration(), compactInterval = 3)
     (0L to 4L).foreach(i => log.add(i, entries(i, s"f$i" -> (1000L + i))))
     log.close() // on disk now: 2.compact (intact) + batch files 3, 4
@@ -56,7 +56,7 @@ class TornWriteSpec extends AnyFunSuite {
   }
 
   test("file log: all compacts torn fails descriptively, never silently partial") {
-    val dir = Files.createTempDirectory("graft-torn").toString
+    val dir = tempDir("graft-torn").toString
     val log = new FileBackedMetadataLog(dir, new Configuration(), compactInterval = 3)
     (0L to 3L).foreach(i => log.add(i, entries(i, s"f$i" -> (1000L + i))))
     log.close() // 2.compact + batch 3; batches 0-2 live only in the compact
@@ -68,7 +68,7 @@ class TornWriteSpec extends AnyFunSuite {
   }
 
   test("file log: torn per-batch tail file fails descriptively and names the batch") {
-    val dir = Files.createTempDirectory("graft-torn").toString
+    val dir = tempDir("graft-torn").toString
     val log = new FileBackedMetadataLog(dir, new Configuration(), compactInterval = 100)
     (0L to 2L).foreach(i => log.add(i, entries(i, s"f$i" -> (1000L + i))))
     log.close()
@@ -80,7 +80,7 @@ class TornWriteSpec extends AnyFunSuite {
   }
 
   test("file log: torn compact whose cleanup already ran refuses, never rebuilds stale state") {
-    val dir = Files.createTempDirectory("graft-torn").toString
+    val dir = tempDir("graft-torn").toString
     val log = new FileBackedMetadataLog(dir, new Configuration(), compactInterval = 3)
     (0L to 4L).foreach(i => log.add(i, entries(i, s"f$i" -> (1000L + i))))
     log.close() // on disk: 2.compact (intact) + batch files 3, 4
@@ -105,7 +105,7 @@ class TornWriteSpec extends AnyFunSuite {
   }
 
   test("file log: fallback audit exempts horizon-purged batches instead of refusing") {
-    val dir = Files.createTempDirectory("graft-torn").toString
+    val dir = tempDir("graft-torn").toString
     val log = new FileBackedMetadataLog(dir, new Configuration(), compactInterval = 4)
     (0L to 5L).foreach(i => log.add(i, entries(i, s"f$i" -> (1000L + i))))
     // on disk: 3.compact + batch files 4, 5
@@ -143,7 +143,7 @@ class TornWriteSpec extends AnyFunSuite {
   }
 
   test("file log: a leftover createAtomic temp file is invisible to restore") {
-    val dir = Files.createTempDirectory("graft-torn").toString
+    val dir = tempDir("graft-torn").toString
     val log = new FileBackedMetadataLog(dir, new Configuration(), compactInterval = 3)
     (0L to 3L).foreach(i => log.add(i, entries(i, s"f$i" -> (1000L + i))))
     log.close()
