@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftshim.GraftShims
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -10,12 +9,17 @@ import org.apache.spark.sql.graftshim.GraftShims
   *
   * Focused re-measure mode (the BENCH_NOTES steady-state methodology):
   * `args(0)` = comma-separated query-name filter, `args(1)` = in-JVM
-  * rounds (default 1). Each round's per-query seconds go to stderr; the
-  * JSON line reports the per-query min across rounds PLUS the raw
-  * round-1 map (`"round1"`) — round 1 of a fresh JVM carries the
-  * once-per-JVM standing-artifact builds, and that cost split belongs
-  * in machine-readable records, not stderr prose. No args = the
-  * driver's full single-round contract, unchanged.
+  * rounds (default 1). Each round's per-query seconds, jobs and shuffle
+  * write go to stderr; the JSON line reports the per-query min across
+  * rounds PLUS the raw round-1 map (`"round1"`) — round 1 of a fresh JVM
+  * carries the once-per-JVM standing-artifact builds, and that cost
+  * split belongs in machine-readable records, not stderr prose. No args
+  * = the driver's full single-round contract, unchanged.
+  *
+  * Every run is measured through one [[QueryProbe]]: beside the wall
+  * seconds, the main line carries per-query `task_sec`, `jobs` and
+  * `shuffle_write_mb`, each the min across runs — the load-independent
+  * measures a wall-clock claim needs.
   *
   * Self-adjudication: if `BENCH_BANDS.json` exists (checked in from
   * idle-box runs — see scripts/make_bench_bands.py), every record
@@ -27,10 +31,6 @@ import org.apache.spark.sql.graftshim.GraftShims
   * with the bands in-repo the record adjudicates itself.
   */
 object Bench {
-
-  /** Longest wait for the listener bus to drain after a timed run (the
-    * harnesses' listeners only add counters, so a drain takes far less). */
-  private[graft] val DrainTimeoutMs = 20000L
 
   /** Machine-load calibration: wall time of a FIXED single-threaded
     * integer workload (xorshift64*, constant iteration count), min of 3
@@ -116,17 +116,11 @@ object Bench {
 
     val calibStartMs = calibrationSpinMs()
 
-    // per-query executor task-time (sum of executorRunTime over tasks):
-    // the r21 scaling block showed 8-core ≈ 32-core TOTALS because sf0.1
-    // is driver/overhead-bound — this field separates "serial code" from
-    // "small data" by making the data-parallel compute measurable per
-    // row. Listener events are posted asynchronously; the noop action
-    // returns only after its jobs complete, so attribution lag is ms-scale.
-    val taskTimeMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) taskTimeMs.addAndGet(te.taskMetrics.executorRunTime)
-    })
+    // per-run jobs, shuffle bytes and executor task-time: the r21
+    // scaling block showed 8-core ≈ 32-core TOTALS because sf0.1 is
+    // driver/overhead-bound — task-time separates "serial code" from
+    // "small data", and jobs / shuffle bytes do not move with machine load
+    val probe = new QueryProbe(spark.sparkContext)
 
     // warmup: touch every table + exercise codegen once
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -135,10 +129,8 @@ object Bench {
     }
 
     var failed = List.empty[String]
-    // returns (wall sec, fail flag, executor task-time sec of this run)
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long, Double) = {
-      val task0 = taskTimeMs.get()
-      val t0 = System.nanoTime()
+    // returns (ok flag, reading of this run)
+    def timeOnce(name: String, fn: QueryDef.Run): (Boolean, QueryProbe.Reading) = probe.measure {
       // FULL materialization via the noop sink, not count(): under
       // count() Catalyst prunes every row-count-preserving tail — a
       // left join against a provably-unique aggregate vanishes
@@ -148,20 +140,15 @@ object Bench {
       // which is what the baseline engines measure. Round-15 action
       // change — BENCH series before/after are not level-comparable.
       // a broken query must not silently "bench": scream, remember, move on
-      val n = try {
+      try {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        0L
+        true
       } catch {
         case t: Throwable =>
           System.err.println(s"[bench] FAIL $name: ${t.getClass.getSimpleName}: ${t.getMessage}")
           failed ::= name
-          -1L
+          false
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // outside the timed region: deliver this query's late task ends
-      // before reading, so they are not credited to the next query
-      GraftShims.drainListenerBus(spark.sparkContext, DrainTimeoutMs)
-      (sec, n, (taskTimeMs.get() - task0) / 1e3)
     }
     // mid-run calibration spins (one every ~50 queries, full-run mode):
     // the r20 driver record proved a mid-run load burst defeats
@@ -172,14 +159,11 @@ object Bench {
     // is charged to the rows it covered and nothing else. The spins run
     // BETWEEN query timings and are never charged to any row.
     val midSpins = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    // per-query executor task-time: min across timed runs/rounds, the
-    // same least-noise estimator the wall seconds use
-    val taskSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val perRound = (1 to rounds).map { r =>
       selected.zipWithIndex.map { case ((name, fn), i) =>
         if (rounds == 1 && r == 1 && i > 0 && i % 50 == 0)
           midSpins += ((i, calibrationSpinMs()))
-        val (sec1, n, task1) = timeOnce(name, fn)
+        val (ok1, run1) = timeOnce(name, fn)
         // A slow first reading may just have paid for a cold page cache,
         // first-run codegen, or concurrent machine load (BENCH_r01 recorded
         // 26s for a query that steadily runs in 3.7s; BENCH_r05's q22/q23
@@ -188,17 +172,24 @@ object Bench {
         // do identical distributed work, so min = least-noise estimate.
         // (Focused multi-round mode reports each round raw: the rounds
         // themselves are the repetition.)
-        val (sec, task) = if (rounds == 1 && sec1 > 1.0) {
-          val (sec2, _, task2) = timeOnce(name, fn)
-          if (sec2 < sec1) (sec2, task2) else (sec1, task1)
-        } else (sec1, task1)
-        taskSecs(name) = math.min(taskSecs.getOrElse(name, Double.MaxValue), task)
+        val run = if (rounds == 1 && run1.wallSec > 1.0) {
+          val (_, run2) = timeOnce(name, fn)
+          if (run2.wallSec < run1.wallSec) run2 else run1
+        } else run1
         val tag = if (rounds == 1) "" else s" round=$r"
-        System.err.println(f"[bench] $name%-28s $sec%8.2fs${if (n < 0) "  FAILED" else ""}$tag")
-        name -> sec
+        System.err.println(f"[bench] $name%-28s ${run.wallSec}%8.2fs jobs=${run.jobs}%-4d " +
+          f"shufW=${run.shuffleWriteBytes / 1e6}%.1fMB${if (ok1) "" else "  FAILED"}$tag")
+        name -> run
       }
     }
-    val results = perRound.transpose.map(rs => rs.head._1 -> rs.map(_._2).min)
+    probe.close()
+    // per-query min across rounds of each measure: the same least-noise
+    // estimator the wall seconds use
+    def minOf(f: QueryProbe.Reading => Double): Seq[(String, Double)] =
+      perRound.transpose.map(rs => rs.head._1 -> rs.map(r => f(r._2)).min)
+    val results = minOf(_.wallSec)
+    def jsonMap(kvs: Seq[(String, Double)], fmt: String = "%.3f"): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + fmt.format(v) }.mkString("{", ",", "}")
     // layout queries register catalog tables + temp dirs; a long bench
     // session must not accrete them (cleanup is idempotent; the next
     // call re-prepares)
@@ -214,11 +205,8 @@ object Bench {
     // standing-build/steady split is machine-readable (the r17
     // dedup_cc_delta adjudication needed exactly this number and it
     // only existed on stderr)
-    val round1 = if (rounds <= 1) "" else {
-      val m = perRound.head.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      s""","round1":$m"""
-    }
+    val round1 = if (rounds <= 1) "" else
+      s""","round1":${jsonMap(perRound.head.map { case (k, v) => k -> v.wallSec })}"""
     // self-adjudication against the checked-in idle bands, each row
     // corrected by its BRACKETING calibration spins (start / every-50 /
     // end) — a driver record that lands in a co-load window names its
@@ -227,8 +215,7 @@ object Bench {
     // actually covered
     val spins = (-1, calibStartMs) +: midSpins.toSeq :+ (selected.size, calibEndMs)
     val (bandMain, bandTrailer) = BenchBands.report(results, spins)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    val qs = jsonMap(results)
     val total = results.map(_._2).sum
     // a failed query's elapsed-until-throw seconds land in the map like
     // any reading; without a machine-readable flag a record from a
@@ -236,10 +223,12 @@ object Bench {
     // merged into BENCH_BANDS as a bogus fast band) — name the failures
     // in the JSON, not just stderr/exit code
     val failedJson = s""","failed":[${failed.distinct.sorted.map("\"" + _ + "\"").mkString(",")}]"""
-    def secMap(m: Map[String, Double]): String = m.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    // per-query executor task-time (full map, main line only)
-    val taskJson = s""","task_sec":${secMap(taskSecs.toMap)}"""
+    def secMap(m: Map[String, Double]): String = jsonMap(m.toSeq.sortBy(_._1))
+    // per-query executor task-time, jobs and shuffle write (full maps,
+    // main line only)
+    val probeJson = s""","task_sec":${jsonMap(minOf(_.taskSec))}""" +
+      s""","jobs":${jsonMap(minOf(_.jobs.toDouble), "%.0f")}""" +
+      s""","shuffle_write_mb":${jsonMap(minOf(_.shuffleWriteBytes / 1e6), "%.1f")}"""
     // stream-family cost split (r21 verdict item 1): cumulative staging
     // wall per gate row (StageCache — includes cache-hit fingerprint
     // walks) and standing-artifact prep wall (StreamPlans) — main line
@@ -250,7 +239,7 @@ object Bench {
     val streamSplit =
       (if (stageSec.isEmpty) "" else s""","stream_stage_sec":${secMap(stageSec)}""") +
       (if (prepSec.isEmpty) "" else s""","stream_prep_sec":${secMap(prepSec)}""")
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",$calib$round1$bandMain$failedJson$taskJson$streamSplit,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",$calib$round1$bandMain$failedJson$probeJson$streamSplit,"queries":$qs,"sf":"$sfDir"}""")
     // The harness that invokes this main keeps only the LAST ~2000 chars of
     // stdout; the full per-query line above is longer than that window, so
     // its head (and the opening brace) can be truncated away. Repeat the
@@ -260,9 +249,7 @@ object Bench {
     // record shipped unparseable because the trailer embedded the FULL
     // breach map and 20+ co-load breaches blew the window; BenchSpec pins
     // the worst-case trailer length now).
-    val topQs = results.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    val topQs = jsonMap(results.sortBy(-_._2).take(10))
     println(trailerLine(total, results.size, calibTrailer, bandTrailer, failed, topQs, sfDir))
     spark.stop()
     if (failed.nonEmpty) {

@@ -2,7 +2,7 @@ package graft
 
 /** Dev tool: print the formatted physical plan of one gate query
   * WITHOUT executing it — `runMain graft.ExplainQuery <sfDir> <name>`.
-  * The plan-shape companion to [[TimeQueries]]: when a query dies at a
+  * The plan-shape companion to [[Bench]]'s focused mode: when a query dies at a
   * scale the fixtures never reach (partitioning lies, zip mismatches,
   * codegen fallbacks), the plan names the offending operator without a
   * 10-minute run.
@@ -13,8 +13,8 @@ package graft
   * whole stream to completion) and guard-bearing rows like
   * `emb_outlier` (its i64-headroom guard is a collect at construction
   * time). For those names this tool prints the plan of the FINAL
-  * read-back frame and pays the run; prefer [[TimeQueries]] when the
-  * run itself is what you want measured. */
+  * read-back frame and pays the run; prefer `graft.Bench <names>
+  * <rounds>` when the run itself is what you want measured. */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

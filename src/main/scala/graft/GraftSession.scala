@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session of the single-session mains ([[Bench]], [[Verify]],
-  * [[TimeQueries]], [[ExplainQuery]]): `local[cpus]` with one shuffle
+/** The local session of the mains ([[Bench]], [[Verify]], [[ExplainQuery]],
+  * [[PerfHarness]]): `local[cpus]` with one shuffle
   * partition per core, UI off, the UTC session zone every event-time
   * oracle assumes, and a codegen field cap of 256 so the 128-column
   * minhash signature aggregate stays inside whole-stage codegen (the

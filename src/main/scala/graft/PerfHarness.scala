@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.timestamp_micros
-import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -118,8 +117,8 @@ object PerfHarness {
     drain(root.resolve("warmOutF"), root.resolve("warmCpF"), listingSource(spark, warmDir, None))
   }
 
-  def run(spark: SparkSession, nFiles: Int, rowsPerFile: Int): Result = {
-    val root = Files.createTempDirectory("graft-pt")
+  def run(spark: SparkSession, nFiles: Int, rowsPerFile: Int): Result = TempDirs.using { dirs =>
+    val root = Paths.get(dirs.create("graft-pt"))
     val dataDir = Files.createDirectory(root.resolve("data"))
     val paths = generate(dataDir, 0, nFiles, rowsPerFile)
     warmUp(spark, root)
@@ -254,8 +253,8 @@ object PerfHarness {
     * reference documents (DataConsumer.scala:28 precedent). Each config
     * validates row counts. */
   def bulkSweep(spark: SparkSession, nFiles: Int, rowsPerFile: Int,
-      mfpts: Seq[Int]): String = {
-    val root = Files.createTempDirectory("graft-bulk")
+      mfpts: Seq[Int]): String = TempDirs.using { dirs =>
+    val root = Paths.get(dirs.create("graft-bulk"))
     val dataDir = Files.createDirectory(root.resolve("data"))
     val paths = generate(dataDir, 0, nFiles, rowsPerFile)
     val expected = nFiles.toLong * rowsPerFile
@@ -366,7 +365,7 @@ object PerfHarness {
     // frame, and the types×days daily frame are all scale-invariant,
     // which is exactly the self-similarity the event-time operators'
     // K-bounded-state claims are measured against. ts is fixture-shaped
-    // (parquet timestamp[us]; the scale session pins UTC).
+    // (parquet timestamp[us]; GraftSession pins UTC).
     val nEvents = nDocs * 4
     val nUsers = math.max(1L, nDocs / 5)
     val types = Array("view", "click", "cart", "purchase", "error")
@@ -398,43 +397,19 @@ object PerfHarness {
     num / den
   }
 
-  /** Run the headline curation ops at each scale; returns the JSON record.
-    * Wall time is the min of `reps` in-JVM reps (steady-state discipline:
-    * rep 1 pays codegen + Models train-once; the claim under test is the
-    * standing cost). Shuffle bytes come from a SparkListener summing
-    * per-stage task metrics across ALL jobs an op runs, polled to
-    * stability after each rep (the listener bus is async). */
   /** Per-corpus precomputed pair-list parquet for the `pagerank_iters`
     * scale arm (kernel paid once, outside the measured reps). */
   private val prPairsCache = scala.collection.mutable.Map.empty[String, String]
 
+  /** Run the headline curation ops at each scale; returns the JSON record.
+    * Wall time is the min of `reps` in-JVM reps (steady-state discipline:
+    * rep 1 pays codegen + Models train-once; the claim under test is the
+    * standing cost). Shuffle bytes are each rep's [[QueryProbe]] reading:
+    * per-stage task metrics across ALL jobs an op runs. Every temp dir the
+    * run mints (corpora, per-rep cluster-map outputs, the per-corpus pair
+    * parquet) is deleted when it returns. */
   def scaleRun(spark: SparkSession, scales: Seq[Int], opNames: Seq[String],
-      reps: Int): String = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    val sw = new java.util.concurrent.atomic.LongAdder
-    val sr = new java.util.concurrent.atomic.LongAdder
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          sw.add(m.shuffleWriteMetrics.bytesWritten)
-          sr.add(m.shuffleReadMetrics.totalBytesRead)
-        }
-      }
-    }
-    def settled(): (Long, Long) = {
-      // the listener bus posts asynchronously and can lag a many-job op
-      // by hundreds of ms; reading early mis-attributes late stages to
-      // the NEXT rep (observed: a 12 MB reading for a pipeline that
-      // demonstrably shuffles 100+ MB)
-      GraftShims.drainListenerBus(spark.sparkContext, Bench.DrainTimeoutMs)
-      (sw.sum(), sr.sum())
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // every temp dir this run mints (per-rep cluster-map outputs, the
-    // per-corpus pair parquet) is swept in the finally block below —
-    // the harness used to leak one dir per corpus per JVM (r19 ADVICE)
-    val scratch = scala.collection.mutable.ArrayBuffer.empty[Path]
+      reps: Int): String = TempDirs.using { dirs =>
     // scale-only comparison arms that are deliberately NOT gate queries
     val qs = SparkEntry.lookup(opNames, Map[String, QueryDef.Run](
       "dedup_cc_uncapped" -> ((s, d) => graft.operators.Dedup.dedupClustersUncapped(s, d)),
@@ -458,8 +433,7 @@ object PerfHarness {
       // amortizes; writes to a fresh dir per rep so the Models store
       // never short-circuits the measurement
       "cluster_map_build" -> ((s, d) => {
-        val out = Files.createTempDirectory("graft-cmb")
-        scratch.synchronized { scratch += out }
+        val out = dirs.create("graft-cmb")
         graft.operators.Dedup.dedupClustersLsh(s, d)
           .write.mode("overwrite").parquet(s"$out/cc.parquet")
         s.read.parquet(s"$out/cc.parquet")
@@ -471,8 +445,7 @@ object PerfHarness {
       // row would bury that delta under the kernel's bytes
       "pagerank_iters" -> ((s, d) => {
         val pairsPath = prPairsCache.getOrElseUpdate(d, {
-          val out = Files.createTempDirectory("graft-pr-pairs")
-          scratch.synchronized { scratch += out }
+          val out = dirs.create("graft-pr-pairs")
           graft.operators.Dedup.dedupNgramJaccardCapped(s, d,
               graft.operators.Dedup.CcDfCap)
             .select("a_id", "b_id")
@@ -482,11 +455,11 @@ object PerfHarness {
         graft.operators.Graph.pagerankOn(
           s.read.parquet(pairsPath), graft.operators.Graph.PrIters)
       }))).toMap
+    val probe = new QueryProbe(spark.sparkContext)
     try {
       val baseDocs = 5000L; val baseVecs = 2000L
       val perScale = scales.map { k =>
-        val dir = Files.createTempDirectory(f"graft-scale-x$k%03d")
-        scratch.synchronized { scratch += dir }
+        val dir = Paths.get(dirs.create(f"graft-scale-x$k%03d"))
         val t0 = System.nanoTime()
         synthCorpus(spark, dir, baseDocs * k, baseVecs * k)
         val genSec = (System.nanoTime() - t0) / 1e9
@@ -501,19 +474,15 @@ object PerfHarness {
             // shuffle and a fantasy wall time — every rep starts cache-cold
             // (codegen/JIT/Models-store warmth is what min-of-reps keeps)
             spark.catalog.clearCache()
-            settled(); val (w0, r0) = (sw.sum(), sr.sum())
-            val t1 = System.nanoTime()
             // noop sink = full materialization: count() lets Catalyst
             // prune row-count-preserving tails (see Bench.timeOnce)
-            qs(name)(spark, dir.toString)
-              .write.mode("overwrite").format("noop").save()
-            val sec = (System.nanoTime() - t1) / 1e9
-            val (w1, r1) = settled()
+            val (_, r) = probe.measure(qs(name)(spark, dir.toString)
+              .write.mode("overwrite").format("noop").save())
             val rounds = if (name == "dedup_cc") graft.operators.Dedup.lastCcRounds else -1
-            System.err.println(f"[scale] x$k $name%-18s rep$rep $sec%8.2fs rows=$rows " +
-              f"shufW=${(w1 - w0) / 1e6}%.1fMB shufR=${(r1 - r0) / 1e6}%.1fMB" +
+            System.err.println(f"[scale] x$k $name%-18s rep$rep ${r.wallSec}%8.2fs rows=$rows " +
+              f"shufW=${r.shuffleWriteBytes / 1e6}%.1fMB shufR=${r.shuffleReadBytes / 1e6}%.1fMB" +
               (if (rounds >= 0) s" ccRounds=$rounds" else ""))
-            (sec, w1 - w0, r1 - r0, rows, rounds)
+            (r.wallSec, r.shuffleWriteBytes, r.shuffleReadBytes, rows, rounds)
           }
           val best = samples.minBy(_._1)
           name -> best
@@ -549,13 +518,9 @@ object PerfHarness {
         s""""gen_sec":[${perScale.map(p => f"${p._2}%.1f").mkString(",")}],""" +
         s""""ops":{${opJson.mkString(",")}}}"""
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      // sweep the run's scratch dirs; drop the pair cache's entries too —
-      // they point into dirs being deleted (and into per-run temp corpora)
-      scratch.synchronized {
-        scratch.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
-        scratch.clear()
-      }
+      probe.close()
+      // the pair cache's entries point into this run's dirs, deleted
+      // when it returns
       prPairsCache.clear()
     }
   }
@@ -588,27 +553,15 @@ object PerfHarness {
     * is part of the standing cost, so it is timed). */
   private val CompactAfter = 4
   def ccSoakRun(spark: SparkSession, nBase: Long, nDeltas: Int,
-      deltaFrac: Double): String = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+      deltaFrac: Double): String = TempDirs.using { dirs =>
     import org.apache.spark.sql.functions.{broadcast, col}
     import graft.operators.Dedup
-    val sw = new java.util.concurrent.atomic.LongAdder
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) sw.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def settled(): Long = {
-      GraftShims.drainListenerBus(spark.sparkContext, Bench.DrainTimeoutMs)
-      sw.sum()
-    }
     val nDelta = math.max(1L, (nBase * deltaFrac).toLong)
     val nTotal = nBase + nDelta * nDeltas
-    val dir = Files.createTempDirectory("graft-ccsoak")
+    val dir = Paths.get(dirs.create("graft-ccsoak"))
     synthCorpus(spark, dir, nTotal, 2000)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val root = Files.createTempDirectory("graft-ccsoak-art").toString
+    val root = dirs.create("graft-ccsoak-art")
     def parquetFiles(sub: String): Int = {
       def walk(f: java.io.File): Int =
         if (f.isDirectory)
@@ -634,56 +587,56 @@ object PerfHarness {
       .select(col("a_id"), col("b_id")).write.parquet(s"$root/pairs")
     Dedup.ccFixpoint(spark.read.parquet(s"$root/pairs"))
       .write.parquet(s"$root/map")
-    spark.sparkContext.addSparkListener(listener)
+    val probe = new QueryProbe(spark.sparkContext)
     try {
       val recs = (1 to nDeltas).map { i =>
         val start = nBase + (i - 1) * nDelta
         val end = start + nDelta
         spark.catalog.clearCache()
-        settled(); val w0 = sw.sum()
-        val t0 = System.nanoTime()
         // ---- timed ingest window ----
-        Dedup.docShinglesOf(
-            docs.filter(col("doc_id") >= start && col("doc_id") < end))
-          .write.parquet(s"$root/sh/gen=$i")
-        val deltaSh = spark.read.parquet(s"$root/sh/gen=$i")
-        Dedup.lshBands(Dedup.lshSignatures(deltaSh))
-          .write.parquet(s"$root/bands/gen=$i")
-        val deltaKeys = spark.read.parquet(s"$root/bands/gen=$i")
-          .select(col("band_idx"), col("band_key")).distinct()
-        val touched = spark.read.parquet(s"$root/bands")
-          .select(col("doc_id"), col("band_idx"), col("band_key"))
-          .join(broadcast(deltaKeys), Seq("band_idx", "band_key"), "leftsemi")
-        val allSh = spark.read.parquet(s"$root/sh").select(col("doc_id"), col("sh"))
-        val fresh = Dedup.lshVerify(
-            Dedup.lshCandidates(touched)
-              .filter(col("a_id") >= start || col("b_id") >= start),
-            allSh)
-          .select(col("a_id"), col("b_id")).persist()
-        val freshEdges = fresh.count()
-        val merged = Dedup.ccFixpointDelta(
-          spark.read.parquet(s"$root/map"),
-          spark.read.parquet(s"$root/pairs"), fresh)
-        merged.write.parquet(s"$root/map.next")
-        fresh.write.mode("append").parquet(s"$root/pairs")
-        fresh.unpersist()
-        TempDirs.delete(new java.io.File(s"$root/map"))
-        swap(s"$root/map.next", s"$root/map")
-        // amortized compaction: bound the generation count (and with it
-        // the artifact file count) regardless of how many deltas arrive
-        var compacted = false
-        Seq("sh", "bands").foreach { sub =>
-          if (gens(sub).size > CompactAfter) {
-            compacted = true
-            val all = spark.read.parquet(s"$root/$sub")
-              .drop("gen").repartition(spark.sparkContext.defaultParallelism)
-            all.write.parquet(s"$root/$sub.next/gen=0")
-            TempDirs.delete(new java.io.File(s"$root/$sub"))
-            swap(s"$root/$sub.next", s"$root/$sub")
+        val ((freshEdges, compacted), window) = probe.measure {
+          Dedup.docShinglesOf(
+              docs.filter(col("doc_id") >= start && col("doc_id") < end))
+            .write.parquet(s"$root/sh/gen=$i")
+          val deltaSh = spark.read.parquet(s"$root/sh/gen=$i")
+          Dedup.lshBands(Dedup.lshSignatures(deltaSh))
+            .write.parquet(s"$root/bands/gen=$i")
+          val deltaKeys = spark.read.parquet(s"$root/bands/gen=$i")
+            .select(col("band_idx"), col("band_key")).distinct()
+          val touched = spark.read.parquet(s"$root/bands")
+            .select(col("doc_id"), col("band_idx"), col("band_key"))
+            .join(broadcast(deltaKeys), Seq("band_idx", "band_key"), "leftsemi")
+          val allSh = spark.read.parquet(s"$root/sh").select(col("doc_id"), col("sh"))
+          val fresh = Dedup.lshVerify(
+              Dedup.lshCandidates(touched)
+                .filter(col("a_id") >= start || col("b_id") >= start),
+              allSh)
+            .select(col("a_id"), col("b_id")).persist()
+          val freshEdges = fresh.count()
+          val merged = Dedup.ccFixpointDelta(
+            spark.read.parquet(s"$root/map"),
+            spark.read.parquet(s"$root/pairs"), fresh)
+          merged.write.parquet(s"$root/map.next")
+          fresh.write.mode("append").parquet(s"$root/pairs")
+          fresh.unpersist()
+          TempDirs.delete(new java.io.File(s"$root/map"))
+          swap(s"$root/map.next", s"$root/map")
+          // amortized compaction: bound the generation count (and with it
+          // the artifact file count) regardless of how many deltas arrive
+          var compacted = false
+          Seq("sh", "bands").foreach { sub =>
+            if (gens(sub).size > CompactAfter) {
+              compacted = true
+              val all = spark.read.parquet(s"$root/$sub")
+                .drop("gen").repartition(spark.sparkContext.defaultParallelism)
+              all.write.parquet(s"$root/$sub.next/gen=0")
+              TempDirs.delete(new java.io.File(s"$root/$sub"))
+              swap(s"$root/$sub.next", s"$root/$sub")
+            }
           }
+          (freshEdges, compacted)
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val w1 = settled()
+        val sec = window.wallSec
         // ---- untimed: full-rebuild equality check ----
         val unionSh = Dedup.docShinglesOf(docs.filter(col("doc_id") < end))
           .persist()
@@ -707,11 +660,11 @@ object PerfHarness {
             s"(merged-only=$d1, rebuild-only=$d2, " +
             s"rows merged=$mapRows rebuild=$rebuildRows)")
         System.err.println(f"[ccsoak] delta $i%2d wall=$sec%6.2fs " +
-          f"shufW=${(w1 - w0) / 1e6}%8.1fMB fresh=$freshEdges%6d " +
+          f"shufW=${window.shuffleWriteBytes / 1e6}%8.1fMB fresh=$freshEdges%6d " +
           f"map=$mapRows%7d files(sh=${parquetFiles("sh")}," +
           f"bands=${parquetFiles("bands")},pairs=${parquetFiles("pairs")})" +
           (if (compacted) " COMPACTED" else ""))
-        (i, sec, w1 - w0, freshEdges, mapRows, compacted,
+        (i, sec, window.shuffleWriteBytes, freshEdges, mapRows, compacted,
           parquetFiles("sh") + parquetFiles("bands") + parquetFiles("pairs"))
       }
       val walls = recs.map(_._2)
@@ -725,7 +678,7 @@ object PerfHarness {
         s""""compactions":${recs.count(_._6)},""" +
         s""""rebuild_equal":true,""" +
         s""""wall_last_over_first":${f"${walls.last / walls.head}%.2f"}}"""
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally probe.close()
   }
 
   /** args: [nFiles] [rowsPerFile], defaults 200 x 1000;
@@ -746,12 +699,7 @@ object PerfHarness {
     val anyMode = soakMode || layoutMode || scaleMode || bulkMode || ccSoakMode
     val nFiles = if (anyMode) 0 else args.headOption.map(_.toInt).getOrElse(200)
     val rowsPerFile = if (anyMode) 0 else args.lift(1).map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors())}]")
-      .appName("graft-perf-harness")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     try {
       if (layoutMode) {
@@ -761,10 +709,6 @@ object PerfHarness {
           .orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse("/root/testdata/sf0.1")
         println(layoutSoak(spark, sfDir, sessions, rounds))
       } else if (scaleMode) {
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        // the 128-column minhash signature aggregate must stay inside
-        // whole-stage codegen (default field cap is 100)
-        spark.conf.set("spark.sql.codegen.maxFields", "256")
         // SPARK_GRAFT_FORCE_SMJ=1 pins every equi-join to the shuffle
         // regime (no planner or AQE broadcast). The fixture corpora are
         // small enough that Spark broadcasts frames that at production
@@ -794,8 +738,6 @@ object PerfHarness {
           .split(",").toSeq.map(_.trim.toInt)
         println(bulkSweep(spark, n, rows, mfpts))
       } else if (ccSoakMode) {
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.codegen.maxFields", "256")
         val nBase = args.lift(1).map(_.toLong).getOrElse(50000L)
         val nDeltas = args.lift(2).map(_.toInt).getOrElse(8)
         val frac = args.lift(3).map(_.toDouble).getOrElse(0.05)

@@ -23,6 +23,13 @@ private[graft] final class TempDirs {
 }
 
 private[graft] object TempDirs {
+  /** Run `body` with a fresh owner, whose dirs are deleted when `body`
+    * returns, on failure too. */
+  def using[T](body: TempDirs => T): T = {
+    val dirs = new TempDirs
+    try body(dirs) finally dirs.deleteAll()
+  }
+
   /** Recursive delete that does not follow symlinks; a missing path is a no-op. */
   def delete(f: File): Unit = {
     if (f.isDirectory && !Files.isSymbolicLink(f.toPath)) {

@@ -4,7 +4,6 @@ import java.io.{Closeable, File}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
@@ -278,34 +277,11 @@ final class CredentialsProviderChain(providers: Seq[ConnectorCredentialsProvider
   override def close(): Unit = providers.foreach(p => Try(p.close()))
 }
 
-/** Retry wrapper mirroring the reference's resilience policy (reference
-  * ConnectorAwsCredentialsProvider.scala:40-63): up to `maxAttempts`
-  * resolutions, sleeping `sleepMs` between failures, surfacing the final
-  * failure unchanged. */
-final class RetryableCredentialsProvider(
-    inner: ConnectorCredentialsProvider,
-    maxAttempts: Int = 10,
-    sleepMs: Long = 1000L)
-    extends ConnectorCredentialsProvider {
-
-  override def resolve(): QueueCredentials = {
-    @tailrec def attempt(retriesLeft: Int): QueueCredentials = {
-      Try(inner.resolve()) match {
-        case Success(c) => c
-        case Failure(_) if retriesLeft > 0 =>
-          Thread.sleep(sleepMs)
-          attempt(retriesLeft - 1)
-        case Failure(e) => throw e
-      }
-    }
-    attempt(maxAttempts)
-  }
-  override def close(): Unit = inner.close()
-}
-
-/** Builder with the reference's entry-point shape
-  * (`ConnectorAwsCredentialsProvider.builder.build()`): the default build is
-  * the retry-wrapped default chain, lazily constructed on first `resolve()`. */
+/** The source's credentials when no static pair is configured
+  * (`ConnectorOptions.credentialsProvider()`): the first-wins chain env →
+  * system properties → profile file → instance metadata. No retry wraps
+  * it: a failing `resolve()` fails that queue call, and the next fetch
+  * round retries it under `queue.fetchErrorBudget`. */
 object ConnectorCredentialsProvider {
   def defaultChain(): ConnectorCredentialsProvider =
     new CredentialsProviderChain(Seq(
@@ -313,34 +289,4 @@ object ConnectorCredentialsProvider {
       SystemPropertiesCredentialsProvider(),
       ProfileCredentialsProvider(),
       InstanceMetadataCredentialsProvider()))
-
-  final class Builder private[ConnectorCredentialsProvider] () {
-    private var static: Option[QueueCredentials] = None
-    private var profileOpt: Option[(Option[String], Option[String])] = None
-
-    def staticCredentials(c: QueueCredentials): Builder = { static = Some(c); this }
-    def profile(path: Option[String] = None, name: Option[String] = None): Builder = {
-      profileOpt = Some((path, name)); this
-    }
-
-    def build(): ConnectorCredentialsProvider = static match {
-      case Some(c) => StaticCredentialsProvider(c)
-      case None =>
-        val base = profileOpt match {
-          case Some((p, n)) => ProfileCredentialsProvider(p, n): ConnectorCredentialsProvider
-          case None => defaultChain()
-        }
-        new LazyRetryingProvider(base)
-    }
-  }
-  def builder: Builder = new Builder
-
-  /** Lazily wraps the base in retry on first use, like the reference's
-    * `providerOpt` memoization (ConnectorAwsCredentialsProvider.scala:70-82). */
-  private final class LazyRetryingProvider(base: ConnectorCredentialsProvider)
-      extends ConnectorCredentialsProvider {
-    @transient private lazy val delegate = new RetryableCredentialsProvider(base)
-    override def resolve(): QueueCredentials = delegate.resolve()
-    override def close(): Unit = delegate.close()
-  }
 }

@@ -17,8 +17,15 @@ class PerfHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** Entries of the system temp dir whose names start with `prefix`. */
+  private def tempEntries(prefix: String): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .fold(Set.empty[String])(_.filter(_.startsWith(prefix)).toSet)
+
   test("both consumers drain bulk + incremental phases to identical validated sinks") {
+    val before = tempEntries("graft-pt")
     val r = PerfHarness.run(spark, nFiles = 12, rowsPerFile = 20)
+    assert(tempEntries("graft-pt") -- before == Set.empty, "run leaves no temp dir behind")
     assert(r.valid, s"row/checksum validation failed: $r")
     // 12 bulk + 1 untimed settling round + 10 timed rounds, 8 files each
     assert(r.rows == (12 + 11 * 8) * 20L)
@@ -30,7 +37,9 @@ class PerfHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bulk sweep: each maxFilesPerTrigger drains the backlog to validated sinks") {
+    val before = tempEntries("graft-bulk")
     val out = PerfHarness.bulkSweep(spark, nFiles = 12, rowsPerFile = 5, mfpts = Seq(5, 12))
+    assert(tempEntries("graft-bulk") -- before == Set.empty, "the sweep leaves no temp dir behind")
     assert(out.contains(""""metric":"bulk_sweep","backlog_files":12"""), out)
     assert(out.contains(""""max_files_per_trigger":5,"triggers":3,"""), out)
     assert(out.contains(""""max_files_per_trigger":12,"triggers":1,"""), out)

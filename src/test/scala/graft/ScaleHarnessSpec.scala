@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Laws of the scale-exponent harness: the synthetic corpus must pass the
@@ -12,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * measured claims rest on, and the slope fit must be exact on planted
   * power laws.
   */
-class ScaleHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaleHarnessSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,17 +18,17 @@ class ScaleHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("synthetic corpus passes the fixture schema guard and is deterministic") {
-    val dir = Files.createTempDirectory("graft-scalespec")
+    val dir = tempDir("graft-scalespec")
     PerfHarness.synthCorpus(spark, dir, nDocs = 500, nVecs = 200)
     // Tables.table applies assertFixtureSchema — a drift throws here
     val docs = graft.queries.Tables.documents(spark, dir.toString)
     val embs = graft.queries.Tables.embeddings(spark, dir.toString)
     assert(docs.count() == 500 && embs.count() == 200)
     // deterministic: regenerating yields the identical corpus
-    val dir2 = Files.createTempDirectory("graft-scalespec2")
+    val dir2 = tempDir("graft-scalespec2")
     PerfHarness.synthCorpus(spark, dir2, nDocs = 500, nVecs = 200)
     val a = docs.orderBy("doc_id").collect().map(_.toString).toSeq
     val b = graft.queries.Tables.documents(spark, dir2.toString)
@@ -40,7 +37,7 @@ class ScaleHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planted near-dup structure: fixed per-doc rate, diameter <= 2 components") {
-    val dir = Files.createTempDirectory("graft-scalespec3")
+    val dir = tempDir("graft-scalespec3")
     PerfHarness.synthCorpus(spark, dir, nDocs = 2000, nVecs = 10)
     val clusters = graft.operators.Dedup.dedupClusters(spark, dir.toString).collect()
     // blocks of 50: every block plants >=1 near pair, every 5th a 3-chain;
@@ -58,7 +55,7 @@ class ScaleHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedup_cc_lsh: the LSH candidate path yields the exact path's components") {
-    val dir = Files.createTempDirectory("graft-scalespec4")
+    val dir = tempDir("graft-scalespec4")
     PerfHarness.synthCorpus(spark, dir, nDocs = 2000, nVecs = 10)
     val exact = graft.operators.Dedup.dedupClusters(spark, dir.toString)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
@@ -71,7 +68,7 @@ class ScaleHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dedup_cc_lsh: an oversized duplicate pile reconnects transitively through windowed links") {
     val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-scalespec5").toString
+    val dir = tempDir("graft-scalespec5").toString
     // one dup pile of 80 near-identical docs (> BucketW+1 = 65): every
     // band bucket holds all 80, so the window emits only rank-local
     // pairs — the pile must still collapse to ONE component, proving
@@ -90,7 +87,7 @@ class ScaleHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("semdedup_bounded: recursive splitting bounds every cell; verdicts equal the cell-local rule") {
     val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-scalespec6")
+    val dir = tempDir("graft-scalespec6")
     // 5000 vectors > SemTarget forces at least one split level
     PerfHarness.synthCorpus(spark, dir, nDocs = 10, nVecs = 5000)
     val cells = graft.operators.Dedup2.boundedCells(spark, dir.toString)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
@@ -9,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceOffset, StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark-version drift canary (SURVEY §7.3 risk #1): the engine leans on
@@ -24,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every test exercises the seam end-to-end (resolve + round-trip), not
   * just classloading.
   */
-class ShimSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ShimSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -33,7 +30,7 @@ class ShimSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("GraftShims.ofRows: a hand-built LogicalPlan becomes a working DataFrame") {
     val plan = spark.range(5).toDF("x").queryExecution.logical
@@ -88,7 +85,7 @@ class ShimSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("DataSource.resolveRelation + LogicalRelation + ofRows: the getBatch spelling") {
-    val dir = Files.createTempDirectory("graft-shim").toString
+    val dir = tempDir("graft-shim").toString
     spark.range(7).toDF("v").write.parquet(s"$dir/t.parquet")
     // the exact spelling GraftFileSource.getBatch uses: resolve a file
     // relation without existence re-checks, wrap, lift to DataFrame
@@ -110,7 +107,7 @@ class ShimSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CheckpointFileManager: atomic create + read-back") {
     val dir = new org.apache.hadoop.fs.Path(
-      Files.createTempDirectory("graft-shim-cfm").toString)
+      tempDir("graft-shim-cfm").toString)
     val fm = CheckpointFileManager.create(dir, spark.sessionState.newHadoopConf())
     val f = new org.apache.hadoop.fs.Path(dir, "probe")
     val out = fm.createAtomic(f, overwriteIfPossible = true)

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions
@@ -17,7 +16,7 @@ import graft.sources.InMemoryQueueRegistry
   * the same corpus — the end-to-end shape of a production ingest+curation
   * pipeline (queue announcement → exactly-once admission → per-batch
   * scoring → sink). */
-class StreamingCurationSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingCurationSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -25,14 +24,14 @@ class StreamingCurationSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
   test("connector-fed stream scores documents identically to the batch path") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sc")
+    val dir = tempDir("graft-sc")
     val docs = Seq(
       1L -> "the quick brown fox jumps over the lazy dog",
       2L -> "spam spam spam spam spam",

@@ -1,4 +1,4 @@
-package graft.sources
+package graft
 
 import java.nio.file.{Path, Paths}
 
@@ -8,7 +8,7 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
   * in `afterAll`. A suite that overrides `afterAll` calls `super.afterAll()`
   * last, so the dirs go after its Spark session or log has stopped. */
 trait SuiteTempDirs extends BeforeAndAfterAll { this: Suite =>
-  private val dirs = new graft.TempDirs
+  private val dirs = new TempDirs
 
   protected def tempDir(prefix: String): Path = Paths.get(dirs.create(prefix))
 

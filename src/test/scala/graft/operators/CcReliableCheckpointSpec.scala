@@ -1,10 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** The CC kernels' checkpoint trade, pinned (r21 verdict item 8):
   *
@@ -21,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    collect the frame reference (r21 ADVICE on lazy-checkpoint
   *    reclamation).
   */
-class CcReliableCheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CcReliableCheckpointSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -31,7 +30,7 @@ class CcReliableCheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.codegen.maxFields", "256")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def pairs() = {
     val s = spark
@@ -44,7 +43,7 @@ class CcReliableCheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("reliable-checkpoint mode produces bit-identical labels") {
     val s = spark
     val local = Dedup.ccFixpoint(pairs()).collect().map(_.toString).sorted
-    val ckDir = Files.createTempDirectory("graft-ccck").toString
+    val ckDir = tempDir("graft-ccck").toString
     s.sparkContext.setCheckpointDir(ckDir)
     s.conf.set("spark.graft.cc.reliableCheckpoint", "true")
     try {

@@ -1,18 +1,17 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Planted-scenario laws for the round-13 curation operators:
   * containment must catch what Jaccard can't, novelty must order by
   * first ownership, standardization must center every dimension, and
   * the temperature allocation must be exact and budget-complete.
   */
-class Curation3Spec extends AnyFunSuite with BeforeAndAfterAll {
+class Curation3Spec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,7 +21,7 @@ class Curation3Spec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.codegen.maxFields", "256")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -30,7 +29,7 @@ class Curation3Spec extends AnyFunSuite with BeforeAndAfterAll {
   private def stageDocs(rows: Seq[(Long, String)]): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c3").toString
+    val dir = tempDir("graft-c3").toString
     rows.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang",
         "concat('src', doc_id % 3) AS source",

@@ -1,11 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.joins.CartesianProductExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Planted-scenario laws for the Curation4 operators: the snapshot diff
   * must classify every modulus class correctly, the source matrix must
@@ -14,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * neighbors no matter how similar, and the bucket report's integer
   * arithmetic must be exact.
   */
-class Curation4Spec extends AnyFunSuite with BeforeAndAfterAll {
+class Curation4Spec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,13 +23,13 @@ class Curation4Spec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.codegen.maxFields", "256")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** Stage a documents.parquet fixture from (doc_id, text, source). */
   private def stageDocs(rows: Seq[(Long, String, String)]): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c4").toString
+    val dir = tempDir("graft-c4").toString
     rows.toDF("doc_id", "text", "source")
       .selectExpr("doc_id", "text", "'en' AS lang", "source",
         "CAST(length(text) AS BIGINT) AS n_chars")
@@ -42,7 +41,7 @@ class Curation4Spec extends AnyFunSuite with BeforeAndAfterAll {
   private def stageEmb(rows: Seq[(Long, Seq[Float], Int)]): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c4e").toString
+    val dir = tempDir("graft-c4e").toString
     rows.toDF("vec_id", "embedding", "label")
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding",
         "CAST(label AS INT) AS label")

@@ -1,10 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Planted-scenario laws for the Curation5 operators and the BPE
   * encoder: entropy's integer micro-nat arithmetic must be exact on a
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and BPE encoding must compress exactly as the learned merge table
   * dictates — training exactly once per JVM (the Models law).
   */
-class Curation5Spec extends AnyFunSuite with BeforeAndAfterAll {
+class Curation5Spec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,12 +22,12 @@ class Curation5Spec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.codegen.maxFields", "256")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def stageDocs(rows: Seq[(Long, String, String)]): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c5").toString
+    val dir = tempDir("graft-c5").toString
     rows.toDF("doc_id", "text", "source")
       .selectExpr("doc_id", "text", "'en' AS lang", "source",
         "CAST(length(text) AS BIGINT) AS n_chars")
@@ -85,7 +84,7 @@ class Curation5Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("tokenizer_fertility: per-lang ratios replay the hand computation on the shared merge table") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c5f").toString
+    val dir = tempDir("graft-c5f").toString
     Seq((1L, "aa aa aa", "en"), (2L, "aa b", "fr"))
       .toDF("doc_id", "text", "lang")
       .selectExpr("doc_id", "text", "lang", "'s' AS source",
@@ -129,7 +128,7 @@ class Curation5Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q60_latest_by_key: newest version wins, ts ties break on event_id") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c5q60").toString
+    val dir = tempDir("graft-c5q60").toString
     val t0 = java.time.LocalDateTime.of(2026, 1, 1, 0, 0, 0)
     Seq(
       (1L, t0, 1L, "a", 10.0), (2L, t0.plusHours(1), 1L, "a", 20.0),
@@ -171,7 +170,7 @@ class Curation5Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("ann_ivf_append: delta assigns to the standing base index, centroids train once") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c5ivf").toString
+    val dir = tempDir("graft-c5ivf").toString
     // 20 base vectors (ids skip %10==3) along distinct directions + 2
     // delta vectors exactly collinear with known base vectors
     def unit(i: Int): Seq[Float] = (0 until 8).map(k => if (k == i % 8) 1.0f else 0.001f * i)
@@ -195,7 +194,7 @@ class Curation5Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q61_asof_nearest: picks the closer click in either direction, honors the 1h bound") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c5q61").toString
+    val dir = tempDir("graft-c5q61").toString
     val t0 = java.time.LocalDateTime.of(2026, 1, 1, 12, 0, 0)
     Seq(
       // user 1: click 10 min BEFORE beats click 50 min after
@@ -237,7 +236,7 @@ class Curation5Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q59_interval_union: overlapping intervals merge, disjoint intervals open islands") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c5e").toString
+    val dir = tempDir("graft-c5e").toString
     val t0 = java.time.LocalDateTime.of(2026, 1, 1, 0, 0, 0)
     // user 1: events 10 min apart (intervals overlap -> one island, 40 min)
     // user 2: events 2 h apart (disjoint -> two islands, 60 min)

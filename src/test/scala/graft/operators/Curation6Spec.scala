@@ -1,10 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Planted-scenario laws for the Curation6 operators, q63, and the ANN
   * recall row: profiling must count nulls/distincts exactly off ONE scan,
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Hamming-1/Hamming-2 mix, rolling WAU must honor the 7-day bound, and
   * ann_recall must equal an independently computed set intersection.
   */
-class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
+class Curation6Spec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,12 +21,12 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.codegen.maxFields", "256")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("profile_columns: exact null/distinct/min/max off a planted frame") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6prof").toString
+    val dir = tempDir("graft-c6prof").toString
     Seq((1L, "b", "en", "s1", 1L), (2L, "a", "en", "s2", 1L),
       (3L, null.asInstanceOf[String], "en", "s1", 0L), (4L, "a", "de", "s2", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -50,7 +49,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("fuzzy_join_wildcard: complete on Hamming-1, silent on Hamming-2 and dist-0, no duplicate pairs") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6fuzzy").toString
+    val dir = tempDir("graft-c6fuzzy").toString
     Seq((1L, "ABCD"), (2L, "ABCE"), (3L, "ABFF"), (4L, "XBCD"), (5L, "ABCD"))
       .toDF("c_custkey", "c_name")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
@@ -79,7 +78,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q63_rolling_active: WAU honors the trailing 7-day bound") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6q63").toString
+    val dir = tempDir("graft-c6q63").toString
     val t0 = java.time.LocalDateTime.of(2026, 3, 1, 12, 0, 0)
     Seq(
       (1L, t0, 1L), (2L, t0, 2L),              // day d0: u1, u2
@@ -100,7 +99,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q64_retention_cohorts: first-active day defines the cohort; a day counts once per user") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6q64").toString
+    val dir = tempDir("graft-c6q64").toString
     val t0 = java.time.LocalDateTime.of(2026, 3, 1, 8, 0, 0)
     Seq(
       (1L, t0, 1L), (2L, t0.plusHours(5), 1L), // u1 twice on d0 -> one count
@@ -131,7 +130,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("heavy_hitters: strict threshold on a planted near-boundary mix") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6hh").toString
+    val dir = tempDir("graft-c6hh").toString
     // 200 tokens total: 'a' x2 (2*200 > 200: heavy), 'b' x1 (1*200 == 200:
     // strict -> NOT heavy), 197 distinct fillers
     val text = (Seq("a", "a", "b") ++ (1 to 197).map(i => s"f$i")).mkString(" ")
@@ -152,7 +151,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("pipeline_e2e: every stage bites — quality gate, exact dedup, eval decontamination") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6e2e").toString
+    val dir = tempDir("graft-c6e2e").toString
     def words(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
     val keep1 = words("w", 25)                          // survives, source s1
     val leakyTail = words("q", 8)
@@ -175,7 +174,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("emb_top_pc: exact fixed point on a planted rank-1 matrix") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6pc").toString
+    val dir = tempDir("graft-c6pc").toString
     // rows are multiples of u = (0.5, -0.25, 0.25, 0...): every entry an
     // exact binary fraction, so the micro quantization is lossless and
     // the iteration must land on floor(u_j / |u|_1 * 1e6) EXACTLY and
@@ -198,7 +197,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q65_skyline: dominance ties, same-price shadowing, and the cross-bucket seed") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6sky").toString
+    val dir = tempDir("graft-c6sky").toString
     val t0 = java.time.LocalDateTime.of(2026, 4, 1, 0, 0, 0)
     def ts(min: Int) = t0.plusMinutes(min)
     Seq(
@@ -222,7 +221,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     import graft.queries.Relational3
-    val dir = Files.createTempDirectory("graft-c6skywide").toString
+    val dir = tempDir("graft-c6skywide").toString
     val t0 = java.time.LocalDateTime.of(2026, 4, 1, 0, 0, 0)
     // prices span [1, 1e9] — the range that quietly grew the collected
     // array under the old fixed 10k bucket width (would be 100k rows)
@@ -254,7 +253,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("ab_test_report: hand-computed Welch t on a planted two-bucket frame") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6ab").toString
+    val dir = tempDir("graft-c6ab").toString
     val t0 = java.time.LocalDateTime.of(2026, 4, 1, 0, 0, 0)
     Seq(
       (1L, t0, 0L, "t", 1.0), (2L, t0, 0L, "t", 2.0), (3L, t0, 0L, "t", 3.0),
@@ -273,7 +272,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("attribution_linear: trailing-hour clicks share credit; same-instant and stale clicks excluded") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6attr").toString
+    val dir = tempDir("graft-c6attr").toString
     val t0 = java.time.LocalDateTime.of(2026, 5, 1, 12, 0, 0)
     Seq(
       (1L, t0.minusMinutes(130), 1L, "click", 0.0),  // outside the hour
@@ -292,7 +291,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("forget_users: the cascade reaches orders and lineitems, and only for requested keys") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6forget").toString
+    val dir = tempDir("graft-c6forget").toString
     // 13 % 97 == 13 and 110 % 97 == 13 are requested; 5 is not
     Seq((13L, "a"), (110L, "b"), (5L, "c")).toDF("c_custkey", "c_name")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
@@ -311,7 +310,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("skew_report: exact power-of-two buckets and hot-key share on planted skew") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6skew").toString
+    val dir = tempDir("graft-c6skew").toString
     val t0 = java.time.LocalDateTime.of(2026, 5, 2, 0, 0, 0)
     val rows = (1 to 8).map(i => (i.toLong, t0, 100L)) ++ // hot key: 8 rows -> bucket 3
       Seq((9L, t0, 200L), (10L, t0, 300L))                // two singletons -> bucket 0
@@ -326,7 +325,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("agg_delta_merge: only delta-touched keys emitted, totals fold base + delta") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6ivm").toString
+    val dir = tempDir("graft-c6ivm").toString
     val t0 = java.time.LocalDateTime.of(2026, 5, 2, 0, 0, 0)
     Seq(
       (1L, t0, 1L, "t", 1.0), (2L, t0, 1L, "t", 2.0),  // base u1: n=2, s=3000
@@ -352,7 +351,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("twa_value: irregular sampling weighted by holding time, last reading carries no weight") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6twa").toString
+    val dir = tempDir("graft-c6twa").toString
     val t0 = java.time.LocalDateTime.of(2026, 5, 3, 0, 0, 0)
     Seq(
       (1L, t0, 1L, 1.0),                 // holds 10 s
@@ -370,7 +369,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("gap_fill_ffill: missing days inherit the latest earlier reading; daily last wins") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6gap").toString
+    val dir = tempDir("graft-c6gap").toString
     val t0 = java.time.LocalDateTime.of(2026, 5, 3, 8, 0, 0)
     Seq(
       (1L, t0, 1L, 1.0),                // day 0, superseded same day
@@ -408,7 +407,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q66_period_movers: deltas vs previous observed year, per-year movement ranks") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6mov").toString
+    val dir = tempDir("graft-c6mov").toString
     def d(y: Int) = java.time.LocalDateTime.of(y, 6, 1, 0, 0, 0)
     Seq((1L, 10L, 100.0, d(2000)), (2L, 10L, 300.0, d(2001)),  // FR: +200
       (3L, 20L, 500.0, d(2000)), (4L, 20L, 550.0, d(2001)))    // DE: +50
@@ -427,7 +426,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q67_cumulative_unique: users count once, on their first day") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6q67").toString
+    val dir = tempDir("graft-c6q67").toString
     val t0 = java.time.LocalDateTime.of(2026, 5, 4, 0, 0, 0)
     Seq(
       (1L, t0, 1L), (2L, t0, 2L),          // day 0: u1, u2 first seen
@@ -444,7 +443,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("emb_pca_project: rank-1 data projects exactly, variance explained = 1e6 ppm") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6proj").toString
+    val dir = tempDir("graft-c6proj").toString
     val u = Array(0.5f, -0.25f, 0.25f) ++ Array.fill(61)(0.0f)
     Seq((1L, u.map(x => x * 1f)), (2L, u.map(x => x * 2f)))
       .toDF("vec_id", "embedding")
@@ -460,7 +459,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("dedup_cluster_stats: singleton row + component histogram on a planted pair") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6ccs").toString
+    val dir = tempDir("graft-c6ccs").toString
     val dup = (1 to 12).map(i => s"tok$i").mkString(" ")
     val other = (1 to 12).map(i => s"zzz$i").mkString(" ")
     Seq((1L, dup, "s1"), (2L, dup, "s1"), (3L, other, "s2"))
@@ -476,7 +475,7 @@ class Curation6Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("source_quality_matrix: verdicts split per source with exact char sums") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c6sqm").toString
+    val dir = tempDir("graft-c6sqm").toString
     val pass = (1 to 25).map(i => s"w$i").mkString(" ")
     Seq((1L, pass, "xx", "s1"), (2L, "a b", "xx", "s1"), (3L, pass, "xx", "s2"))
       .toDF("doc_id", "text", "lang", "source")

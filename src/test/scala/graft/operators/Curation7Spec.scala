@@ -1,18 +1,18 @@
 package graft.operators
 
-import java.nio.file.Files
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Planted-scenario laws for the embedding-curation family: the
   * fixed-point outlier distance replayed exactly in plain JVM integers,
   * the rank-rule flag count, round-robin coverage of the diversity
   * sample, and the bounded-aggregate selection replica.
   */
-class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
+class Curation7Spec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,7 +21,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def hk(x: Long): Long = {
     val hex = MessageDigest.getInstance("MD5").digest(x.toString.getBytes("UTF-8"))
@@ -31,7 +31,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def writeEmb(rows: Seq[(Long, Array[Float], Int)]): String = {
     val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-c7").toString
+    val dir = tempDir("graft-c7").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
@@ -137,7 +137,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("epoch_plan: shares, targets, and the full-epochs/remainder identity replay by hand") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c7e").toString
+    val dir = tempDir("graft-c7e").toString
     // src1 (share 2) has 10-token docs x 3; src2 (share 3) has 5-token docs x 2
     Seq(
       (1L, (1 to 10).map("a" + _).mkString(" "), "src1"),
@@ -166,7 +166,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q69_value_anomaly: only the planted spike day is flagged; the rank-rule medians are exact") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c7an").toString
+    val dir = tempDir("graft-c7an").toString
     // 7 days of value 10.0 + one spike day of 1000.0 for one event type
     val t0 = java.time.LocalDateTime.of(2026, 1, 1, 12, 0, 0)
     val rows = (0 until 7).map { day =>
@@ -187,14 +187,14 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("emb_drift_score: identical slices score zero, a shifted slice scores positive") {
     val s = spark
     import s.implicits._
-    val dirSame = Files.createTempDirectory("graft-c7ds").toString
+    val dirSame = tempDir("graft-c7ds").toString
     // even/odd ids carry identical vectors -> drift numerator must be 0
     val same = (0L until 20L).map(i => (i, Array.fill(4)(0.25f + (i / 2 % 3) * 0.01f), 0))
     same.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dirSame/embeddings.parquet")
     val zero = Curation7.embDriftScore(spark, dirSame).collect().head
     assert(zero.getLong(3) == 0L, s"identical slices must score 0: $zero")
-    val dirShift = Files.createTempDirectory("graft-c7ds2").toString
+    val dirShift = tempDir("graft-c7ds2").toString
     val shifted = (0L until 20L).map { i =>
       val base = if (i % 2 == 0) 0.2f else 0.4f
       (i, Array.fill(4)(base), 0)
@@ -208,7 +208,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("q70_seasonal_baseline: leave-one-out error replays by hand on a planted fortnight") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c7sb").toString
+    val dir = tempDir("graft-c7sb").toString
     val t0 = java.time.LocalDateTime.of(2026, 1, 1, 12, 0, 0)
     // two observations of the same weekday: values 10.0 and 16.0
     val rows = Seq(
@@ -227,7 +227,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val src = "/root/testdata/sf0.001"
-    val dir = Files.createTempDirectory("graft-c7fk").toString
+    val dir = tempDir("graft-c7fk").toString
     for (t <- Seq("region", "nation", "customer", "supplier", "part", "lineitem"))
       spark.read.parquet(s"$src/$t.parquet").write.parquet(s"$dir/$t.parquet")
     val orders = spark.read.parquet(s"$src/orders.parquet")
@@ -318,7 +318,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("vocab_growth_curve: planted first appearances produce the hand-computed curve with explicit zeros") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c7vg").toString
+    val dir = tempDir("graft-c7vg").toString
     // 8 docs = 8 checkpoints; docs 2 and 5..7 introduce nothing new
     Seq(
       (0L, "a b", "s"), (1L, "a c", "s"), (2L, "b c a", "s"), (3L, "d", "s"),
@@ -337,7 +337,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("length_outlier_trim: tails cut by whole buckets, straddling buckets survive") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c7lt").toString
+    val dir = tempDir("graft-c7lt").toString
     // 100 docs, lengths 1..100 (n_chars = doc_id): lowCnt = 5 -> lengths
     // 1..5 cut short, 96..100 cut long
     val base = (1L to 100L).map(i => (i, "x", "srcA", i))
@@ -349,7 +349,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == ((100L, 90L, 5L, 5L, (6L to 95L).sum)), s"uniform lengths: $got")
     // straddling bucket: 10 equal-length docs at the bottom, lowCnt = 5 <
     // bucket mass 10 -> the whole bucket survives (never split mid-bucket)
-    val dir2 = Files.createTempDirectory("graft-c7lt2").toString
+    val dir2 = tempDir("graft-c7lt2").toString
     val tie = (1L to 10L).map(i => (i, "x", "srcA", 3L)) ++
       (11L to 100L).map(i => (i, "x", "srcA", i))
     tie.toDF("doc_id", "text", "source", "n_chars")
@@ -363,7 +363,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("emb_coverage_audit: planted missing vectors and orphans are accounted exactly") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c7cov").toString
+    val dir = tempDir("graft-c7cov").toString
     Seq((1L, "t1", "srcA"), (2L, "t2", "srcA"), (3L, "t3", "srcA"), (4L, "t4", "srcB"))
       .toDF("doc_id", "text", "source")
       .selectExpr("doc_id", "text", "'en' AS lang", "source",
@@ -403,7 +403,7 @@ class Curation7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("dedup_cross_corpus: lower-priority copies cede, same-source dups drop, singletons keep") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-c7x").toString
+    val dir = tempDir("graft-c7x").toString
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     // cluster A: src2 vs src10 copies (1-token mutation) -> src10 cedes
     // cluster B: two src5 copies -> one same-source drop

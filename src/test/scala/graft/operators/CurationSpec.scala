@@ -1,16 +1,15 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Planted-fixture behavior of the curation operators (the oracle gate
   * covers the driver tables; these pin down the semantics on inputs with
   * known answers). */
-class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CurationSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,11 +17,11 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def plantDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-curation").toString
+    val dir = tempDir("graft-curation").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fixture"))
       .withColumn("n_chars", length($"text").cast("long"))
@@ -126,7 +125,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("filter_cascade: first failing rule wins, every stage listed, lang-gated stopword rule") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cascade").toString
+    val dir = tempDir("graft-cascade").toString
     val longTok = "x" * 50
     Seq(
       // too_short (5 tokens)

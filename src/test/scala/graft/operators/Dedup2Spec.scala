@@ -1,17 +1,16 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Planted-fixture behavior for the second-generation dedup operators and
   * the training-order layout: properties the corpus-level oracle check
   * can't pin down (WHICH text is boilerplate, WHICH vector of a dup pair
   * survives, shard-layout invariants). */
-class Dedup2Spec extends AnyFunSuite with BeforeAndAfterAll {
+class Dedup2Spec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,13 +18,13 @@ class Dedup2Spec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
   private def plantDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-d2docs").toString
+    val dir = tempDir("graft-d2docs").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fixture"))
       .withColumn("n_chars", length($"text").cast("long"))

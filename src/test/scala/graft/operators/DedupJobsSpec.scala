@@ -1,13 +1,13 @@
 package graft.operators
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Job-count laws for the CC fixpoint ([[Dedup.dedupClusters]]) and the
   * survivor-selection overload.
@@ -23,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * an action into per-stage jobs; broadcast exchanges submit their own
   * collect jobs), making the law an equality, not a bound.
   */
-class DedupJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DedupJobsSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -33,11 +33,11 @@ class DedupJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.autoBroadcastJoinThreshold", "-1")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def plantDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-jobsdocs").toString
+    val dir = tempDir("graft-jobsdocs").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fixture"))
       .withColumn("n_chars", length($"text").cast("long"))

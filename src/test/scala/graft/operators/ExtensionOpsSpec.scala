@@ -2,17 +2,17 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions._
 import graft.functions.SimHash
+import graft.SuiteTempDirs
 
 /** Behavioral specs for the training-pipeline operators on planted
   * fixtures (the oracle gate covers the driver tables; these cover the
   * properties the oracle can't express: simhash locality, LSH recall,
   * lang-id accuracy, decoder lifecycle). */
-class ExtensionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtensionOpsSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -20,7 +20,7 @@ class ExtensionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -115,7 +115,7 @@ class ExtensionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // strictly below it — the asymmetric distance is exact w.r.t. the
     // quantized representation. Plant copies under fresh high vec_ids
     // (the probe set is the 64 LOWEST ids, so probes are unchanged).
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqann").toString
+    val dir = tempDir("graft-pqann").toString
     val base = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", $"embedding")
     val maxId = base.agg(max($"vec_id")).head().getLong(0)
@@ -165,7 +165,7 @@ class ExtensionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("decontaminate_emb: planted leak counted, clean eval vector still reports zero") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb-decon").toString
+    val dir = tempDir("graft-emb-decon").toString
     val rnd = new scala.util.Random(11)
     def vec(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
     // eval ids are % 10 == 7: id 7 gets an exact train copy (id 3 -> sim
@@ -190,7 +190,7 @@ class ExtensionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dedup_embedding_cosine finds planted near-dups without a cartesian plan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
+    val dir = tempDir("graft-emb").toString
     val rnd = new scala.util.Random(7)
     def vec(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
     val base = vec()
@@ -211,7 +211,7 @@ class ExtensionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dedup_embedding_cosine_gate stages planted pairs without touching the operator") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb-gate").toString
+    val dir = tempDir("graft-emb-gate").toString
     val rnd = new scala.util.Random(7)
     def vec(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
     val base = vec()

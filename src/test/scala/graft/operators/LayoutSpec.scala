@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
 import graft.queries.Layout
 
 /** Plan-shape laws for the storage-layout queries: the whole point of
@@ -13,7 +13,7 @@ import graft.queries.Layout
   * what these tests pin down (the values are gated by the DuckDB oracle
   * against the un-rewritten tables).
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LayoutSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +23,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.codegen.maxFields", "256")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -179,7 +179,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hash("Aa") == hash("BB"), so <base>/Aa and <base>/BB collide under
     // the 32-bit String.hashCode that used to name the catalog tables —
     // the second dir would silently read the first dir's bucketed data
-    val base = java.nio.file.Files.createTempDirectory("graft-collide")
+    val base = tempDir("graft-collide")
     val (dirA, dirB) = (s"$base/Aa", s"$base/BB")
     assert(dirA.hashCode == dirB.hashCode, "fixture must collide under String.hashCode")
 
@@ -279,7 +279,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     val narrow = $"event_id".between(100, 200)
     val zRead = readRows(zdir, narrow)
 
-    val bdir = java.nio.file.Files.createTempDirectory("graft-zorder-io-baseline").toString
+    val bdir = tempDir("graft-zorder-io-baseline").toString
     try {
       spark.read.parquet(s"$sf/events.parquet")
         .repartitionByRange(Layout.ZorderFiles, $"user_id")
@@ -311,7 +311,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
     // negative control for the span metric: range-partition by user_id
     // alone, and event_id must stay near-global-width in every file —
     // the shape z-order exists to avoid
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder-baseline").toString
+    val dir = tempDir("graft-zorder-baseline").toString
     try {
       spark.read.parquet(s"$sf/events.parquet")
         .repartitionByRange(Layout.ZorderFiles, $"user_id")

@@ -5,15 +5,16 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Train-once / query-many laws for the [[Models]] artifact store
   * (r11 VERDICT "Next round" item 3): the second invocation of an ANN
   * query in a JVM must reuse the committed artifact — zero training
   * jobs — and a torn artifact must retrain instead of being served.
   */
-class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ModelsSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +25,7 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def beforeAll(): Unit = Models.reset()
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -84,7 +85,7 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("regenerating data under the same path changes the cache key") {
-    val dir = Files.createTempDirectory("graft-fp").toString
+    val dir = tempDir("graft-fp").toString
     Files.write(Paths.get(dir, "part-0.parquet"), Array[Byte](1, 2, 3))
     val fp1 = Models.inputFingerprint(dir)
     assert(fp1 === Models.inputFingerprint(dir), "fingerprint must be stable")

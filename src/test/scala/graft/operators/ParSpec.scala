@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Laws for [[Par.spread]], the fixture-parallelism guard that replaced
   * the unconditional `repartition(key)` shims operators used to carry
@@ -13,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * that exists at production scale — passes through with the IDENTICAL
   * plan, no corpus-wide shuffle.
   */
-class ParSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ParSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -26,14 +27,14 @@ class ParSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.files.openCostInBytes", "0")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
   /** The single-file documents fixture re-written as 8 parquet files —
     * the shape a production scan always has. */
   private lazy val multiSplitDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-presplit").toString
+    val dir = tempDir("graft-presplit").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .repartition(8, col("doc_id"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -1,13 +1,11 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Relational2
+import graft.SuiteTempDirs
 
 /** Round-2 operator specs: properties the DuckDB oracle can't express —
   * planted-fixture behavior (CC transitivity, redaction, quantization
@@ -15,7 +13,7 @@ import graft.queries.Relational2
   * assertions (the time-series joins must never degenerate into a
   * nested-loop join, which is the difference between running and not
   * running at 100 TB). */
-class Round2OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Round2OpsSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +21,7 @@ class Round2OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -31,7 +29,7 @@ class Round2OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     * run on fixture content. */
   private def plantDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-r2docs").toString
+    val dir = tempDir("graft-r2docs").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fixture"))
       .withColumn("n_chars", length($"text").cast("long"))
@@ -427,7 +425,7 @@ class Round2OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("source_centroids: exact per-source per-dim means, docs without embeddings excluded") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-srccent").toString
+    val dir = tempDir("graft-srccent").toString
     Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "c"))
       .toDF("doc_id", "source")
       .withColumn("text", lit("t")).withColumn("lang", lit("en"))
@@ -460,7 +458,7 @@ class Round2OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q56_funnel: strict order required, same-microsecond is not 'after', zeros report") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-funnel").toString
+    val dir = tempDir("graft-funnel").toString
     val us = 1000L // one microsecond in nanos
     Seq(
       (1L, "view", 1 * us), (1L, "click", 2 * us), (1L, "purchase", 3 * us), // full funnel
@@ -505,7 +503,7 @@ class Round2OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("domain_cap_sample: over-cap domain thinned, under-cap kept whole, layout-invariant") {
     import spark.implicits._
     def plant(partitions: Int): String = {
-      val dir = Files.createTempDirectory("graft-capsample").toString
+      val dir = tempDir("graft-capsample").toString
       val rows = (1L to 400L).map(i => (i, s"big doc $i", "big")) ++
         (401L to 450L).map(i => (i, s"small doc $i", "small"))
       val df = rows.toDF("doc_id", "text", "lang")

@@ -1,11 +1,11 @@
 package graft.operators
 
-import java.nio.file.Files
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Planted-scenario laws for the sampling/splitting family: consistency
   * under corpus growth, stratum bounds, the A-ES weighting arithmetic
@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * split, and the K-heap plan shape (TakeOrderedAndProject, no global
   * sort) the scale claims rest on.
   */
-class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SamplingSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -22,7 +22,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** The shared md5-prefix hash key, replayed in plain JVM. */
   private def hk(x: Long): Long = {
@@ -33,7 +33,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def writeDocs(rows: Seq[(Long, String, String, String, Long)]): String = {
     val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-sampling").toString
+    val dir = tempDir("graft-sampling").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -83,7 +83,7 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("split_leakage_safe: no near-dup pair straddles a split; buckets cut 80/10/10") {
     val s = spark; import s.implicits._
     // the scale harness's planted corpus: known near-dup components
-    val dir = Files.createTempDirectory("graft-sampsplit")
+    val dir = tempDir("graft-sampsplit")
     graft.PerfHarness.synthCorpus(spark, dir, nDocs = 2000, nVecs = 10)
     val d = dir.toString
     val report = Sampling.splitLeakageSafe(spark, d).collect()

@@ -1,11 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Scale-pattern evidence the gate queries can't show directly:
   * bucketing removes the join shuffle entirely (the co-located-join
@@ -14,9 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * foreachBatch gives an idempotent, batch-id-addressed sink (the
   * exactly-once output story).
   */
-class ScalePatternsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScalePatternsSpec extends AnyFunSuite with SuiteTempDirs {
 
-  private lazy val warehouse = Files.createTempDirectory("graft-wh").toString
+  private lazy val warehouse = tempDir("graft-wh").toString
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -28,7 +27,7 @@ class ScalePatternsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.autoBroadcastJoinThreshold", "-1")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -98,7 +97,7 @@ class ScalePatternsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partitioned layout prunes partitions at the scan") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-part").toString
+    val out = tempDir("graft-part").toString
     spark.read.parquet(s"$sf/events.parquet")
       .write.partitionBy("event_type").mode("overwrite").parquet(out)
     val purchases = spark.read.parquet(out).filter($"event_type" === "purchase")
@@ -112,12 +111,12 @@ class ScalePatternsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dynamic partition pruning fires on a dim-filtered join") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-dpp").toString
+    val out = tempDir("graft-dpp").toString
     spark.read.parquet(s"$sf/events.parquet")
       .write.partitionBy("event_type").mode("overwrite").parquet(out)
     // dim must come from a real source: a filter over a LocalRelation is
     // constant-folded away and DPP no longer sees a selective predicate
-    val dimPath = Files.createTempDirectory("graft-dpp-dim").toString
+    val dimPath = tempDir("graft-dpp-dim").toString
     Seq(("purchase", 1), ("click", 2), ("view", 3)).toDF("et", "w")
       .write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath)
@@ -138,7 +137,7 @@ class ScalePatternsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("nested schema pruning reads only the selected struct field") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-nest").toString
+    val out = tempDir("graft-nest").toString
     spark.read.parquet(s"$sf/orders.parquet")
       .select($"o_orderkey", struct($"o_totalprice".as("price"),
         $"o_orderpriority".as("prio"), $"o_orderstatus".as("st")).as("info"))
@@ -152,10 +151,10 @@ class ScalePatternsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("foreachBatch sink writes batch-id-addressed output idempotently") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-fb").toString
+    val out = tempDir("graft-fb").toString
     val input = spark.read.parquet(s"$sf/events.parquet")
       .select($"event_id", $"event_type").limit(100)
-    val stage = Files.createTempDirectory("graft-fb-in").toString
+    val stage = tempDir("graft-fb-in").toString
     input.coalesce(1).write.mode("overwrite").parquet(stage)
 
     val stream = spark.readStream.schema(input.schema).parquet(stage)

@@ -1,17 +1,16 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Laws for the KMV sketches: below K the sketch IS the set (estimates
   * and overlaps exact), above K the estimator engages and stays inside
   * a sane band, and the merged-sketch jaccard hits the closed-form
   * values for planted identical / disjoint sources.
   */
-class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchesSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -21,12 +20,12 @@ class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.codegen.maxFields", "256")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def stageDocs(rows: Seq[(Long, String, String)]): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-kmv").toString
+    val dir = tempDir("graft-kmv").toString
     rows.toDF("doc_id", "text", "source")
       .selectExpr("doc_id", "text", "'en' AS lang", "source",
         "CAST(length(text) AS BIGINT) AS n_chars")

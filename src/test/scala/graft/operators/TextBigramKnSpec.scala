@@ -2,15 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{length, lit}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Hand-computed pin for [[TextAnalysis.textBigramKn]]: a corpus small
   * enough to evaluate the interpolated-KN estimate on paper, so the
   * implementation's count tables and probability formula are checked
   * against arithmetic, not against themselves (the oracled gate row
   * checks Spark-vs-DuckDB agreement; this checks both against MATH). */
-class TextBigramKnSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TextBigramKnSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,11 +19,11 @@ class TextBigramKnSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def plantDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-kn").toString
+    val dir = tempDir("graft-kn").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fixture"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -3,8 +3,9 @@ package graft.queries
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Crash-window assertions for generation compaction
   * ([[StreamPlans.compactGenerations]] + the `_compacted_upto` replay
@@ -27,7 +28,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the standing row multiset — the quantity whose duplication breaks
   * bucket-local candidate ranking downstream.
   */
-class CompactionReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
+class CompactionReplaySpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -36,7 +37,7 @@ class CompactionReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** The exact per-batch generation write the streaming harness does,
     * including its replay guard. */
@@ -56,7 +57,7 @@ class CompactionReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).resolve("standing").toString
+    tempDir(prefix).resolve("standing").toString
 
   test("compaction folds gens, advances the marker, and replay skips") {
     val d = tmp("graft-compact-basic")

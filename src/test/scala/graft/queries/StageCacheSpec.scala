@@ -3,8 +3,9 @@ package graft.queries
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Laws for the streaming-gate staged-fixture store (r21 verdict item 1:
   * cut the stream family's non-semantic fixed cost). The store must
@@ -12,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fingerprint) per JVM, re-stage when the input files change, and
   * record the staging wall per gate row so the bench record can print
   * the staging/query split. */
-class StageCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StageCacheSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -21,12 +22,12 @@ class StageCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("same key reuses the staged dir; the write runs once") {
     val s = spark
     import s.implicits._
-    val src = Files.createTempDirectory("graft-scs-src").toString
+    val src = tempDir("graft-scs-src").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("overwrite").parquet(src)
     var builds = 0
     def stage(): String =
@@ -46,7 +47,7 @@ class StageCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a changed input fixture re-stages under the same logical key") {
     val s = spark
     import s.implicits._
-    val src = Files.createTempDirectory("graft-scs-src2").toString
+    val src = tempDir("graft-scs-src2").toString
     Seq((1L, "a")).toDF("id", "v").write.mode("overwrite").parquet(src)
     def stage(): String =
       StageCache.dir("scs_gate2", s"scs2|$src|hash:1:id", Seq(src)) { out =>
@@ -65,10 +66,10 @@ class StageCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("copyParquet duplicates exactly the data files") {
     val s = spark
     import s.implicits._
-    val a = Files.createTempDirectory("graft-scs-a").toString
+    val a = tempDir("graft-scs-a").toString
     Seq((1L, "x"), (2L, "y")).toDF("id", "v").coalesce(1)
       .write.mode("overwrite").parquet(a)
-    val b = Files.createTempDirectory("graft-scs-b").toString + "/copy"
+    val b = tempDir("graft-scs-b").toString + "/copy"
     StageCache.copyParquet(a, b)
     val aFiles = new java.io.File(a).listFiles().filter(_.getName.endsWith(".parquet"))
     val bFiles = new java.io.File(b).listFiles().filter(_.getName.endsWith(".parquet"))

@@ -1,12 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Measured state-size invariance for the always-on streaming monitors.
   *
@@ -20,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-event cell, a missing aggregate pushdown) fails here with the
   * two measured counts in the message.
   */
-class StateInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StateInvarianceSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -29,7 +28,7 @@ class StateInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val Users = 20
   private val Types = Array("view", "click", "cart", "purchase", "error")
@@ -43,7 +42,7 @@ class StateInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def writeEvents(n: Int): String = {
     require(n <= 2000, "ids must stay under the streaming-harness CUTOFF")
     val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-sinv").toString
+    val dir = tempDir("graft-sinv").toString
     (0 until n).map { i =>
       val tsUs = BaseUs + ((i / 5) % Days).toLong * 86400000000L + i.toLong * 1000L
       (i.toLong, tsUs, (i % Users).toLong, Types(i % Types.length),
@@ -59,7 +58,7 @@ class StateInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** `n` vectors over a fixed `Labels`-label, `Dim`-dim domain. */
   private def writeEmbeddings(n: Int): String = {
     val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-sinv-emb").toString
+    val dir = tempDir("graft-sinv-emb").toString
     (0 until n).map { i =>
       (i.toLong, Array.tabulate(Dim)(p => 0.01f * ((i + p) % 50)), i % Labels)
     }.toDF("vec_id", "embedding", "label")
@@ -214,7 +213,7 @@ class StateInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("compaction marker makes a replayed batch's generation write a no-op") {
-    val dir = Files.createTempDirectory("graft-upto").toString
+    val dir = tempDir("graft-upto").toString
     // virgin dir: nothing covered, every id writes
     assert(StreamPlans.compactedUpto(dir) == -1L)
     // compaction at batch 4 folds gens 0..4 away
@@ -241,7 +240,7 @@ class StateInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
     * volume-invariance fixture. */
   private def writeDocs(n: Int): String = {
     val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-sinv-docs").toString
+    val dir = tempDir("graft-sinv-docs").toString
     (0 until n).map { i =>
       val text = s"tok${i % 7} tok${(i * 3) % 11} w${i % 13} end"
       (i.toLong, text, if (i % 3 == 0) "en" else "de",

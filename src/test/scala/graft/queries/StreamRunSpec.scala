@@ -1,19 +1,17 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
 import graft.sources.InMemoryQueueRegistry
 import StreamRun.Feed
 
 /** Lifecycle laws of the stream-row runner: a run releases every queue
   * it registered and its checkpoint dir whether the query succeeds or
   * fails, and a file announced twice lands its rows once. */
-class StreamRunSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamRunSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -22,13 +20,13 @@ class StreamRunSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val schema = StructType(Seq(StructField("id", LongType)))
 
   /** Ids 0..39 staged as 4 parquet files. */
   private lazy val stage: String = {
-    val d = Files.createTempDirectory("graft-streamrun-spec").resolve("ids").toString
+    val d = tempDir("graft-streamrun-spec").resolve("ids").toString
     spark.range(0L, 40L, 1L, 4).toDF("id").write.parquet(d)
     d
   }

@@ -1,10 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SuiteTempDirs
 
 /** Fixture-schema guard laws (r12 VERDICT "Next round" item 3): a
   * regenerated fixture whose dtypes drift must fail LOUDLY, naming the
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dtype-dispatched [[Tables.tsUs]] derivation both the relational and
   * streaming surfaces share.
   */
-class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TablesSpec extends AnyFunSuite with SuiteTempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +22,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.codegen.maxFields", "256")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("driver fixtures pass the schema guard") {
     val s = spark
@@ -35,7 +34,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a wrong-typed fixture fails loudly naming the drifted column") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift").toString
     // events.ts as STRING — a dtype no generation ever shipped
     Seq((1L, "2024-01-01 00:00:00", 7L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -49,7 +48,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val us = 1709618828123456L
-    val dir = Files.createTempDirectory("graft-legacy-events").toString
+    val dir = tempDir("graft-legacy-events").toString
     Seq((1L, us * 1000L, 7L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

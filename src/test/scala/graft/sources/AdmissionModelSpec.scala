@@ -7,6 +7,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** Model-based property of admission plus the file log: random sequences
   * of announcements, triggers, commits and restarts drive `FileCache` +
   * `FileValidator` + `FileBackedMetadataLog` and a pure in-memory model

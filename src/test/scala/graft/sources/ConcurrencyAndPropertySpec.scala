@@ -8,6 +8,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** Concurrency semantics of the cache insert and of admission racing a
   * trigger, and generator-driven coverage of the option parser
   * (going a step past the reference's example-based suites, SURVEY §5).

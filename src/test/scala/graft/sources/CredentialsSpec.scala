@@ -97,43 +97,7 @@ class CredentialsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("ProfileCredentialsProvider"))
   }
 
-  test("retry wrapper retries transient failures then surfaces the final error") {
-    var attempts = 0
-    val flaky = new ConnectorCredentialsProvider {
-      override def resolve(): QueueCredentials = {
-        attempts += 1
-        if (attempts < 3) throw new GraftNoCredentialsException("warming up")
-        QueueCredentials("OK", "OK")
-      }
-    }
-    assert(new RetryableCredentialsProvider(flaky, maxAttempts = 10, sleepMs = 1)
-      .resolve().accessKeyId == "OK")
-    assert(attempts == 3)
-
-    var always = 0
-    val dead = new ConnectorCredentialsProvider {
-      override def resolve(): QueueCredentials = { always += 1; throw new GraftNoCredentialsException("down") }
-    }
-    intercept[GraftNoCredentialsException] {
-      new RetryableCredentialsProvider(dead, maxAttempts = 4, sleepMs = 1).resolve()
-    }
-    assert(always == 5, "maxAttempts retries after the initial attempt")
-  }
-
-  test("builder shapes: static, profile, default chain; chain is serializable") {
-    val fixed = ConnectorCredentialsProvider.builder
-      .staticCredentials(QueueCredentials("A", "B")).build()
-    assert(fixed.resolve() == QueueCredentials("A", "B"))
-
-    val f = Files.createTempFile("graft-creds2", ".ini")
-    Files.write(f, "[default]\naws_access_key_id=P\naws_secret_access_key=Q\n"
-      .getBytes(StandardCharsets.UTF_8))
-    try {
-      val viaProfile = ConnectorCredentialsProvider.builder
-        .profile(path = Some(f.toString)).build()
-      assert(viaProfile.resolve() == QueueCredentials("P", "Q", None))
-    } finally Files.delete(f)
-
+  test("the default chain is serializable") {
     // executors receive the provider through closure serialization
     val bytes = new ByteArrayOutputStream()
     val oos = new ObjectOutputStream(bytes)

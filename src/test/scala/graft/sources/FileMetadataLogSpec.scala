@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** Checkpoint file manager whose atomic `.compact` streams throw once
   * `FailingCompactFileManager.LimitKey` bytes have been written: a crash
   * in the middle of writing a compact. Installed through Spark's

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** End-to-end streaming over the push-based source: files announced
   * through the in-memory queue, read via `readStream.format("graft-files")`,
   * checked through a memory sink. Covers the reference IT suite's core

@@ -7,6 +7,8 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** Replay semantics (reference: S3ConnectorSource.scala:112-154 +
   * S3ConnectorSourceItSuite reprocess scenarios): dry-run lists and
   * aborts, in-action re-emits committed batches as new batch ids behind

@@ -9,6 +9,8 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** Sink + trigger surface the reference exercises that the gate queries
   * don't: row-level ForeachWriter (reference TestForeachWriter.scala:24-34),
   * csv file sink (DataConsumer.scala:72-79), ProcessingTime / Once

@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** End-to-end: the full streaming source fed over the SQS WIRE protocol —
   * queue notifications served by the in-process protocol stub, fetched by
   * the SigV4-signed HTTP client, admitted exactly-once, and read through a

@@ -7,6 +7,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** Custom stateful processing over the push-based source:
   * `mapGroupsWithState` keeps per-key state across the micro-batches the
   * connector produces (the Structured Streaming capability SURVEY §2.2

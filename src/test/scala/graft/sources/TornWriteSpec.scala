@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SuiteTempDirs
+
 /** Torn-write fault injection on the metadata log (reference
   * discipline: RocksDBFileManager's atomic-rename + recover-previous-
   * version handling, RocksDBFileManager.scala:244-312,435-466).
