@@ -248,10 +248,11 @@ object PerfHarness {
     * the SAME pre-generated backlog once per `maxFilesPerTrigger`
     * setting, push source vs listing source. If the push side's bulk
     * gap closes as triggers get bigger, the gap is per-trigger fixed
-    * cost (query planning + `resolveRelation` per micro-batch), not
-    * per-file work — and a bulk-replay user can turn the same knob the
-    * reference documents (DataConsumer.scala:28 precedent). Each config
-    * validates row counts. */
+    * cost (query planning and the sink commit of each micro-batch;
+    * `getBatch` stats the batch's files on the driver and starts no
+    * listing job), not per-file work — and a bulk-replay user can turn
+    * the same knob the reference documents (DataConsumer.scala:28
+    * precedent). Each config validates row counts. */
   def bulkSweep(spark: SparkSession, nFiles: Int, rowsPerFile: Int,
       mfpts: Seq[Int]): String = TempDirs.using { dirs =>
     val root = Paths.get(dirs.create("graft-bulk"))
@@ -690,6 +691,14 @@ object PerfHarness {
     *     48000 x 10 x 5000,16000,48000);
     * or: ccsoak [baseDocs] [nDeltas] [deltaFrac] (defaults
     *     50000 x 8 x 0.05 — multi-delta incremental-CC soak). */
+  /** Print a validated mode's JSON line; exit 1 when any of its series
+    * failed validation, as the default mode does, so a wrong drain is never
+    * read as a timing. */
+  private def emit(json: String): Unit = {
+    println(json)
+    if (json.contains(""""valid":false""")) sys.exit(1)
+  }
+
   def main(args: Array[String]): Unit = {
     val soakMode = args.headOption.contains("soak")
     val layoutMode = args.headOption.contains("layout")
@@ -707,7 +716,7 @@ object PerfHarness {
         val rounds = args.lift(2).map(_.toInt).getOrElse(3)
         val sfDir = args.lift(3)
           .orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse("/root/testdata/sf0.1")
-        println(layoutSoak(spark, sfDir, sessions, rounds))
+        emit(layoutSoak(spark, sfDir, sessions, rounds))
       } else if (scaleMode) {
         // SPARK_GRAFT_FORCE_SMJ=1 pins every equi-join to the shuffle
         // regime (no planner or AQE broadcast). The fixture corpora are
@@ -730,13 +739,13 @@ object PerfHarness {
         val backlogs = args.lift(1).getOrElse("1000,4000,12000")
           .split(",").toSeq.map(_.trim.toInt)
         val rows = args.lift(2).map(_.toInt).getOrElse(10)
-        println(soak(spark, backlogs, rows))
+        emit(soak(spark, backlogs, rows))
       } else if (bulkMode) {
         val n = args.lift(1).map(_.toInt).getOrElse(48000)
         val rows = args.lift(2).map(_.toInt).getOrElse(10)
         val mfpts = args.lift(3).getOrElse("5000,16000,48000")
           .split(",").toSeq.map(_.trim.toInt)
-        println(bulkSweep(spark, n, rows, mfpts))
+        emit(bulkSweep(spark, n, rows, mfpts))
       } else if (ccSoakMode) {
         val nBase = args.lift(1).map(_.toLong).getOrElse(50000L)
         val nDeltas = args.lift(2).map(_.toInt).getOrElse(8)

@@ -12,7 +12,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.connector.read.streaming.{Offset => ConnectorOffset, ReadLimit, ReportsSourceMetrics, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceOffset
@@ -26,9 +26,12 @@ import org.apache.spark.sql.types.StructType
   * micro-batch, file paths arrive as queue notifications, are validated
   * and deduplicated against an in-memory cache + persistent metadata log,
   * and each trigger commits an offset = one durable batch of file paths.
-  * Row reading is fully delegated to Spark's DataSource/FileFormat
-  * machinery, so Catalyst pushdown/pruning and the vectorized parquet
-  * reader apply downstream unchanged.
+  * `getBatch` does not discover the files a second time: [[BatchRelation]]
+  * stats the batch's paths on the driver and builds the relation over
+  * those statuses, so no Spark listing job runs however many files a
+  * batch holds. Row reading is fully delegated to Spark's file index and
+  * FileFormat machinery, so Catalyst pushdown/pruning and the vectorized
+  * parquet reader apply downstream unchanged.
   *
   * Scale notes (100 TB): driver state is file *metadata* only: the
   * pending set is bounded by ingest lag, the log's index by the
@@ -63,6 +66,7 @@ class GraftFileSource(
   private val metadataLog: FileMetadataLog = new FileBackedMetadataLog(metadataPath, hadoopConf)
   private val fileCache = new FileCache(options.maxFileAgeMs, metadataLog.newestTimestampMs)
   private val validator = new FileValidator(fileCache, metadataLog, options.pathGlobFilter)
+  private val batchRelation = new BatchRelation(spark, options, userSchema)
 
   // restore the offset from the persisted log (exactly-once on restart)
   private var metadataLogCurrentOffset: Long = metadataLog.getLatestBatchId.getOrElse(-1L)
@@ -271,21 +275,12 @@ class GraftFileSource(
     // second glob enforcement point (reference: S3ConnectorSource.scala:186-191)
     val paths = entries.map(_.path).filter(validator.matchesGlob).toSeq
     logInfo(s"getBatch ($startId, $endId]: ${paths.length} files")
+    // the relation is built over driver-side stats of exactly these paths
+    // (no listing job); an announced directory is still listed
     if (paths.isEmpty) {
       GraftShims.emptyStreamingDataFrame(spark, userSchema)
     } else {
-      val formatOptions = options.formatOptions ++
-        options.basePath.map("basePath" -> _)
-      val relation = DataSource(
-        sparkSession = spark,
-        className = options.fileFormat,
-        paths = paths,
-        userSpecifiedSchema = Some(userSchema),
-        partitionColumns = options.partitionColumns.getOrElse(Nil),
-        options = formatOptions
-        // the queue told us these files exist: skip per-file existence RPCs
-      ).resolveRelation(checkFilesExist = false)
-      GraftShims.ofRows(spark, LogicalRelation(relation, isStreaming = true))
+      GraftShims.ofRows(spark, LogicalRelation(batchRelation(paths), isStreaming = true))
     }
   }
 

@@ -64,6 +64,21 @@ class InMemoryQueueSpec extends AnyFunSuite {
     assert(q.approximateSize == 0)
   }
 
+  test("delivery follows send order; a redelivered message rejoins at its send position") {
+    val q = new InMemoryQueue("order")
+    val ids = (0 until 6).map(i => q.send(s"m$i"))
+    assert(q.receive(2, 60).map(_.body) == Seq("m0", "m1"))
+    assert(q.receive(1, 60).map(_.body) == Seq("m2"))
+    // m1 and m0 come back due (m1 first), m2 is deleted, m3.. never left
+    assert(q.changeVisibility(ids(1), 0) && q.changeVisibility(ids(0), 0) && q.delete(ids(2)))
+    assert(q.receive(10, 60).map(_.body) == Seq("m0", "m1", "m3", "m4", "m5"))
+    assert(q.receive(10, 60).isEmpty)
+    // a re-armed in-flight message stays hidden until its new due time
+    assert(q.changeVisibility(ids(4), 60) && q.changeVisibility(ids(5), 0))
+    assert(q.receive(10, 60).map(_.body) == Seq("m5"))
+    assert(q.approximateSize == 5)
+  }
+
   test("client fetch loop: consumes all, stops on empty round, counts metrics") {
     val q = InMemoryQueueRegistry.queue("fetch-1")
     q.clear()
