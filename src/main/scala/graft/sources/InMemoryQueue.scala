@@ -16,18 +16,8 @@ import scala.util.control.NonFatal
   * unit tests, per SURVEY §5).
   */
 final class InMemoryQueue(val name: String) extends RawQueue {
-  private final class Stored(val message: QueueMessage, val seq: Long, var visibleAtMs: Long)
-  private val byId = new java.util.HashMap[String, Stored]()
-  // Every stored message sits in exactly one of these: visible ones by send
-  // order, in-flight ones by (visibleAtMs, send order). A receive moves the
-  // due in-flight ones back and takes from the front, so it costs
-  // O(batch log n) however many messages are in flight.
-  private val visible = new java.util.TreeMap[java.lang.Long, Stored]()
-  private val inFlight = new java.util.TreeSet[Stored]((a: Stored, b: Stored) => {
-    val c = java.lang.Long.compare(a.visibleAtMs, b.visibleAtMs)
-    if (c != 0) c else java.lang.Long.compare(a.seq, b.seq)
-  })
-  private var sent = 0L
+  private case class Stored(message: QueueMessage, var visibleAtMs: Long)
+  private val byId = new java.util.LinkedHashMap[String, Stored]()
 
   /** Chaos hook: while true, every receive throws — simulates a queue
     * endpoint outage for error-budget tests. */
@@ -39,68 +29,44 @@ final class InMemoryQueue(val name: String) extends RawQueue {
 
   def send(body: String): String = synchronized {
     val id = UUID.randomUUID().toString
-    val s = new Stored(QueueMessage(id, body), sent, 0L)
-    sent += 1
-    byId.put(id, s)
-    visible.put(s.seq, s)
+    byId.put(id, Stored(QueueMessage(id, body), 0L))
     id
   }
 
-  /** Up to max currently-visible messages, oldest sent first; each becomes
-    * invisible for visibilityTimeoutSeconds (at-least-once: undeleted
-    * messages come back). */
+  /** Up to max currently-visible messages; each becomes invisible for
+    * visibilityTimeoutSeconds (at-least-once: undeleted messages come back). */
   override def receive(max: Int, visibilityTimeoutSeconds: Int): Seq[QueueMessage] = synchronized {
     if (failReceives) throw new RuntimeException(s"injected receive failure on queue '$name'")
     val now = System.currentTimeMillis()
-    while (!inFlight.isEmpty && inFlight.first.visibleAtMs <= now) {
-      val s = inFlight.pollFirst()
-      visible.put(s.seq, s)
-    }
     val out = mutable.ArrayBuffer[QueueMessage]()
-    while (out.size < max && !visible.isEmpty) {
-      val s = visible.pollFirstEntry().getValue
-      hide(s, now + visibilityTimeoutSeconds * 1000L)
-      out += s.message
+    val it = byId.values().iterator()
+    while (it.hasNext && out.size < max) {
+      val s = it.next()
+      if (s.visibleAtMs <= now) {
+        s.visibleAtMs = now + visibilityTimeoutSeconds * 1000L
+        out += s.message
+      }
     }
     out.toSeq
   }
 
-  private def hide(s: Stored, untilMs: Long): Unit = {
-    s.visibleAtMs = untilMs
-    inFlight.add(s)
-  }
-
-  /** Take `s` out of whichever order holds it (before its key changes). */
-  private def unlink(s: Stored): Unit =
-    if (visible.remove(s.seq) == null) inFlight.remove(s)
-
-  private def remove(messageId: String): Boolean = {
-    val s = byId.remove(messageId)
-    if (s != null) unlink(s)
-    s != null
-  }
-
-  override def delete(messageId: String): Boolean = synchronized(remove(messageId))
+  override def delete(messageId: String): Boolean = synchronized { byId.remove(messageId) != null }
 
   /** SQS DeleteMessageBatch shape: one call, per-entry outcomes (an
     * unknown id is a failed ENTRY, not a failed CALL). */
   override def deleteBatch(messageIds: Seq[String]): Map[String, Boolean] = synchronized {
     if (failBatchDeletes) throw new RuntimeException(s"injected batch-delete failure on '$name'")
-    messageIds.map(id => id -> remove(id)).toMap
+    messageIds.map(id => id -> (byId.remove(id) != null)).toMap
   }
 
   override def changeVisibility(messageId: String, timeoutSeconds: Int): Boolean = synchronized {
     val s = byId.get(messageId)
     if (s == null) false
-    else {
-      unlink(s)
-      hide(s, System.currentTimeMillis() + timeoutSeconds * 1000L)
-      true
-    }
+    else { s.visibleAtMs = System.currentTimeMillis() + timeoutSeconds * 1000L; true }
   }
 
   def approximateSize: Int = synchronized(byId.size())
-  def clear(): Unit = synchronized { byId.clear(); visible.clear(); inFlight.clear() }
+  def clear(): Unit = synchronized(byId.clear())
   // registry-owned: close() (RawQueue default no-op) must not drop messages
 }
 

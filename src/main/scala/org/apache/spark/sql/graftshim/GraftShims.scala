@@ -2,8 +2,6 @@ package org.apache.spark.sql.graftshim
 
 import java.util.concurrent.TimeoutException
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
@@ -13,7 +11,6 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.{ClassicConversions, ColumnConversions}
 import org.apache.spark.sql.errors.QueryCompilationErrors
-import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.SchemaUtils
 import org.apache.spark.util.{HadoopFSUtils, ThreadUtils}
@@ -27,7 +24,7 @@ import org.apache.spark.util.{HadoopFSUtils, ThreadUtils}
   * thing for Spark 3 (S3SparkUtils.scala:18,58-59); SNIPPETS.md shows the
   * pattern is standard for out-of-tree V1 sources. The source's batch
   * relation also keeps Spark's listing rules through here (hidden names,
-  * path qualification and globbing, schema checks, a bounded stat pool).
+  * schema checks, a bounded stat pool).
   * Everything else in the engine uses public/DeveloperApi surface.
   */
 object GraftShims {
@@ -58,13 +55,6 @@ object GraftShims {
   def drainListenerBus(sc: SparkContext, timeoutMs: Long): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case _: TimeoutException => false }
-
-  /** The batch's paths qualified and globbed as `DataSource.resolveRelation`
-    * resolves them without existence checks; a glob that matches nothing
-    * fails. */
-  def qualifyAndGlob(paths: Seq[String], hadoopConf: Configuration): Seq[Path] =
-    DataSource.checkAndGlobPathIfNecessary(paths, hadoopConf, checkEmptyGlobPath = true,
-      checkFilesExist = false, enableGlobbing = true)
 
   /** `schema` with every field nullable, at every depth. */
   def asNullable(schema: StructType): StructType = schema.asNullable

@@ -18,10 +18,10 @@ import graft.SuiteTempDirs
 /** What one `getBatch` reads, pinned on batches above Spark's 32-path
   * parallel-listing threshold (`spark.sql.sources.parallelPartitionDiscovery
   * .threshold`): rows, `_metadata.file_*`, schema nullability, hive
-  * partition columns, hidden names, missing files, announced directories
-  * and an announced file-sink output directory. Where a batch read of the
-  * same paths exists (`spark.read...load(paths)`, Spark's own listing), the
-  * streamed batch must equal it.
+  * partition columns, hidden names, missing files, announced directories,
+  * an announced file-sink output directory and names that look like globs.
+  * Where a batch read of the same paths exists (`spark.read...load(paths)`,
+  * Spark's own listing), the streamed batch must equal it.
   */
 class GetBatchSpec extends AnyFunSuite with SuiteTempDirs {
 
@@ -208,8 +208,22 @@ class GetBatchSpec extends AnyFunSuite with SuiteTempDirs {
       .start()
     assert(sink.awaitTermination(120000), "file-sink query did not terminate")
     assert(Files.isDirectory(out.resolve("_spark_metadata")))
+    // a data file of a sink batch that never committed: not in the log
+    writeJson(out, "part-99999-uncommitted.json", 99)
     val Seq((_, rows)) = drain(Seq("file:" + out))
     assert(rows.map(r => (r.getInt(0), r.getString(1))).sorted == Seq(1 -> "n1", 2 -> "n2"))
+  }
+
+  test("announced names holding glob metacharacters are read as literal files") {
+    val dir = tempDir("getbatch")
+    val plain = jsonFiles(dir, N)
+    // `c*.json` read as a pattern would also match the unannounced cX.json
+    writeJson(dir, "cX.json", 500)
+    val literal = Seq("a[1].json", "b{2,3}.json", "c*.json").zipWithIndex.map {
+      case (name, i) => writeJson(dir, name, 100 + i)
+    }
+    val Seq((_, rows)) = drain(plain ++ literal)
+    assert(rows.map(_.getInt(0)).sorted == (0 until N) ++ (100 until 103))
   }
 
   test("a data trigger of more than 32 files runs no listing job") {
