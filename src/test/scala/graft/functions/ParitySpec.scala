@@ -64,6 +64,58 @@ class ParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.last.size == 10 && got.last.head == "t1 t2 t3")
   }
 
+  /** Spark's trim strips ASCII spaces only; the split keeps the empty
+    * strings Java's `split(regex, -1)` keeps. */
+  private def jvmTokens(x: String): Seq[String] =
+    x.replaceAll("^ +| +$", "").split("\\s+", -1).toSeq
+
+  test("tokens: trimmed whitespace split, empty and whitespace-only text included") {
+    val s = spark; import s.implicits._
+    val texts = Seq("", "   ", "  lead and trail  ", "a\tb\nc  d", "\tx y\n", "one")
+    val got = texts.toDF("x").select(TextFunctions.tokens(col("x"))).as[Seq[String]]
+      .collect().toSeq
+    assert(got == texts.map(jvmTokens))
+    assert(got == Seq(Seq(""), Seq(""), Seq("lead", "and", "trail"), Seq("a", "b", "c", "d"),
+      Seq("", "x", "y", ""), Seq("one")))
+    val nul = Seq(Option.empty[String]).toDF("x").select(TextFunctions.tokens(col("x")))
+    assert(nul.head().isNullAt(0))
+  }
+
+  test("quality ratios: stop-word share, punctuation share, mean token length") {
+    val s = spark; import s.implicits._
+    val texts = Seq("the cat sat on a mat", "Hello, world! It is 2024.",
+      "no stop words here", "of to and in is it for an the a", "x", "C'est   déjà vu...")
+    val stops = TextFunctions.StopWords.toSet
+    val got = texts.toDF("text")
+      .select(TextFunctions.stopwordRatio(TextFunctions.tokens(col("text"))),
+        TextFunctions.punctRatio(col("text")),
+        TextFunctions.meanTokenLength(TextFunctions.tokens(col("text"))))
+      .as[(Double, Double, Double)].collect().toSeq
+    val want = texts.map { t =>
+      val toks = jvmTokens(t)
+      (toks.count(stops).toDouble / toks.size,
+        (t.length - t.replaceAll("[^a-zA-Z0-9 ]", "").length).toDouble / t.length,
+        toks.map(_.length).sum.toDouble / toks.size)
+    }
+    assert(got == want)
+    assert(got(3)._1 == 1.0 && got(2)._1 == 0.0)
+  }
+
+  test("shingles: distinct n-token windows; short, empty and null token arrays") {
+    val s = spark; import s.implicits._
+    val n = 3
+    val arrays: Seq[Option[Seq[String]]] = Seq(Some(Seq.empty), Some(Seq("a", "b")),
+      Some(Seq("a", "b", "c")), Some(Seq("a", "b", "a", "b", "a", "b")),
+      Some(Seq("x", "x", "x", "x", "x")), None)
+    val got = arrays.toDF("t").select(TextFunctions.shingles(col("t"), n))
+      .as[Option[Seq[String]]].collect().toSeq
+    val want = arrays.map(_.map(t =>
+      if (t.size < n) Seq.empty else t.sliding(n).map(_.mkString(" ")).toSeq.distinct))
+    assert(got.init == want.init)
+    assert(got(3) == Some(Seq("a b a", "b a b")) && got(4) == Some(Seq("x x x")))
+    assert(got.last.isEmpty, s"null token array -> ${got.last}")
+  }
+
   test("source scan: only Parity.scala spells md5-prefix keys or DuckDB list sums") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root; ${root.toAbsolutePath} missing")
