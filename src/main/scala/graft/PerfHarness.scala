@@ -514,7 +514,11 @@ object PerfHarness {
           s""""slope_shuffle":${if (slopeShuf.isNaN) "null" else f"$slopeShuf%.2f"},""" +
           s""""slope_shuffle_top":${if (shufW.takeRight(2).forall(_ > 0)) f"${topSlope(shufW)}%.2f" else "null"}}"""
       }
+      // shuffle bytes depend on the partition count, which the mains tie
+      // to the core count: a record names both so runs compare like for like
       s"""{"metric":"scale_exponents","scales":[${scales.mkString(",")}],""" +
+        s""""cores":${GraftSession.cpus},""" +
+        s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
         s""""base_docs":5000,"base_vecs":2000,"reps":$reps,""" +
         s""""gen_sec":[${perScale.map(p => f"${p._2}%.1f").mkString(",")}],""" +
         s""""ops":{${opJson.mkString(",")}}}"""
@@ -579,7 +583,7 @@ object PerfHarness {
       require(new java.io.File(from).renameTo(new java.io.File(to)),
         s"artifact swap failed: rename $from -> $to")
     // standing init: the artifacts a prior ingest committed
-    Dedup.docShinglesOf(docs.filter(col("doc_id") < nBase))
+    Dedup.docShinglesOf(docs.filter(col("doc_id") < nBase)).persist()
       .write.parquet(s"$root/sh/gen=0")
     val sh0 = spark.read.parquet(s"$root/sh/gen=0")
     Dedup.lshBands(Dedup.lshSignatures(sh0)).write.parquet(s"$root/bands/gen=0")
@@ -597,7 +601,7 @@ object PerfHarness {
         // ---- timed ingest window ----
         val ((freshEdges, compacted), window) = probe.measure {
           Dedup.docShinglesOf(
-              docs.filter(col("doc_id") >= start && col("doc_id") < end))
+              docs.filter(col("doc_id") >= start && col("doc_id") < end)).persist()
             .write.parquet(s"$root/sh/gen=$i")
           val deltaSh = spark.read.parquet(s"$root/sh/gen=$i")
           Dedup.lshBands(Dedup.lshSignatures(deltaSh))

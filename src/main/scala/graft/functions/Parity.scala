@@ -20,6 +20,11 @@ import org.apache.spark.sql.functions._
   *  - micro-nats: ln(x)·10⁶ rounded to a long, so log-domain scores sum
   *    as exact integers on both engines (the JVM spelling is
   *    [[CharEntropy]]'s).
+  *  - the text kernel: a token is a maximal run of non-whitespace in
+  *    the space-trimmed text (so empty text is one empty token), and
+  *    everything built on tokens goes through here too: the normalized
+  *    text, the stop-word list, the three quality ratios (stop-word
+  *    share, punctuation share, mean token length) and word shingles.
   *  - word n-grams: contiguous n-token windows joined by one space.
   *  - DuckDB list sums: `list_sum` over a transformed list, the one
   *    left-to-right accumulation the dot products and norms are built
@@ -53,6 +58,64 @@ object Parity {
   def microNatsSql(x: String): String =
     s"CAST(round(ln(CAST($x AS DOUBLE)) * 1000000.0) AS BIGINT)"
 
+  /** Whitespace tokens of space-trimmed text: `split` keeps the empty
+    * strings a leading tab or newline leaves, as DuckDB's
+    * `string_split_regex` does, and empty text yields one empty token. */
+  def tokens(text: Column): Column = split(trim(text), "\\s+")
+
+  /** DuckDB twin of [[tokens]]. */
+  def tokensSql(x: String): String = s"string_split_regex(trim($x), '\\s+')"
+
+  /** Canonical text for fingerprinting: lowercased tokens joined by one
+    * space. */
+  def normalized(text: Column): Column = concat_ws(" ", tokens(lower(text)))
+
+  /** DuckDB twin of [[normalized]]. */
+  def normalizedSql(x: String): String = s"array_to_string(${tokensSql(s"lower($x)")}, ' ')"
+
+  /** English-ish stop-word list of the quality metrics (fixed, tiny: the
+    * point is the ratio computation pattern, not linguistics). */
+  val StopWords: Seq[String] = Seq(
+    "the", "a", "an", "of", "to", "and", "in", "is", "it", "for")
+
+  /** Share of tokens that are in `words`. */
+  def hitRatio(toks: Column, words: Seq[String]): Column = {
+    val arr = array(words.map(lit): _*)
+    size(filter(toks, t => array_contains(arr, t))).cast("double") / size(toks)
+  }
+
+  /** DuckDB twin of [[hitRatio]]; the lambda parameter is named apart
+    * from the list it filters. */
+  def hitRatioSql(toks: String, words: Seq[String]): String = {
+    val v = if (toks == "t") "x" else "t"
+    val list = words.map(w => s"'$w'").mkString("[", ", ", "]")
+    s"CAST(len(list_filter($toks, $v -> list_contains($list, $v))) AS DOUBLE) / len($toks)"
+  }
+
+  /** Share of tokens that are stop words. */
+  def stopwordRatio(toks: Column): Column = hitRatio(toks, StopWords)
+
+  /** DuckDB twin of [[stopwordRatio]]. */
+  def stopwordRatioSql(toks: String): String = hitRatioSql(toks, StopWords)
+
+  /** Share of characters that are neither ASCII alphanumerics nor spaces. */
+  def punctRatio(text: Column): Column =
+    (length(text) - length(regexp_replace(text, "[^a-zA-Z0-9 ]", "")))
+      .cast("double") / length(text)
+
+  /** DuckDB twin of [[punctRatio]]. */
+  def punctRatioSql(x: String): String =
+    s"CAST(LENGTH($x) - LENGTH(regexp_replace($x, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE) / LENGTH($x)"
+
+  /** Mean token length: an exact integer sum over the token count. */
+  def meanTokenLength(toks: Column): Column =
+    aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
+      .cast("double") / size(toks)
+
+  /** DuckDB twin of [[meanTokenLength]]. */
+  def meanTokenLengthSql(toks: String): String =
+    s"CAST(${listSumSql(toks, "t -> LENGTH(t)")} AS DOUBLE) / len($toks)"
+
   /** Contiguous n-grams of a token array as strings. Guarded: sequence()
     * with a stop below its start counts DOWN, so a short doc must yield
     * an empty array, not reversed garbage. */
@@ -66,6 +129,19 @@ object Parity {
     * is empty, so a short list needs no guard. */
   def ngramsSql(toks: String, n: Int): String =
     s"list_transform(range(1, len($toks) - ${n - 2}), i -> array_to_string($toks[i:i+${n - 1}], ' '))"
+
+  /** Distinct word n-gram shingles, the unit of Jaccard similarity. Not
+    * `array_distinct(ngrams(...))`: that maps a null token array to an
+    * empty one, where this keeps it null. */
+  def shingles(toks: Column, n: Int): Column =
+    when(size(toks) < n, array().cast("array<string>"))
+      .otherwise(array_distinct(
+        transform(
+          sequence(lit(0), size(toks) - n),
+          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
+
+  /** DuckDB twin of [[shingles]]. */
+  def shinglesSql(toks: String, n: Int): String = s"list_distinct(${ngramsSql(toks, n)})"
 
   /** DuckDB `list_sum` of `lambda` mapped over `list`. */
   def listSumSql(list: String, lambda: String): String =

@@ -3,7 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Text-analysis building blocks for large-scale training-data pipelines.
+/** Spark-only text kernels of the dedup operators: MinHash signatures,
+  * LSH band keys, the exact fingerprint, SimHash and hamming distance.
+  * They have no DuckDB twin: each oracle replays its operator's outcome
+  * in its own SQL (the fingerprint oracle groups by the normalized text).
+  * Tokens, normalized text, the stop-word list, the quality ratios and
+  * shingles are cross-engine, so they live in [[Parity]] beside their
+  * DuckDB twins.
   *
   * Everything here composes codegen'd built-ins (`functions._`) — no Scala
   * UDFs in the hot path — so whole-stage codegen spans survive and the
@@ -12,23 +18,6 @@ import org.apache.spark.sql.functions._
   * [[SimHash]].
   */
 object TextFunctions {
-
-  /** Whitespace tokens of trimmed text (no empty tokens). */
-  def tokens(text: Column): Column = split(trim(text), "\\s+")
-
-  /** Canonical form for fingerprinting: lowercase, collapse whitespace. */
-  def normalized(text: Column): Column =
-    concat_ws(" ", split(trim(lower(text)), "\\s+"))
-
-  /** Word n-gram shingles (distinct), the unit of Jaccard similarity.
-    * size(tokens) < n gives an empty array (guarded: Spark's sequence()
-    * would otherwise count downward for a negative span). */
-  def shingles(toks: Column, n: Int): Column =
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(array_distinct(
-        transform(
-          sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
 
   /** MinHash signature: k independent min-hashes over the shingle set.
     * Seeded by mixing the permutation index into xxhash64 (codegen'd);
@@ -43,7 +32,7 @@ object TextFunctions {
     array((0 until bands).map(b => xxhash64(lit(b), slice(sig, b * rowsPerBand + 1, rowsPerBand))): _*)
 
   /** Exact 64-bit document fingerprint of normalized text. */
-  def fingerprint(text: Column): Column = xxhash64(normalized(text))
+  def fingerprint(text: Column): Column = xxhash64(Parity.normalized(text))
 
   /** SimHash over tokens (custom Catalyst expression, see [[SimHash]]). */
   def simhash(toks: Column): Column = SimHash.simhash(toks)
@@ -55,24 +44,4 @@ object TextFunctions {
     * hamming <= 3 implies at least one of 4 chunks is equal). */
   def hashChunk(h: Column, chunk: Int): Column =
     shiftrightunsigned(h, chunk * 16).bitwiseAND(lit(0xFFFFL))
-
-  /** English-ish stopword list used by the quality metrics (fixed, tiny:
-    * the point is the ratio computation pattern, not linguistics). */
-  val StopWords: Seq[String] = Seq(
-    "the", "a", "an", "of", "to", "and", "in", "is", "it", "for")
-
-  def stopwordRatio(toks: Column): Column = {
-    val stops = array(StopWords.map(lit): _*)
-    size(filter(toks, t => array_contains(stops, t))).cast("double") / size(toks)
-  }
-
-  /** Mean token length as an exact int ratio (deterministic double). */
-  def meanTokenLength(toks: Column): Column =
-    aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
-      .cast("double") / size(toks)
-
-  /** Ratio of non-alphanumeric, non-space characters. */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[^a-zA-Z0-9 ]", "")))
-      .cast("double") / length(text)
 }

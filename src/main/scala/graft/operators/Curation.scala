@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{md5Key, md5KeySql, ngrams, ngramsSql}
-import graft.functions.TextFunctions._
+import graft.functions.Parity.{md5Key, md5KeySql, ngrams, ngramsSql, punctRatio, punctRatioSql,
+  stopwordRatio, stopwordRatioSql, tokens, tokensSql}
 import graft.queries.Tables
 
 /** Corpus-curation operators a training-data pipeline runs before any
@@ -74,7 +74,7 @@ object Curation {
   }
   val decontaminateSql: String =
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), grams AS (
          |  SELECT DISTINCT doc_id,
          |    ${md5KeySql("g", 15)} AS gk
@@ -208,7 +208,7 @@ object Curation {
            |        GROUP BY doc_id, g)
            |  GROUP BY doc_id""".stripMargin
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), f2 AS (${topFracSql(2, "top2_frac")}
          |), f3 AS (${topFracSql(3, "top3_frac")}
          |), df AS (
@@ -260,7 +260,7 @@ object Curation {
   }
   val textCooccurSql: String =
     raw"""WITH doctok AS (
-         |  SELECT DISTINCT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
+         |  SELECT DISTINCT doc_id, unnest(${tokensSql("text")}) AS tok
          |  FROM documents
          |), vocab AS (
          |  SELECT tok, COUNT(*) AS df FROM doctok GROUP BY tok
@@ -320,7 +320,7 @@ object Curation {
   }
   val docDupFracSql: String =
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), grams AS (
          |  SELECT DISTINCT doc_id, ${md5KeySql("g", 15)} AS k
          |  FROM (SELECT doc_id,
@@ -414,14 +414,12 @@ object Curation {
 
   def filterCascade(s: SparkSession, d: String): DataFrame =
     cascadeReport(cascadeVerdictAgg(Tables.documents(s, d)))
-  val filterCascadeSql: String = {
-    val stops = StopWords.map(w => s"'$w'").mkString("[", ", ", "]")
+  val filterCascadeSql: String =
     raw"""WITH scored AS (
          |  SELECT doc_id, lang, n_chars, LENGTH(text) AS len, len(toks) AS nt,
-         |    CAST(len(list_filter(toks, t -> list_contains($stops, t))) AS DOUBLE) / len(toks) AS sr,
-         |    CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-         |      / LENGTH(text) AS pr
-         |  FROM (SELECT *, string_split_regex(trim(text), '\s+') AS toks FROM documents)
+         |    ${stopwordRatioSql("toks")} AS sr,
+         |    ${punctRatioSql("text")} AS pr
+         |  FROM (SELECT *, ${tokensSql("text")} AS toks FROM documents)
          |), verdict AS (
          |  SELECT CASE WHEN nt < $CascadeMinTokens THEN 'too_short'
          |              WHEN len > $CascadeMaxChars THEN 'too_long'
@@ -440,7 +438,6 @@ object Curation {
          |             (4, 'low_stopword'), (5, 'pass')) AS s(stage, rule)
          |LEFT JOIN agg a ON s.rule = a.rule
          |ORDER BY s.stage""".stripMargin
-  }
 
   val rows: Seq[QueryDef] = Seq(
     QueryDef("decontaminate", decontaminate _, decontaminateSql),

@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{md5Key, md5KeySql, microNats, microNatsSql, ngrams}
-import graft.functions.TextFunctions._
+import graft.functions.Parity.{md5Key, md5KeySql, microNats, microNatsSql, ngrams, tokens, tokensSql}
 import graft.queries.Tables
 
 /** Round-4 curation operators: the two selection/dedup methods from the
@@ -91,7 +90,7 @@ object Curation2 {
   }
   val dsirResampleSql: String =
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), grams AS (
          |  SELECT doc_id,
          |    ${md5KeySql("g", 15)} % ${DsirBuckets} AS b,
@@ -182,7 +181,7 @@ object Curation2 {
   }
   val dedupSubstringsSql: String =
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), wins AS (
          |  SELECT doc_id, n_tokens, p,
          |    ${md5KeySql(s"array_to_string(t[p:p+${SubW - 1}], ' ')", 15)} AS k

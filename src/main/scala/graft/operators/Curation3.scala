@@ -26,10 +26,10 @@ object Curation3 {
     * caller finally executes it. The first r13 spelling unpersisted in
     * a `finally` that ran when the frame was BUILT, not when it was
     * executed, which put the tokenize-per-shingle fusion trap (8 s/pass
-    * at sf0.1, see [[Dedup2.shingleSets]]) right back into the executed
+    * at sf0.1, see [[Dedup.docShinglesOf]]) right back into the executed
     * plan. */
   private def shingleEx(s: SparkSession, d: String): DataFrame = {
-    val sets = Dedup2.shingleSets(Tables.documents(s, d)).persist()
+    val sets = Dedup.docShinglesOf(Tables.documents(s, d)).persist()
     sets.count() // materialize behind the cache boundary
     Dedup2.explodeSets(sets)
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.cosineSql
+import graft.functions.Parity.{cosineSql, tokens, tokensSql}
 import graft.queries.Tables
 
 /** Round-13 pipeline additions, part 2: snapshot delta computation,
@@ -182,7 +182,7 @@ object Curation4 {
   def lengthBucketPack(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-      .select(size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
+      .select(size(tokens($"text")).cast("long").as("ntok"))
     val cap: Column = BucketCaps.foldRight(lit(MaxCap): Column) {
       (c, acc) => when($"ntok" <= c, lit(c)).otherwise(acc)
     }
@@ -206,7 +206,7 @@ object Curation4 {
          |FROM (
          |  SELECT cap, LEAST(ntok, cap) AS kept FROM (
          |    SELECT ntok, $caseCap AS cap FROM (
-         |      SELECT CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ntok
+         |      SELECT CAST(len(${tokensSql("text")}) AS BIGINT) AS ntok
          |      FROM documents)))
          |GROUP BY cap ORDER BY cap""".stripMargin
   }

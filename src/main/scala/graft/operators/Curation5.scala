@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{md5Key, md5KeySql, microNats, microNatsSql}
+import graft.functions.Parity.{md5Key, md5KeySql, microNats, microNatsSql, tokens, tokensSql}
 import graft.queries.Tables
 
 /** Round-13 pipeline additions, part 3: character-level entropy scoring
@@ -199,7 +199,7 @@ object Curation5 {
     * window partition. */
   def qualityCalibrate(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val toks = graft.functions.TextFunctions.tokens($"text")
+    val toks = tokens($"text")
     val scored = Tables.documents(s, d)
       .withColumn("dsz", size(array_distinct(toks)).cast("long"))
       .withColumn("tsz", size(toks).cast("long"))
@@ -218,8 +218,8 @@ object Curation5 {
   val qualityCalibrateSql: String =
     raw"""WITH scored AS (
          |  SELECT doc_id, source,
-         |    (CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS BIGINT) * 1000000)
-         |      // len(string_split_regex(trim(text), '\s+')) AS score_ppm
+         |    (CAST(len(list_distinct(${tokensSql("text")})) AS BIGINT) * 1000000)
+         |      // len(${tokensSql("text")}) AS score_ppm
          |  FROM documents
          |), rk AS (
          |  SELECT doc_id, source, score_ppm,
@@ -251,7 +251,7 @@ object Curation5 {
   def sourceDivergence(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val toks = Tables.documents(s, d)
-      .select($"source", explode(graft.functions.TextFunctions.tokens($"text")).as("w"))
+      .select($"source", explode(tokens($"text")).as("w"))
     val srcCnt = toks.groupBy($"source", $"w").agg(count(lit(1)).as("cs")).persist()
     srcCnt.count()
     val corpusCnt = srcCnt.groupBy($"w").agg(sum($"cs").as("cc"))
@@ -277,7 +277,7 @@ object Curation5 {
   }
   val sourceDivergenceSql: String =
     raw"""WITH toks AS (
-         |  SELECT source, unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents
+         |  SELECT source, unnest(${tokensSql("text")}) AS w FROM documents
          |), sc AS (
          |  SELECT source, w, COUNT(*) AS cs FROM toks GROUP BY source, w
          |), cc AS (

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{md5Key, md5KeySql, ngrams, ngramsSql}
+import graft.functions.Parity.{md5Key, md5KeySql, ngrams, ngramsSql, punctRatioSql, stopwordRatioSql,
+  tokens, tokensSql}
 import graft.queries.Tables
 
 /** Round-13 pipeline additions, part 4: one-pass table profiling and the
@@ -154,7 +155,6 @@ object Curation6 {
     * the gram blocklist unfiltered and never enter the corpus. */
   def pipelineE2e(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.functions.TextFunctions.tokens
     val docs = Par.spread(Tables.documents(s, d), $"doc_id")
     val corpus = docs.filter($"doc_id" % 10 =!= 7)
       .withColumn("toks", tokens($"text"))
@@ -184,22 +184,19 @@ object Curation6 {
   /** DuckDB replica: the same four stages spelled independently (IN /
     * NOT IN subqueries instead of aggregate-join / anti-join). */
   val pipelineE2eSql: String = {
-    val stops = graft.functions.TextFunctions.StopWords.map(w => s"'$w'").mkString("[", ", ", "]")
     val n = Curation.ContamN
     raw"""WITH toks AS (
          |  SELECT doc_id, text, lang, source,
-         |    string_split_regex(trim(text), '\s+') AS t
+         |    ${tokensSql("text")} AS t
          |  FROM documents
          |), corpus AS (
          |  SELECT * FROM toks
          |  WHERE doc_id % 10 <> 7
          |    AND NOT (len(t) < ${Curation.CascadeMinTokens})
          |    AND NOT (LENGTH(text) > ${Curation.CascadeMaxChars})
-         |    AND NOT (CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-         |             / LENGTH(text) > ${Curation.CascadePunctMax})
+         |    AND NOT (${punctRatioSql("text")} > ${Curation.CascadePunctMax})
          |    AND NOT (lang = 'en' AND
-         |             CAST(len(list_filter(t, x -> list_contains($stops, x))) AS DOUBLE)
-         |             / len(t) < ${Curation.CascadeStopMin})
+         |             ${stopwordRatioSql("t")} < ${Curation.CascadeStopMin})
          |), canon AS (
          |  SELECT * FROM corpus
          |  WHERE doc_id IN (SELECT MIN(doc_id) FROM corpus GROUP BY md5(text))
@@ -332,7 +329,6 @@ object Curation6 {
     * ≤ sources × 5 rows after map-side combine. */
   def sourceQualityMatrix(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.functions.TextFunctions.tokens
     // projection BEFORE the verdict: the scan prunes to the four columns
     // the matrix needs (law-swept — a full-width read here is a bug)
     Tables.documents(s, d).select($"text", $"lang", $"source", $"n_chars")
@@ -342,14 +338,12 @@ object Curation6 {
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("n_chars"))
       .orderBy($"source", $"rule")
   }
-  val sourceQualityMatrixSql: String = {
-    val stops = graft.functions.TextFunctions.StopWords.map(w => s"'$w'").mkString("[", ", ", "]")
+  val sourceQualityMatrixSql: String =
     raw"""WITH scored AS (
          |  SELECT doc_id, lang, source, n_chars, LENGTH(text) AS len, len(toks) AS nt,
-         |    CAST(len(list_filter(toks, t -> list_contains($stops, t))) AS DOUBLE) / len(toks) AS sr,
-         |    CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-         |      / LENGTH(text) AS pr
-         |  FROM (SELECT *, string_split_regex(trim(text), '\s+') AS toks FROM documents)
+         |    ${stopwordRatioSql("toks")} AS sr,
+         |    ${punctRatioSql("text")} AS pr
+         |  FROM (SELECT *, ${tokensSql("text")} AS toks FROM documents)
          |), verdict AS (
          |  SELECT source,
          |    CASE WHEN nt < ${Curation.CascadeMinTokens} THEN 'too_short'
@@ -362,7 +356,6 @@ object Curation6 {
          |SELECT source, rule, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(SUM(n_chars) AS BIGINT) AS n_chars
          |FROM verdict GROUP BY source, rule ORDER BY source, rule""".stripMargin
-  }
 
   val rows: Seq[QueryDef] = Seq(
     QueryDef("source_quality_matrix", sourceQualityMatrix _, sourceQualityMatrixSql),

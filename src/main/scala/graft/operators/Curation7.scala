@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{dotSql, md5Key, md5KeySql, normSql}
+import graft.functions.Parity.{dotSql, md5Key, md5KeySql, normSql, tokens, tokensSql}
 import graft.queries.Tables
 
 /** Embedding-space corpus curation — the quality/selection steps a
@@ -442,7 +442,7 @@ object Curation7 {
   def epochPlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val perSrc = Tables.documents(s, d)
-      .select($"source", size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
+      .select($"source", size(tokens($"text")).cast("long").as("ntok"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("sum_tokens"))
       .withColumn("share",
@@ -462,7 +462,7 @@ object Curation7 {
   val epochPlanSql: String =
     s"""WITH perSrc AS (
        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |    CAST(SUM(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS sum_tokens,
+       |    CAST(SUM(len(${tokensSql("text")})) AS BIGINT) AS sum_tokens,
        |    (CAST(substring(COALESCE(NULLIF(regexp_extract(source, '([0-9]+)', 1), ''), '0'), 1, 18) AS BIGINT) % 4) + 1 AS share
        |  FROM documents GROUP BY source
        |), t AS (
@@ -563,11 +563,11 @@ object Curation7 {
   def shardPlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     shardReport(Tables.documents(s, d)
-      .select($"doc_id", size(split(trim($"text"), "\\s+")).cast("long").as("ntok")))
+      .select($"doc_id", size(tokens($"text")).cast("long").as("ntok")))
   }
   val shardPlanSql: String =
     raw"""WITH t AS (
-         |  SELECT doc_id, CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ntok
+         |  SELECT doc_id, CAST(len(${tokensSql("text")}) AS BIGINT) AS ntok
          |  FROM documents
          |), c AS (
          |  SELECT doc_id, ntok,
@@ -673,7 +673,7 @@ object Curation7 {
     val docs = Tables.documents(s, d)
     val nd = docs.agg((max($"doc_id") + 1).as("nd"))
     val firstSeen = docs
-      .select($"doc_id", explode(split(trim($"text"), "\\s+")).as("tok"))
+      .select($"doc_id", explode(tokens($"text")).as("tok"))
       .groupBy($"tok").agg(min($"doc_id").as("first_doc"))
     val wVal = Window.orderBy($"checkpoint")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -692,7 +692,7 @@ object Curation7 {
   val vocabGrowthCurveSql: String =
     raw"""WITH fs AS (
          |  SELECT tok, MIN(doc_id) AS first_doc
-         |  FROM (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
+         |  FROM (SELECT doc_id, unnest(${tokensSql("text")}) AS tok
          |        FROM documents)
          |  GROUP BY tok
          |), nd AS (SELECT MAX(doc_id) + 1 AS nd FROM documents),
@@ -725,7 +725,7 @@ object Curation7 {
     import s.implicits._
     val docs = Tables.documents(s, d)
       .select($"doc_id", $"n_chars",
-        size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
+        size(tokens($"text")).cast("long").as("ntok"))
     val kept = docs.join(broadcast(lengthVerdicts(docs)), Seq("n_chars"))
       .filter(!$"cut_short" && !$"cut_long")
     val canon = Dedup.dedupKeepCanonical(s, d).filter($"keep").select($"doc_id")
@@ -757,7 +757,7 @@ object Curation7 {
          |  FROM v
          |), kept AS (
          |  SELECT d.doc_id,
-         |    CAST(len(string_split_regex(trim(d.text), '\s+')) AS BIGINT) AS ntok
+         |    CAST(len(${tokensSql("d.text")}) AS BIGINT) AS ntok
          |  FROM documents d
          |  JOIN verdicts ON d.n_chars = verdicts.n_chars
          |  JOIN canon ON d.doc_id = canon.doc_id

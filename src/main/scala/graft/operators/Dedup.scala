@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.functions.Parity
+import graft.functions.Parity.{normalizedSql, shingles, shinglesSql, tokens, tokensSql}
 import graft.functions.TextFunctions._
 import graft.queries.Tables
 
@@ -63,32 +64,38 @@ object Dedup {
     * real scale the scan has thousands of splits and the gate makes the
     * re-bucket a no-op. */
   private[operators] def docShingles(s: SparkSession, d: String): DataFrame =
-    docShinglesOf(Tables.documents(s, d))
+    // persisted: the self-joins read this base TWICE (exchange reuse does
+    // not kick in for the aliased sides), and recomputing the
+    // tokenize+shingle pass dominates the query (measured ~10s vs ~1.8s
+    // at sf0.1). At real scale the same move is materializing the shingle
+    // table once before pair generation.
+    docShinglesOf(Tables.documents(s, d)).persist()
 
-  /** The shingle builder over an explicit documents frame — the
-    * incremental rows shingle their corpus and delta slices SEPARATELY
-    * so the "only the delta re-shingles" claim is structural. */
+  /** `(doc_id, sh)` shingle sets of an explicit documents frame — the
+    * per-batch re-shingling step of an ingest pipeline (the standing
+    * corpus runs it once; a delta runs it per batch), so the "only the
+    * delta re-shingles" claim is structural.
+    *
+    * The CALLER must persist the result (or write it out) before
+    * exploding it: the shingle lambda references the token array per
+    * element, and without a cache boundary between this frame and the
+    * explode Catalyst inlines the tokenizer into the lambda body,
+    * re-splitting the text once PER SHINGLE (plan-verified: 4 `split(`
+    * occurrences fused under the explode vs 1 behind a cache). */
   private[graft] def docShinglesOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     // Two-step projection on purpose: `toks` must be a materialized
     // attribute before entering the shingle lambda. Passing
     // `tokens($"text")` straight into `shingles` embeds the regex split
-    // inside the transform lambda, re-splitting the document once PER
-    // SHINGLE (measured 8s/pass at sf0.1 vs ~0.5s this way). Multiple
-    // references to a non-trivial alias also keep CollapseProject from
-    // re-inlining it. No size filter here: predicate pushdown would clone
-    // the expression below the project, and empty shingle arrays are
-    // dropped by the downstream explode anyway.
-    // persisted: the self-joins below read this base TWICE (exchange
-    // reuse does not kick in for the aliased sides), and recomputing the
-    // tokenize+shingle pass dominates the query (measured ~10s vs ~1.8s
-    // at sf0.1). At real scale the same move is materializing the shingle
-    // table once before pair generation.
+    // inside the transform lambda (measured 8s/pass at sf0.1 vs ~0.5s
+    // this way). Multiple references to a non-trivial alias also keep
+    // CollapseProject from re-inlining it. No size filter here: predicate
+    // pushdown would clone the expression below the project, and empty
+    // shingle arrays are dropped by the downstream explode anyway.
     Par.spread(docs, $"doc_id")
       .withColumn("toks", tokens($"text"))
       .select($"doc_id", shingles($"toks", ShingleSize).as("sh"))
-      .persist()
   }
 
   // ---------------------------------------------------------------- exact
@@ -119,9 +126,9 @@ object Dedup {
       .orderBy($"rep_id")
   }
   val dedupFingerprintSql: String =
-    """SELECT MIN(doc_id) AS rep_id, COUNT(*) AS n_docs
+    s"""SELECT MIN(doc_id) AS rep_id, COUNT(*) AS n_docs
       |FROM documents
-      |GROUP BY array_to_string(string_split_regex(trim(lower(text)), '\s+'), ' ')
+      |GROUP BY ${normalizedSql("text")}
       |ORDER BY rep_id""".stripMargin
 
   // ------------------------------------------------------- exact jaccard
@@ -188,18 +195,16 @@ object Dedup {
       .select($"a_id", $"b_id", $"jaccard")
       .orderBy($"a_id", $"b_id")
   }
-  /** Shared oracle CTE: exploded (doc_id, set size, shingle) rows. */
-  /** The shingle CTEs, optionally over a row-bounded corpus slice (the
-    * streaming gate caps its staged corpus like every other stream query;
-    * `pred` is a bare SQL predicate on documents, e.g. "doc_id < 2000"). */
+  /** The shared oracle CTEs, exploded (doc_id, set size, shingle) rows,
+    * optionally over a row-bounded corpus slice (the streaming gate caps
+    * its staged corpus like every other stream query; `pred` is a bare
+    * SQL predicate on documents, e.g. "doc_id < 2000"). */
   private[graft] def shingleCteSql(pred: String): String = {
     val where = if (pred.isEmpty) "" else s" WHERE $pred"
     raw"""sh AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(range(1, len(toks)-1),
-         |      i -> array_to_string(toks[i:i+2], ' '))) AS shset
-         |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents$where)
-         |  WHERE len(toks) >= 3
+         |  SELECT doc_id, ${shinglesSql("toks", ShingleSize)} AS shset
+         |  FROM (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents$where)
+         |  WHERE len(toks) >= $ShingleSize
          |), ex AS (
          |  SELECT doc_id, len(shset) AS sz, unnest(shset) AS s FROM sh
          |)""".stripMargin
@@ -365,7 +370,7 @@ object Dedup {
   val dedupSimhashSql: String =
     raw"""WITH th AS (
          |  SELECT doc_id, ${Parity.md5U64Sql("tok")} AS h
-         |  FROM (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
+         |  FROM (SELECT doc_id, unnest(${tokensSql("text")}) AS tok
          |        FROM documents)
          |), sig AS (
          |  SELECT doc_id,
@@ -552,7 +557,7 @@ object Dedup {
     // depends on the shingle width, everything downstream additionally
     // on the LSH constants — changing either must rebuild, not reuse
     val shDir = Models.root(s"ccdelta-sh|$d|sh=$ShingleSize|in=$fp") { out =>
-      docShinglesOf(Tables.documents(s, d).filter($"doc_id" % 5 =!= 0))
+      docShinglesOf(Tables.documents(s, d).filter($"doc_id" % 5 =!= 0)).persist()
         .write.mode("overwrite").parquet(out)
     }
     val sh = s.read.parquet(shDir)
@@ -714,7 +719,7 @@ object Dedup {
   def dedupCcDelta(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (corpusSh, corpusBands, standing, standingMap) = ccStandingArtifacts(s, d)
-    val deltaSh = docShinglesOf(Tables.documents(s, d).filter($"doc_id" % 5 === 0))
+    val deltaSh = docShinglesOf(Tables.documents(s, d).filter($"doc_id" % 5 === 0)).persist()
     val deltaBands = lshBands(lshSignatures(deltaSh)).persist()
     // new pairs can only form inside band BUCKETS a delta doc landed in,
     // and the candidate rank is bucket-local — so restricting the rank +

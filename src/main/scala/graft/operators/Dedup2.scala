@@ -1,12 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{cosineSql, md5Key, md5KeySql}
-import graft.functions.TextFunctions.tokens
+import graft.functions.Parity.{cosineSql, md5Key, md5KeySql, tokens, tokensSql}
 import graft.functions.VectorOps
 import graft.queries.Tables
 
@@ -64,7 +63,7 @@ object Dedup2 {
   }
   val dedupSegmentsSql: String =
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), segs AS (
          |  SELECT doc_id, s.idx, s.seg,
          |    ${md5KeySql("s.seg", 15)} AS k
@@ -119,24 +118,6 @@ object Dedup2 {
       out.count() // materialize (delta-sized) before the shingle cache drops
       out
     } finally docs.unpersist()
-  }
-
-  /** `(doc_id, sh)` shingle sets of an arbitrary documents frame — the
-    * per-batch re-shingling step of an ingest pipeline (the standing
-    * corpus runs it once; a delta runs it per batch).
-    *
-    * The CALLER must persist the result before exploding it: the shingle
-    * lambda references the token array per element, and without a cache
-    * boundary between this frame and [[explodeSets]] Catalyst inlines the
-    * tokenizer into the lambda body, re-splitting the text once PER
-    * SHINGLE — the [[Dedup.docShingles]] trap (plan-verified: 4 `split(`
-    * occurrences fused under the explode vs 1 behind a cache). */
-  private[graft] def shingleSets(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    Par.spread(docs, $"doc_id")
-      .withColumn("toks", tokens($"text"))
-      .select($"doc_id", graft.functions.TextFunctions.shingles($"toks", Dedup.ShingleSize).as("sh"))
   }
 
   /** Exploded 64-bit-hashed shingles `(doc_id, sz, s)` of a (persisted)

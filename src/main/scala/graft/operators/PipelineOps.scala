@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.QueryDef
-import graft.functions.Parity.{md5Key, md5KeySql}
+import graft.functions.Parity.{md5Key, md5KeySql, normalizedSql, tokens, tokensSql}
 import graft.queries.Tables
 
 /** Training-data pipeline operators beyond dedup/similarity: deterministic
@@ -67,7 +67,7 @@ object PipelineOps {
     // partition-count-invariant (offsets lift any local cumsum to global)
     val nPart = math.max(2, s.sparkContext.defaultParallelism)
     val docs = Tables.documents(s, d)
-      .select($"doc_id", size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
+      .select($"doc_id", size(tokens($"text")).cast("long").as("ntok"))
       .repartitionByRange(nPart, $"doc_id")
       .withColumn("pid", spark_partition_id())
     val wIn = Window.partitionBy($"pid").orderBy($"doc_id")
@@ -98,7 +98,7 @@ object PipelineOps {
          |    SELECT doc_id, ntok, SUM(ntok) OVER (ORDER BY doc_id
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
          |    FROM (SELECT doc_id,
-         |            CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ntok
+         |            CAST(len(${tokensSql("text")}) AS BIGINT) AS ntok
          |          FROM documents)))
          |GROUP BY pack_id ORDER BY pack_id""".stripMargin
 
@@ -123,8 +123,8 @@ object PipelineOps {
     val nPart = math.max(2, s.sparkContext.defaultParallelism)
     val docs = Tables.documents(s, d)
       .select($"doc_id",
-        size(array_distinct(split(trim($"text"), "\\s+"))).cast("long").as("quality"),
-        size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
+        size(array_distinct(tokens($"text"))).cast("long").as("quality"),
+        size(tokens($"text")).cast("long").as("ntok"))
       .repartitionByRange(nPart, $"quality".desc, $"doc_id")
       .withColumn("pid", spark_partition_id())
     val wIn = Window.partitionBy($"pid").orderBy($"quality".desc, $"doc_id")
@@ -155,8 +155,8 @@ object PipelineOps {
          |    SUM(ntok) OVER (ORDER BY quality DESC, doc_id
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
          |  FROM (SELECT doc_id,
-         |          CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS quality,
-         |          CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ntok
+         |          CAST(len(list_distinct(${tokensSql("text")})) AS BIGINT) AS quality,
+         |          CAST(len(${tokensSql("text")}) AS BIGINT) AS ntok
          |        FROM documents))
          |WHERE cum <= $BudgetTokens ORDER BY cum""".stripMargin
 
@@ -168,7 +168,7 @@ object PipelineOps {
   def tfidfTopTerms(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val terms = Par.spread(Tables.documents(s, d), $"doc_id")
-      .select($"doc_id", explode(split(trim(lower($"text")), "\\s+")).as("term"))
+      .select($"doc_id", explode(tokens(lower($"text"))).as("term"))
       .filter($"term" =!= "")
     val tf = terms.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
@@ -183,7 +183,7 @@ object PipelineOps {
   val tfidfTopTermsSql: String =
     raw"""WITH terms AS (
          |  SELECT doc_id, term FROM (
-         |    SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+         |    SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS term
          |    FROM documents) WHERE term <> ''
          |), tf AS (
          |  SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY doc_id, term
@@ -306,7 +306,7 @@ object PipelineOps {
     Tables.documents(s, d)
       .select($"source", $"lang", $"n_chars",
         sha2($"text", 256).as("th"),
-        size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
+        size(tokens($"text")).cast("long").as("ntok"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
         sum($"ntok").as("n_tokens"),
@@ -317,7 +317,7 @@ object PipelineOps {
   }
   val corpusStatsSql: String =
     raw"""SELECT source, COUNT(*) AS n_docs,
-         |  CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens,
+         |  CAST(SUM(len(${tokensSql("text")})) AS BIGINT) AS n_tokens,
          |  CAST(SUM(n_chars) AS BIGINT) AS n_chars,
          |  COUNT(*) - COUNT(DISTINCT text) AS n_exact_dups,
          |  COUNT(DISTINCT lang) AS n_langs
@@ -491,7 +491,7 @@ object PipelineOps {
          |    CAST(SUM(CASE WHEN is_train THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
          |    CAST(SUM(CASE WHEN NOT is_train THEN 1 ELSE 0 END) AS BIGINT) AS n_val
          |  FROM flagged
-         |  GROUP BY array_to_string(string_split_regex(trim(lower(text)), '\s+'), ' '))
+         |  GROUP BY ${normalizedSql("text")})
          |SELECT rep_id, n_train, n_val FROM grouped
          |WHERE n_train > 0 AND n_val > 0 ORDER BY rep_id""".stripMargin
 

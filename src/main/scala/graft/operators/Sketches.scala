@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{md5Key, md5KeySql}
+import graft.functions.Parity.{md5Key, md5KeySql, tokens, tokensSql}
 import graft.queries.Tables
 
 /** K-minimum-values (KMV) sketches over per-source shingle sets:
@@ -42,7 +42,7 @@ object Sketches {
     val docs = Tables.documents(s, d)
     // same plan-keyed cache discipline as Curation3.shingleEx: the
     // shingle-set frame is shared with every other shingle operator
-    val sets = Dedup2.shingleSets(docs).persist()
+    val sets = Dedup.docShinglesOf(docs).persist()
     sets.count()
     sets.select($"doc_id", explode($"sh").as("sg"))
       .join(docs.select($"doc_id", $"source"), "doc_id")
@@ -206,7 +206,7 @@ object Sketches {
   def heavyHitters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     def toks = Tables.documents(s, d)
-      .select(explode(graft.functions.TextFunctions.tokens(lower($"text"))).as("t"))
+      .select(explode(tokens(lower($"text"))).as("t"))
     val summaries = toks.as[String]
       .mapPartitions(it => Iterator.single(misraGries(it, HhK - 1)))
       .collect()
@@ -223,7 +223,7 @@ object Sketches {
   /** DuckDB replica — the full GROUP BY the two-pass plan avoids. */
   val heavyHittersSql: String =
     raw"""WITH t AS (
-         |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
+         |  SELECT unnest(${tokensSql("lower(text)")}) AS t
          |  FROM documents
          |), tot AS (SELECT COUNT(*) AS total FROM t)
          |SELECT t AS term, CAST(COUNT(*) AS BIGINT) AS n,
@@ -259,7 +259,7 @@ object Sketches {
   def cmsFreqEstimate(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     def toks = Tables.documents(s, d)
-      .select(explode(graft.functions.TextFunctions.tokens(lower($"text"))).as("t"))
+      .select(explode(tokens(lower($"text"))).as("t"))
     def bucket(seed: Column, t: Column): Column =
       md5Key(concat(seed.cast("string"), lit(":"), t), 8) % CmsWidth
     val sketch = toks
@@ -282,7 +282,7 @@ object Sketches {
   /** DuckDB replica — the identical md5 counter table, replayed. */
   val cmsFreqEstimateSql: String =
     raw"""WITH toks AS (
-         |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
+         |  SELECT unnest(${tokensSql("lower(text)")}) AS t
          |  FROM documents
          |), seeds AS (SELECT unnest(range($CmsDepth)) AS seed),
          |sketch AS (

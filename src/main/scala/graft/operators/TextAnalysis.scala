@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{listSumSql, microNats, microNatsSql}
-import graft.functions.TextFunctions._
+import graft.functions.Parity.{hitRatio, hitRatioSql, meanTokenLength, meanTokenLengthSql,
+  microNats, microNatsSql, normalizedSql, punctRatio, punctRatioSql, shingles, stopwordRatio,
+  stopwordRatioSql, tokens, tokensSql}
+import graft.functions.TextFunctions.fingerprint
 import graft.queries.Tables
 
 /** Text-analysis operators for corpus curation: token counting, quality
@@ -25,13 +27,13 @@ object TextAnalysis {
     Tables.documents(s, d)
       .select($"doc_id",
         size(tokens($"text")).as("n_tokens"),
-        size(split(trim(regexp_replace($"text", "[^a-zA-Z0-9]", " ")), "\\s+")).as("bpe_ish"))
+        size(tokens(regexp_replace($"text", "[^a-zA-Z0-9]", " "))).as("bpe_ish"))
       .orderBy($"doc_id")
   }
   val textTokenCountSql: String =
     raw"""SELECT doc_id,
-         |  len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-         |  len(string_split_regex(trim(regexp_replace(text, '[^a-zA-Z0-9]', ' ', 'g')), '\s+')) AS bpe_ish
+         |  len(${tokensSql("text")}) AS n_tokens,
+         |  len(${tokensSql("regexp_replace(text, '[^a-zA-Z0-9]', ' ', 'g')")}) AS bpe_ish
          |FROM documents ORDER BY doc_id""".stripMargin
 
   // ------------------------------------------------------------ quality
@@ -49,17 +51,14 @@ object TextAnalysis {
         punctRatio($"text").as("punct_ratio"))
       .orderBy($"doc_id")
   }
-  val textQualitySql: String = {
-    val stops = StopWords.map(w => s"'$w'").mkString("[", ", ", "]")
+  val textQualitySql: String =
     raw"""SELECT doc_id, LENGTH(text) AS len,
          |  len(toks) AS n_tokens,
-         |  CAST(${listSumSql("toks", "t -> LENGTH(t)")} AS DOUBLE) / len(toks) AS mean_tok_len,
-         |  CAST(len(list_filter(toks, t -> list_contains($stops, t))) AS DOUBLE) / len(toks) AS stop_ratio,
-         |  CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-         |    / LENGTH(text) AS punct_ratio
-         |FROM (SELECT *, string_split_regex(trim(text), '\s+') AS toks FROM documents)
+         |  ${meanTokenLengthSql("toks")} AS mean_tok_len,
+         |  ${stopwordRatioSql("toks")} AS stop_ratio,
+         |  ${punctRatioSql("text")} AS punct_ratio
+         |FROM (SELECT *, ${tokensSql("text")} AS toks FROM documents)
          |ORDER BY doc_id""".stripMargin
-  }
 
   // -------------------------------------------------------- fingerprint
   /** Fingerprint groups: docs sharing the 64-bit normalized-text
@@ -77,7 +76,7 @@ object TextAnalysis {
   val textFingerprintGroupsSql: String =
     raw"""SELECT MIN(doc_id) AS rep_id, COUNT(*) AS n_docs, MAX(LENGTH(text)) AS max_len
          |FROM documents
-         |GROUP BY array_to_string(string_split_regex(trim(lower(text)), '\s+'), ' ')
+         |GROUP BY ${normalizedSql("text")}
          |ORDER BY rep_id""".stripMargin
 
   // ------------------------------------------------------------ lang id
@@ -99,12 +98,8 @@ object TextAnalysis {
     langId(Tables.documents(s, d))
 
   val textLangIdSql: String = {
-    def hitSql(words: Seq[String]): String = {
-      val arr = words.map(w => s"'$w'").mkString("[", ", ", "]")
-      s"CAST(len(list_filter(toks, t -> list_contains($arr, t))) AS DOUBLE) / len(toks)"
-    }
     val scored = (langStops.toSeq.sortBy(_._1).map { case (lang, words) =>
-      s"struct_pack(score := ${hitSql(words)}, lang := '$lang')"
+      s"struct_pack(score := ${hitRatioSql("toks", words)}, lang := '$lang')"
     } :+ ("struct_pack(score := 3 * CAST(LENGTH(text) - LENGTH(regexp_replace(text, " +
       "'[\\x{4e00}-\\x{9fff}]', '', 'g')) AS DOUBLE) / LENGTH(text), lang := 'zh')"))
       .mkString(",\n         |      ")
@@ -113,7 +108,7 @@ object TextAnalysis {
          |      $scored
          |    ], recursive := false) AS s
          |  FROM (SELECT doc_id, text,
-         |          string_split_regex(trim(lower(text)), '\s+') AS toks
+         |          ${tokensSql("lower(text)")} AS toks
          |        FROM documents)
          |), ranked AS (
          |  SELECT doc_id, s.lang AS pred_lang, ROUND(s.score, 6) AS confidence,
@@ -136,15 +131,11 @@ object TextAnalysis {
     * BENCH_NOTES round-17 table. */
   def langId(docs: DataFrame): DataFrame = {
     val toks = col("toks")
-    def hitRatio(words: Seq[String]): Column = {
-      val arr = array(words.map(lit): _*)
-      size(filter(toks, t => array_contains(arr, t))).cast("double") / size(toks)
-    }
     val cjkRatio = (length(col("text")) -
       length(regexp_replace(col("text"), "[\\x{4e00}-\\x{9fff}]", ""))).cast("double") /
       length(col("text"))
     val scored = langStops.toSeq.sortBy(_._1).map { case (lang, words) =>
-      struct(hitRatio(words).as("score"), lit(lang).as("lang"))
+      struct(hitRatio(toks, words).as("score"), lit(lang).as("lang"))
     } :+ struct((cjkRatio * 3).as("score"), lit("zh").as("lang"))
     docs
       .select(col("doc_id"), col("text"), tokens(lower(col("text"))).as("toks"))
@@ -193,7 +184,7 @@ object TextAnalysis {
   }
   val textPerplexitySql: String =
     raw"""WITH toks AS (
-         |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
+         |  SELECT doc_id, unnest(${tokensSql("text")}) AS tok
          |  FROM documents
          |), vocab AS (
          |  SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY tok
@@ -327,7 +318,7 @@ object TextAnalysis {
         |        * (CAST(bwd.n1b AS DOUBLE)
         |           / (SELECT CAST(COUNT(*) AS DOUBLE) FROM big))""".stripMargin
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), idx AS (
          |  SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks
          |), bi AS (
@@ -404,7 +395,7 @@ object TextAnalysis {
       """(CAST(big.c AS DOUBLE) * (SELECT CAST(SUM(c) AS DOUBLE) FROM big))
         |    / (CAST(fwd.c1 AS DOUBLE) * CAST(bwd.c2 AS DOUBLE))""".stripMargin
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), idx AS (
          |  SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks
          |), bi AS (
@@ -444,7 +435,7 @@ object TextAnalysis {
     Par.spread(Tables.documents(s, d), $"doc_id")
       // toks as its own projected column: inlining tokens() into shingles
       // re-runs the regexp split once PER SHINGLE inside the transform
-      // lambda (the Dedup2.shingleSets fusion trap; 4x on this query) —
+      // lambda (the Dedup.docShinglesOf fusion trap; 4x on this query) —
       // CollapseProject keeps a multiply-referenced expensive alias.
       .withColumn("toks", tokens($"text"))
       .select($"doc_id", explode(shingles($"toks", 2)).as("bigram"))
@@ -455,7 +446,7 @@ object TextAnalysis {
   }
   val topNgramsSql: String =
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
          |), bg AS (
          |  SELECT DISTINCT doc_id, t[gs] || ' ' || t[gs + 1] AS bigram
          |  FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS u(gs)
@@ -499,7 +490,7 @@ object TextAnalysis {
   val bpePairCountsSql: String =
     raw"""WITH words AS (
          |  SELECT w, COUNT(*) AS wc
-         |  FROM (SELECT unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents)
+         |  FROM (SELECT unnest(${tokensSql("text")}) AS w FROM documents)
          |  GROUP BY w
          |), pairs AS (
          |  SELECT substring(w, gs, 1) || ' ' || substring(w, gs + 1, 1) AS pair, wc
@@ -591,7 +582,7 @@ object TextAnalysis {
     val base =
       raw"""words AS (
            |  SELECT w, COUNT(*) AS wc
-           |  FROM (SELECT unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents)
+           |  FROM (SELECT unnest(${tokensSql("text")}) AS w FROM documents)
            |  GROUP BY w),
            |seq0 AS (
            |  SELECT regexp_replace(w, '(.)', chr(1) || '\1' || chr(2), 'g') AS ws, wc FROM words)""".stripMargin
@@ -679,7 +670,7 @@ object TextAnalysis {
     val base =
       raw"""words AS (
            |  SELECT w, COUNT(*) AS wc
-           |  FROM (SELECT unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents)
+           |  FROM (SELECT unnest(${tokensSql("text")}) AS w FROM documents)
            |  GROUP BY w),
            |seq0 AS (
            |  SELECT regexp_replace(w, '(.)', chr(1) || '\1' || chr(2), 'g') AS ws, wc FROM words)""".stripMargin
@@ -749,11 +740,11 @@ object TextAnalysis {
   }
   val tokenizerFertilitySql: String =
     raw"""SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(len(string_split_regex(trim(d.text), '\s+'))) AS BIGINT) AS n_words,
+         |  CAST(SUM(len(${tokensSql("d.text")})) AS BIGINT) AS n_words,
          |  CAST(SUM(b.n_bpe_units) AS BIGINT) AS n_bpe_units,
          |  CAST(SUM(b.n_char_units) AS BIGINT) AS n_char_units,
          |  (CAST(SUM(b.n_bpe_units) AS BIGINT) * 1000000)
-         |    // CAST(SUM(len(string_split_regex(trim(d.text), '\s+'))) AS BIGINT) AS fertility_ppm,
+         |    // CAST(SUM(len(${tokensSql("d.text")})) AS BIGINT) AS fertility_ppm,
          |  CASE WHEN CAST(SUM(b.n_char_units) AS BIGINT) = 0 THEN 0
          |       ELSE ((CAST(SUM(b.n_char_units) AS BIGINT) - CAST(SUM(b.n_bpe_units) AS BIGINT)) * 1000000)
          |              // CAST(SUM(b.n_char_units) AS BIGINT) END AS compression_ppm

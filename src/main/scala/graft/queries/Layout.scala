@@ -491,8 +491,8 @@ object Layout {
       val root = tempRoots.create("graft-layout-shidx")
       val base = s.read.parquet(s"$d/documents.parquet")
         .filter(col("doc_id") % 5 =!= 0)
-      val sets = graft.operators.Dedup2.shingleSets(base).persist()
-      sets.count() // cache boundary: see Dedup2.shingleSets scaladoc
+      val sets = graft.operators.Dedup.docShinglesOf(base).persist()
+      sets.count() // cache boundary: see Dedup.docShinglesOf scaladoc
       graft.operators.Dedup2.explodeSets(sets)
         .write.mode("overwrite")
         .bucketBy(16, "s").sortBy("s")
@@ -516,7 +516,7 @@ object Layout {
     val it = shingleIndexTable(s, d)
     val index = s.table(it).hint("merge")
     val deltaDocs = Tables.documents(s, d).filter($"doc_id" % 5 === 0)
-    val deltaSets = graft.operators.Dedup2.shingleSets(deltaDocs).persist()
+    val deltaSets = graft.operators.Dedup.docShinglesOf(deltaDocs).persist()
     deltaSets.count()
     val delta = graft.operators.Dedup2.explodeSets(deltaSets)
       .select($"doc_id".as("d_id"), $"sz".as("sz_d"), $"s")

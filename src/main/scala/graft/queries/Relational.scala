@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryDef
+import graft.functions.Parity.{tokens, tokensSql}
 
 /** The delegated relational surface (SURVEY.md §2.2): scans, projection,
   * filter, aggregation, joins of every flavor, window functions, sorts,
@@ -571,7 +572,7 @@ object Relational {
   def q30ArrayFns(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, d)
-      .withColumn("toks", split(trim($"text"), "\\s+"))
+      .withColumn("toks", tokens($"text"))
       .select($"doc_id",
         size($"toks").as("n"),
         array_contains($"toks", "spark").as("has_spark"),
@@ -584,7 +585,7 @@ object Relational {
          |  list_contains(toks, 'spark') AS has_spark,
          |  array_to_string(list_sort(toks)[1:3], '|') AS first3_sorted,
          |  len(list_distinct(toks)) AS n_distinct
-         |FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents)
+         |FROM (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents)
          |ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------- q31

@@ -17,8 +17,8 @@ import graft.TempDirs
   * Streaming queries have no standing batch plan to inspect — the
   * executed plan lives on the `StreamExecution` as an
   * `IncrementalExecution` and becomes unreachable once the harness stops
-  * the query — so each harness records it here right after
-  * `processAllAvailable()` returns. The capture is a single `toString` of
+  * the query — so each harness records it here right after the query
+  * terminates. The capture is a single `toString` of
   * an already-materialized plan (no extra planning, no job), so it stays
   * on for gate/bench runs too; a missing entry makes the law spec fail by
   * name rather than pass vacuously.

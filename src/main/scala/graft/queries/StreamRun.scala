@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.TempDirs
@@ -22,19 +23,21 @@ import graft.sources.InMemoryQueueRegistry
   *    opens two);
   *  - the `{"path","timestampMs"}` announcement of each staged dir's
   *    `.parquet` files in name order;
-  *  - the reader's fixed options, with `minFilesForFirstBatch` set to the
-  *    number of distinct files announced to that source, so the first
-  *    micro-batch never depends on queue-consumption timing;
-  *  - the query lifecycle: start, `processAllAvailable`, the last
-  *    micro-batch plan for [[StreamPlans]] (memory-sink runs only: a
-  *    foreachBatch row captures its per-batch plan inside the lambda,
-  *    where `lastExecution` would only see the source scan), stop;
+  *  - the reader's fixed options;
+  *  - the query lifecycle: start under `Trigger.AvailableNow`, run to
+  *    termination, the last micro-batch plan for [[StreamPlans]]
+  *    (memory-sink runs only: a foreachBatch row captures its per-batch
+  *    plan inside the lambda, where `lastExecution` would only see the
+  *    source scan), stop;
   *  - one release, on success and failure alike, of every queue the run
   *    registered and of the checkpoint dir it created.
   *
   * A row keeps only what differs: schema, announcement timestamps,
   * per-row source options, the transform, the sink and its own cleanup.
-  * The query lifecycle is Structured Streaming's (SIGMOD 2018).
+  * The query lifecycle is Structured Streaming's (SIGMOD 2018). Under
+  * AvailableNow the source drains its queue before batch 0 and cuts the
+  * batches oldest first, so every batch's composition is fixed by the
+  * announcements alone, never by queue-consumption timing.
   */
 private[graft] final class StreamRun private (s: SparkSession, val gate: String) {
   val id: String = s"${gate}_${StreamRun.seq.incrementAndGet()}_${System.nanoTime()}"
@@ -53,18 +56,15 @@ private[graft] final class StreamRun private (s: SparkSession, val gate: String)
     val name = s"${id}_q${queues.size}"
     val queue = InMemoryQueueRegistry.queue(name)
     queues += name
-    val paths = feeds.flatMap { feed =>
-      StreamRun.parquetFiles(feed.dir).zipWithIndex.map { case (f, i) =>
+    feeds.foreach { feed =>
+      StreamRun.parquetFiles(feed.dir).zipWithIndex.foreach { case (f, i) =>
         val msg = s"""{"path":"file:${f.getAbsolutePath}","timestampMs":${feed.stamp(f, i)}}"""
         (1 to feed.copies).foreach(_ => queue.send(msg))
-        f.getAbsolutePath
       }
     }
-    val reader = s.readStream.format("graft-files").schema(schema)
+    s.readStream.format("graft-files").schema(schema)
       .option("fileFormat", "parquet").option("queueName", name)
-      .option("queueFetchWaitTimeoutSeconds", "10")
-    if (paths.nonEmpty) reader.option("minFilesForFirstBatch", paths.distinct.size.toString)
-    reader.options(options.toMap).load()
+      .options(options.toMap).load()
   }
 
   /** Run `df` to completion into a memory sink with `outputMode`, record
@@ -72,9 +72,9 @@ private[graft] final class StreamRun private (s: SparkSession, val gate: String)
   def memory(df: DataFrame, outputMode: String): DataFrame = {
     val sink = s"sink_$id"
     val query = df.writeStream.format("memory").queryName(sink)
-      .outputMode(outputMode).start()
+      .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
     try {
-      query.processAllAvailable()
+      query.awaitTermination()
       StreamPlans.capture(gate, query)
     } finally query.stop()
     s.table(sink)
@@ -86,8 +86,8 @@ private[graft] final class StreamRun private (s: SparkSession, val gate: String)
     val cp = Files.createTempDirectory(s"graft-$id-cp").toFile
     checkpoint = Some(cp)
     val query = df.writeStream.foreachBatch(body)
-      .option("checkpointLocation", cp.getPath).start()
-    try query.processAllAvailable() finally query.stop()
+      .option("checkpointLocation", cp.getPath).trigger(Trigger.AvailableNow()).start()
+    try query.awaitTermination() finally query.stop()
   }
 
   /** A fresh output dir named after the run. Not released with the run,

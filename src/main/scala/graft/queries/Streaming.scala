@@ -171,10 +171,11 @@ object Streaming {
     val stage = stageEvents(s, dir, run.gate, nFiles = 2)
     val sentStage = sentinelEventsDir(s, run.gate, userId = 0L)
     val nReal = StreamRun.parquetFiles(stage).length
-    // deterministic batching: the first batch waits for ALL announced
-    // files (real + sentinel), then batch 1 = the oldest-timestamped real
-    // files and batch 2 = the sentinel — a timing-dependent split would
-    // let the sentinel advance the watermark past real rows still in flight
+    // deterministic batching: the AvailableNow run drains ALL announced
+    // files (real + sentinel) before batch 0, then batch 1 = the
+    // oldest-timestamped real files and batch 2 = the sentinel — a
+    // timing-dependent split would let the sentinel advance the watermark
+    // past real rows still in flight
     val streamed = run.source(eventsSchema,
         Seq(Feed(stage, StreamRun.at(1000L)), Feed(sentStage, StreamRun.at(2000L))),
         // real data first, sentinel in a later micro-batch (batches are oldest first)

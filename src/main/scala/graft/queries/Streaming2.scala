@@ -41,8 +41,8 @@ object Streaming2 {
     val nReal = StreamRun.parquetFiles(stage).length
     // sentinel: year 2100, its own later micro-batch (timestampMs orders it)
     val sentStage = Streaming.sentinelEventsDir(s, run.gate, userId = 0L)
-    // the first batch waits for ALL announced files (real + sentinel):
-    // batch 1 is then exactly the oldest-timestamped real files, batch 2
+    // the AvailableNow run drains ALL announced files (real + sentinel)
+    // before batch 0: batch 1 is then exactly the oldest-timestamped real files, batch 2
     // the sentinel — no queue-timing window where a late real file lands
     // after the sentinel has advanced the watermark (the r12 flake)
     val sessions = run.source(eventsSchema,
@@ -143,7 +143,7 @@ object Streaming2 {
       out.iterator
     }
     // the per-batch sessionizer needs every event in ONE batch: the run
-    // gates the first batch on the full announced set (not on timing)
+    // drains the full announced set before batch 0 (not on timing)
     val sessions = run.source(eventsSchema, Seq(Feed(stage)))
       .select($"event_id", unix_micros(Streaming.eventTs).as("ts_us"), $"user_id")
       .as[(Long, Long, Long)]
@@ -176,7 +176,7 @@ object Streaming2 {
   /** The standing-corpus shingle-set index (docs < DocCutoff, doc_id %
     * 5 != 0) as a train-once [[graft.operators.Models]] artifact —
     * shared by the incremental-dedup and novelty rows. The parquet leaf
-    * doubles as the cache boundary [[graft.operators.Dedup2.shingleSets]]
+    * doubles as the cache boundary [[graft.operators.Dedup.docShinglesOf]]
     * requires before exploding. */
   private def shingleIdxDir(s: SparkSession, dir: String,
       corpus: DataFrame): String =
@@ -184,7 +184,7 @@ object Streaming2 {
         s"stream-shingle-idx|$dir|lt$DocCutoff|mod5ne0" +
           s"|sh=${graft.operators.Dedup.ShingleSize}" +
           s"|in=${graft.operators.Models.inputFingerprint(s"$dir/documents.parquet")}") { out =>
-      graft.operators.Dedup2.shingleSets(corpus.filter(col("doc_id") % 5 =!= 0))
+      graft.operators.Dedup.docShinglesOf(corpus.filter(col("doc_id") % 5 =!= 0))
         .write.mode("overwrite").parquet(out)
     }
 
@@ -235,7 +235,7 @@ object Streaming2 {
     // production: a standing table on storage; until r22 it was
     // re-shingled per invocation). The parquet leaf is also the cache
     // boundary that stops the tokenizer from fusing into the shingle
-    // lambda (see Dedup2.shingleSets); the session pin amortizes the
+    // lambda (see Dedup.docShinglesOf); the session pin amortizes the
     // read across micro-batches.
     val prepT0 = System.nanoTime()
     val baseSets = s.read.parquet(shingleIdxDir(s, dir, corpus)).persist()
@@ -247,7 +247,7 @@ object Streaming2 {
     try run.foreachBatch(delta) { (batch, id) =>
       val ingestT0 = System.nanoTime()
       val bytes0 = StreamPlans.dirBytes(outDir)
-      val deltaSets = graft.operators.Dedup2.shingleSets(batch).persist()
+      val deltaSets = graft.operators.Dedup.docShinglesOf(batch).persist()
       try {
         val ex = graft.operators.Dedup2.explodeSets(deltaSets)
           .select(col("doc_id").as("d_id"), col("sz").as("sz_d"), col("s"))
@@ -335,7 +335,7 @@ object Streaming2 {
     val outDir = run.tempDir("out")
     val delta = run.source(Streaming.docsSchema, Seq(Feed(stage)), "maxFilesPerTrigger" -> "2")
     try run.foreachBatch(delta) { (batch, _) =>
-      val deltaSets = graft.operators.Dedup2.shingleSets(batch).persist()
+      val deltaSets = graft.operators.Dedup.docShinglesOf(batch).persist()
       try {
         // no eager count (the stream_kmv_distinct rationale): the
         // persist boundary blocks tokenizer fusing by itself, and both
@@ -469,17 +469,17 @@ object Streaming2 {
   def streamKmvDistinct(s: SparkSession, dir: String): DataFrame =
       Streaming.withStateShuffle(s, 8) { StreamRun(s, "stream_kmv_distinct") { run =>
     import s.implicits._
-    import graft.operators.{Dedup2, Sketches}
+    import graft.operators.{Dedup, Sketches}
     StreamPlans.resetIngest(run.gate)
     val outDir = run.tempDir("out")
     val K = Sketches.K
     run.foreachBatch(docs3(s, dir, run)) { (batch, id) =>
       val ingestT0 = System.nanoTime()
       val bytes0 = StreamPlans.dirBytes(outDir)
-      val sets = Dedup2.shingleSets(batch).persist()
+      val sets = Dedup.docShinglesOf(batch).persist()
       try {
         // no eager count: the persist boundary alone is the
-        // anti-fusing barrier shingleSets requires (InMemoryRelation
+        // anti-fusing barrier docShinglesOf requires (InMemoryRelation
         // enters the plan at analysis, materialized or not), and the
         // sketch write below is the batch's one consumer — the old
         // count was one extra full job per micro-batch

@@ -96,8 +96,8 @@ object Streaming3 {
   /** Cross-batch user profiling via `transformWithState`
     * (stream_tws_profile): events arrive over THREE deterministic
     * micro-batches (two real files announced at increasing queue
-    * timestamps + the sentinel, 1 file/trigger, first batch gated on
-    * the full announced set), per-user state accumulates across all of
+    * timestamps + the sentinel, 1 file/trigger, the queue drained before
+    * batch 0), per-user state accumulates across all of
     * them, and the year-2100 sentinel fires the event-time timers that
     * flush every profile. The result must hash-equal one batch
     * aggregate of the same slice.
@@ -344,7 +344,7 @@ object Streaming3 {
     val stats = run.source(Streaming.docsSchema, Seq(Feed(stage, from(1000L))),
         "maxFilesPerTrigger" -> "1")
       .select($"lang", $"n_chars",
-        size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
+        size(Parity.tokens($"text")).cast("long").as("ntok"))
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("n_tokens"),
         sum($"n_chars").as("sum_chars"))
@@ -352,7 +352,7 @@ object Streaming3 {
   }}
   val streamCorpusStatsSql: String =
     raw"""SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens,
+         |  CAST(SUM(len(${Parity.tokensSql("text")})) AS BIGINT) AS n_tokens,
          |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
          |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
@@ -404,7 +404,7 @@ object Streaming3 {
       val stage = stageDocsRange2(s, dir, run.gate)
       val manifest = inOrder(run, Streaming.docsSchema, Feed(stage, from(1000L)))
         .select($"doc_id",
-          size(split(trim($"text"), "\\s+")).cast("long").as("ntok"))
+          size(Parity.tokens($"text")).cast("long").as("ntok"))
         .as[(Long, Long)]
         .groupByKey(_ => 0L)
         .transformWithState(new ShardManifestProcessor,
@@ -630,7 +630,7 @@ object Streaming3 {
       val manifest = inOrder(run, Streaming.docsSchema, Feed(stage, from(1000L)))
         // stage 1: the quality cascade, stateless (projected tokens so
         // the tokenizer runs once — the CollapseProject discipline)
-        .withColumn("toks", graft.functions.TextFunctions.tokens($"text"))
+        .withColumn("toks", Parity.tokens($"text"))
         .filter(graft.operators.Curation.cascadeRule($"toks") === "pass")
         // stage 2: exactly-once content admission keyed on md5(text)
         .select(md5($"text").as("fp"), $"doc_id",
@@ -654,16 +654,13 @@ object Streaming3 {
   /** The batch composition, replayed: cascade-pass → first-copy-per-
     * fingerprint → doc_id-ordered prefix-sum shards. */
   val streamPipelineCurateSql: String = {
-    val stops = graft.functions.TextFunctions.StopWords
-      .map(w => s"'$w'").mkString("[", ", ", "]")
     val C = graft.operators.Curation
     raw"""WITH scored AS (
          |  SELECT doc_id, lang, text, LENGTH(text) AS len, len(toks) AS nt,
-         |    CAST(len(list_filter(toks, t -> list_contains($stops, t))) AS DOUBLE) / len(toks) AS sr,
-         |    CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE)
-         |      / LENGTH(text) AS pr,
+         |    ${Parity.stopwordRatioSql("toks")} AS sr,
+         |    ${Parity.punctRatioSql("text")} AS pr,
          |    CAST(len(toks) AS BIGINT) AS ntok
-         |  FROM (SELECT *, string_split_regex(trim(text), '\s+') AS toks FROM documents)
+         |  FROM (SELECT *, ${Parity.tokensSql("text")} AS toks FROM documents)
          |), passed AS (
          |  SELECT doc_id, md5(text) AS fp, ntok FROM scored
          |  WHERE CASE WHEN nt < ${C.CascadeMinTokens} THEN 'too_short'
@@ -767,7 +764,7 @@ object Streaming3 {
         .foreach(StreamPlans.recoverCompaction)
       val bytes0 = Seq(seenShDir, seenBandsDir, edgesDir)
         .map(StreamPlans.dirBytes).sum
-      val batchSh = Dedup.docShinglesOf(batch)
+      val batchSh = Dedup.docShinglesOf(batch).persist()
       val batchBands = Dedup.lshBands(Dedup.lshSignatures(batchSh)).persist()
       try {
         // grow the standing tables by exactly this batch's docs — one
@@ -893,7 +890,7 @@ object Streaming3 {
     val prepT0 = System.nanoTime()
     val docs = Tables.documents(s, dir)
     def grams(df: DataFrame): DataFrame = df
-      .select($"doc_id", graft.functions.TextFunctions.tokens($"text").as("t"))
+      .select($"doc_id", Parity.tokens($"text").as("t"))
       .filter(size($"t") >= Curation.ContamN)
       .select($"doc_id", explode(Parity.ngrams($"t", Curation.ContamN)).as("g"))
       .select($"doc_id", Parity.md5Key($"g", 15).as("gk"))

@@ -66,7 +66,7 @@ object Streaming4 {
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
       .select($"doc_id", $"bg.w1".as("w1"), $"bg.w2".as("w2"))
     def bigrams(df: DataFrame): DataFrame = bigramsOfToks(
-      df.select($"doc_id", graft.functions.TextFunctions.tokens($"text").as("t")))
+      df.select($"doc_id", Parity.tokens($"text").as("t")))
 
     // ---- prep: the standing LM as a TRAIN-ONCE Models artifact (the
     // ccStandingArtifacts shape, r22): bigram/context/continuation
@@ -83,7 +83,7 @@ object Streaming4 {
     val lmDir = graft.operators.Models.root(
         s"stream-lm|$dir|kn=$KnDiscount|in=$fp") { out =>
       val toks = docs.filter($"doc_id" % 5 =!= 0)
-        .select($"doc_id", graft.functions.TextFunctions.tokens($"text").as("t"))
+        .select($"doc_id", Parity.tokens($"text").as("t"))
         .persist()
       val bigB = bigramsOfToks(toks)
         .groupBy($"w1", $"w2").agg(count(lit(1)).as("c")).persist()
@@ -135,7 +135,7 @@ object Streaming4 {
     val arriving = run.source(Streaming.docsSchema, Seq(Feed(stage)), "maxFilesPerTrigger" -> "2")
     // the three session-lived LM caches must release even when the
     // stream FAILS — after the run they would leak for the session on
-    // any processAllAvailable() error
+    // any error the run rethrows
     try run.foreachBatch(arriving) { (batch, id) =>
       val ingestT0 = System.nanoTime()
       val bytes0 = StreamPlans.dirBytes(scoresDir)
@@ -195,7 +195,7 @@ object Streaming4 {
         |        ELSE pc
         |      END""".stripMargin
     raw"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+         |  SELECT doc_id, ${Parity.tokensSql("text")} AS t FROM documents
          |), train_idx AS (
          |  SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks WHERE doc_id % 5 <> 0
          |), train_bi AS (

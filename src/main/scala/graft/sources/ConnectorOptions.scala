@@ -31,7 +31,6 @@ final case class ConnectorOptions(
     reprocessStartBatchId: Option[Long],
     reprocessEndBatchId: Option[Long],
     reprocessDryRun: Boolean,
-    minFilesForFirstBatch: Option[Int],
     fetchErrorBudget: Int,
     queueMaxRetries: Int,
     region: String,
@@ -87,7 +86,6 @@ object ConnectorOptions {
   val REPROCESS_END_BATCH_ID = "reprocessendbatchid"
   val REPROCESS_DRY_RUN = "reprocessdryrun"
   val SORT_BATCH_BY_TIMESTAMP = "sortbatchbytimestamp" // accepted, inert: batches are oldest first
-  val MIN_FILES_FOR_FIRST_BATCH = "minfilesforfirstbatch"
   val METADATA_LOG = "metadatalog" // "file", the only metadata log
   val FETCH_ERROR_BUDGET = "queue.fetcherrorbudget"
   val MAX_RETRIES = "queue.maxretries"
@@ -118,7 +116,7 @@ object ConnectorOptions {
     QUEUE_FETCH_WAIT_TIMEOUT_SECONDS, LONG_POLL_WAIT_SECONDS, MAX_CONCURRENCY,
     VISIBILITY_TIMEOUT_SECONDS, KEEP_MESSAGE_ON_CONSUMER_ERROR,
     REPROCESS_START_BATCH_ID, REPROCESS_END_BATCH_ID, REPROCESS_DRY_RUN,
-    SORT_BATCH_BY_TIMESTAMP, MIN_FILES_FOR_FIRST_BATCH, METADATA_LOG, FETCH_ERROR_BUDGET,
+    SORT_BATCH_BY_TIMESTAMP, METADATA_LOG, FETCH_ERROR_BUDGET,
     MAX_RETRIES, REGION, ACCESS_KEY_ID, SECRET_ACCESS_KEY, SESSION_TOKEN)
 
   /** Parse a duration like "15d", "2h", "30m", "45s", "500ms", bare = ms. */
@@ -215,11 +213,6 @@ object ConnectorOptions {
       reprocessStartBatchId = reStart,
       reprocessEndBatchId = reEnd,
       reprocessDryRun = get(REPROCESS_DRY_RUN).forall(_.trim.equalsIgnoreCase("true")),
-      minFilesForFirstBatch = get(MIN_FILES_FOR_FIRST_BATCH).map { v =>
-        val n = v.trim.toInt
-        require(n > 0, s"$MIN_FILES_FOR_FIRST_BATCH must be positive, got $n")
-        n
-      },
       fetchErrorBudget = {
         val n = get(FETCH_ERROR_BUDGET).map(_.trim.toInt).getOrElse(DEFAULT_FETCH_ERROR_BUDGET)
         require(n > 0, s"$FETCH_ERROR_BUDGET must be positive, got $n")

@@ -30,11 +30,6 @@ final class FileCache(maxAgeMs: Long, restoredLatestMs: Long = -1L) {
   private val byPath = new java.util.HashMap[String, FileMetadata]()
   private val oldestFirst = new java.util.TreeSet[FileMetadata](FileCache.Order)
   private var latest = restoredLatestMs
-  private var admitted = 0L
-
-  /** Files ever inserted (markProcessed/purge don't decrement); backs
-    * the source's deterministic-first-batch gate. */
-  def totalAdmitted: Long = synchronized(admitted)
 
   /** Files strictly older than this are expired. Never negative. */
   def lastPurgeTimestamp: Long = synchronized(math.max(0L, latest - maxAgeMs))
@@ -50,7 +45,6 @@ final class FileCache(maxAgeMs: Long, restoredLatestMs: Long = -1L) {
       val f = FileMetadata(path, desc.timestampMs, desc.messageId)
       byPath.put(path, f)
       oldestFirst.add(f)
-      admitted += 1
       true
     }
   }

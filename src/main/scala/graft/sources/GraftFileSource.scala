@@ -38,6 +38,13 @@ import org.apache.spark.sql.types.StructType
   * maxFileAge horizon; executors read rows directly from storage; the
   * queue fetch overlaps query execution (asyncFetch timeout-then-
   * background); per-trigger admission is bounded by maxFilesPerTrigger.
+  *
+  * Batch composition: a default-trigger query cuts each offset from
+  * whatever the queue has delivered so far, so its first batch depends on
+  * queue timing. A query that needs batches fixed by the announcements
+  * alone runs under `Trigger.AvailableNow`: [[prepareForTriggerAvailableNow]]
+  * drains the queue before batch 0, and batches are then cut oldest first
+  * from the drained snapshot.
   */
 class GraftFileSource(
     sqlContext: SQLContext,
@@ -202,31 +209,6 @@ class GraftFileSource(
       // from completed background rounds surfaces here, on the trigger thread
       failIfReceiveBudgetExhausted("queue fetch")
       queueClient.asyncFetch(options.queueFetchWaitTimeoutSeconds)
-      // Deterministic first batch: when a known prefix of files was
-      // announced before the query started, refuse to cut offset 0 until
-      // all of them are admitted — otherwise the first batch's composition
-      // depends on queue-consumption timing, and with event-time operators
-      // downstream a racy split drops late rows below the watermark (the
-      // r12 gate flake: 150 / 688 / 1092 rows from the same binary). Only
-      // the FIRST batch gates; restarts resume from the persisted offset.
-      options.minFilesForFirstBatch.foreach { n =>
-        if (metadataLogCurrentOffset < 0 && fileCache.totalAdmitted < n) {
-          val deadline =
-            System.nanoTime() + options.drainRoundTimeoutSeconds * 1000000000L
-          while (fileCache.totalAdmitted < n && System.nanoTime() < deadline) {
-            failIfReceiveBudgetExhausted("first-batch admission wait")
-            queueClient.asyncFetch(options.queueFetchWaitTimeoutSeconds)
-            Thread.sleep(10L)
-          }
-          if (fileCache.totalAdmitted < n) {
-            throw new GraftSourceException(
-              s"first-batch admission wait: only ${fileCache.totalAdmitted} of $n " +
-                s"announced files admitted within ${options.drainRoundTimeoutSeconds}s " +
-                s"on queue '${options.queueName}' — failing loudly instead of emitting " +
-                "a nondeterministic first batch")
-          }
-        }
-      }
     }
     val files = fileCache.getUnprocessedFiles(options.maxFilesPerTrigger)
     if (files.nonEmpty) {

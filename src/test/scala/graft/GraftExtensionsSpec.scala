@@ -31,11 +31,11 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("simhash usable from SQL and equals the column API") {
     import spark.implicits._
-    import graft.functions.TextFunctions
+    import graft.functions.{Parity, TextFunctions}
     val df = Seq((1L, "a b c d e")).toDF("id", "text")
     df.createOrReplaceTempView("t_simhash")
     val viaSql = spark.sql("SELECT simhash(split(text, ' ')) AS h FROM t_simhash").head.getLong(0)
-    val viaCol = df.select(TextFunctions.simhash(TextFunctions.tokens($"text"))).head.getLong(0)
+    val viaCol = df.select(TextFunctions.simhash(Parity.tokens($"text"))).head.getLong(0)
     assert(viaSql == viaCol)
   }
 

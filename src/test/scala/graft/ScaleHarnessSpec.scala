@@ -121,6 +121,13 @@ class ScaleHarnessSpec extends AnyFunSuite with SuiteTempDirs {
       s"verdicts must equal the cell-local rule: extra=${(gotDropped -- expDropped).take(5)} missing=${(expDropped -- gotDropped).take(5)}")
   }
 
+  test("scale record names its core count and shuffle partitions") {
+    val json = PerfHarness.scaleRun(spark, Seq(1), Seq("dedup_exact"), reps = 1)
+    assert(json.contains(s""""cores":${GraftSession.cpus},"""), json)
+    assert(json.contains(""""shuffle_partitions":4,"""), json)
+    assert(json.contains(""""dedup_exact":{"wall_sec":["""), json)
+  }
+
   test("log-log slope fit is exact on planted power laws") {
     val xs = Seq(1.0, 10.0, 100.0)
     assert(math.abs(PerfHarness.logLogSlope(xs, xs.map(x => 3.0 * x)) - 1.0) < 1e-9)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TextFunctions
+import graft.functions.Parity
 import graft.sources.InMemoryQueueRegistry
 
 /** The two halves of the library composing: documents ingested through the
@@ -47,10 +47,10 @@ class StreamingCurationSpec extends AnyFunSuite with SuiteTempDirs {
     }
 
     def curate(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val toks = TextFunctions.tokens($"text")
+      val toks = Parity.tokens($"text")
       df.select($"doc_id",
         size(toks).as("n_tokens"),
-        TextFunctions.stopwordRatio(toks).as("stop_ratio"),
+        Parity.stopwordRatio(toks).as("stop_ratio"),
         graft.functions.SimHash.simhash(toks).as("sig"))
     }
 

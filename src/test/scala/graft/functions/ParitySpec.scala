@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Parity]]'s Spark spellings against independent JVM computations on
   * fixed inputs (the DuckDB twins are checked by the oracle gate), and a
-  * source scan that keeps every cross-engine spelling inside Parity. */
+  * source scan that keeps every cross-engine spelling inside Parity:
+  * md5 keys, list sums, the tokenizer, the punctuation class and the
+  * rendered stop-word list. */
 class ParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -72,12 +74,12 @@ class ParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("tokens: trimmed whitespace split, empty and whitespace-only text included") {
     val s = spark; import s.implicits._
     val texts = Seq("", "   ", "  lead and trail  ", "a\tb\nc  d", "\tx y\n", "one")
-    val got = texts.toDF("x").select(TextFunctions.tokens(col("x"))).as[Seq[String]]
+    val got = texts.toDF("x").select(Parity.tokens(col("x"))).as[Seq[String]]
       .collect().toSeq
     assert(got == texts.map(jvmTokens))
     assert(got == Seq(Seq(""), Seq(""), Seq("lead", "and", "trail"), Seq("a", "b", "c", "d"),
       Seq("", "x", "y", ""), Seq("one")))
-    val nul = Seq(Option.empty[String]).toDF("x").select(TextFunctions.tokens(col("x")))
+    val nul = Seq(Option.empty[String]).toDF("x").select(Parity.tokens(col("x")))
     assert(nul.head().isNullAt(0))
   }
 
@@ -85,11 +87,11 @@ class ParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark; import s.implicits._
     val texts = Seq("the cat sat on a mat", "Hello, world! It is 2024.",
       "no stop words here", "of to and in is it for an the a", "x", "C'est   déjà vu...")
-    val stops = TextFunctions.StopWords.toSet
+    val stops = Parity.StopWords.toSet
     val got = texts.toDF("text")
-      .select(TextFunctions.stopwordRatio(TextFunctions.tokens(col("text"))),
-        TextFunctions.punctRatio(col("text")),
-        TextFunctions.meanTokenLength(TextFunctions.tokens(col("text"))))
+      .select(Parity.stopwordRatio(Parity.tokens(col("text"))),
+        Parity.punctRatio(col("text")),
+        Parity.meanTokenLength(Parity.tokens(col("text"))))
       .as[(Double, Double, Double)].collect().toSeq
     val want = texts.map { t =>
       val toks = jvmTokens(t)
@@ -107,7 +109,7 @@ class ParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val arrays: Seq[Option[Seq[String]]] = Seq(Some(Seq.empty), Some(Seq("a", "b")),
       Some(Seq("a", "b", "c")), Some(Seq("a", "b", "a", "b", "a", "b")),
       Some(Seq("x", "x", "x", "x", "x")), None)
-    val got = arrays.toDF("t").select(TextFunctions.shingles(col("t"), n))
+    val got = arrays.toDF("t").select(Parity.shingles(col("t"), n))
       .as[Option[Seq[String]]].collect().toSeq
     val want = arrays.map(_.map(t =>
       if (t.size < n) Seq.empty else t.sliding(n).map(_.mkString(" ")).toSeq.distinct))
@@ -119,7 +121,9 @@ class ParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("source scan: only Parity.scala spells md5-prefix keys or DuckDB list sums") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root; ${root.toAbsolutePath} missing")
-    val spellings = Seq("substring(md5(", "list_sum(list_transform(")
+    val spellings = Seq("substring(md5(", "list_sum(list_transform(",
+      "string_split_regex(", "split(trim(", "'[^a-zA-Z0-9 ]'",
+      "StopWords.map(", ".mkString(\"[\", \", \", \"]\")", "'the', 'a', 'an'")
     val files = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq
     assert(files.exists(_.endsWith("Parity.scala")))

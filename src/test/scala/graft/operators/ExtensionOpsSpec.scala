@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.Parity.{shingles, tokens}
 import graft.functions.TextFunctions._
 import graft.functions.SimHash
 import graft.SuiteTempDirs

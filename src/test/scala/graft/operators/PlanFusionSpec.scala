@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * text is re-split once per shingle/n-gram instead of once per row —
   * a silent O(tokens) → O(tokens · grams) blowup (plan-verified 3.4×
   * end-to-end on the streaming-incremental-dedup gate when it hit
-  * [[graft.operators.Dedup2.shingleSets]]).
+  * [[graft.operators.Dedup.docShinglesOf]]).
   *
   * This spec renders the OPTIMIZED plan of every tokenizing gate query
   * and asserts no `StringSplit` survives inside any `LambdaFunction`

@@ -42,7 +42,7 @@ class Streaming3Spec extends AnyFunSuite with BeforeAndAfterAll {
     // per content fingerprint (min doc_id) -> doc_id-ordered prefix-sum
     // shards -> per-shard report
     val surv = Tables.documents(spark, dir)
-      .withColumn("toks", graft.functions.TextFunctions.tokens($"text"))
+      .withColumn("toks", graft.functions.Parity.tokens($"text"))
       .filter(graft.operators.Curation.cascadeRule($"toks") === "pass")
       .select(md5($"text").as("fp"), $"doc_id", size($"toks").cast("long").as("ntok"))
       .withColumn("rn", row_number().over(

@@ -123,12 +123,4 @@ class ConnectorOptionsSpec extends AnyFunSuite {
     val o = ConnectorOptions(base + ("queueFetchWaitTimeoutSeconds" -> "30"))
     assert(o.drainRoundTimeoutSeconds == 300L)
   }
-
-  test("minFilesForFirstBatch: absent by default, parsed, must be positive") {
-    assert(ConnectorOptions(base).minFilesForFirstBatch.isEmpty)
-    assert(ConnectorOptions(base + ("minFilesForFirstBatch" -> "3"))
-      .minFilesForFirstBatch.contains(3))
-    intercept[IllegalArgumentException](
-      ConnectorOptions(base + ("minFilesForFirstBatch" -> "0")))
-  }
 }

@@ -56,15 +56,4 @@ class FileCacheSpec extends AnyFunSuite {
     assert(c.size == 1 && c.isPending("new") && !c.isPending("old1"))
     assert(c.purge() == 0)
   }
-
-  test("totalAdmitted counts distinct insertions, never decrements") {
-    val c = new FileCache(100L)
-    assert(c.totalAdmitted == 0L)
-    assert(c.addIfAbsent("a", desc(1)))
-    assert(!c.addIfAbsent("a", desc(2))) // lost race: no count
-    assert(c.totalAdmitted == 1L)
-    c.markProcessed("a")
-    c.addIfAbsent("far", desc(100000)); c.purge() // removal must not decrement
-    assert(c.totalAdmitted == 2L)
-  }
 }

@@ -69,12 +69,14 @@ class GetBatchSpec extends AnyFunSuite with SuiteTempDirs {
     * sinks hand their batch on as materialized rows without it. */
   private def batchRelation(paths: Seq[String]): DataFrame = {
     val qn = freshQueue(paths)
-    val source = new GraftFileSourceProvider().createSource(spark.sqlContext,
-      tempDir("getbatch-meta").toString, Some(schema), "graft-files",
-      Map("fileFormat" -> "json", "queueName" -> qn, "maxFilesPerTrigger" -> "100",
-        "minFilesForFirstBatch" -> paths.size.toString))
-    val plan = try source.getBatch(None, source.getOffset.get).queryExecution.logical
-    finally { source.stop(); InMemoryQueueRegistry.remove(qn) }
+    val source = new GraftFileSource(spark.sqlContext, tempDir("getbatch-meta").toString,
+      schema, Map("fileFormat" -> "json", "queueName" -> qn, "maxFilesPerTrigger" -> "100"))
+    val plan = try {
+      // the AvailableNow drain admits every announced path before the
+      // first offset, so batch 0 holds all of them
+      source.prepareForTriggerAvailableNow()
+      source.getBatch(None, source.getOffset.get).queryExecution.logical
+    } finally { source.stop(); InMemoryQueueRegistry.remove(qn) }
     GraftShims.ofRows(spark, plan.collectFirst {
       case l: LogicalRelation => LogicalRelation(l.relation)
     }.getOrElse(fail(s"no file relation in $plan")))
