@@ -20,11 +20,11 @@ import org.apache.spark.sql.functions._
   *  - micro-nats: ln(x)·10⁶ rounded to a long, so log-domain scores sum
   *    as exact integers on both engines (the JVM spelling is
   *    [[CharEntropy]]'s).
-  *  - the text kernel: a token is a maximal run of non-whitespace in
-  *    the space-trimmed text (so empty text is one empty token), and
-  *    everything built on tokens goes through here too: the normalized
-  *    text, the stop-word list, the three quality ratios (stop-word
-  *    share, punctuation share, mean token length) and word shingles.
+  *  - the text kernel: tokens are the space-trimmed text split on
+  *    whitespace runs, and everything built on tokens goes through here
+  *    too: the normalized text, the stop-word list, the three quality
+  *    ratios (stop-word share, punctuation share, mean token length) and
+  *    word shingles.
   *  - word n-grams: contiguous n-token windows joined by one space.
   *  - DuckDB list sums: `list_sum` over a transformed list, the one
   *    left-to-right accumulation the dot products and norms are built
