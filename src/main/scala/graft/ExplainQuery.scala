@@ -14,7 +14,14 @@ package graft
   * `emb_outlier` (its i64-headroom guard is a collect at construction
   * time). For those names this tool prints the plan of the FINAL
   * read-back frame and pays the run; prefer `graft.Bench <names>
-  * <rounds>` when the run itself is what you want measured. */
+  * <rounds>` when the run itself is what you want measured.
+  *
+  * Plans are not all stable across JVM histories: explained among all
+  * 219 rows in one JVM, `corpus_stats` can swap the `Expand` group order
+  * of its two distinct aggregates (the order follows how many
+  * expressions the JVM created before). A whole-inventory plan diff
+  * re-explains that row alone (`graft.ExplainQuery <sfDir>
+  * corpus_stats`) before calling it changed. */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

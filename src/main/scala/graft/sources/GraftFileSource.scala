@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.util.control.NonFatal
 
-import scala.concurrent.Await
+import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -33,11 +33,21 @@ import org.apache.spark.sql.types.StructType
   * FileFormat machinery, so Catalyst pushdown/pruning and the vectorized
   * parquet reader apply downstream unchanged.
   *
+  * Queue acks: once a batch's files are in the metadata log, its
+  * messages' deletes go out on the queue client's pool and `latestOffset`
+  * returns without them, so the acks run while Spark plans, executes and
+  * writes its offset WAL. The next `latestOffset` waits for them first (at
+  * most the client's call wait, counted in `phase.ackWaitMs`), and so does
+  * `stop()`. Exactly-once rests on the log and Spark's offset WAL, not on
+  * the ack: a message whose ack never lands redelivers and is dropped as
+  * already persisted.
+  *
   * Scale notes (100 TB): driver state is file *metadata* only: the
   * pending set is bounded by ingest lag, the log's index by the
   * maxFileAge horizon; executors read rows directly from storage; the
   * queue fetch overlaps query execution (asyncFetch timeout-then-
-  * background); per-trigger admission is bounded by maxFilesPerTrigger.
+  * background), and so do a batch's acks; per-trigger admission is
+  * bounded by maxFilesPerTrigger.
   *
   * Batch composition: a default-trigger query cuts each offset from
   * whatever the queue has delivered so far, so its first batch depends on
@@ -81,6 +91,11 @@ class GraftFileSource(
   @volatile private var reprocessing = false
   @volatile private var availableNowDrained = false
 
+  // the last batch's queue deletes, in flight while Spark runs the batch
+  private var pendingAcks: Future[Unit] = Future.unit
+  @volatile private var ackWaitNs = 0L // summed over triggers: phase.ackWaitMs
+  @volatile private var drainNs = 0L // the last AvailableNow drain: phase.drainMs
+
   /** Admit -> queue action, run on the queue client's fetch threads
     * (reference: S3ConnectorSource.scala:76-101). [[FileValidator.admit]]
     * validates and inserts as one step against the trigger's
@@ -101,7 +116,7 @@ class GraftFileSource(
 
   private val queueClient: QueueFetchClient = {
     val transport: RawQueue = options.queueType match {
-      case ConnectorOptions.QUEUE_TYPE_IN_MEMORY => InMemoryQueueRegistry.queue(options.queueName)
+      case ConnectorOptions.QUEUE_TYPE_IN_MEMORY => InMemoryQueueRegistry.transport(options.queueName)
       case ConnectorOptions.QUEUE_TYPE_SQS =>
         // SDK-free SQS wire binding: queueName carries the full queue URL.
         // The signing region follows the URL's region when it names one
@@ -165,12 +180,17 @@ class GraftFileSource(
     * pinning the end offset at the first getOffset, which would truncate
     * the run to one chunk.) */
   override def prepareForTriggerAvailableNow(): Unit = {
+    val t0 = System.nanoTime()
+    // a round takes what maxConcurrency full receives (10 messages each)
+    // hold, so the drain does not stop to re-probe every maxFilesPerTrigger
+    // messages; the client keeps each wave at its usual width
+    val roundBudget = Some(options.maxConcurrency * 10)
     var done = false
     var failedRounds = 0
     while (!done) {
       // round bound derives from the polling options (not a magic constant)
       val res = Await.result(
-        queueClient.asyncFetch(options.queueFetchWaitTimeoutSeconds),
+        queueClient.asyncFetch(options.queueFetchWaitTimeoutSeconds, roundBudget),
         options.drainRoundTimeoutSeconds.seconds)
       if (res.contains(ConsumeResult.ReceiveException)) {
         // a failing queue must NOT read as a clean drain: retry within the
@@ -187,6 +207,7 @@ class GraftFileSource(
       }
     }
     availableNowDrained = true
+    drainNs = System.nanoTime() - t0
     logInfo(s"AvailableNow: queue drained, ${fileCache.size} files cached")
   }
 
@@ -202,6 +223,11 @@ class GraftFileSource(
 
   // ---- offset advance (reference: S3ConnectorSource.scala:193-242) ------
   private def fetchMaxOffset(): Option[Offset] = synchronized {
+    if (!pendingAcks.isCompleted) {
+      val t0 = System.nanoTime()
+      queueClient.awaitCalls(pendingAcks)
+      ackWaitNs += System.nanoTime() - t0
+    }
     // no queue consumption while a replay or an AvailableNow snapshot drains
     if (!reprocessing && !availableNowDrained) {
       // continuous-mode error budget: fetches are fire-and-forget, so a dead
@@ -219,7 +245,8 @@ class GraftFileSource(
       logInfo(s"batch $metadataLogCurrentOffset: ${entries.length} files admitted")
       // the log holds them now: it alone records them from here on
       files.foreach(f => fileCache.markProcessed(f.filePath))
-      queueClient.handleProcessedMessageBatch(
+      // ack while the batch runs; the next trigger or stop() waits for it
+      pendingAcks = queueClient.deleteMessageBatchAsync(
         files.map(_.messageId).filterNot(_ == "reprocess"))
     }
     // checked with or without a batch: replayed files the horizon has
@@ -288,8 +315,11 @@ class GraftFileSource(
   /** [[ReportsSourceMetrics]]: surface the connector's operational state
     * through the engine's own progress path — `query.lastProgress
     * .sources[i].metrics` carries the 14 queue counters (prefixed
-    * `queue.`), the metadata-log commit metrics (prefixed `log.`), and
-    * the files admitted but not yet logged (`pendingFiles`), so an
+    * `queue.`), the metadata-log commit metrics (prefixed `log.`), the
+    * files admitted but not yet logged (`pendingFiles`), the wall time of
+    * the last AvailableNow drain (`phase.drainMs`, 0 without one) and the
+    * time triggers spent waiting for the previous batch's acks
+    * (`phase.ackWaitMs`, summed since the source started), so an
     * operator watching StreamingQuery progress (or a
     * StreamingQueryListener feeding a metrics system)
     * sees queue health per trigger without log scraping (reference
@@ -301,9 +331,12 @@ class GraftFileSource(
     queueClient.metrics.snapshot.foreach { case (k, v) => m.put(s"queue.$k", v.toString) }
     metadataLog.metrics.foreach { case (k, v) => m.put(s"log.$k", v.toString) }
     m.put("pendingFiles", fileCache.size.toString)
+    m.put("phase.drainMs", (drainNs / 1000000).toString)
+    m.put("phase.ackWaitMs", (ackWaitNs / 1000000).toString)
     m
   }
 
+  // close() waits for in-flight calls, so the last batch's acks land first
   override def stop(): Unit = {
     try queueClient.close()
     finally metadataLog.close()

@@ -74,9 +74,18 @@ final class InMemoryQueue(val name: String) extends RawQueue {
   * test/pipeline wrote to (queueName option = registry key). */
 object InMemoryQueueRegistry {
   private val queues = new ConcurrentHashMap[String, InMemoryQueue]()
+  private val wrapped = new ConcurrentHashMap[String, RawQueue]()
   def queue(name: String): InMemoryQueue =
     queues.computeIfAbsent(name, new InMemoryQueue(_))
-  def remove(name: String): Unit = queues.remove(name)
+  def remove(name: String): Unit = { queues.remove(name); wrapped.remove(name) }
+  /** The transport a source opens on `name`: the queue itself, or what
+    * [[interpose]] put over it. */
+  private[graft] def transport(name: String): RawQueue =
+    Option(wrapped.get(name)).getOrElse(queue(name))
+  /** Sources opened on `name` from now on talk through `transport`, a
+    * wrapper over `queue(name)` (tests time and slow the wire calls so). */
+  private[graft] def interpose(name: String, transport: RawQueue): Unit =
+    wrapped.put(name, transport)
   /** Names of the queues registered now (leak checks in tests). */
   private[graft] def names: Set[String] = {
     import scala.jdk.CollectionConverters._
@@ -88,24 +97,32 @@ object InMemoryQueueRegistry {
   * reference's fetch semantics (AsyncSqsClientImpl.scala:61-167) with up to
   * `maxConcurrency` wire calls in flight at once.
   *
-  * A fetch round is a chain of waves of concurrent receives. It starts with
-  * one receive, so an idle or failing queue costs one call per round (each
-  * is billed on real SQS). While every receive of the last wave came back
-  * full, the next wave issues min(maxConcurrency, ceil(remaining / 10))
+  * A fetch round is a chain of waves of concurrent receives, bounded by the
+  * round's budget: `maxFilesPerFetch` unless the caller passes another (an
+  * AvailableNow drain passes `maxConcurrency` x 10, so it runs whole waves
+  * instead of re-probing every `maxFilesPerFetch` messages). A round starts
+  * with one receive, so an idle or failing queue costs one call per round
+  * (each is billed on real SQS). While every receive of the last wave came
+  * back full, the next wave issues min(width, ceil(remaining / 10))
   * receives together, never asking for more than the round's remaining
-  * `maxFilesPerFetch` in total; after a partly full wave the next is one
-  * receive again. Each wave's messages are then parsed and consumed one
-  * after another, in receive order. The round ends at the budget, when a
-  * receive comes back empty (`ReceiveEmpty`) or when one throws (one
-  * `ReceiveException` per wave). The caller blocks at most
-  * `waitTimeoutSeconds` and the round continues in the background (overlap
-  * of ingest with query execution).
+  * budget in total; after a partly full wave the next is one receive again.
+  * The width is min(maxConcurrency, ceil(maxFilesPerFetch / 10)) whatever
+  * the budget, so a larger drain budget buys more waves, not wider ones
+  * (each in-flight receive holds a pooled connection on both ends). Each
+  * wave's messages are then parsed and consumed one after another, in
+  * receive order. The round ends at the budget, when a receive comes back
+  * empty (`ReceiveEmpty`) or when one throws (one `ReceiveException` per
+  * wave). The caller blocks at most `waitTimeoutSeconds` and the round
+  * continues in the background (overlap of ingest with query execution).
   *
   * The delete path carries the reference's partial-failure discipline
   * (AsyncSqsClientImpl.scala:238-289) regardless of transport and sends a
-  * batch's 10-entry chunks concurrently. The one client class of the source
-  * (reference: AsyncQueueClient.scala:26-52); tests drive it over an
-  * [[InMemoryQueue]] and over [[SqsHttpQueue]].
+  * batch's 10-entry chunks concurrently on the pool.
+  * [[deleteMessageBatchAsync]] returns without waiting, so the source acks
+  * a batch while Spark runs it; [[deleteMessageBatch]] waits for the same
+  * calls. The one client class of the source (reference:
+  * AsyncQueueClient.scala:26-52); tests drive it over an [[InMemoryQueue]]
+  * and over [[SqsHttpQueue]].
   */
 final class QueueFetchClient(
     queue: RawQueue,
@@ -148,6 +165,11 @@ final class QueueFetchClient(
 
   private val ReceiveBatch = 10 // SQS receive hard limit, kept for parity
 
+  /** Most receives one wave issues: what a `maxFilesPerFetch` round needs
+    * at once, and never more than `maxConcurrency`. */
+  private val waveWidth =
+    maxFilesPerFetch.fold(maxConcurrency)(n => math.min(maxConcurrency, (n - 1) / ReceiveBatch + 1))
+
   /** How long a caller waits for the wire calls it fanned out (a batch's
     * deletes; in-flight calls at close). A call still running after the
     * visibility timeout has lost its messages' lease anyway: they are
@@ -169,11 +191,14 @@ final class QueueFetchClient(
     p.future
   }
 
-  /** Kick one fetch round; the returned future completes when the round
+  /** Kick one fetch round of at most `budget` messages (None: until the
+    * queue comes back empty); the returned future completes when the round
     * finishes (caller may stop waiting early and let it continue). */
-  def asyncFetch(waitTimeoutSeconds: Long): Future[Seq[ConsumeResult]] = {
+  def asyncFetch(
+      waitTimeoutSeconds: Long,
+      budget: Option[Int] = maxFilesPerFetch): Future[Seq[ConsumeResult]] = {
     metrics.fetchThreadCounter.increment()
-    val fut = fetchRound().transform { r =>
+    val fut = fetchRound(budget.getOrElse(Int.MaxValue)).transform { r =>
       if (r.isFailure) metrics.fetchThreadFailedCounter.increment()
       r
     }
@@ -185,8 +210,7 @@ final class QueueFetchClient(
     fut
   }
 
-  private def fetchRound(): Future[Seq[ConsumeResult]] = {
-    val budget = maxFilesPerFetch.getOrElse(Int.MaxValue)
+  private def fetchRound(budget: Int): Future[Seq[ConsumeResult]] = {
     val results = mutable.ArrayBuffer[ConsumeResult]()
     var received = 0 // messages received so far, charged against the budget
 
@@ -208,7 +232,7 @@ final class QueueFetchClient(
         val got = replies.map(_.get.size)
         if (got.contains(0)) { results += ConsumeResult.ReceiveEmpty; 0 }
         else if (received >= budget) 0
-        else if (got == asked) math.min(maxConcurrency, (budget - received - 1) / ReceiveBatch + 1)
+        else if (got == asked) math.min(waveWidth, (budget - received - 1) / ReceiveBatch + 1)
         else 1
       }
     }
@@ -260,17 +284,22 @@ final class QueueFetchClient(
     * failed ENTRY is counted and dropped (the message redelivers and is
     * re-acked later), while a failed CALL falls back to per-message
     * deletes so one broken batch endpoint can't strand a whole chunk.
-    * Several chunks go out concurrently and the caller waits for them at
-    * most `callWaitSeconds`; a single chunk runs on the caller's thread. */
-  def deleteMessageBatch(messageIds: Seq[String]): Unit = {
-    val chunks = messageIds.grouped(ReceiveBatch).toSeq
-    if (chunks.lengthCompare(1) <= 0) chunks.foreach(deleteChunk)
-    else {
-      val all = Future.traverse(chunks)(chunk => onPool(deleteChunk(chunk)))
-      try Await.ready(all, Duration(callWaitSeconds, TimeUnit.SECONDS))
-      catch { case _: java.util.concurrent.TimeoutException => () }
-    }
-  }
+    * Every chunk goes out on the pool at once; the returned future
+    * completes when all of them (fallbacks included) have returned. A
+    * closed pool fails it: the messages redeliver and are dropped as
+    * already persisted. */
+  def deleteMessageBatchAsync(messageIds: Seq[String]): Future[Unit] =
+    Future.traverse(messageIds.grouped(ReceiveBatch).toSeq)(chunk => onPool(deleteChunk(chunk)))
+      .map(_ => ())
+
+  /** Waits for `calls` at most `callWaitSeconds`, then returns either way. */
+  def awaitCalls(calls: Future[_]): Unit =
+    try Await.ready(calls, Duration(callWaitSeconds, TimeUnit.SECONDS))
+    catch { case _: java.util.concurrent.TimeoutException => () }
+
+  /** [[deleteMessageBatchAsync]], waited for at most `callWaitSeconds`. */
+  def deleteMessageBatch(messageIds: Seq[String]): Unit =
+    awaitCalls(deleteMessageBatchAsync(messageIds))
 
   private def deleteChunk(chunk: Seq[String]): Unit =
     try {
@@ -296,9 +325,9 @@ final class QueueFetchClient(
     deleteMessageBatch(messageIds)
 
   /** Stops new work, waits at most `callWaitSeconds` for in-flight wire
-    * calls so none signs with credentials the transport is about to close,
-    * then closes the transport. A round whose next step the closed pool
-    * refuses fails instead of consuming. */
+    * calls (a batch's deletes among them) so none signs with credentials
+    * the transport is about to close, then closes the transport. A round
+    * whose next step the closed pool refuses fails instead of consuming. */
   override def close(): Unit = {
     pool.shutdown()
     try pool.awaitTermination(callWaitSeconds, TimeUnit.SECONDS)

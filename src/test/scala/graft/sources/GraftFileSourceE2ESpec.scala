@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Path => JPath}
+import java.util.concurrent.CountDownLatch
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -179,6 +180,74 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with SuiteTempDirs {
     // chunks (the wrapper must not pin the end offset at the first batch)
     assert(query.recentProgress.count(_.numInputRows > 0) >= 3,
       s"expected a multi-chunk drain, got ${query.recentProgress.length} progress events")
+    val m = query.recentProgress.filter(_.numInputRows > 0).last.sources(0).metrics
+    assert(m.get("phase.drainMs").toLong >= 0 && m.get("phase.ackWaitMs").toLong >= 0, s"$m")
+  }
+
+  /** Drains `qn` with one AvailableNow query at 2 files per trigger into a
+    * parquet sink at `out`, checkpointed at `ckpt`. */
+  private def drainToParquet(qn: String, out: String, ckpt: String,
+      extra: Map[String, String] = Map.empty): Unit = {
+    import org.apache.spark.sql.streaming.Trigger
+    val query = streamDF(qn, Map("maxFilesPerTrigger" -> "2") ++ extra)
+      .writeStream.format("parquet").option("path", out).option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    assert(query.awaitTermination(60000), "AvailableNow query did not self-terminate")
+  }
+
+  test("exactly-once with acks in flight: stop before the last batch's deletes land, restart") {
+    val (qn, q) = freshQueue()
+    val dir = tempDir("graft-e2e")
+    val out = tempDir("graft-out").toString
+    val ckpt = tempDir("graft-ckpt").toString
+    val gate = new CountDownLatch(1)
+    val wire = new CountingQueue(q, holdDeletes = Some(gate)) // batch deletes wait for the gate
+    InMemoryQueueRegistry.interpose(qn, wire)
+    try {
+      (1 to 4).foreach(i => announce(q, writeJson(dir, s"h$i.json", Seq(i -> s"h$i"))))
+      val lease = Map("queue.visibilityTimeoutSeconds" -> "1")
+      drainToParquet(qn, out, ckpt, lease)
+      // both batches are in the sink, but the stop outwaited their deletes
+      assert(spark.read.parquet(out).count() == 4)
+      assert(wire.spans("deleteBatch").isEmpty && q.approximateSize == 4)
+
+      Thread.sleep(1100) // every lease has lapsed: all four messages redeliver
+      drainToParquet(qn, out, ckpt, lease)
+      val ids = spark.read.parquet(out).collect().map(_.getInt(0)).sorted.toSeq
+      assert(ids == Seq(1, 2, 3, 4), "each file is in the sink once")
+      // the restarted source found every redelivered file in its log and
+      // dropped it with a single delete
+      assert(wire.spans("delete").size == 4)
+      assert(q.approximateSize == 0)
+    } finally {
+      gate.countDown()
+      InMemoryQueueRegistry.remove(qn)
+    }
+  }
+
+  test("exactly-once with acks in flight: the per-message fallback acks in the background") {
+    val (qn, q) = freshQueue()
+    val dir = tempDir("graft-e2e")
+    val out = tempDir("graft-out").toString
+    val ckpt = tempDir("graft-ckpt").toString
+    q.failBatchDeletes = true
+    try {
+      val paths = (1 to 4).map(i => writeJson(dir, s"b$i.json", Seq(i -> s"b$i")))
+      paths.foreach(announce(q, _))
+      drainToParquet(qn, out, ckpt)
+      // every batch delete failed; the fallback's single deletes landed
+      // before the query returned
+      assert(q.approximateSize == 0)
+
+      // restart: two logged files announced again, and one new file
+      announce(q, paths(0))
+      announce(q, paths(3))
+      announce(q, writeJson(dir, "b5.json", Seq(5 -> "b5")))
+      drainToParquet(qn, out, ckpt)
+      val ids = spark.read.parquet(out).collect().map(_.getInt(0)).sorted.toSeq
+      assert(ids == Seq(1, 2, 3, 4, 5), "each file is in the sink once")
+      assert(q.approximateSize == 0)
+    } finally q.failBatchDeletes = false
   }
 
   test("AvailableNow on a dead queue fails the query, never reports a clean drain") {
@@ -311,6 +380,10 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with SuiteTempDirs {
         s"metadata-log metrics missing from progress metrics: $m")
       // both files are logged by the last data trigger: none is pending
       assert(m.get("pendingFiles") == "0", s"$m")
+      // the source's own phases: no AvailableNow drain ran, and the ack
+      // waits are a non-negative total
+      assert(m.get("phase.drainMs") == "0", s"$m")
+      assert(m.get("phase.ackWaitMs").toLong >= 0, s"$m")
       // and the progress JSON an operator would ship carries them verbatim
       assert(withRows.last.json.contains("queue.receiveMessage"), withRows.last.json)
     } finally query.stop()

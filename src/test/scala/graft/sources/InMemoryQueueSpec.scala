@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.TimeUnit
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
@@ -10,35 +10,72 @@ import scala.concurrent.duration._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Delegates to `q`, recording each receive's requested size and the most
-  * receives in flight at once. Each receive takes `delayMs`; the
-  * `failCall`-th receive (1-based) throws instead of receiving. */
-private final class CountingQueue(q: RawQueue, delayMs: Long = 0L, failCall: Int = 0)
-    extends RawQueue {
+/** Delegates to `q`, recording each receive's requested size, the most
+  * receives in flight at once, and the start and end time of every call.
+  * Each call takes `delayMs` more; the `failCall`-th receive (1-based)
+  * throws instead of receiving, and a `deleteBatch` waits for `holdDeletes`
+  * to open when one is given. */
+private final class CountingQueue(
+    q: RawQueue,
+    delayMs: Long = 0L,
+    failCall: Int = 0,
+    holdDeletes: Option[CountDownLatch] = None) extends RawQueue {
   private val asked = mutable.ArrayBuffer[Int]()
   private val calls = new AtomicInteger(0)
   private val inFlight = new AtomicInteger(0)
   private val inFlightMax = new AtomicInteger(0)
+  private val done = mutable.ArrayBuffer[CountingQueue.Span]()
 
   def receiveCalls: Int = calls.get()
   def inFlightPeak: Int = inFlightMax.get()
   /** Sizes asked since the last call, in call order. */
   def takeAsked(): Seq[Int] = asked.synchronized { val a = asked.toSeq; asked.clear(); a }
+  /** The finished calls named `op`, in the order they finished. */
+  def spans(op: String): Seq[CountingQueue.Span] = done.synchronized(done.filter(_.op == op).toSeq)
+
+  private def timed[A](op: String)(body: => A): A = {
+    val t0 = System.nanoTime()
+    try {
+      if (delayMs > 0) Thread.sleep(delayMs)
+      body
+    } finally {
+      val span = CountingQueue.Span(op, t0, System.nanoTime())
+      done.synchronized(done += span)
+    }
+  }
 
   override def receive(max: Int, visibilityTimeoutSeconds: Int): Seq[QueueMessage] = {
     val n = calls.incrementAndGet()
     asked.synchronized(asked += max)
     inFlightMax.accumulateAndGet(inFlight.incrementAndGet(), math.max)
-    try {
-      if (delayMs > 0) Thread.sleep(delayMs)
+    try timed("receive") {
       if (n == failCall) throw new RuntimeException(s"injected failure of receive $n")
       q.receive(max, visibilityTimeoutSeconds)
     } finally inFlight.decrementAndGet()
   }
-  override def delete(messageId: String): Boolean = q.delete(messageId)
-  override def deleteBatch(messageIds: Seq[String]): Map[String, Boolean] = q.deleteBatch(messageIds)
+  override def delete(messageId: String): Boolean = timed("delete")(q.delete(messageId))
+  override def deleteBatch(messageIds: Seq[String]): Map[String, Boolean] = timed("deleteBatch") {
+    holdDeletes.foreach(_.await())
+    q.deleteBatch(messageIds)
+  }
   override def changeVisibility(messageId: String, timeoutSeconds: Int): Boolean =
-    q.changeVisibility(messageId, timeoutSeconds)
+    timed("changeVisibility")(q.changeVisibility(messageId, timeoutSeconds))
+}
+
+private object CountingQueue {
+  /** One wire call, `System.nanoTime` at its start and at its end. */
+  final case class Span(op: String, startNs: Long, endNs: Long)
+
+  /** How many sequential waves `calls` ran in: a call that starts after
+    * every earlier one has ended starts a new wave. */
+  def waves(calls: Seq[Span]): Int = {
+    var lastEnd = Long.MinValue
+    calls.sortBy(_.startNs).count { c =>
+      val fresh = c.startNs >= lastEnd
+      lastEnd = math.max(lastEnd, c.endNs)
+      fresh
+    }
+  }
 }
 
 class InMemoryQueueSpec extends AnyFunSuite {
