@@ -47,7 +47,11 @@ import org.apache.spark.sql.types.StructType
   * maxFileAge horizon; executors read rows directly from storage; the
   * queue fetch overlaps query execution (asyncFetch timeout-then-
   * background), and so do a batch's acks; per-trigger admission is
-  * bounded by maxFilesPerTrigger.
+  * bounded by maxFilesPerTrigger. An AvailableNow drain pays for a
+  * backlog in waves of `queue.maxConcurrency` receives, one wave a round,
+  * so about backlog / (`maxConcurrency` x 10) round trips; over SQS the
+  * receives come from one connection pool per JVM, which keeps at most
+  * `maxConcurrency` connections per endpoint for a drain.
   *
   * Batch composition: a default-trigger query cuts each offset from
   * whatever the queue has delivered so far, so its first batch depends on
@@ -95,6 +99,8 @@ class GraftFileSource(
   private var pendingAcks: Future[Unit] = Future.unit
   @volatile private var ackWaitNs = 0L // summed over triggers: phase.ackWaitMs
   @volatile private var drainNs = 0L // the last AvailableNow drain: phase.drainMs
+  @volatile private var logAddNs = 0L // the last trigger's metadataLog.add: phase.logAddMs
+  @volatile private var getBatchNs = 0L // the last getBatch: phase.getBatchMs
 
   /** Admit -> queue action, run on the queue client's fetch threads
     * (reference: S3ConnectorSource.scala:76-101). [[FileValidator.admit]]
@@ -178,19 +184,22 @@ class GraftFileSource(
     * query self-terminates once offsets stop advancing. (Implementing
     * SupportsTriggerAvailableNow directly keeps MicroBatchExecution from
     * pinning the end offset at the first getOffset, which would truncate
-    * the run to one chunk.) */
+    * the run to one chunk.)
+    *
+    * A drain round takes what `maxConcurrency` full receives (10 messages
+    * each) hold and opens with all of them at once, so each round is one
+    * wave and a backlog costs about backlog / (`maxConcurrency` x 10)
+    * round trips. The trade: an empty queue costs `maxConcurrency`
+    * receives instead of one, once per query. */
   override def prepareForTriggerAvailableNow(): Unit = {
     val t0 = System.nanoTime()
-    // a round takes what maxConcurrency full receives (10 messages each)
-    // hold, so the drain does not stop to re-probe every maxFilesPerTrigger
-    // messages; the client keeps each wave at its usual width
     val roundBudget = Some(options.maxConcurrency * 10)
     var done = false
     var failedRounds = 0
     while (!done) {
       // round bound derives from the polling options (not a magic constant)
       val res = Await.result(
-        queueClient.asyncFetch(options.queueFetchWaitTimeoutSeconds, roundBudget),
+        queueClient.asyncFetch(options.queueFetchWaitTimeoutSeconds, roundBudget, openWide = true),
         options.drainRoundTimeoutSeconds.seconds)
       if (res.contains(ConsumeResult.ReceiveException)) {
         // a failing queue must NOT read as a clean drain: retry within the
@@ -237,11 +246,14 @@ class GraftFileSource(
       queueClient.asyncFetch(options.queueFetchWaitTimeoutSeconds)
     }
     val files = fileCache.getUnprocessedFiles(options.maxFilesPerTrigger)
+    logAddNs = 0L
     if (files.nonEmpty) {
       metadataLogCurrentOffset += 1
       val entries =
         files.map(f => FileEntry(f.filePath, f.timestampMs, metadataLogCurrentOffset)).toArray
+      val t0 = System.nanoTime()
       metadataLog.add(metadataLogCurrentOffset, entries)
+      logAddNs = System.nanoTime() - t0
       logInfo(s"batch $metadataLogCurrentOffset: ${entries.length} files admitted")
       // the log holds them now: it alone records them from here on
       files.foreach(f => fileCache.markProcessed(f.filePath))
@@ -276,6 +288,7 @@ class GraftFileSource(
     fetchMaxOffset().orNull
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
+    val t0 = System.nanoTime()
     val startId = start.map(logOffsetOf).getOrElse(-1L)
     val endId = logOffsetOf(end)
     val entries =
@@ -286,11 +299,11 @@ class GraftFileSource(
     logInfo(s"getBatch ($startId, $endId]: ${paths.length} files")
     // the relation is built over driver-side stats of exactly these paths
     // (no listing job); an announced directory is still listed
-    if (paths.isEmpty) {
-      GraftShims.emptyStreamingDataFrame(spark, userSchema)
-    } else {
-      GraftShims.ofRows(spark, LogicalRelation(batchRelation(paths), isStreaming = true))
-    }
+    val df =
+      if (paths.isEmpty) GraftShims.emptyStreamingDataFrame(spark, userSchema)
+      else GraftShims.ofRows(spark, LogicalRelation(batchRelation(paths), isStreaming = true))
+    getBatchNs = System.nanoTime() - t0
+    df
   }
 
   private def logOffsetOf(o: Offset): Long = o match {
@@ -317,9 +330,12 @@ class GraftFileSource(
     * .sources[i].metrics` carries the 14 queue counters (prefixed
     * `queue.`), the metadata-log commit metrics (prefixed `log.`), the
     * files admitted but not yet logged (`pendingFiles`), the wall time of
-    * the last AvailableNow drain (`phase.drainMs`, 0 without one) and the
+    * the last AvailableNow drain (`phase.drainMs`, 0 without one), the
     * time triggers spent waiting for the previous batch's acks
-    * (`phase.ackWaitMs`, summed since the source started), so an
+    * (`phase.ackWaitMs`, summed since the source started), the last
+    * trigger's metadata-log write, compaction included (`phase.logAddMs`,
+    * 0 when it admitted no batch) and the last `getBatch`'s relation build
+    * (`phase.getBatchMs`), so an
     * operator watching StreamingQuery progress (or a
     * StreamingQueryListener feeding a metrics system)
     * sees queue health per trigger without log scraping (reference
@@ -333,6 +349,8 @@ class GraftFileSource(
     m.put("pendingFiles", fileCache.size.toString)
     m.put("phase.drainMs", (drainNs / 1000000).toString)
     m.put("phase.ackWaitMs", (ackWaitNs / 1000000).toString)
+    m.put("phase.logAddMs", (logAddNs / 1000000).toString)
+    m.put("phase.getBatchMs", (getBatchNs / 1000000).toString)
     m
   }
 

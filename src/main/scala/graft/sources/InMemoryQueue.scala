@@ -98,22 +98,31 @@ object InMemoryQueueRegistry {
   * `maxConcurrency` wire calls in flight at once.
   *
   * A fetch round is a chain of waves of concurrent receives, bounded by the
-  * round's budget: `maxFilesPerFetch` unless the caller passes another (an
-  * AvailableNow drain passes `maxConcurrency` x 10, so it runs whole waves
-  * instead of re-probing every `maxFilesPerFetch` messages). A round starts
-  * with one receive, so an idle or failing queue costs one call per round
-  * (each is billed on real SQS). While every receive of the last wave came
-  * back full, the next wave issues min(width, ceil(remaining / 10))
-  * receives together, never asking for more than the round's remaining
-  * budget in total; after a partly full wave the next is one receive again.
-  * The width is min(maxConcurrency, ceil(maxFilesPerFetch / 10)) whatever
-  * the budget, so a larger drain budget buys more waves, not wider ones
-  * (each in-flight receive holds a pooled connection on both ends). Each
-  * wave's messages are then parsed and consumed one after another, in
-  * receive order. The round ends at the budget, when a receive comes back
-  * empty (`ReceiveEmpty`) or when one throws (one `ReceiveException` per
-  * wave). The caller blocks at most `waitTimeoutSeconds` and the round
-  * continues in the background (overlap of ingest with query execution).
+  * round's budget: `maxFilesPerFetch` unless the caller passes another. One
+  * width rule holds for every round: a wave is at most
+  * min(maxConcurrency, ceil(budget / 10)) receives wide, so a
+  * `maxFilesPerFetch` round keeps its usual width and an AvailableNow drain
+  * round (budget `maxConcurrency` x 10) is `maxConcurrency` wide. A round
+  * starts with one receive, so an idle or failing queue costs one call per
+  * round (each is billed on real SQS); a caller that asks for a wide opening
+  * (the drain) starts at full width instead, so a drain round whose
+  * receives come back full or empty is a single wave. While every receive
+  * of the last wave came back full, the next wave issues
+  * min(width, ceil(remaining / 10)) receives together, never asking for
+  * more than the round's remaining budget in total; after a partly full
+  * wave the next is one receive again. Each wave's messages are then
+  * parsed and consumed one after another, in receive order. The round ends
+  * at the budget, when a receive comes back empty (`ReceiveEmpty`) or when
+  * one throws (one `ReceiveException` per wave). The caller blocks at most
+  * `waitTimeoutSeconds` and the round continues in the background (overlap
+  * of ingest with query execution).
+  *
+  * The trade of the wide opening: an empty queue costs a drain
+  * `maxConcurrency` receives, not one, once per query; a backlog costs
+  * about backlog / (`maxConcurrency` x 10) sequential round trips. Every
+  * in-flight receive holds a connection, so over [[SqsHttpQueue]]
+  * `maxConcurrency` is also the most connections a drain opens to the
+  * endpoint (the pool they come from is shared by every queue of the JVM).
   *
   * The delete path carries the reference's partial-failure discipline
   * (AsyncSqsClientImpl.scala:238-289) regardless of transport and sends a
@@ -165,11 +174,6 @@ final class QueueFetchClient(
 
   private val ReceiveBatch = 10 // SQS receive hard limit, kept for parity
 
-  /** Most receives one wave issues: what a `maxFilesPerFetch` round needs
-    * at once, and never more than `maxConcurrency`. */
-  private val waveWidth =
-    maxFilesPerFetch.fold(maxConcurrency)(n => math.min(maxConcurrency, (n - 1) / ReceiveBatch + 1))
-
   /** How long a caller waits for the wire calls it fanned out (a batch's
     * deletes; in-flight calls at close). A call still running after the
     * visibility timeout has lost its messages' lease anyway: they are
@@ -192,13 +196,16 @@ final class QueueFetchClient(
   }
 
   /** Kick one fetch round of at most `budget` messages (None: until the
-    * queue comes back empty); the returned future completes when the round
-    * finishes (caller may stop waiting early and let it continue). */
+    * queue comes back empty), opening with one receive or, when `openWide`,
+    * with a wave of the round's full width; the returned future completes
+    * when the round finishes (caller may stop waiting early and let it
+    * continue). */
   def asyncFetch(
       waitTimeoutSeconds: Long,
-      budget: Option[Int] = maxFilesPerFetch): Future[Seq[ConsumeResult]] = {
+      budget: Option[Int] = maxFilesPerFetch,
+      openWide: Boolean = false): Future[Seq[ConsumeResult]] = {
     metrics.fetchThreadCounter.increment()
-    val fut = fetchRound(budget.getOrElse(Int.MaxValue)).transform { r =>
+    val fut = fetchRound(budget.getOrElse(Int.MaxValue), openWide).transform { r =>
       if (r.isFailure) metrics.fetchThreadFailedCounter.increment()
       r
     }
@@ -210,9 +217,12 @@ final class QueueFetchClient(
     fut
   }
 
-  private def fetchRound(budget: Int): Future[Seq[ConsumeResult]] = {
+  private def fetchRound(budget: Int, openWide: Boolean): Future[Seq[ConsumeResult]] = {
     val results = mutable.ArrayBuffer[ConsumeResult]()
     var received = 0 // messages received so far, charged against the budget
+    // most receives one wave issues: what the budget needs at once, and
+    // never more than maxConcurrency
+    val width = math.min(maxConcurrency, (budget - 1) / ReceiveBatch + 1)
 
     // consume one wave in receive order; the next wave's width, 0 to stop
     def settle(asked: Seq[Int], replies: Seq[Try[Seq[QueueMessage]]]): Int = {
@@ -232,20 +242,20 @@ final class QueueFetchClient(
         val got = replies.map(_.get.size)
         if (got.contains(0)) { results += ConsumeResult.ReceiveEmpty; 0 }
         else if (received >= budget) 0
-        else if (got == asked) math.min(waveWidth, (budget - received - 1) / ReceiveBatch + 1)
+        else if (got == asked) math.min(width, (budget - received - 1) / ReceiveBatch + 1)
         else 1
       }
     }
 
-    def wave(width: Int): Future[Seq[ConsumeResult]] = {
+    def wave(n: Int): Future[Seq[ConsumeResult]] = {
       val remaining = budget - received
-      val asked = Seq.tabulate(width)(i => math.min(ReceiveBatch, remaining - i * ReceiveBatch))
-      Future.traverse(asked)(n => onPool(Try(queue.receive(n, visibilityTimeoutSeconds))))
+      val asked = Seq.tabulate(n)(i => math.min(ReceiveBatch, remaining - i * ReceiveBatch))
+      Future.traverse(asked)(k => onPool(Try(queue.receive(k, visibilityTimeoutSeconds))))
         .flatMap(replies => onPool(settle(asked, replies)))
         .flatMap(next => if (next > 0) wave(next) else Future.successful(results.toSeq))
     }
 
-    wave(1)
+    wave(if (openWide) width else 1)
   }
 
   private def consume(msg: QueueMessage): ConsumeResult =

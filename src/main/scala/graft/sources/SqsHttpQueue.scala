@@ -43,6 +43,18 @@ import org.w3c.dom.{Document, Element}
   * clock-skew window after backoff). All four actions are safe to
   * retry: receive is at-least-once by contract; delete / visibility /
   * batch-delete are idempotent per receipt handle.
+  *
+  * Connections: every queue sends through one `HttpClient` per JVM
+  * (`SqsHttpQueue.http`), so its connection pool is shared across queues,
+  * sources and query restarts. A restarted query reuses pooled connections
+  * instead of paying a new handshake for each, and a stopped source leaves
+  * no connections of its own behind (JDK 17's `HttpClient` has no
+  * `close()`: a per-queue client would hold its connections until a GC
+  * cleared it). The pool holds at most as many connections to an endpoint
+  * as calls were ever in flight to it at once, which for one source is
+  * `queue.maxConcurrency` (an AvailableNow drain's wave width). Request
+  * timeouts, retries, signing and [[close]] (which closes only this
+  * queue's credentials) stay per queue.
   */
 final class SqsHttpQueue(
     queueUrl: String,
@@ -55,9 +67,6 @@ final class SqsHttpQueue(
     sleeper: Long => Unit = Thread.sleep) extends RawQueue {
 
   private val uri = URI.create(queueUrl)
-  private val http = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(requestTimeoutSeconds.toLong))
-    .build()
 
   /** Attempts (beyond the first) that were retried; observability for the
     * "transient blip vs real outage" distinction. */
@@ -106,7 +115,7 @@ final class SqsHttpQueue(
           (requestTimeoutSeconds + longPollWaitSeconds).toLong))
         .POST(HttpRequest.BodyPublishers.ofByteArray(payload))
       signed.headers.foreach { case (k, v) => builder.header(k, v) }
-      val resp = http.send(builder.build(), HttpResponse.BodyHandlers.ofString())
+      val resp = SqsHttpQueue.http.send(builder.build(), HttpResponse.BodyHandlers.ofString())
       (resp.statusCode(), resp.body())
     }
 
@@ -221,6 +230,8 @@ final class SqsHttpQueue(
       s"SQS ChangeMessageVisibility failed: HTTP $status ${errorCode(body).getOrElse("")} on $queueUrl")
   }
 
+  /** Closes this queue's credentials; the shared connection pool stays up
+    * for the JVM's other queues. */
   override def close(): Unit = credentials.close()
 }
 
@@ -229,6 +240,12 @@ object SqsHttpQueue {
     * parity with the SDK retry policy the reference builds
     * (AsyncSqsClientBuilder.scala:57-89, numRetries default 3). */
   val DefaultMaxRetries = 3
+
+  /** The JVM's one SQS client: a single connection pool for every queue.
+    * Its connect timeout is a constant; each queue sets its own request
+    * timeout. */
+  private lazy val http: HttpClient =
+    HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(30)).build()
 
   private val StandardHost = """(?:sqs|sqs-fips)\.([a-z0-9-]+)\.amazonaws\.com(?:\.cn)?""".r
   private val LegacyHost = """([a-z0-9-]+)\.queue\.amazonaws\.com""".r

@@ -384,6 +384,15 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with SuiteTempDirs {
       // waits are a non-negative total
       assert(m.get("phase.drainMs") == "0", s"$m")
       assert(m.get("phase.ackWaitMs").toLong >= 0, s"$m")
+      // the log write and the relation build are parts of the same
+      // trigger's latestOffset and getBatch, as the engine timed them
+      withRows.foreach { p =>
+        val pm = p.sources.head.metrics
+        val logAddMs = pm.get("phase.logAddMs").toLong
+        val getBatchMs = pm.get("phase.getBatchMs").toLong
+        assert(logAddMs >= 0 && logAddMs <= p.durationMs.get("latestOffset"), s"$pm ${p.durationMs}")
+        assert(getBatchMs >= 0 && getBatchMs <= p.durationMs.get("getBatch"), s"$pm ${p.durationMs}")
+      }
       // and the progress JSON an operator would ship carries them verbatim
       assert(withRows.last.json.contains("queue.receiveMessage"), withRows.last.json)
     } finally query.stop()

@@ -66,15 +66,17 @@ private object CountingQueue {
   /** One wire call, `System.nanoTime` at its start and at its end. */
   final case class Span(op: String, startNs: Long, endNs: Long)
 
-  /** How many sequential waves `calls` ran in: a call that starts after
-    * every earlier one has ended starts a new wave. */
-  def waves(calls: Seq[Span]): Int = {
+  /** The sequential waves `calls` ran in, as the number of calls in each,
+    * in start order: a call that starts after every earlier one has ended
+    * starts a new wave. */
+  def waveWidths(calls: Seq[Span]): Seq[Int] = {
+    val widths = mutable.ArrayBuffer[Int]()
     var lastEnd = Long.MinValue
-    calls.sortBy(_.startNs).count { c =>
-      val fresh = c.startNs >= lastEnd
+    calls.sortBy(_.startNs).foreach { c =>
+      if (c.startNs >= lastEnd) widths += 1 else widths(widths.size - 1) += 1
       lastEnd = math.max(lastEnd, c.endNs)
-      fresh
     }
+    widths.toSeq
   }
 }
 
@@ -142,12 +144,12 @@ class InMemoryQueueSpec extends AnyFunSuite {
     val q = InMemoryQueueRegistry.queue("fetch-2")
     q.clear()
     (1 to 30).foreach(i => q.send(s"""{"path":"g$i","timestampMs":$i}"""))
-    var n = 0
-    val client = new QueueFetchClient(q, "fetch-2", _ => n.synchronized { n += 1 },
+    val n = new AtomicInteger(0)
+    val client = new QueueFetchClient(q, "fetch-2", _ => n.incrementAndGet(),
       maxFilesPerFetch = Some(12), visibilityTimeoutSeconds = 60,
       maxConcurrency = 4, keepMessageOnConsumerError = false)
     Await.result(client.asyncFetch(10), Duration(30, TimeUnit.SECONDS))
-    assert(n == 12)
+    assert(n.get == 12)
     client.close()
   }
 
@@ -197,8 +199,8 @@ class InMemoryQueueSpec extends AnyFunSuite {
     val q = InMemoryQueueRegistry.queue("fetch-fail")
     q.clear()
     q.send("""{"path":"later","timestampMs":1}""")
-    var consumed = 0
-    val client = new QueueFetchClient(q, "fetch-fail", _ => consumed.synchronized { consumed += 1 },
+    val consumed = new AtomicInteger(0)
+    val client = new QueueFetchClient(q, "fetch-fail", _ => consumed.incrementAndGet(),
       None, 60, 2, keepMessageOnConsumerError = false)
     q.failReceives = true
     (1 to 3).foreach { i =>
@@ -210,7 +212,7 @@ class InMemoryQueueSpec extends AnyFunSuite {
     // queue recovers: the round consumes the backlog and the streak resets
     q.failReceives = false
     val ok = Await.result(client.asyncFetch(10), Duration(30, TimeUnit.SECONDS))
-    assert(ok.contains(ConsumeResult.Ok) && consumed == 1)
+    assert(ok.contains(ConsumeResult.Ok) && consumed.get == 1)
     assert(client.consecutiveReceiveFailures == 0)
     client.close()
   }

@@ -12,8 +12,9 @@ import graft.SuiteTempDirs
 
 /** Queue round trips on the source's trigger path, timed at the wire by a
   * [[CountingQueue]] with a per-call delay: how many sequential receive
-  * waves an AvailableNow drain takes, that no drain round outgrows its
-  * budget, and when a batch's acks run relative to `latestOffset` and
+  * waves an AvailableNow drain takes and how wide they are, that no drain
+  * round outgrows its budget, that a default-trigger round still opens with
+  * one receive, and when a batch's acks run relative to `latestOffset` and
   * `stop()`. */
 class QueueRoundTripSpec extends AnyFunSuite with SuiteTempDirs {
 
@@ -49,17 +50,32 @@ class QueueRoundTripSpec extends AnyFunSuite with SuiteTempDirs {
   private def metric(src: GraftFileSource, key: String): Long =
     src.metrics(java.util.Optional.empty()).get(key).toLong
 
-  test("an AvailableNow drain of 100 messages at maxFilesPerTrigger 50 takes 3 waves of <= 5") {
-    withSource("roundtrip-drain", 100, Map("maxfilespertrigger" -> "50"), delayMs = 100) {
+  test("an AvailableNow drain of 100 messages at maxConcurrency 50 is one receive wave") {
+    withSource("roundtrip-drain", 100,
+      Map("maxfilespertrigger" -> "50", "queue.maxconcurrency" -> "50"), delayMs = 100) {
       (src, wire, _) =>
         src.prepareForTriggerAvailableNow()
         assert(metric(src, "pendingFiles") == 100)
-        // a probe, a wave of 5 full receives, and a wave that finds the end:
-        // the drain does not stop and re-probe at every 50 messages
-        val waves = CountingQueue.waves(wire.spans("receive"))
-        assert(waves <= 3, s"drain took $waves sequential receive waves")
-        assert(wire.inFlightPeak <= 5, s"${wire.inFlightPeak} receives in flight")
-        assert(metric(src, "phase.drainMs") >= waves * 100L)
+        // the round opens with all 50 receives: 10 come back full and the
+        // rest empty, so the drain ends after a single round trip
+        val waves = CountingQueue.waveWidths(wire.spans("receive"))
+        assert(waves.size == 1, s"drain took receive waves of $waves")
+        assert(wire.inFlightPeak <= 50, s"${wire.inFlightPeak} receives in flight")
+        assert(metric(src, "phase.drainMs") >= 100L)
+        src.stop()
+    }
+  }
+
+  test("the same drain at maxConcurrency 4 runs waves at most 4 wide") {
+    withSource("roundtrip-drain-4", 100,
+      Map("maxfilespertrigger" -> "50", "queue.maxconcurrency" -> "4"), delayMs = 100) {
+      (src, wire, _) =>
+        src.prepareForTriggerAvailableNow()
+        assert(metric(src, "pendingFiles") == 100)
+        // rounds of 40 messages, one wave of 4 each: 40, 40, then 20 and the end
+        val waves = CountingQueue.waveWidths(wire.spans("receive"))
+        assert(waves == Seq(4, 4, 4), s"drain took receive waves of $waves")
+        assert(wire.inFlightPeak <= 4, s"${wire.inFlightPeak} receives in flight")
         src.stop()
     }
   }
@@ -73,17 +89,33 @@ class QueueRoundTripSpec extends AnyFunSuite with SuiteTempDirs {
     var rounds = 0
     var done = false
     while (!done) {
-      val res = Await.result(c.asyncFetch(10, Some(budget)), 30.seconds)
+      val res = Await.result(c.asyncFetch(10, Some(budget), openWide = true), 30.seconds)
       rounds += 1
       val asked = wire.takeAsked()
       assert(asked.sum <= budget, s"round $rounds asked for ${asked.sum} messages")
+      // one wave: the round's only receives are its 50-wide opening
+      assert(asked == Seq.fill(50)(10), s"round $rounds asked $asked")
       consumed += res.count(_ == ConsumeResult.Ok)
       done = res.contains(ConsumeResult.ReceiveEmpty) || rounds > 5
     }
     assert(consumed == 2000)
     assert(rounds == 5, "four full rounds of 500, then one that finds the queue empty")
-    assert(wire.inFlightPeak <= 5, "the wave width follows maxFilesPerFetch, not the budget")
+    assert(wire.inFlightPeak <= 50, "a wave is at most maxConcurrency wide")
     c.close()
+  }
+
+  test("a default-trigger round opens with one receive and stays ceil(maxFilesPerTrigger/10) wide") {
+    withSource("roundtrip-default", 100, Map("maxfilespertrigger" -> "50"), delayMs = 100) {
+      (src, wire, _) =>
+        assert(src.latestOffset(null, ReadLimit.allAvailable()) != null)
+        assert(metric(src, "pendingFiles") == 0, "the round's 50 files are in the batch")
+        // a full probe, then one wave for the other 40 of the budget
+        val waves = CountingQueue.waveWidths(wire.spans("receive"))
+        assert(waves == Seq(1, 4), s"round took receive waves of $waves")
+        assert(wire.takeAsked().sum == 50)
+        assert(wire.inFlightPeak <= 5, s"${wire.inFlightPeak} receives in flight")
+        src.stop()
+    }
   }
 
   test("latestOffset returns before its batch's acks; the next latestOffset and stop() wait for them") {

@@ -26,13 +26,14 @@ class SqsHttpClientSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = stub.stop()
 
   private def rawQueue(
+      url: String = stub.queueUrl,
       c: QueueCredentials = creds,
       longPoll: Int = 0,
       // 0 here (vs the production default 3) keeps the persistent-chaos
       // tests fast: they assert what ONE wire call does, not the retry
       maxRetries: Int = 0,
       sleeper: Long => Unit = _ => ()): SqsHttpQueue =
-    new SqsHttpQueue(stub.queueUrl, "us-east-1", StaticCredentialsProvider(c),
+    new SqsHttpQueue(url, "us-east-1", StaticCredentialsProvider(c),
       longPollWaitSeconds = longPoll, maxRetries = maxRetries, sleeper = sleeper)
 
   private def client(
@@ -109,10 +110,10 @@ class SqsHttpClientSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("fetch stops at maxFilesPerFetch budget") {
     stub.queue.clear()
     (1 to 30).foreach(i => stub.queue.send(s"""{"path":"g$i","timestampMs":$i}"""))
-    var n = 0
-    val c = client(_ => n.synchronized { n += 1 }, maxFiles = Some(12))
+    val n = new AtomicInteger(0)
+    val c = client(_ => n.incrementAndGet(), maxFiles = Some(12))
     fetch(c)
-    assert(n == 12)
+    assert(n.get == 12)
     stub.queue.clear()
     c.close()
   }
@@ -155,8 +156,8 @@ class SqsHttpClientSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("service-side receive failures build a streak; a working round resets it") {
     stub.queue.clear()
     stub.queue.send("""{"path":"later","timestampMs":1}""")
-    var consumed = 0
-    val c = client(_ => consumed.synchronized { consumed += 1 })
+    val consumed = new AtomicInteger(0)
+    val c = client(_ => consumed.incrementAndGet())
     stub.queue.failReceives = true
     (1 to 3).foreach { i =>
       val res = fetch(c)
@@ -165,7 +166,7 @@ class SqsHttpClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     stub.queue.failReceives = false
     val ok = fetch(c)
-    assert(ok.contains(ConsumeResult.Ok) && consumed == 1)
+    assert(ok.contains(ConsumeResult.Ok) && consumed.get == 1)
     assert(c.consecutiveReceiveFailures == 0)
     stub.queue.clear()
     c.close()
@@ -225,6 +226,56 @@ class SqsHttpClientSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(round.isCompleted, "close waited for the wave's calls")
       assert(signedAfterClose.get() == 0)
     } finally slow.stop()
+  }
+
+  // ------------------------------------------- shared connection pool
+
+  test("a second queue on the same endpoint reuses the pooled connection") {
+    val st = new SqsStubServer(Map(Akid -> Secret))
+    try {
+      val first = rawQueue(st.queueUrl)
+      assert(first.receive(10, 60).isEmpty)
+      assert(st.connectionCount == 1)
+      val second = rawQueue(st.queueUrl)
+      assert(second.receive(10, 60).isEmpty)
+      assert(st.connectionCount == 1, "the second queue opened a connection of its own")
+      first.close()
+      second.close()
+    } finally st.stop()
+  }
+
+  test("a stopped endpoint's pooled connections do not fail calls to a new one") {
+    val gone = new SqsStubServer(Map(Akid -> Secret))
+    val old = rawQueue(gone.queueUrl)
+    try assert(old.receive(10, 60).isEmpty)
+    finally gone.stop()
+    val fresh = new SqsStubServer(Map(Akid -> Secret))
+    try {
+      fresh.queue.send("""{"path":"after-stop","timestampMs":1}""")
+      // maxRetries = 0: a stale connection would surface as a failure
+      val q = rawQueue(fresh.queueUrl)
+      assert(q.receive(10, 60).map(_.body) == Seq("""{"path":"after-stop","timestampMs":1}"""))
+      assert(fresh.rejectedSignatures == 0)
+      q.close()
+    } finally {
+      fresh.stop()
+      old.close()
+    }
+  }
+
+  test("closing one queue leaves another queue's calls working") {
+    val st = new SqsStubServer(Map(Akid -> Secret))
+    try {
+      val closed = rawQueue(st.queueUrl)
+      val open = rawQueue(st.queueUrl)
+      assert(closed.receive(10, 60).isEmpty)
+      closed.close()
+      val id = st.queue.send("""{"path":"still-open","timestampMs":1}""")
+      assert(open.receive(10, 60).map(_.messageId) == Seq(id))
+      assert(open.delete(id))
+      assert(st.queue.approximateSize == 0)
+      open.close()
+    } finally st.stop()
   }
 
   test("long-poll wait is forwarded on the wire") {

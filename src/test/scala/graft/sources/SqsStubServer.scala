@@ -22,8 +22,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * side fails loudly instead of passing vacuously.
   *
   * Requests are handled concurrently; `replyDelayMs` holds each one that
-  * long before it is handled (a round trip), and `inFlightPeak` is the
-  * most requests the stub held at once.
+  * long before it is handled (a round trip), `inFlightPeak` is the most
+  * requests the stub held at once, and `connectionCount` is how many
+  * connections its requests came in on (distinct client ports).
   */
 final class SqsStubServer(
     secretsByAccessKey: Map[String, String],
@@ -36,9 +37,11 @@ final class SqsStubServer(
   private val requests = new AtomicInteger(0)
   private val inFlight = new AtomicInteger(0)
   private val inFlightMax = new AtomicInteger(0)
+  private val clientPorts = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
   def rejectedSignatures: Int = rejected.get()
   def requestCount: Int = requests.get()
   def inFlightPeak: Int = inFlightMax.get()
+  def connectionCount: Int = clientPorts.size
   /** Chaos hook: the next N requests are answered with `transientStatus`
     * before any handling (the outage-then-recovery shape a wire retry
     * must absorb). */
@@ -115,6 +118,7 @@ final class SqsStubServer(
 
   private def handle(ex: HttpExchange): Unit = {
     requests.incrementAndGet()
+    clientPorts.add(ex.getRemoteAddress.getPort)
     inFlightMax.accumulateAndGet(inFlight.incrementAndGet(), math.max)
     try {
       if (replyDelayMs > 0) Thread.sleep(replyDelayMs)
