@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Cross-engine parity kernel: each expression the DuckDB oracles must
@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *    too: the normalized text, the stop-word list, the three quality
   *    ratios (stop-word share, punctuation share, mean token length) and
   *    word shingles.
-  *  - word n-grams: contiguous n-token windows joined by one space.
+  *  - word n-grams: contiguous n-token windows joined by one space, and
+  *    bigrams: adjacent token pairs as `(w1, w2)` rows.
   *  - DuckDB list sums: `list_sum` over a transformed list, the one
   *    left-to-right accumulation the dot products and norms are built
   *    on; Spark computes those through [[VectorOps]].
@@ -129,6 +130,27 @@ object Parity {
     * is empty, so a short list needs no guard. */
   def ngramsSql(toks: String, n: Int): String =
     s"list_transform(range(1, len($toks) - ${n - 2}), i -> array_to_string($toks[i:i+${n - 1}], ' '))"
+
+  /** Adjacent token pairs: one `(doc_id, w1, w2)` row per neighbouring
+    * pair in the token array `t` of each `(doc_id, t)` row. Arrays of
+    * fewer than two tokens, and null arrays, yield no row; they are
+    * filtered out first because `slice` with a negative length throws. */
+  def bigrams(docs: DataFrame): DataFrame = {
+    val t = col("t")
+    docs.filter(size(t) >= 2)
+      .select(col("doc_id"), explode(zip_with(
+        slice(t, lit(1), size(t) - 1),
+        slice(t, lit(2), size(t) - 1),
+        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+  }
+
+  /** DuckDB twin of [[bigrams]] over `docs`, a FROM clause of `(doc_id, t)`
+    * rows: `range` with a stop at or below its start is empty, and a null
+    * range unnests to no row, so short and null arrays need no guard. */
+  def bigramsSql(docs: String): String =
+    "SELECT doc_id, t[i] AS w1, t[i + 1] AS w2 " +
+      s"FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM $docs)"
 
   /** Distinct word n-gram shingles, the unit of Jaccard similarity. Not
     * `array_distinct(ngrams(...))`: that maps a null token array to an

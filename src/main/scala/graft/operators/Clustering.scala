@@ -344,12 +344,16 @@ object Clustering {
     acc
   }
 
+  /** The per-subspace Lloyd CTE chains of the PQ codebooks (final
+    * assignments `fin<m>`, centroids `cent<PqIters><m>`), shared by the
+    * PQ oracles. */
+  private val PqLloydCtesSql: String = (0 until PqM).map { m =>
+    s"""emb$m AS (SELECT vec_id, embedding[${m * PqSub + 1}:${(m + 1) * PqSub}] AS embedding
+       |  FROM embeddings),
+       |${lloydSql(PqK, PqIters, PqSub, m.toString)}""".stripMargin
+  }.mkString(",\n")
+
   val annTopKPqSql: String = {
-    val subs = (0 until PqM).map { m =>
-      s"""emb$m AS (SELECT vec_id, embedding[${m * PqSub + 1}:${(m + 1) * PqSub}] AS embedding
-         |  FROM embeddings),
-         |${lloydSql(PqK, PqIters, PqSub, m.toString)}""".stripMargin
-    }
     val dtabs = (0 until PqM).map { m =>
       val sub = s"p.embedding[${m * PqSub + 1}:${(m + 1) * PqSub}]"
       s"""dt$m AS (
@@ -361,7 +365,7 @@ object Clustering {
     val dtJoins = (0 until PqM)
       .map(m => s"JOIN dt$m d$m ON d$m.query_id = p.query_id AND d$m.k = v.k$m").mkString("\n  ")
     val sum = (1 until PqM).foldLeft("d0.d")((acc, m) => s"($acc + d$m.d)")
-    s"""WITH ${subs.mkString(",\n")},
+    s"""WITH $PqLloydCtesSql,
        |probes AS (
        |  SELECT vec_id AS query_id, embedding FROM embeddings ORDER BY vec_id
        |  LIMIT ${Similarity.NProbes}),
@@ -383,18 +387,13 @@ object Clustering {
   }
 
   val embPqSql: String = {
-    val subs = (0 until PqM).map { m =>
-      s"""emb$m AS (SELECT vec_id, embedding[${m * PqSub + 1}:${(m + 1) * PqSub}] AS embedding
-         |  FROM embeddings),
-         |${lloydSql(PqK, PqIters, PqSub, m.toString)}""".stripMargin
-    }
     val selects = (0 until PqM).map { m =>
       s"""SELECT $m AS subspace, count(DISTINCT f.k) AS codes_used,
          |  ${wcssSql("f")} AS sq_err,
          |  count(*) AS n_vecs, CAST(128.0 AS DOUBLE) AS compression_x
          |FROM fin$m f""".stripMargin
     }
-    s"WITH ${subs.mkString(",\n")}\n" +
+    s"WITH $PqLloydCtesSql\n" +
       selects.mkString("\nUNION ALL\n") + "\nORDER BY subspace"
   }
 

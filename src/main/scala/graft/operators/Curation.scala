@@ -49,28 +49,41 @@ object Curation {
     * is corpus). */
   private[graft] def decontaminateWith(s: SparkSession, d: String,
       isEval: Column): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d)
-      .select($"doc_id", tokens($"text").as("t"))
-      .filter(size($"t") >= ContamN)
-    def explodeGrams(df: DataFrame): DataFrame = df
-      .select($"doc_id", explode(ngrams($"t", ContamN)).as("g"))
-      .select($"doc_id", md5Key($"g", 15).as("gk"))
-      .distinct()
-    val bench = explodeGrams(docs.filter(isEval))
+    val docs = contamDocs(s, d)
+    val bench = contamGrams(docs.filter(isEval)).distinct()
       .withColumnRenamed("doc_id", "bench_id")
-    val corpus = explodeGrams(docs.filter(!isEval))
+    contamReport(s, d, isEval, bench, contamGrams(docs.filter(!isEval)).distinct())
+  }
+
+  /** The documents with at least [[ContamN]] tokens, as `(doc_id, t)`. */
+  private def contamDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= ContamN)
+
+  /** Every `(doc_id, gk)` [[ContamN]]-gram key of [[contamDocs]] rows,
+    * duplicates kept. */
+  private def contamGrams(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"), explode(ngrams(col("t"), ContamN)).as("g"))
+    .select(col("doc_id"), md5Key(col("g"), 15).as("gk"))
+
+  /** The contamination report of the eval docs (`isEval`) from the
+    * distinct gram keys of the eval side `(bench_id, gk)` and the corpus
+    * side `(doc_id, gk)`: every eval doc reports, zeros included. Shared
+    * by both decontamination spellings. */
+  private def contamReport(s: SparkSession, d: String, isEval: Column,
+      bench: DataFrame, corpus: DataFrame): DataFrame = {
     val hits = bench.join(corpus, "gk")
-      .groupBy($"bench_id")
-      .agg(countDistinct($"doc_id").as("n_contaminated_docs"),
-        countDistinct($"gk").as("n_shared_grams"))
+      .groupBy(col("bench_id"))
+      .agg(countDistinct(col("doc_id")).as("n_contaminated_docs"),
+        countDistinct(col("gk")).as("n_shared_grams"))
     Tables.documents(s, d).filter(isEval)
-      .select($"doc_id".as("bench_id"))
+      .select(col("doc_id").as("bench_id"))
       .join(hits, Seq("bench_id"), "left")
-      .select($"bench_id",
-        coalesce($"n_contaminated_docs", lit(0L)).as("n_contaminated_docs"),
-        coalesce($"n_shared_grams", lit(0L)).as("n_shared_grams"))
-      .orderBy($"bench_id")
+      .select(col("bench_id"),
+        coalesce(col("n_contaminated_docs"), lit(0L)).as("n_contaminated_docs"),
+        coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"))
+      .orderBy(col("bench_id"))
   }
   val decontaminateSql: String =
     raw"""WITH toks AS (
@@ -130,38 +143,19 @@ object Curation {
     import org.apache.spark.sql.graftshim.GraftShims
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val docs = Tables.documents(s, d)
-      .select($"doc_id", tokens($"text").as("t"))
-      .filter(size($"t") >= ContamN)
-    val bench = docs.filter(isEval)
-      .select($"doc_id", explode(ngrams($"t", ContamN)).as("g"))
-      .select($"doc_id", md5Key($"g", 15).as("gk"))
-      .distinct()
+    val docs = contamDocs(s, d)
+    val bench = contamGrams(docs.filter(isEval)).distinct()
       .withColumnRenamed("doc_id", "bench_id")
     val bloom = bench
       .agg(GraftShims.column(
         new BloomFilterAggregate(GraftShims.expression(xxhash64($"gk")))
           .toAggregateExpression()))
       .head().getAs[Array[Byte]](0)
-    val corpusGrams = docs.filter(!isEval)
-      .select($"doc_id", explode(ngrams($"t", ContamN)).as("g"))
-      .select($"doc_id", md5Key($"g", 15).as("gk"))
     val probe = // empty eval slice => nothing can be contaminated
       if (bloom == null) lit(false)
       else GraftShims.column(BloomFilterMightContain(
         GraftShims.expression(lit(bloom)), GraftShims.expression(xxhash64($"gk"))))
-    val corpus = corpusGrams.filter(probe).distinct()
-    val hits = bench.join(corpus, "gk")
-      .groupBy($"bench_id")
-      .agg(countDistinct($"doc_id").as("n_contaminated_docs"),
-        countDistinct($"gk").as("n_shared_grams"))
-    Tables.documents(s, d).filter(isEval)
-      .select($"doc_id".as("bench_id"))
-      .join(hits, Seq("bench_id"), "left")
-      .select($"bench_id",
-        coalesce($"n_contaminated_docs", lit(0L)).as("n_contaminated_docs"),
-        coalesce($"n_shared_grams", lit(0L)).as("n_shared_grams"))
-      .orderBy($"bench_id")
+    contamReport(s, d, isEval, bench, contamGrams(docs.filter(!isEval)).filter(probe).distinct())
   }
 
   // ------------------------------------------------- repetition quality

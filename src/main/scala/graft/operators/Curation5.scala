@@ -18,19 +18,6 @@ import graft.queries.Tables
   */
 object Curation5 {
 
-  /** Exploded character k-grams with their 1-based position: one row per
-    * (doc, position). A pure narrow map (sequence + substr — both
-    * codegen'd built-ins); the per-doc fan-out is `length(text)` rows,
-    * the same cost class as the shingle explodes everywhere else. */
-  private def charGrams(docs: DataFrame, k: Int): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    Par.spread(docs, $"doc_id")
-      .filter(length($"text") >= k)
-      .select($"doc_id", $"text", explode(sequence(lit(1), length($"text") - (k - 1))).as("pos"))
-      .select($"doc_id", $"pos", $"text".substr($"pos", lit(k)).as("g"))
-  }
-
   // -------------------------------------------------- character entropy
   /** Per-document character-level Shannon entropy — the cheapest
     * gibberish/boilerplate signal there is: near-zero entropy is one

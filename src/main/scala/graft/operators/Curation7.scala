@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{dotSql, md5Key, md5KeySql, normSql, tokens, tokensSql}
+import graft.functions.Parity.{dotSql, md5Key, md5KeySql, tokens, tokensSql}
 import graft.queries.Tables
 
 /** Embedding-space corpus curation — the quality/selection steps a
@@ -170,13 +170,7 @@ object Curation7 {
   /** Oracle replays the IVF assignment (same CTEs as `ann_topk_ivf`),
     * ranks within cell by the same md5 hash key, and round-robins. */
   val diversitySampleSql: String = {
-    s"""WITH emb AS (
-       |  SELECT vec_id, embedding, ${normSql("embedding")} AS vn FROM embeddings
-       |), cent AS (
-       |  SELECT vec_id AS cid, embedding AS cv, vn AS cn FROM emb
-       |  ORDER BY ${md5KeySql("vec_id", 8)}, vec_id
-       |  LIMIT 16
-       |), asg AS (
+    s"""WITH ${Similarity.ivfCentroidsSql("TRUE")}, asg AS (
        |  SELECT vec_id, cid FROM (
        |    SELECT e.vec_id, c.cid,
        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
@@ -534,50 +528,43 @@ object Curation7 {
     * table broadcast back (the [[PipelineOps.budgetSelect]]
     * discipline); the shard report is one aggregate keyed on shard_id. */
   /** The distributed shard report over a `(doc_id, ntok)` frame —
-    * range partition + per-partition cumsum + broadcast offsets; shared
-    * by [[shardPlan]] and the composed [[pipelineShards]]. */
-  private[graft] def shardReport(docs: DataFrame, unitBudget: Long = ShardTokens): DataFrame = {
-    import docs.sparkSession.implicits._
-    val nPart = math.max(2, docs.sparkSession.sparkContext.defaultParallelism)
-    val ranged = docs.repartitionByRange(nPart, $"doc_id")
-      .withColumn("pid", spark_partition_id())
-    val wIn = Window.partitionBy($"pid").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withLocal = ranged.withColumn("local_cum", sum($"ntok").over(wIn)).persist()
-    try {
-      val wOff = Window.orderBy($"pid").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = withLocal.groupBy($"pid").agg(sum($"ntok").as("ptot"))
-        .withColumn("offset", coalesce(sum($"ptot").over(wOff), lit(0L)))
-        .select($"pid", $"offset")
-      withLocal.join(broadcast(offsets), "pid")
-        .withColumn("start_off", $"local_cum" + $"offset" - $"ntok")
-        .withColumn("shard_id", expr(s"start_off div $unitBudget"))
-        .groupBy($"shard_id")
-        .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("sum_tokens"),
-          min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
-        .orderBy($"shard_id")
-        .localCheckpoint(true)
-    } finally withLocal.unpersist()
-  }
+    * [[PipelineOps.prefixSum]] over doc_id; shared by [[shardPlan]], the
+    * composed [[pipelineShards]] and `mm_shard_pack`. */
+  private[graft] def shardReport(docs: DataFrame, unitBudget: Long = ShardTokens): DataFrame =
+    PipelineOps.prefixSum(docs, col("doc_id")) { withCum =>
+      shardStats(withCum
+        .withColumn("start_off", col("cum") - col("ntok"))
+        .withColumn("shard_id", expr(s"start_off div $unitBudget")))
+    }
+
+  /** Per-shard population of a `(shard_id, doc_id, ntok)` manifest,
+    * ordered by shard; the streaming manifest rows read theirs back
+    * through the same aggregate. */
+  private[graft] def shardStats(manifest: DataFrame): DataFrame =
+    manifest.groupBy(col("shard_id"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("sum_tokens"),
+        min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
+      .orderBy(col("shard_id"))
+
+  /** DuckDB twin of [[shardReport]] over `docs`, a FROM clause of
+    * `(doc_id, ntok)` rows. */
+  private[graft] def shardReportSql(docs: String, unitBudget: Long = ShardTokens): String =
+    s"""SELECT start_off // $unitBudget AS shard_id,
+       |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(ntok) AS BIGINT) AS sum_tokens,
+       |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
+       |FROM (
+       |  SELECT doc_id, ntok,
+       |    CAST(SUM(ntok) OVER (ORDER BY doc_id) AS BIGINT) - ntok AS start_off
+       |  FROM $docs)
+       |GROUP BY 1 ORDER BY shard_id""".stripMargin
 
   def shardPlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     shardReport(Tables.documents(s, d)
       .select($"doc_id", size(tokens($"text")).cast("long").as("ntok")))
   }
-  val shardPlanSql: String =
-    raw"""WITH t AS (
-         |  SELECT doc_id, CAST(len(${tokensSql("text")}) AS BIGINT) AS ntok
-         |  FROM documents
-         |), c AS (
-         |  SELECT doc_id, ntok,
-         |    CAST(SUM(ntok) OVER (ORDER BY doc_id) AS BIGINT) - ntok AS start_off
-         |  FROM t
-         |)
-         |SELECT start_off // ${ShardTokens} AS shard_id,
-         |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(ntok) AS BIGINT) AS sum_tokens,
-         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         |FROM c GROUP BY 1 ORDER BY shard_id""".stripMargin
+  val shardPlanSql: String = shardReportSql(
+    s"(SELECT doc_id, CAST(len(${tokensSql("text")}) AS BIGINT) AS ntok FROM documents)")
 
   // ------------------------------------------- length outlier trimming
   /** Percent of corpus mass trimmed at each length tail. */
@@ -628,8 +615,10 @@ object Curation7 {
         sum(when(!$"cut_short" && !$"cut_long", $"n_chars").otherwise(0L)).as("chars_kept"))
       .orderBy($"source")
   }
-  val lengthOutlierTrimSql: String =
-    s"""WITH hist AS (
+  /** DuckDB CTEs `hist`, `v` and `verdicts`: the twin of
+    * [[lengthVerdicts]] over the whole documents table. */
+  private val LengthVerdictsCteSql: String =
+    s"""hist AS (
        |  SELECT n_chars, CAST(COUNT(*) AS BIGINT) AS c FROM documents GROUP BY n_chars
        |), v AS (
        |  SELECT n_chars,
@@ -641,7 +630,9 @@ object Curation7 {
        |    cum <= (n * $TrimPct) // 100 AS cut_short,
        |    (n - cum + c) <= (n * $TrimPct) // 100 AS cut_long
        |  FROM v
-       |)
+       |)""".stripMargin
+  val lengthOutlierTrimSql: String =
+    s"""WITH $LengthVerdictsCteSql
        |SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
        |  CAST(SUM(CASE WHEN NOT cut_short AND NOT cut_long THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
        |  CAST(SUM(CASE WHEN cut_short THEN 1 ELSE 0 END) AS BIGINT) AS n_cut_short,
@@ -743,34 +734,15 @@ object Curation7 {
          |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY cluster_id ORDER BY n_chars DESC, doc_id) AS rn
          |    FROM alldocs)
          |  WHERE rn = 1
-         |), hist AS (
-         |  SELECT n_chars, CAST(COUNT(*) AS BIGINT) AS c FROM documents GROUP BY n_chars
-         |), v AS (
-         |  SELECT n_chars,
-         |    CAST(SUM(c) OVER (ORDER BY n_chars) AS BIGINT) AS cum,
-         |    CAST(SUM(c) OVER () AS BIGINT) AS n, c
-         |  FROM hist
-         |), verdicts AS (
-         |  SELECT n_chars,
-         |    cum <= (n * $TrimPct) // 100 AS cut_short,
-         |    (n - cum + c) <= (n * $TrimPct) // 100 AS cut_long
-         |  FROM v
-         |), kept AS (
+         |), $LengthVerdictsCteSql, kept AS (
          |  SELECT d.doc_id,
          |    CAST(len(${tokensSql("d.text")}) AS BIGINT) AS ntok
          |  FROM documents d
          |  JOIN verdicts ON d.n_chars = verdicts.n_chars
          |  JOIN canon ON d.doc_id = canon.doc_id
          |  WHERE NOT cut_short AND NOT cut_long
-         |), c2 AS (
-         |  SELECT doc_id, ntok,
-         |    CAST(SUM(ntok) OVER (ORDER BY doc_id) AS BIGINT) - ntok AS start_off
-         |  FROM kept
          |)
-         |SELECT start_off // ${ShardTokens} AS shard_id,
-         |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(ntok) AS BIGINT) AS sum_tokens,
-         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         |FROM c2 GROUP BY 1 ORDER BY shard_id""".stripMargin
+         |${shardReportSql("kept")}""".stripMargin
 
   // ------------------------------------------------ embedding drift score
   /** Embedding drift quantification (`emb_drift_score`): per label, the

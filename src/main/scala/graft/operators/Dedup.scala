@@ -238,54 +238,8 @@ object Dedup {
     * pays its range-partitioning sample job. The gate row keeps the
     * ordered contract. */
   private[graft] def minhashLshPairs(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val docs = docShingles(s, d)
-    // Signature via explode + 128 partial-aggregated per-position minima:
-    // every shingle is hashed exactly once. (The closed-form column
-    // `minhashSignature` is correct but Catalyst's projection collapse
-    // inlines it into each downstream band key, recomputing the whole
-    // signature 32x; an aggregation is a collapse barrier, and this shape
-    // — shingle-level parallelism + map-side combine — is also the one
-    // that scales to a 100 TB corpus.)
-    // hash each shingle string ONCE; the K permutation hashes + minima are
-    // computed by the MinHashAgg imperative aggregate in one loop per row
-    // (K separate min(xxhash64(...)) aggregate columns pay per-expression
-    // overhead K times per row and exceed codegen field limits)
-    val ex = docs.select($"doc_id", explode($"sh").as("s"))
-      .select($"doc_id", xxhash64($"s").as("hs"))
-    val sig = ex.groupBy($"doc_id")
-      .agg(graft.functions.MinHashAgg.minhashAgg($"hs", MinhashK).as("sig"))
-    val bandKeyCols = (0 until LshBands).map { b =>
-      xxhash64(lit(b), slice($"sig", b * LshRows + 1, LshRows))
-    }
-    val bandsEx = sig.select($"doc_id",
-      posexplode(array(bandKeyCols: _*)).as(Seq("band_idx", "band_key")))
-      // rank within the band bucket: the pair stage below only links docs
-      // within BucketW rank positions, which is ALL pairs for any bucket
-      // of <= BucketW+1 docs (every fixture bucket — results unchanged)
-      // and a doc_id-ordered sliding window beyond. An oversized bucket
-      // is either a true duplicate pile — whose members all mutually
-      // verify, so windowed links reconnect the pile transitively in CC —
-      // or a collision pile of short/hot-token docs, whose O(bucket²)
-      // candidate fan-out is exactly the degenerate cost this bounds (the
-      // LSH analogue of the shingle dfCap; measured in the round-14 scale
-      // table as the term that bent the LSH path super-linear on Zipf
-      // text with many short documents).
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"band_idx", $"band_key").orderBy($"doc_id")))
-    val cand = bandsEx.as("a")
-      .join(bandsEx.as("b"),
-        $"a.band_idx" === $"b.band_idx" && $"a.band_key" === $"b.band_key" &&
-          $"a.doc_id" < $"b.doc_id" && $"b.rn" - $"a.rn" <= BucketW)
-      .select($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"))
-      .distinct()
-    cand
-      .join(docs.select($"doc_id".as("a_id"), $"sh".as("sh_a")), "a_id")
-      .join(docs.select($"doc_id".as("b_id"), $"sh".as("sh_b")), "b_id")
-      .withColumn("inter", size(array_intersect($"sh_a", $"sh_b")))
-      .withColumn("jaccard", $"inter".cast("double") / (size($"sh_a") + size($"sh_b") - $"inter"))
-      .filter($"jaccard" >= JaccardThreshold)
-      .select($"a_id", $"b_id", $"jaccard")
+    lshVerify(lshCandidates(lshBands(lshSignatures(docs))), docs)
   }
   /** Oracle: the exact pair list (LSH recall at this operating point is
     * 1 - 3.6e-15; candidates are verified exactly). */
@@ -486,8 +440,18 @@ object Dedup {
   }
 
   // ------------------------------------------- incremental CC maintenance
-  /** Minhash signatures of a shingle frame (the [[dedupMinhashLsh]]
-    * signature stage, frame-parameterized for the incremental row). */
+  /** Minhash signatures of a shingle frame, the [[dedupMinhashLsh]]
+    * signature stage. Signature via explode + 128 partial-aggregated
+    * per-position minima: every shingle is hashed exactly once. (The
+    * closed-form column `minhashSignature` is correct but Catalyst's
+    * projection collapse inlines it into each downstream band key,
+    * recomputing the whole signature 32x; an aggregation is a collapse
+    * barrier, and this shape — shingle-level parallelism + map-side
+    * combine — is also the one that scales to a 100 TB corpus.) Each
+    * shingle string is hashed ONCE; the K permutation hashes + minima are
+    * computed by the MinHashAgg imperative aggregate in one loop per row
+    * (K separate min(xxhash64(...)) aggregate columns pay per-expression
+    * overhead K times per row and exceed codegen field limits). */
   private[graft] def lshSignatures(sh: DataFrame): DataFrame = {
     val s = sh.sparkSession
     import s.implicits._
@@ -510,7 +474,17 @@ object Dedup {
   }
 
   /** Band-bucket candidate pairs with the BucketW rank-window fan-out
-    * bound (see [[dedupMinhashLsh]] for why windowed links suffice). */
+    * bound. Docs are ranked within their band bucket and the pair stage
+    * links only docs within BucketW rank positions, which is ALL pairs
+    * for any bucket of <= BucketW+1 docs (every fixture bucket) and a
+    * doc_id-ordered sliding window beyond. An oversized bucket is either
+    * a true duplicate pile — whose members all mutually verify, so
+    * windowed links reconnect the pile transitively in CC — or a
+    * collision pile of short/hot-token docs, whose O(bucket²) candidate
+    * fan-out is exactly the degenerate cost this bounds (the LSH analogue
+    * of the shingle dfCap; measured in the round-14 scale table as the
+    * term that bent the LSH path super-linear on Zipf text with many
+    * short documents). */
   private[graft] def lshCandidates(bands: DataFrame): DataFrame = {
     val s = bands.sparkSession
     import s.implicits._

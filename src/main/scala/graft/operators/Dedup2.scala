@@ -105,8 +105,7 @@ object Dedup2 {
     import s.implicits._
     val docs = Dedup.docShingles(s, d)
     try {
-      val ex = docs.select($"doc_id", size($"sh").as("sz"), explode($"sh").as("s0"))
-        .select($"doc_id", $"sz", xxhash64($"s0").as("s"))
+      val ex = explodeSets(docs)
       val delta = ex.filter($"doc_id" % 5 === 0)
         .select($"doc_id".as("d_id"), $"sz".as("sz_d"), $"s")
       val base = ex.filter($"doc_id" % 5 =!= 0)
@@ -155,8 +154,10 @@ object Dedup2 {
       .select($"doc_id", $"d_id".isNull.as("admitted"),
         $"b_id".as("matched_base"), $"jaccard")
   }
-  val dedupIncrementalSql: String =
-    s"""WITH ${Dedup.ShingleCteSql},
+  /** Oracle for [[dedupIncremental]] over the documents satisfying
+    * `pred`. */
+  def dedupIncrementalSqlWhere(pred: String): String =
+    s"""WITH ${Dedup.shingleCteSql(pred)},
        |cand AS (
        |  SELECT d.doc_id AS d_id, b.doc_id AS b_id,
        |    COUNT(*)::DOUBLE / (ANY_VALUE(d.sz) + ANY_VALUE(b.sz) - COUNT(*)) AS jaccard
@@ -171,8 +172,9 @@ object Dedup2 {
        |SELECT doc.doc_id, b.d_id IS NULL AS admitted, b.b_id AS matched_base, b.jaccard
        |FROM documents doc
        |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON doc.doc_id = b.d_id
-       |WHERE doc.doc_id % 5 = 0
+       |WHERE doc.doc_id % 5 = 0 AND $pred
        |ORDER BY doc.doc_id""".stripMargin
+  val dedupIncrementalSql: String = dedupIncrementalSqlWhere("TRUE")
 
   // ----------------------------------------------------------- SemDedup
   /** Production threshold is ~0.95+; the synthetic fixture's vectors are

@@ -311,18 +311,13 @@ object Multimodal {
       .select($"shard_id", $"n_docs".as("n_items"), $"sum_tokens".as("sum_bytes"),
         $"first_doc".as("first_id"), $"last_doc".as("last_id"))
   }
-  val mmShardPackSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS nb FROM documents
-       |), c AS (
-       |  SELECT doc_id, nb,
-       |    CAST(SUM(nb) OVER (ORDER BY doc_id) AS BIGINT) - nb AS start_off
-       |  FROM t
-       |)
-       |SELECT start_off // $MmShardBytes AS shard_id,
-       |  CAST(COUNT(*) AS BIGINT) AS n_items, CAST(SUM(nb) AS BIGINT) AS sum_bytes,
-       |  MIN(doc_id) AS first_id, MAX(doc_id) AS last_id
-       |FROM c GROUP BY 1 ORDER BY shard_id""".stripMargin
+  val mmShardPackSql: String = {
+    val units = "(SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS ntok FROM documents)"
+    s"""SELECT shard_id, n_docs AS n_items, sum_tokens AS sum_bytes,
+       |  first_doc AS first_id, last_doc AS last_id
+       |FROM (${Curation7.shardReportSql(units, MmShardBytes)})
+       |ORDER BY shard_id""".stripMargin
+  }
 
   val rows: Seq[QueryDef] = Seq(
     QueryDef("mm_shard_pack", mmShardPack _, mmShardPackSql),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -53,41 +53,57 @@ object PipelineOps {
       |  COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS n_chars, MIN(doc_id) AS first_doc
       |FROM documents GROUP BY 1 ORDER BY split""".stripMargin
 
+  // ------------------------------------------------------ prefix sum
+  /** The distributed prefix sum of the `ntok` column in `order`, shared
+    * by [[packSequences]], [[budgetSelect]] and the shard planners: range
+    * partition on `order`, cumsum inside each partition in parallel, then
+    * lift to global with per-partition offsets (a #partitions-row
+    * aggregate, broadcast back). `finish` receives every row with its
+    * inclusive global running sum `cum`. The scan width follows the
+    * cluster, not a constant: the result is partition-count-invariant.
+    *
+    * One lifecycle: the partial sums are persisted, because both the
+    * offsets pass and the final join read them and the range partitioner
+    * samples its boundaries per evaluation (a recompute could re-draw them
+    * and skew pid against the offsets table); `finish`'s result is then
+    * forced into an eager local checkpoint while that cache is live, and
+    * the cache is released before return. */
+  private[graft] def prefixSum(docs: DataFrame, order: Column*)(
+      finish: DataFrame => DataFrame): DataFrame = {
+    val nPart = math.max(2, docs.sparkSession.sparkContext.defaultParallelism)
+    val wIn = Window.partitionBy(col("pid")).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val withLocal = docs.repartitionByRange(nPart, order: _*)
+      .withColumn("pid", spark_partition_id())
+      .withColumn("local_cum", sum(col("ntok")).over(wIn)).persist()
+    try {
+      // per-partition totals -> exclusive prefix = global offset of each pid
+      val wOff = Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)
+      val offsets = withLocal.groupBy(col("pid")).agg(sum(col("ntok")).as("ptot"))
+        .withColumn("offset", coalesce(sum(col("ptot")).over(wOff), lit(0L)))
+        .select(col("pid"), col("offset"))
+      finish(withLocal.join(broadcast(offsets), "pid")
+          .withColumn("cum", col("local_cum") + col("offset")))
+        .localCheckpoint(true)
+    } finally withLocal.unpersist()
+  }
+
   // ------------------------------------------------------ sequence packing
   /** Pack the doc_id-ordered token stream into fixed 2048-token context
     * windows: each document belongs to the window its first token falls
-    * in. Needs the global prefix sum of token counts — computed scalably:
-    * range-partition by doc_id, cumsum inside each partition (parallel),
-    * then lift to global with per-partition offsets (a #partitions-row
-    * aggregate, broadcast back). Output is per-pack stats. */
+    * in. Needs the global prefix sum of token counts ([[prefixSum]] over
+    * doc_id). Output is per-pack stats. */
   def packSequences(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ctx = 2048L
-    // scan width follows the cluster, not a constant: the result is
-    // partition-count-invariant (offsets lift any local cumsum to global)
-    val nPart = math.max(2, s.sparkContext.defaultParallelism)
-    val docs = Tables.documents(s, d)
-      .select($"doc_id", size(tokens($"text")).cast("long").as("ntok"))
-      .repartitionByRange(nPart, $"doc_id")
-      .withColumn("pid", spark_partition_id())
-    val wIn = Window.partitionBy($"pid").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // persisted: both the offsets pass and the final join read this frame,
-    // and the range partitioner samples its boundaries per evaluation — a
-    // recompute could re-draw them and skew pid against the offsets table.
-    val withLocal = docs.withColumn("local_cum", sum($"ntok").over(wIn)).persist()
-    // per-partition totals -> exclusive prefix = global offset of each pid
-    val wOff = Window.orderBy($"pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withLocal.groupBy($"pid").agg(sum($"ntok").as("ptot"))
-      .withColumn("offset", coalesce(sum($"ptot").over(wOff), lit(0L)))
-      .select($"pid", $"offset")
-    withLocal.join(broadcast(offsets), "pid")
-      .withColumn("cum", $"local_cum" + $"offset")
-      .withColumn("pack_id", expr(s"(cum - ntok) div $ctx"))
-      .groupBy($"pack_id")
-      .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("n_tokens"),
-        min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
-      .orderBy($"pack_id")
+    prefixSum(Tables.documents(s, d)
+        .select($"doc_id", size(tokens($"text")).cast("long").as("ntok")), $"doc_id") {
+      _.withColumn("pack_id", expr(s"(cum - ntok) div $ctx"))
+        .groupBy($"pack_id")
+        .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("n_tokens"),
+          min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
+        .orderBy($"pack_id")
+    }
   }
   val packSequencesSql: String =
     raw"""SELECT pack_id, COUNT(*) AS n_docs, CAST(SUM(ntok) AS BIGINT) AS n_tokens,
@@ -120,33 +136,15 @@ object PipelineOps {
   private[graft] val BudgetTokens = 10000L
   def budgetSelect(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val nPart = math.max(2, s.sparkContext.defaultParallelism)
-    val docs = Tables.documents(s, d)
-      .select($"doc_id",
-        size(array_distinct(tokens($"text"))).cast("long").as("quality"),
-        size(tokens($"text")).cast("long").as("ntok"))
-      .repartitionByRange(nPart, $"quality".desc, $"doc_id")
-      .withColumn("pid", spark_partition_id())
-    val wIn = Window.partitionBy($"pid").orderBy($"quality".desc, $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // persisted for the same reason as packSequences: the range
-    // partitioner samples boundaries per evaluation; offsets must see
-    // the same pid assignment the final join does
-    val withLocal = docs.withColumn("local_cum", sum($"ntok").over(wIn)).persist()
-    try {
-      val wOff = Window.orderBy($"pid").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = withLocal.groupBy($"pid").agg(sum($"ntok").as("ptot"))
-        .withColumn("offset", coalesce(sum($"ptot").over(wOff), lit(0L)))
-        .select($"pid", $"offset")
-      withLocal.join(broadcast(offsets), "pid")
-        .withColumn("cum", $"local_cum" + $"offset")
-        .filter($"cum" <= BudgetTokens)
+    prefixSum(Tables.documents(s, d)
+        .select($"doc_id",
+          size(array_distinct(tokens($"text"))).cast("long").as("quality"),
+          size(tokens($"text")).cast("long").as("ntok")),
+        $"quality".desc, $"doc_id") {
+      _.filter($"cum" <= BudgetTokens)
         .select($"doc_id", $"quality", $"ntok", $"cum")
         .orderBy($"cum")
-        // the optimizer may not have materialized the persist before the
-        // caller collects; force the frame while it is still cached
-        .localCheckpoint(true)
-    } finally withLocal.unpersist()
+    }
   }
   val budgetSelectSql: String =
     raw"""SELECT doc_id, quality, ntok, CAST(cum AS BIGINT) AS cum
@@ -375,18 +373,22 @@ object PipelineOps {
     * push the explode below later projections. */
   private[graft] val ChunkWindow = 200
   private[graft] val ChunkStep = 150 // = window - overlap(50)
-  def chunkDocuments(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .select($"doc_id", $"text",
-        explode(sequence(lit(1), greatest(length($"text"), lit(1)), lit(ChunkStep)))
+  def chunkDocuments(s: SparkSession, d: String): DataFrame =
+    chunks(Tables.documents(s, d)).orderBy(col("doc_id"), col("chunk_id"))
+
+  /** The chunking map over `(doc_id, text)` rows; shared with the
+    * streaming twin. */
+  private[graft] def chunks(docs: DataFrame): DataFrame = {
+    val (text, start) = (col("text"), col("start"))
+    docs
+      .select(col("doc_id"), text,
+        explode(sequence(lit(1), greatest(length(text), lit(1)), lit(ChunkStep)))
           .as("start"))
-      .select($"doc_id",
-        (($"start" - 1) / ChunkStep).cast("long").as("chunk_id"),
-        $"start".cast("long").as("char_start"),
-        $"text".substr($"start", lit(ChunkWindow)).as("chunk_text"))
-      .withColumn("chunk_len", length($"chunk_text").cast("long"))
-      .orderBy($"doc_id", $"chunk_id")
+      .select(col("doc_id"),
+        ((start - 1) / ChunkStep).cast("long").as("chunk_id"),
+        start.cast("long").as("char_start"),
+        text.substr(start, lit(ChunkWindow)).as("chunk_text"))
+      .withColumn("chunk_len", length(col("chunk_text")).cast("long"))
   }
   val chunkDocumentsSql: String =
     s"""SELECT doc_id,

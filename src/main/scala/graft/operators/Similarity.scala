@@ -64,6 +64,27 @@ object Similarity {
   private val probesOracleSql =
     s"SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 64"
 
+  /** The top 5 neighbors per probe of a scored `(query_id, vec_id, sim)`
+    * frame: 6dp similarity descending, vec_id breaking ties, so the order
+    * is engine-independent. The tail of every ANN search. */
+  private def top5(scored: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("sim"))
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** DuckDB twin of [[top5]] over the CTE `scored`: its `ranked` CTE and
+    * the final select. */
+  private def top5Sql(scored: String): String =
+    s"""ranked AS (
+       |  SELECT query_id, vec_id AS neighbor_id, sim,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
+       |  FROM $scored)
+       |SELECT query_id, rank, neighbor_id, sim FROM ranked WHERE rank <= 5
+       |ORDER BY query_id, rank""".stripMargin
+
   // ------------------------------------------------------- brute force
   /** Exact top-k neighbors for the probe set: probes broadcast against a
     * single scan of the corpus — at any scale this is one pass over the
@@ -76,14 +97,9 @@ object Similarity {
       .withColumn("vn", norm($"embedding")) // norm once per vector, pre-join
     val probes = probeSet(emb)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"), $"vn".as("qn"))
-    val scored = emb.crossJoin(broadcast(probes))
+    top5(emb.crossJoin(broadcast(probes))
       .filter($"vec_id" =!= $"query_id")
-      .withColumn("sim", round(dot($"qv", $"embedding") / ($"vn" * $"qn"), 6))
-    val w = Window.partitionBy($"query_id").orderBy($"sim".desc, $"vec_id")
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 5)
-      .select($"query_id", $"rank", $"vec_id".as("neighbor_id"), $"sim")
-      .orderBy($"query_id", $"rank")
+      .withColumn("sim", round(dot($"qv", $"embedding") / ($"vn" * $"qn"), 6)))
   }
   val annTopKBruteSql: String =
     s"""WITH probes AS (
@@ -94,12 +110,7 @@ object Similarity {
       |    ROUND(${cosineSql("e.embedding", "p.qv")}, 6) AS sim
       |  FROM embeddings e CROSS JOIN probes p
       |  WHERE e.vec_id <> p.query_id
-      |), ranked AS (
-      |  SELECT query_id, vec_id AS neighbor_id, sim,
-      |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
-      |  FROM scored)
-      |SELECT query_id, rank, neighbor_id, sim FROM ranked WHERE rank <= 5
-      |ORDER BY query_id, rank""".stripMargin
+      |), ${top5Sql("scored")}""".stripMargin
 
   // ---------------------------------------------------- embedding dedup
   /** Embedding near-dup pairs: cosine >= 0.95, found WITHOUT an all-pairs
@@ -222,12 +233,8 @@ object Similarity {
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"qv", $"vec_id", $"embedding")
       .distinct()
-    val w = Window.partitionBy($"query_id").orderBy($"sim".desc, $"vec_id")
-    cand.withColumn("sim", round(dot($"qv", $"embedding") / (norm($"qv") * norm($"embedding")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 5)
-      .select($"query_id", $"rank", $"vec_id".as("neighbor_id"), $"sim")
-      .orderBy($"query_id", $"rank")
+    top5(cand.withColumn("sim",
+      round(dot($"qv", $"embedding") / (norm($"qv") * norm($"embedding")), 6)))
   }
 
   /** DuckDB replica of [[annTopKLsh]]: the 16x6 Rademacher planes are
@@ -266,12 +273,7 @@ object Similarity {
          |  FROM cand
          |  JOIN embeddings q ON q.vec_id = cand.query_id
          |  JOIN embeddings e ON e.vec_id = cand.vec_id
-         |), ranked AS (
-         |  SELECT query_id, vec_id AS neighbor_id, sim,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, rank, neighbor_id, sim FROM ranked WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin
+         |), ${top5Sql("scored")}""".stripMargin
   }
 
   // ------------------------------------------------------------ IVF ANN
@@ -306,10 +308,16 @@ object Similarity {
     * without touching the corpus (ModelsSpec pins the law). Shared by
     * [[annTopKIvf]] and the cluster-partitioned layout
     * ([[graft.queries.Layout]] q62). */
-  private[graft] def ivfCentroids(s: SparkSession, d: String, k: Int = 16): DataFrame = {
+  private[graft] def ivfCentroids(s: SparkSession, d: String, k: Int = 16): DataFrame =
+    centroidSample(s, d, normedEmb(s, d), "ivf-centroids", k)
+
+  /** The k smallest rows of the normed frame `emb` by md5-hashed id as a
+    * broadcast `(cid, cv, cn)` table, trained once under the artifact
+    * name `tag`. */
+  private def centroidSample(s: SparkSession, d: String, emb: DataFrame, tag: String,
+      k: Int): DataFrame = {
     import s.implicits._
-    val emb = normedEmb(s, d)
-    val centDir = Models.root(s"ivf-centroids|$d|k=$k" +
+    val centDir = Models.root(s"$tag|$d|k=$k" +
         s"|in=${Models.inputFingerprint(s"$d/embeddings.parquet")}") { dir =>
       emb.orderBy(md5Key($"vec_id", 8), $"vec_id").limit(k)
         .select($"vec_id".as("cid"), $"embedding".as("cv"), $"vn".as("cn"))
@@ -317,6 +325,19 @@ object Similarity {
     }
     broadcast(s.read.parquet(centDir))
   }
+
+  /** DuckDB twin of [[centroidSample]]: CTEs `emb` (every vector with its
+    * norm) and `cent` (the 16 centroids, drawn from the vectors
+    * satisfying `pred`). */
+  private[graft] def ivfCentroidsSql(pred: String): String =
+    s"""emb AS (
+       |  SELECT vec_id, embedding, ${normSql("embedding")} AS vn FROM embeddings
+       |), cent AS (
+       |  SELECT vec_id AS cid, embedding AS cv, vn AS cn FROM emb
+       |  WHERE $pred
+       |  ORDER BY ${md5KeySql("vec_id", 8)}, vec_id
+       |  LIMIT 16
+       |)""".stripMargin
 
   /** Nearest-`top` centroid assignment of a normed frame. 6dp-rounded
     * before ranking: assignment must not depend on engine-specific
@@ -345,15 +366,10 @@ object Similarity {
     * spellings share. */
   private[graft] def ivfRank(corpus: DataFrame, probes: DataFrame): DataFrame = {
     import corpus.sparkSession.implicits._
-    val w = Window.partitionBy($"query_id").orderBy($"sim".desc, $"vec_id")
-    corpus.join(probes, "cid") // the IVF probe: equi-join on cluster id
+    top5(corpus.join(probes, "cid") // the IVF probe: equi-join on cluster id
       .filter($"vec_id" =!= $"query_id")
       .withColumn("sim", round(dot($"qv", $"embedding") / ($"vn" * $"qn"), 6))
-      .select($"query_id", $"vec_id", $"sim").distinct() // nprobe clusters may repeat pairs
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 5)
-      .select($"query_id", $"rank", $"vec_id".as("neighbor_id"), $"sim")
-      .orderBy($"query_id", $"rank")
+      .select($"query_id", $"vec_id", $"sim").distinct()) // nprobe clusters may repeat pairs
   }
 
   def annTopKIvf(s: SparkSession, d: String): DataFrame = {
@@ -367,13 +383,7 @@ object Similarity {
     * same 6dp-rounded argmax assignment, same nprobe equi-join;
     * [[Parity.dotSql]] spells the left-to-right double accumulation. */
   val annTopKIvfSql: String = {
-    s"""WITH emb AS (
-       |  SELECT vec_id, embedding, ${normSql("embedding")} AS vn FROM embeddings
-       |), cent AS (
-       |  SELECT vec_id AS cid, embedding AS cv, vn AS cn FROM emb
-       |  ORDER BY ${md5KeySql("vec_id", 8)}, vec_id
-       |  LIMIT 16
-       |), scored_all AS (
+    s"""WITH ${ivfCentroidsSql("TRUE")}, scored_all AS (
        |  SELECT e.vec_id, e.embedding, e.vn, c.cid,
        |    ROUND(${dotSql("e.embedding", "c.cv")} / (e.vn * c.cn), 6) AS csim
        |  FROM emb e CROSS JOIN cent c
@@ -391,12 +401,7 @@ object Similarity {
        |    ROUND(${dotSql("p.qv", "c.embedding")} / (c.vn * p.qn), 6) AS sim
        |  FROM corpus c JOIN probes p USING (cid)
        |  WHERE c.vec_id <> p.query_id
-       |), ranked AS (
-       |  SELECT query_id, vec_id AS neighbor_id, sim,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
-       |  FROM cand)
-       |SELECT query_id, rank, neighbor_id, sim FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
+       |), ${top5Sql("cand")}""".stripMargin
   }
 
   // ------------------------------------------------ IVF index maintenance
@@ -418,18 +423,10 @@ object Similarity {
     * what a from-scratch build over the base would produce. */
   def annIvfAppend(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val k = 16
-    val emb = Par.spread(Tables.embeddings(s, d).select($"vec_id", $"embedding"), $"vec_id")
-      .withColumn("vn", norm($"embedding"))
+    val emb = normedEmb(s, d)
     val base = emb.filter($"vec_id" % 10 =!= 3)
     val delta = emb.filter($"vec_id" % 10 === 3)
-    val centDir = Models.root(s"ivf-centroids-base|$d|k=$k" +
-        s"|in=${Models.inputFingerprint(s"$d/embeddings.parquet")}") { dir =>
-      base.orderBy(md5Key($"vec_id", 8), $"vec_id").limit(k)
-        .select($"vec_id".as("cid"), $"embedding".as("cv"), $"vn".as("cn"))
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-    }
-    val centroids = broadcast(s.read.parquet(centDir))
+    val centroids = centroidSample(s, d, base, "ivf-centroids-base", 16)
     def assign(df: DataFrame): DataFrame =
       df.crossJoin(centroids)
         .withColumn("csim", round(dot($"embedding", $"cv") / ($"vn" * $"cn"), 6))
@@ -447,14 +444,7 @@ object Similarity {
   /** DuckDB replica: base-only md5-ranked centroid sample, 6dp argmax
     * assignment of base and delta, per-cluster populations. */
   val annIvfAppendSql: String = {
-    s"""WITH emb AS (
-       |  SELECT vec_id, embedding, ${normSql("embedding")} AS vn FROM embeddings
-       |), cent AS (
-       |  SELECT vec_id AS cid, embedding AS cv, vn AS cn FROM emb
-       |  WHERE vec_id % 10 <> 3
-       |  ORDER BY ${md5KeySql("vec_id", 8)}, vec_id
-       |  LIMIT 16
-       |), assigned AS (
+    s"""WITH ${ivfCentroidsSql("vec_id % 10 <> 3")}, assigned AS (
        |  SELECT vec_id, cid,
        |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS crank
        |  FROM (
@@ -552,27 +542,34 @@ object Similarity {
     * two underlying searches, each already scale-shaped (brute: one
     * corpus pass, no big-side shuffle; IVF: pruned probe). Integer ppm
     * (floor div) keeps the hash engine-exact. */
-  def annRecall(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val exact = annTopKBrute(s, d).select($"query_id", $"neighbor_id")
-    val approx = annTopKIvf(s, d).select($"query_id", $"neighbor_id")
-      .withColumn("hit", lit(1L))
-    exact.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
+  def annRecall(s: SparkSession, d: String): DataFrame =
+    recallAt5(annTopKBrute(s, d), annTopKIvf(s, d))
+
+  /** Per-probe recall of `approx` against `exact`, both `(query_id,
+    * neighbor_id, ...)` search results; shared by the index families'
+    * recall rows. */
+  private def recallAt5(exactHits: DataFrame, approxHits: DataFrame): DataFrame = {
+    val (q, n) = (col("query_id"), col("neighbor_id"))
+    val approx = approxHits.select(q, n).withColumn("hit", lit(1L))
+    exactHits.select(q, n).join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
+      .groupBy(q)
       .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce($"hit", lit(0L))).as("n_hit"))
+        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .withColumn("recall_ppm", expr("n_hit * 1000000 div n_exact"))
-      .orderBy($"query_id")
+      .orderBy(q)
   }
-  /** DuckDB replica: the two published oracle pipelines composed. */
-  val annRecallSql: String =
+
+  /** DuckDB replica of [[recallAt5]]: the brute-force oracle and the
+    * index's oracle `approxSql` composed. */
+  private def recallAt5Sql(approxSql: String): String =
     s"""WITH exact AS (SELECT query_id, neighbor_id FROM ($annTopKBruteSql)),
-       |approx AS (SELECT query_id, neighbor_id, 1 AS hit FROM ($annTopKIvfSql))
+       |approx AS (SELECT query_id, neighbor_id, 1 AS hit FROM ($approxSql))
        |SELECT e.query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
        |  CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
        |  CAST((SUM(COALESCE(a.hit, 0)) * 1000000) // COUNT(*) AS BIGINT) AS recall_ppm
        |FROM exact e LEFT JOIN approx a USING (query_id, neighbor_id)
        |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+  val annRecallSql: String = recallAt5Sql(annTopKIvfSql)
 
   /** Recall@5 of the sign-LSH index (`ann_lsh_recall`) against brute
     * ground truth — the second index family's quality gate, mirroring
@@ -580,26 +577,9 @@ object Similarity {
     * index this engine ships carries a MEASURED, oracle-checked recall
     * row rather than an asserted one — and a banding change that hurts
     * recall fails the gate by name. */
-  def annLshRecall(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val exact = annTopKBrute(s, d).select($"query_id", $"neighbor_id")
-    val approx = annTopKLsh(s, d).select($"query_id", $"neighbor_id")
-      .withColumn("hit", lit(1L))
-    exact.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce($"hit", lit(0L))).as("n_hit"))
-      .withColumn("recall_ppm", expr("n_hit * 1000000 div n_exact"))
-      .orderBy($"query_id")
-  }
-  val annLshRecallSql: String =
-    s"""WITH exact AS (SELECT query_id, neighbor_id FROM ($annTopKBruteSql)),
-       |approx AS (SELECT query_id, neighbor_id, 1 AS hit FROM ($annTopKLshSql))
-       |SELECT e.query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       |  CAST(SUM(COALESCE(a.hit, 0)) AS BIGINT) AS n_hit,
-       |  CAST((SUM(COALESCE(a.hit, 0)) * 1000000) // COUNT(*) AS BIGINT) AS recall_ppm
-       |FROM exact e LEFT JOIN approx a USING (query_id, neighbor_id)
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+  def annLshRecall(s: SparkSession, d: String): DataFrame =
+    recallAt5(annTopKBrute(s, d), annTopKLsh(s, d))
+  val annLshRecallSql: String = recallAt5Sql(annTopKLshSql)
 
   // ------------------------------------------------------- ANN nDCG
   /** Rank discount 1/log2(i+1) for approx rank i — computed once in

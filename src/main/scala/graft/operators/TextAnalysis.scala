@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
-import graft.functions.Parity.{hitRatio, hitRatioSql, meanTokenLength, meanTokenLengthSql,
-  microNats, microNatsSql, normalizedSql, punctRatio, punctRatioSql, shingles, stopwordRatio,
-  stopwordRatioSql, tokens, tokensSql}
+import graft.functions.Parity.{bigrams, bigramsSql, hitRatio, hitRatioSql, meanTokenLength,
+  meanTokenLengthSql, microNats, microNatsSql, normalizedSql, punctRatio, punctRatioSql, shingles,
+  stopwordRatio, stopwordRatioSql, tokens, tokensSql}
 import graft.functions.TextFunctions.fingerprint
 import graft.queries.Tables
 
@@ -177,11 +177,22 @@ object TextAnalysis {
     toks.join(broadcast(vocab), "tok")
       .withColumn("nll_micro",
         -microNats($"cnt".cast("double") / lit(total.toDouble)))
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_toks"),
-        (sum($"nll_micro").cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
+      .transform(meanNll("n_toks"))
       .orderBy($"doc_id")
   }
+
+  /** Per-doc `(doc_id, <count>, avg_nll)` of a `(doc_id, nll_micro)`
+    * frame: the integer micro-nat sum, divided once at the end. */
+  private[graft] def meanNll(countAs: String)(scored: DataFrame): DataFrame =
+    scored.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as(countAs),
+        (sum(col("nll_micro")).cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
+
+  /** DuckDB twin of [[meanNll]] over the `scored` CTE. */
+  private[graft] def meanNllSql(countAs: String): String =
+    s"""SELECT doc_id, COUNT(*) AS $countAs,
+       |  CAST(SUM(nll_micro) AS DOUBLE) / (COUNT(*) * 1000000.0) AS avg_nll
+       |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
   val textPerplexitySql: String =
     raw"""WITH toks AS (
          |  SELECT doc_id, unnest(${tokensSql("text")}) AS tok
@@ -193,9 +204,7 @@ object TextAnalysis {
          |    -${microNatsSql("CAST(v.cnt AS DOUBLE) / (SELECT CAST(COUNT(*) AS DOUBLE) FROM toks)")} AS nll_micro
          |  FROM toks t JOIN vocab v ON t.tok = v.tok
          |)
-         |SELECT doc_id, COUNT(*) AS n_toks,
-         |  CAST(SUM(nll_micro) AS DOUBLE) / (COUNT(*) * 1000000.0) AS avg_nll
-         |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |${meanNllSql("n_toks")}""".stripMargin
 
   // ------------------------------------- Kneser-Ney bigram LM scoring
   /** Interpolated Kneser-Ney bigram LM quality scoring — the
@@ -238,24 +247,58 @@ object TextAnalysis {
     * only cross-engine wobble is a last-ulp `ln` difference absorbed
     * by the rounding — with the same acknowledged
     * within-an-ulp-of-.5 residual risk. */
-  private val KnDiscount = 0.75
+  private[graft] val KnDiscount = 0.75
   private[graft] val LmBroadcastMaxTypes = 2000000L
   def textBigramKn(s: SparkSession, d: String): DataFrame =
     textBigramKnWith(s, d, LmBroadcastMaxTypes)
 
   /** The per-occurrence bigram stream `(doc_id, w1, w2)` — the shared
     * base of the LM and collocation rows. */
-  private def bigramStream(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .select($"doc_id", tokens($"text").as("t"))
-      .filter(size($"t") >= 2)
-      .select($"doc_id", explode(zip_with(
-        slice($"t", lit(1), size($"t") - 1),
-        slice($"t", lit(2), size($"t") - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select($"doc_id", $"bg.w1".as("w1"), $"bg.w2".as("w2"))
+  private def bigramStream(s: SparkSession, d: String): DataFrame =
+    bigrams(Tables.documents(s, d).select(col("doc_id"), tokens(col("text")).as("t")))
+
+  /** Bigram type counts `(w1, w2, c)` of a bigram stream. */
+  private[graft] def bigramCounts(bi: DataFrame): DataFrame =
+    bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
+
+  /** The Kneser-Ney context tables of bigram type counts: `(w1, ctot,
+    * n1f)` (occurrences and continuation types after w1) and `(w2, n1b)`
+    * (context types before w2). */
+  private[graft] def knContexts(big: DataFrame): (DataFrame, DataFrame) =
+    (big.groupBy(col("w1")).agg(sum(col("c")).as("ctot"), count(lit(1)).as("n1f")),
+      big.groupBy(col("w2")).agg(count(lit(1)).as("n1b")))
+
+  /** ONE scalar action over bigram type counts: the type count (the
+    * continuation normalizer) and the distinct w1 and w2 counts (the row
+    * counts of the two context tables, i.e. their broadcast-guard sizes). */
+  private[graft] def knSizes(big: DataFrame): (Long, Long, Long) = {
+    val st = big.agg(count(lit(1)), countDistinct(col("w1")), countDistinct(col("w2"))).first()
+    (st.getLong(0), st.getLong(1), st.getLong(2))
   }
+
+  /** `df` broadcast when its counted `rows` are within `maxRows`, else
+    * left to AQE's runtime statistics. */
+  private[graft] def broadcastUnder(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
+    if (rows <= maxRows) broadcast(df) else df
+
+  /** DuckDB CTEs `bi` (the bigram stream of the `(doc_id, t)` rows in
+    * `docs`) and `big` (its type counts): the oracle twins of
+    * [[bigramStream]] and [[bigramCounts]]. */
+  private[graft] def bigramCountsSql(docs: String): String =
+    s"""bi AS (
+       |  ${bigramsSql(docs)}
+       |), big AS (
+       |  SELECT w1, w2, COUNT(*) AS c FROM bi GROUP BY w1, w2
+       |)""".stripMargin
+
+  /** [[bigramCountsSql]] plus the [[knContexts]] twins `fwd` and `bwd`. */
+  private[graft] def knTablesSql(docs: String): String =
+    s"""${bigramCountsSql(docs)}, fwd AS (
+       |  SELECT w1, CAST(SUM(c) AS BIGINT) AS ctot, COUNT(*) AS n1f
+       |  FROM big GROUP BY w1
+       |), bwd AS (
+       |  SELECT w2, COUNT(*) AS n1b FROM big GROUP BY w2
+       |)""".stripMargin
 
   /** Guard-parameterized body: the gate row always runs the default
     * [[LmBroadcastMaxTypes]]; specs and scale arms pass a tiny bound to
@@ -266,17 +309,12 @@ object TextAnalysis {
       maxTypes: Long): DataFrame = {
     import s.implicits._
     val bi = bigramStream(s, d)
-    val big = bi.groupBy($"w1", $"w2").agg(count(lit(1)).as("c"))
-    val fwd = big.groupBy($"w1")
-      .agg(sum($"c").as("ctot"), count(lit(1)).as("n1f"))
-    val bwd = big.groupBy($"w2").agg(count(lit(1)).as("n1b"))
+    val big = bigramCounts(bi)
+    val (fwd, bwd) = knContexts(big)
     // ONE scalar action (same as textPerplexity's token total) yields
     // the continuation normalizer AND all three broadcast-guard sizes —
     // no extra pass over the un-persisted train pipeline
-    val stats = big.agg(count(lit(1)), countDistinct($"w1"),
-      countDistinct($"w2")).first()
-    val (nTypesL, nFwd, nBwd) =
-      (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+    val (nTypesL, nFwd, nBwd) = knSizes(big)
     val nTypes = nTypesL.toDouble
     // PER-TABLE guard: the context tables (fwd/bwd) are VOCAB-bounded —
     // one row per distinct context/continuation token — while big has a
@@ -284,8 +322,7 @@ object TextAnalysis {
     // corpus, 11.6M vs vocab-scale). Above the guard only the oversized
     // table's join shuffles the scoring stream; a still-small context
     // table keeps broadcasting.
-    def lm(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= maxTypes) broadcast(df) else df
+    def lm(df: DataFrame, rows: Long): DataFrame = broadcastUnder(df, rows, maxTypes)
     val p = ($"c".cast("double") - KnDiscount) / $"ctot".cast("double") +
       (lit(KnDiscount) * $"n1f".cast("double") / $"ctot".cast("double")) *
         ($"n1b".cast("double") / lit(nTypes))
@@ -306,9 +343,7 @@ object TextAnalysis {
       .join(lm(fwd, nFwd), Seq("w1"))
       .join(lm(bwd, nBwd), Seq("w2"))
       .withColumn("nll_micro", -microNats(p))
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        (sum($"nll_micro").cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
+      .transform(meanNll("n_bigrams"))
       .orderBy($"doc_id")
   }
   val textBigramKnSql: String = {
@@ -319,18 +354,7 @@ object TextAnalysis {
         |           / (SELECT CAST(COUNT(*) AS DOUBLE) FROM big))""".stripMargin
     raw"""WITH toks AS (
          |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
-         |), idx AS (
-         |  SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks
-         |), bi AS (
-         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2 FROM idx
-         |), big AS (
-         |  SELECT w1, w2, COUNT(*) AS c FROM bi GROUP BY w1, w2
-         |), fwd AS (
-         |  SELECT w1, CAST(SUM(c) AS BIGINT) AS ctot, COUNT(*) AS n1f
-         |  FROM big GROUP BY w1
-         |), bwd AS (
-         |  SELECT w2, COUNT(*) AS n1b FROM big GROUP BY w2
-         |), scored AS (
+         |), ${knTablesSql("toks")}, scored AS (
          |  SELECT bi.doc_id,
          |    -${microNatsSql(p)} AS nll_micro
          |  FROM bi
@@ -338,9 +362,7 @@ object TextAnalysis {
          |  JOIN fwd ON bi.w1 = fwd.w1
          |  JOIN bwd ON bi.w2 = bwd.w2
          |)
-         |SELECT doc_id, COUNT(*) AS n_bigrams,
-         |  CAST(SUM(nll_micro) AS DOUBLE) / (COUNT(*) * 1000000.0) AS avg_nll
-         |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |${meanNllSql("n_bigrams")}""".stripMargin
   }
 
   /** Top-K collocations by pointwise mutual information
@@ -365,8 +387,7 @@ object TextAnalysis {
   private[graft] val PmiTopK = 100
   def textPmiTop(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val big = bigramStream(s, d)
-      .groupBy($"w1", $"w2").agg(count(lit(1)).as("c"))
+    val big = bigramCounts(bigramStream(s, d))
     val fwd = big.groupBy($"w1").agg(sum($"c").as("c1"))
     val bwd = big.groupBy($"w2").agg(sum($"c").as("c2"))
     // one scalar action: the PMI normalizer N and both marginal-table
@@ -378,8 +399,7 @@ object TextAnalysis {
     val (nTotL, nFwd, nBwd) =
       (if (stats.isNullAt(0)) 0L else stats.getLong(0),
         stats.getLong(1), stats.getLong(2))
-    def mar(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= LmBroadcastMaxTypes) broadcast(df) else df
+    def mar(df: DataFrame, rows: Long): DataFrame = broadcastUnder(df, rows, LmBroadcastMaxTypes)
     big.filter($"c" >= PmiMinCount)
       .join(mar(fwd, nFwd), Seq("w1"))
       .join(mar(bwd, nBwd), Seq("w2"))
@@ -396,13 +416,7 @@ object TextAnalysis {
         |    / (CAST(fwd.c1 AS DOUBLE) * CAST(bwd.c2 AS DOUBLE))""".stripMargin
     raw"""WITH toks AS (
          |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents
-         |), idx AS (
-         |  SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks
-         |), bi AS (
-         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2 FROM idx
-         |), big AS (
-         |  SELECT w1, w2, COUNT(*) AS c FROM bi GROUP BY w1, w2
-         |), fwd AS (
+         |), ${bigramCountsSql("toks")}, fwd AS (
          |  SELECT w1, CAST(SUM(c) AS BIGINT) AS c1 FROM big GROUP BY w1
          |), bwd AS (
          |  SELECT w2, CAST(SUM(c) AS BIGINT) AS c2 FROM big GROUP BY w2
@@ -473,10 +487,7 @@ object TextAnalysis {
   private[graft] val BpeTopK = 30
   def bpePairCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val words = Par.spread(Tables.documents(s, d), $"doc_id")
-      .select(explode(tokens($"text")).as("w"))
-      .groupBy($"w").agg(count(lit(1)).as("wc"))
-    words
+    wordCounts(s, d)
       .select($"wc", explode(
         when(length($"w") >= 2,
           transform(sequence(lit(1), length($"w") - 1),
@@ -487,12 +498,22 @@ object TextAnalysis {
       .orderBy($"n".desc, $"pair")
       .limit(BpeTopK)
   }
-  val bpePairCountsSql: String =
-    raw"""WITH words AS (
+  /** The corpus as its weighted vocabulary `(w, wc)`: the one corpus-scale
+    * pass of the BPE rows. */
+  private def wordCounts(s: SparkSession, d: String): DataFrame =
+    Par.spread(Tables.documents(s, d), col("doc_id"))
+      .select(explode(tokens(col("text"))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("wc"))
+
+  /** DuckDB twin of [[wordCounts]]: the `words` CTE. */
+  private val WordCountsSql: String =
+    raw"""words AS (
          |  SELECT w, COUNT(*) AS wc
          |  FROM (SELECT unnest(${tokensSql("text")}) AS w FROM documents)
-         |  GROUP BY w
-         |), pairs AS (
+         |  GROUP BY w)""".stripMargin
+
+  val bpePairCountsSql: String =
+    raw"""WITH $WordCountsSql, pairs AS (
          |  SELECT substring(w, gs, 1) || ' ' || substring(w, gs + 1, 1) AS pair, wc
          |  FROM words, UNNEST(generate_series(1, length(w) - 1)) AS u(gs)
          |  WHERE length(w) >= 2)
@@ -533,9 +554,7 @@ object TextAnalysis {
   private val TokR = "\u0002" // token close sentinel
   def bpeVocabLearn(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val words = Par.spread(Tables.documents(s, d), $"doc_id")
-      .select(explode(tokens($"text")).as("w"))
-      .groupBy($"w").agg(count(lit(1)).as("wc"))
+    val words = wordCounts(s, d)
       .select(regexp_replace($"w", "(.)", s"$TokL$$1$TokR").as("ws"), $"wc")
       .persist()
     try {
@@ -572,19 +591,20 @@ object TextAnalysis {
     } finally words.unpersist()
   }
 
+  /** A merge-table `pair` "a b" as the sentinel-wrapped `⟨a⟩⟨b⟩` a merge
+    * replaces, and as the merged token `⟨ab⟩`. */
+  private val BpePairSql =
+    "chr(1) || string_split(pair, ' ')[1] || chr(2) || chr(1) || string_split(pair, ' ')[2] || chr(2)"
+  private val BpeMergedSql = "chr(1) || replace(pair, ' ', '') || chr(2)"
+
   /** DuckDB replica of [[bpeVocabLearn]]: the same merge rounds unrolled
     * as a CTE chain (the [[Clustering.lloydSql]] discipline) — per round
-    * a top-1 pair CTE and a `replace`-merged sequence CTE, the top pair
-    * entering the replace as scalar subqueries. */
-  val bpeVocabLearnSql: String = {
-    def encA = "chr(1) || string_split(pair, ' ')[1] || chr(2)"
-    def encB = "chr(1) || string_split(pair, ' ')[2] || chr(2)"
-    val base =
-      raw"""words AS (
-           |  SELECT w, COUNT(*) AS wc
-           |  FROM (SELECT unnest(${tokensSql("text")}) AS w FROM documents)
-           |  GROUP BY w),
-           |seq0 AS (
+    * a top-1 pair CTE `p<r>` and a `replace`-merged sequence CTE
+    * `seq<r>`, the top pair entering the replace as scalar subqueries.
+    * [[bpeEncodeSql]] runs the same chain. */
+  private val BpeLearnCtesSql: String = {
+    val seq0 =
+      raw"""seq0 AS (
            |  SELECT regexp_replace(w, '(.)', chr(1) || '\1' || chr(2), 'g') AS ws, wc FROM words)""".stripMargin
     val rounds = (1 to BpeMerges).map { r =>
       raw"""p$r AS (
@@ -594,13 +614,16 @@ object TextAnalysis {
            |       UNNEST(generate_series(1, len(t) - 1)) AS u(gs)
            |  GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
            |seq$r AS (
-           |  SELECT replace(ws, (SELECT $encA || $encB FROM p$r),
-           |                     (SELECT chr(1) || replace(pair, ' ', '') || chr(2) FROM p$r)) AS ws, wc
+           |  SELECT replace(ws, (SELECT $BpePairSql FROM p$r), (SELECT $BpeMergedSql FROM p$r)) AS ws, wc
            |  FROM seq${r - 1})""".stripMargin
     }
+    (WordCountsSql +: seq0 +: rounds).mkString(",\n")
+  }
+
+  val bpeVocabLearnSql: String = {
     val unions = (1 to BpeMerges)
       .map(r => s"SELECT $r AS round, pair, n FROM p$r").mkString("\nUNION ALL\n")
-    s"WITH ${(base +: rounds).mkString(",\n")}\n$unions\nORDER BY round"
+    s"WITH $BpeLearnCtesSql\n$unions\nORDER BY round"
   }
 
   // -------------------------------------------------- BPE encode (apply)
@@ -661,36 +684,17 @@ object TextAnalysis {
         expr("case when n_char_units = 0 then 0 else ((n_char_units - n_bpe_units) * 1000000) div n_char_units end"))
       .orderBy($"doc_id")
   }
-  /** DuckDB replica: the learn chain's CTEs (shared with
+  /** DuckDB replica: the learn chain's CTEs (those of
     * [[bpeVocabLearnSql]]) feed per-round scalar subqueries into a chain
     * of document-side `replace` steps; COALESCE to a never-matching
     * sentinel makes an unrealized round (empty p_r) a no-op, exactly as
     * the Spark fold over only the realized merges. */
   val bpeEncodeSql: String = {
-    val base =
-      raw"""words AS (
-           |  SELECT w, COUNT(*) AS wc
-           |  FROM (SELECT unnest(${tokensSql("text")}) AS w FROM documents)
-           |  GROUP BY w),
-           |seq0 AS (
-           |  SELECT regexp_replace(w, '(.)', chr(1) || '\1' || chr(2), 'g') AS ws, wc FROM words)""".stripMargin
-    val rounds = (1 to BpeMerges).map { r =>
-      raw"""p$r AS (
-           |  SELECT t[gs] || ' ' || t[gs + 1] AS pair, CAST(SUM(wc) AS BIGINT) AS n
-           |  FROM (SELECT string_split(substr(ws, 2, greatest(length(ws) - 2, 0)), chr(2) || chr(1)) AS t, wc
-           |        FROM seq${r - 1}) s,
-           |       UNNEST(generate_series(1, len(t) - 1)) AS u(gs)
-           |  GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
-           |seq$r AS (
-           |  SELECT replace(ws, (SELECT chr(1) || string_split(pair, ' ')[1] || chr(2) || chr(1) || string_split(pair, ' ')[2] || chr(2) FROM p$r),
-           |                     (SELECT chr(1) || replace(pair, ' ', '') || chr(2) FROM p$r)) AS ws, wc
-           |  FROM seq${r - 1})""".stripMargin
-    }
     val docRounds = (1 to BpeMerges).map { r =>
       raw"""e$r AS (
            |  SELECT doc_id,
-           |    replace(e, COALESCE((SELECT chr(1) || string_split(pair, ' ')[1] || chr(2) || chr(1) || string_split(pair, ' ')[2] || chr(2) FROM p$r), chr(3)),
-           |               COALESCE((SELECT chr(1) || replace(pair, ' ', '') || chr(2) FROM p$r), chr(3))) AS e,
+           |    replace(e, COALESCE((SELECT $BpePairSql FROM p$r), chr(3)),
+           |               COALESCE((SELECT $BpeMergedSql FROM p$r), chr(3))) AS e,
            |    n_char_units
            |  FROM e${r - 1})""".stripMargin
     }
@@ -699,7 +703,7 @@ object TextAnalysis {
            |  SELECT doc_id, regexp_replace(text, '(\S)', chr(1) || '\1' || chr(2), 'g') AS e,
            |    CAST(length(regexp_replace(text, '\s', '', 'g')) AS BIGINT) AS n_char_units
            |  FROM documents)""".stripMargin
-    s"""WITH ${(base +: rounds).mkString(",\n")},\n${(doc0 +: docRounds).mkString(",\n")}
+    s"""WITH $BpeLearnCtesSql,\n${(doc0 +: docRounds).mkString(",\n")}
        |SELECT doc_id, n_char_units,
        |  CAST(length(e) - length(replace(e, chr(1), '')) AS BIGINT) AS n_bpe_units,
        |  CASE WHEN n_char_units = 0 THEN 0

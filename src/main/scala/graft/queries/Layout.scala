@@ -156,25 +156,32 @@ object Layout {
   /** Per-type stats over two event types, read from the hive-partitioned
     * layout: the event_type predicate becomes a PartitionFilter, so the
     * scan never opens the other types' files — at 100 TB, the difference
-    * between reading 2 directories and reading all of them. min/max of
-    * value (not sum) keeps the double aggregates order-independent. */
+    * between reading 2 directories and reading all of them. */
   def q47PartitionPrune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(partitionedEvents(s, d))
-      .filter($"event_type".isin("purchase", "view"))
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n"),
-        countDistinct($"user_id").as("n_users"),
-        sum($"event_id").as("id_sum"),
-        min($"value").as("min_value"),
-        max($"value").as("max_value"))
-      .orderBy($"event_type")
+    typeStats(s.read.parquet(partitionedEvents(s, d))
+      .filter($"event_type".isin("purchase", "view")))
   }
-  val q47Sql: String =
-    """SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
+  val q47Sql: String = typeStatsSql("event_type IN ('purchase', 'view')")
+
+  /** Per-event-type stats of the layout rows (q47, q49, q50), whose
+    * oracles read the original events table. min/max of value (not sum)
+    * keeps the double aggregates order-independent. */
+  private def typeStats(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        countDistinct(col("user_id")).as("n_users"),
+        sum(col("event_id")).as("id_sum"),
+        min(col("value")).as("min_value"),
+        max(col("value")).as("max_value"))
+      .orderBy(col("event_type"))
+
+  /** Oracle for [[typeStats]] over the events satisfying `pred`. */
+  private def typeStatsSql(pred: String): String =
+    s"""SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
       |  CAST(SUM(event_id) AS BIGINT) AS id_sum,
       |  MIN(value) AS min_value, MAX(value) AS max_value
-      |FROM events WHERE event_type IN ('purchase', 'view')
+      |FROM events WHERE $pred
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
   /** Small-file fixture + compaction, once per sf dir: events
@@ -264,23 +271,9 @@ object Layout {
     * technique the other layout queries assume away: a streaming source
     * lands O(triggers) small files, and at 100 TB an uncompacted table
     * pays per-file open/list/schedule costs that dwarf the data scan. */
-  def q49CompactSmallFiles(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val (_, compactDir) = compactedEvents(s, d)
-    s.read.parquet(compactDir)
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n"),
-        countDistinct($"user_id").as("n_users"),
-        sum($"event_id").as("id_sum"),
-        min($"value").as("min_value"),
-        max($"value").as("max_value"))
-      .orderBy($"event_type")
-  }
-  val q49Sql: String =
-    """SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
-      |  CAST(SUM(event_id) AS BIGINT) AS id_sum,
-      |  MIN(value) AS min_value, MAX(value) AS max_value
-      |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+  def q49CompactSmallFiles(s: SparkSession, d: String): DataFrame =
+    typeStats(s.read.parquet(compactedEvents(s, d)._2))
+  val q49Sql: String = typeStatsSql("TRUE")
 
   /** Z-order (Morton) interleave of two non-negative long columns, as a
     * pure composition of codegen'd bitwise builtins — no UDF. Each input
@@ -347,23 +340,11 @@ object Layout {
     * scan as PushedFilters. */
   def q50ZorderCluster(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(zorderedEvents(s, d))
-      .filter($"user_id".between(10, 75) && $"event_id".between(100, 5000))
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n"),
-        countDistinct($"user_id").as("n_users"),
-        sum($"event_id").as("id_sum"),
-        min($"value").as("min_value"),
-        max($"value").as("max_value"))
-      .orderBy($"event_type")
+    typeStats(s.read.parquet(zorderedEvents(s, d))
+      .filter($"user_id".between(10, 75) && $"event_id".between(100, 5000)))
   }
   val q50Sql: String =
-    """SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
-      |  CAST(SUM(event_id) AS BIGINT) AS id_sum,
-      |  MIN(value) AS min_value, MAX(value) AS max_value
-      |FROM events
-      |WHERE user_id BETWEEN 10 AND 75 AND event_id BETWEEN 100 AND 5000
-      |GROUP BY event_type ORDER BY event_type""".stripMargin
+    typeStatsSql("user_id BETWEEN 10 AND 75 AND event_id BETWEEN 100 AND 5000")
 
   // ---------------------------------------------------------------- q52
   /** Tiny event-type dimension derived deterministically from events

@@ -90,26 +90,31 @@ object Relational3 {
   def q60LatestByKey(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, d)
-    ev.select($"user_id", $"event_type", Tables.tsUs(ev).as("ts_us"),
-        $"event_id", $"value")
-      .groupBy($"user_id", $"event_type")
-      .agg(count(lit(1)).as("n_versions"),
-        max(struct($"ts_us", $"event_id", $"value")).as("last"))
-      .select($"user_id", $"event_type", $"n_versions",
-        $"last.ts_us".as("last_ts_us"), $"last.event_id".as("last_event_id"),
-        $"last.value".as("last_value"))
+    latestByKey(ev.select($"user_id", $"event_type", Tables.tsUs(ev).as("ts_us"),
+        $"event_id", $"value"))
       .orderBy($"user_id", $"event_type")
   }
-  val q60LatestByKeySql: String =
+  /** The q60 reduction over `(user_id, event_type, ts_us, event_id,
+    * value)` rows; shared with the streaming twin. */
+  private[graft] def latestByKey(ev: DataFrame): DataFrame =
+    ev.groupBy(col("user_id"), col("event_type"))
+      .agg(count(lit(1)).as("n_versions"),
+        max(struct(col("ts_us"), col("event_id"), col("value"))).as("last"))
+      .select(col("user_id"), col("event_type"), col("n_versions"),
+        col("last.ts_us").as("last_ts_us"), col("last.event_id").as("last_event_id"),
+        col("last.value").as("last_value"))
+  /** Oracle for [[latestByKey]] over the events satisfying `pred`. */
+  def q60LatestByKeySqlWhere(pred: String): String =
     s"""WITH rk AS (
        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id, value,
        |    ROW_NUMBER() OVER (PARTITION BY user_id, event_type
        |                       ORDER BY epoch_us(ts) DESC, event_id DESC) AS rk,
        |    COUNT(*) OVER (PARTITION BY user_id, event_type) AS n_versions
-       |  FROM events)
+       |  FROM events WHERE $pred)
        |SELECT user_id, event_type, CAST(n_versions AS BIGINT) AS n_versions,
        |  ts_us AS last_ts_us, event_id AS last_event_id, value AS last_value
        |FROM rk WHERE rk = 1 ORDER BY user_id, event_type""".stripMargin
+  val q60LatestByKeySql: String = q60LatestByKeySqlWhere("TRUE")
 
   /** Nearest-match window for [[q61AsofNearest]]. */
   private[graft] val NearestUs: Long = 3600L * 1000000
@@ -750,24 +755,29 @@ object Relational3 {
     val base = ev.select($"user_id", $"event_id", $"event_type",
       Tables.tsUs(ev).as("ts_us"))
     val w = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-    val trans = base
+    transitionMatrix(base
       .withColumn("to_type", lead($"event_type", 1).over(w))
       .filter($"to_type".isNotNull)
       .groupBy($"event_type".as("from_type"), $"to_type")
-      .agg(count(lit(1)).as("n_transitions"))
-    val wFrom = Window.partitionBy($"from_type")
+      .agg(count(lit(1)).as("n_transitions")))
+  }
+  /** The q68 `p_ppm` normalization of a `(from_type, to_type,
+    * n_transitions)` table, ordered; shared with the streaming twin. */
+  private[graft] def transitionMatrix(trans: DataFrame): DataFrame = {
+    val wFrom = Window.partitionBy(col("from_type"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     trans
-      .withColumn("from_total", sum($"n_transitions").over(wFrom))
+      .withColumn("from_total", sum(col("n_transitions")).over(wFrom))
       .withColumn("p_ppm", expr("(n_transitions * 1000000) div from_total"))
-      .select($"from_type", $"to_type", $"n_transitions", $"p_ppm")
-      .orderBy($"from_type", $"to_type")
+      .select(col("from_type"), col("to_type"), col("n_transitions"), col("p_ppm"))
+      .orderBy(col("from_type"), col("to_type"))
   }
-  val q68JourneyMarkovSql: String =
+  /** Oracle for q68 over the events satisfying `pred`. */
+  def q68JourneyMarkovSqlWhere(pred: String): String =
     s"""WITH t AS (
        |  SELECT event_type AS from_type,
        |    LEAD(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS to_type
-       |  FROM events
+       |  FROM events WHERE $pred
        |), g AS (
        |  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n_transitions
        |  FROM t WHERE to_type IS NOT NULL GROUP BY from_type, to_type
@@ -775,6 +785,7 @@ object Relational3 {
        |SELECT from_type, to_type, n_transitions,
        |  (n_transitions * 1000000) // CAST(SUM(n_transitions) OVER (PARTITION BY from_type) AS BIGINT) AS p_ppm
        |FROM g ORDER BY from_type, to_type""".stripMargin
+  val q68JourneyMarkovSql: String = q68JourneyMarkovSqlWhere("TRUE")
 
   // ------------------------------------------------ q69 value anomaly
   /** Robust daily-anomaly flags (`q69_value_anomaly`): per event type,
@@ -791,42 +802,53 @@ object Relational3 {
     * so every comparison is integer. The daily frame is types × days
     * (bounded by the retention window, not event volume); both medians
     * are windows over that K-bounded frame and join back broadcast. */
-  def q69ValueAnomaly(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ev = Tables.events(s, d)
-    val daily = ev
-      .select($"event_type", Tables.tsUs(ev).as("ts_us"),
-        round($"value" * 1e6).cast("long").as("v_micro"))
+  def q69ValueAnomaly(s: SparkSession, d: String): DataFrame =
+    anomalyVerdicts(dailyMicroSums(Tables.events(s, d), "day_sum_micro"))
+
+  /** Per `(event_type, day_idx)`, the sum of the events' values quantized
+    * to integer micros, named `sumAs`; shared by q69 and q70. */
+  private def dailyMicroSums(ev: DataFrame, sumAs: String): DataFrame =
+    ev.select(col("event_type"), Tables.tsUs(ev).as("ts_us"),
+        round(col("value") * 1e6).cast("long").as("v_micro"))
       .withColumn("day_idx", expr("ts_us div 86400000000"))
-      .groupBy($"event_type", $"day_idx")
-      .agg(sum($"v_micro").as("day_sum_micro"))
-    val wRank = Window.partitionBy($"event_type").orderBy($"day_sum_micro", $"day_idx")
-    val wAll = Window.partitionBy($"event_type")
+      .groupBy(col("event_type"), col("day_idx"))
+      .agg(sum(col("v_micro")).as(sumAs))
+
+  /** DuckDB twin of [[dailyMicroSums]] over the events satisfying `pred`. */
+  private def dailyMicroSumsSql(sumAs: String, pred: String): String =
+    s"""SELECT event_type, epoch_us(ts) // 86400000000 AS day_idx,
+       |    CAST(SUM(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS $sumAs
+       |  FROM events WHERE $pred GROUP BY 1, 2""".stripMargin
+  /** The rank-rule median/MAD verdicts over a daily `(event_type,
+    * day_idx, day_sum_micro)` table, ordered; shared with the streaming
+    * twin. */
+  private[graft] def anomalyVerdicts(daily: DataFrame): DataFrame = {
+    val wRank = Window.partitionBy(col("event_type")).orderBy(col("day_sum_micro"), col("day_idx"))
+    val wAll = Window.partitionBy(col("event_type"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val med = daily
       .withColumn("rn", row_number().over(wRank))
       .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(n + 1) div 2"))
-      .select($"event_type", $"day_sum_micro".as("med_micro"))
+      .filter(col("rn") === expr("(n + 1) div 2"))
+      .select(col("event_type"), col("day_sum_micro").as("med_micro"))
     val withMed = daily.join(broadcast(med), Seq("event_type"))
-      .withColumn("dev", abs($"day_sum_micro" - $"med_micro"))
-    val wDev = Window.partitionBy($"event_type").orderBy($"dev", $"day_idx")
+      .withColumn("dev", abs(col("day_sum_micro") - col("med_micro")))
+    val wDev = Window.partitionBy(col("event_type")).orderBy(col("dev"), col("day_idx"))
     val mad = withMed
       .withColumn("rn", row_number().over(wDev))
       .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(n + 1) div 2"))
-      .select($"event_type", $"dev".as("mad_micro"))
+      .filter(col("rn") === expr("(n + 1) div 2"))
+      .select(col("event_type"), col("dev").as("mad_micro"))
     withMed.join(broadcast(mad), Seq("event_type"))
-      .withColumn("is_anomaly", $"dev" > $"mad_micro" * 3)
-      .select($"event_type", $"day_idx", $"day_sum_micro", $"med_micro",
-        $"mad_micro", $"is_anomaly")
-      .orderBy($"event_type", $"day_idx")
+      .withColumn("is_anomaly", col("dev") > col("mad_micro") * 3)
+      .select(col("event_type"), col("day_idx"), col("day_sum_micro"), col("med_micro"),
+        col("mad_micro"), col("is_anomaly"))
+      .orderBy(col("event_type"), col("day_idx"))
   }
-  val q69ValueAnomalySql: String =
+  /** Oracle for q69 over the events satisfying `pred`. */
+  def q69ValueAnomalySqlWhere(pred: String): String =
     s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day_idx,
-       |    CAST(SUM(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS day_sum_micro
-       |  FROM events GROUP BY 1, 2
+       |  ${dailyMicroSumsSql("day_sum_micro", pred)}
        |), med AS (
        |  SELECT event_type, day_sum_micro AS med_micro FROM (
        |    SELECT event_type, day_sum_micro,
@@ -849,6 +871,7 @@ object Relational3 {
        |  mad.mad_micro, (wm.dev > mad.mad_micro * 3) AS is_anomaly
        |FROM wm JOIN mad USING (event_type)
        |ORDER BY wm.event_type, wm.day_idx""".stripMargin
+  val q69ValueAnomalySql: String = q69ValueAnomalySqlWhere("TRUE")
 
   // ------------------------------------------- q70 seasonal baseline
   /** Seasonal-naive forecast audit (`q70_seasonal_baseline`): per event
@@ -867,13 +890,7 @@ object Relational3 {
     * after the first event-table aggregate. */
   def q70SeasonalBaseline(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = Tables.events(s, d)
-    val daily = ev
-      .select($"event_type", Tables.tsUs(ev).as("ts_us"),
-        round($"value" * 1e6).cast("long").as("v_micro"))
-      .withColumn("day_idx", expr("ts_us div 86400000000"))
-      .groupBy($"event_type", $"day_idx")
-      .agg(sum($"v_micro").as("x"))
+    val daily = dailyMicroSums(Tables.events(s, d), "x")
       .withColumn("weekday", expr("day_idx % 7"))
     val wd = daily.groupBy($"event_type", $"weekday")
       .agg(count(lit(1)).as("n_days"), sum($"x").as("s"))
@@ -888,9 +905,7 @@ object Relational3 {
   }
   val q70SeasonalBaselineSql: String =
     s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day_idx,
-       |    CAST(SUM(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS x
-       |  FROM events GROUP BY 1, 2
+       |  ${dailyMicroSumsSql("x", "TRUE")}
        |), d2 AS (
        |  SELECT *, day_idx % 7 AS weekday FROM daily
        |), wd AS (

@@ -59,12 +59,11 @@ object Streaming2 {
         $"n")
       .orderBy($"user_id", $"win_start")
   }}
-  val streamSessionWindowSql: String =
-    s"""SELECT user_id,
-       |  strftime(make_timestamp(MIN(ts_us)), '%Y-%m-%d %H:%M:%S') AS win_start,
-       |  COUNT(*) AS n
-       |FROM (
-       |  SELECT user_id, ts_us,
+  /** Oracle sessionization shared by the session rows: each sliced event's
+    * `(user_id, ts_us, sess)`, where a user's session number steps at
+    * every gap of at least [[GapHours]] (and at their first event). */
+  private val SessionsSql: String =
+    s"""SELECT user_id, ts_us,
        |    SUM(ns) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
        |  FROM (
@@ -72,7 +71,12 @@ object Streaming2 {
        |      CASE WHEN LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
        |        OR epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
        |           >= CAST($GapHours AS BIGINT)*3600*1000000 THEN 1 ELSE 0 END AS ns
-       |    FROM events WHERE event_id < $CUTOFF))
+       |    FROM events WHERE event_id < $CUTOFF)""".stripMargin
+  val streamSessionWindowSql: String =
+    s"""SELECT user_id,
+       |  strftime(make_timestamp(MIN(ts_us)), '%Y-%m-%d %H:%M:%S') AS win_start,
+       |  COUNT(*) AS n
+       |FROM ($SessionsSql)
        |GROUP BY user_id, sess ORDER BY user_id, win_start""".stripMargin
 
   // -------------------------------------------------- stream-stream join
@@ -155,16 +159,7 @@ object Streaming2 {
   val streamMgwsSessionSql: String =
     s"""SELECT user_id, CAST(sess AS BIGINT) AS session_id, COUNT(*) AS n_events,
        |  MAX(ts_us) - MIN(ts_us) AS duration_us
-       |FROM (
-       |  SELECT user_id, ts_us,
-       |    SUM(ns) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-       |  FROM (
-       |    SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-       |      CASE WHEN LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
-       |        OR epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-       |           >= CAST($GapHours AS BIGINT)*3600*1000000 THEN 1 ELSE 0 END AS ns
-       |    FROM events WHERE event_id < $CUTOFF))
+       |FROM ($SessionsSql)
        |GROUP BY user_id, sess ORDER BY user_id, session_id""".stripMargin
 
   // ------------------------------------------- stream-incremental dedup
@@ -269,23 +264,7 @@ object Streaming2 {
   /** The batch operator's oracle over the same bounded corpus slice:
     * stream/batch parity IS the gate. */
   val streamIncrementalDedupSql: String =
-    s"""WITH ${graft.operators.Dedup.shingleCteSql(s"doc_id < $DocCutoff")},
-       |cand AS (
-       |  SELECT d.doc_id AS d_id, b.doc_id AS b_id,
-       |    COUNT(*)::DOUBLE / (ANY_VALUE(d.sz) + ANY_VALUE(b.sz) - COUNT(*)) AS jaccard
-       |  FROM ex d JOIN ex b ON d.s = b.s
-       |  WHERE d.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-       |  GROUP BY d.doc_id, b.doc_id
-       |  HAVING COUNT(*)::DOUBLE / (ANY_VALUE(d.sz) + ANY_VALUE(b.sz) - COUNT(*)) >= ${graft.operators.Dedup.JaccardThreshold}
-       |), best AS (
-       |  SELECT d_id, b_id, jaccard,
-       |    ROW_NUMBER() OVER (PARTITION BY d_id ORDER BY jaccard DESC, b_id) AS rn
-       |  FROM cand)
-       |SELECT doc.doc_id, b.d_id IS NULL AS admitted, b.b_id AS matched_base, b.jaccard
-       |FROM documents doc
-       |LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON doc.doc_id = b.d_id
-       |WHERE doc.doc_id % 5 = 0 AND doc.doc_id < $DocCutoff
-       |ORDER BY doc.doc_id""".stripMargin
+    graft.operators.Dedup2.dedupIncrementalSqlWhere(s"doc_id < $DocCutoff")
 
   // ---------------------------------------------- novelty at ingest
   /** Streaming n-gram novelty: NEW documents arrive through the
@@ -408,16 +387,7 @@ object Streaming2 {
   def streamChunkDocuments(s: SparkSession, dir: String): DataFrame =
       StreamRun(s, "stream_chunk_documents") { run =>
     import s.implicits._
-    import graft.operators.PipelineOps.{ChunkStep, ChunkWindow}
-    val chunks = docs3(s, dir, run)
-      .select($"doc_id", $"text",
-        explode(sequence(lit(1), greatest(length($"text"), lit(1)), lit(ChunkStep)))
-          .as("start"))
-      .select($"doc_id",
-        (($"start" - 1) / ChunkStep).cast("long").as("chunk_id"),
-        $"start".cast("long").as("char_start"),
-        $"text".substr($"start", lit(ChunkWindow)).as("chunk_text"))
-      .withColumn("chunk_len", length($"chunk_text").cast("long"))
+    val chunks = graft.operators.PipelineOps.chunks(docs3(s, dir, run))
     run.memory(chunks, "append").orderBy($"doc_id", $"chunk_id")
   }
 

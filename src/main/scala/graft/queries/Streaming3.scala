@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -161,28 +161,14 @@ object Streaming3 {
       Streaming.withStateShuffle(s, 4) { StreamRun(s, "stream_latest_by_key") { run =>
     import s.implicits._
     val stage = Streaming.stageEvents(s, dir, run.gate, nFiles = 2)
-    val latest = inOrder(run, Streaming.eventsSchema, Feed(stage, from(1000L)))
-      .withColumn("event_ts", Streaming.eventTs)
-      .select($"user_id", $"event_type",
-        unix_micros($"event_ts").as("ts_us"), $"event_id", $"value")
-      .groupBy($"user_id", $"event_type")
-      .agg(count(lit(1)).as("n_versions"),
-        max(struct($"ts_us", $"event_id", $"value")).as("last"))
-      .select($"user_id", $"event_type", $"n_versions",
-        $"last.ts_us".as("last_ts_us"), $"last.event_id".as("last_event_id"),
-        $"last.value".as("last_value"))
+    val latest = Relational3.latestByKey(
+      inOrder(run, Streaming.eventsSchema, Feed(stage, from(1000L)))
+        .withColumn("event_ts", Streaming.eventTs)
+        .select($"user_id", $"event_type",
+          unix_micros($"event_ts").as("ts_us"), $"event_id", $"value"))
     run.memory(latest, "complete").orderBy($"user_id", $"event_type")
   }}
-  val streamLatestByKeySql: String =
-    s"""WITH rk AS (
-       |  SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id, value,
-       |    ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-       |                       ORDER BY epoch_us(ts) DESC, event_id DESC) AS rk,
-       |    COUNT(*) OVER (PARTITION BY user_id, event_type) AS n_versions
-       |  FROM events WHERE event_id < $CUTOFF)
-       |SELECT user_id, event_type, CAST(n_versions AS BIGINT) AS n_versions,
-       |  ts_us AS last_ts_us, event_id AS last_event_id, value AS last_value
-       |FROM rk WHERE rk = 1 ORDER BY user_id, event_type""".stripMargin
+  val streamLatestByKeySql: String = Relational3.q60LatestByKeySqlWhere(s"event_id < $CUTOFF")
 
   /** Continuous experimentation (stream_ab_monitor): the Welch A/B
     * readout maintained incrementally — [[Relational3.abAgg]]'s EXACT
@@ -402,20 +388,23 @@ object Streaming3 {
       // RANGE staging: part-00000 carries the low doc_id range, so
       // timestamp-ordered single-file batches deliver ids in order
       val stage = stageDocsRange2(s, dir, run.gate)
-      val manifest = inOrder(run, Streaming.docsSchema, Feed(stage, from(1000L)))
+      shardManifest(run, inOrder(run, Streaming.docsSchema, Feed(stage, from(1000L)))
         .select($"doc_id",
           size(Parity.tokens($"text")).cast("long").as("ntok"))
-        .as[(Long, Long)]
-        .groupByKey(_ => 0L)
-        .transformWithState(new ShardManifestProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("doc_id", "shard_id", "ntok")
-      run.memory(manifest, "append")
-        .groupBy($"shard_id")
-        .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("sum_tokens"),
-          min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
-        .orderBy($"shard_id")
+        .as[(Long, Long)])
     }}
+  }
+
+  /** The running shard coordinator ([[ShardManifestProcessor]]) over
+    * `(doc_id, ntok)` arrivals, its accumulated manifest read back as the
+    * batch shard report ([[graft.operators.Curation7.shardStats]]). */
+  private def shardManifest(run: StreamRun, docs: Dataset[(Long, Long)]): DataFrame = {
+    import docs.sparkSession.implicits._
+    val manifest = docs.groupByKey(_ => 0L)
+      .transformWithState(new ShardManifestProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("doc_id", "shard_id", "ntok")
+    graft.operators.Curation7.shardStats(run.memory(manifest, "append"))
   }
   /** Oracle: the batch prefix-sum shard plan over the same corpus. */
   val streamShardManifestSql: String = graft.operators.Curation7.shardPlanSql
@@ -475,31 +464,13 @@ object Streaming3 {
         .transformWithState(new JourneyChainProcessor,
           TimeMode.None(), OutputMode.Append())
         .toDF("from_type", "to_type")
-      val sink = run.memory(transitions, "append")
-      val wFrom = org.apache.spark.sql.expressions.Window.partitionBy($"from_type")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      sink
+      Relational3.transitionMatrix(run.memory(transitions, "append")
         .groupBy($"from_type", $"to_type")
-        .agg(count(lit(1)).as("n_transitions"))
-        .withColumn("from_total", sum($"n_transitions").over(wFrom))
-        .withColumn("p_ppm", expr("(n_transitions * 1000000) div from_total"))
-        .select($"from_type", $"to_type", $"n_transitions", $"p_ppm")
-        .orderBy($"from_type", $"to_type")
+        .agg(count(lit(1)).as("n_transitions")))
     }}
   }
   val streamJourneyMarkovSql: String =
-    s"""WITH t AS (
-       |  SELECT event_type AS from_type,
-       |    LEAD(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS to_type
-       |  FROM events WHERE event_id < $CUTOFF
-       |), g AS (
-       |  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n_transitions
-       |  FROM t WHERE to_type IS NOT NULL GROUP BY from_type, to_type
-       |)
-       |SELECT from_type, to_type, n_transitions,
-       |  (n_transitions * 1000000) // CAST(SUM(n_transitions) OVER (PARTITION BY from_type) AS BIGINT) AS p_ppm
-       |FROM g ORDER BY from_type, to_type""".stripMargin
+    Relational3.q68JourneyMarkovSqlWhere(s"event_id < $CUTOFF")
 
   /** Streaming anomaly monitor (stream_value_anomaly): the q69 robust
     * daily-anomaly table maintained over streamed events. The state is
@@ -524,63 +495,12 @@ object Streaming3 {
     // the exact batch q69 read-side. The sink view is re-materialized as a
     // fresh local frame (it is types × retention-days rows BY CONSTRUCTION)
     // so the med/mad self-joins don't alias the memory sink's attributes.
-    val daily = {
-      val acc = sink.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      acc.toDF("event_type", "day_idx", "day_sum_micro")
-    }
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy($"event_type").orderBy($"day_sum_micro", $"day_idx")
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy($"event_type")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val med = daily
-      .withColumn("rn", row_number().over(wRank))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(n + 1) div 2"))
-      .select($"event_type", $"day_sum_micro".as("med_micro"))
-    val withMed = daily.join(broadcast(med), Seq("event_type"))
-      .withColumn("dev", abs($"day_sum_micro" - $"med_micro"))
-    val wDev = org.apache.spark.sql.expressions.Window
-      .partitionBy($"event_type").orderBy($"dev", $"day_idx")
-    val mad = withMed
-      .withColumn("rn", row_number().over(wDev))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(n + 1) div 2"))
-      .select($"event_type", $"dev".as("mad_micro"))
-    withMed.join(broadcast(mad), Seq("event_type"))
-      .withColumn("is_anomaly", $"dev" > $"mad_micro" * 3)
-      .select($"event_type", $"day_idx", $"day_sum_micro", $"med_micro",
-        $"mad_micro", $"is_anomaly")
-      .orderBy($"event_type", $"day_idx")
+    Relational3.anomalyVerdicts(sink.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      .toDF("event_type", "day_idx", "day_sum_micro"))
   }}
   val streamValueAnomalySql: String =
-    s"""WITH daily AS (
-       |  SELECT event_type, epoch_us(ts) // 86400000000 AS day_idx,
-       |    CAST(SUM(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT) AS day_sum_micro
-       |  FROM events WHERE event_id < $CUTOFF GROUP BY 1, 2
-       |), med AS (
-       |  SELECT event_type, day_sum_micro AS med_micro FROM (
-       |    SELECT event_type, day_sum_micro,
-       |      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day_sum_micro, day_idx) AS rn,
-       |      COUNT(*) OVER (PARTITION BY event_type) AS n
-       |    FROM daily)
-       |  WHERE rn = (n + 1) // 2
-       |), wm AS (
-       |  SELECT d.*, m.med_micro, abs(d.day_sum_micro - m.med_micro) AS dev
-       |  FROM daily d JOIN med m USING (event_type)
-       |), mad AS (
-       |  SELECT event_type, dev AS mad_micro FROM (
-       |    SELECT event_type, dev, day_idx,
-       |      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY dev, day_idx) AS rn,
-       |      COUNT(*) OVER (PARTITION BY event_type) AS n
-       |    FROM wm)
-       |  WHERE rn = (n + 1) // 2
-       |)
-       |SELECT wm.event_type, wm.day_idx, wm.day_sum_micro, wm.med_micro,
-       |  mad.mad_micro, (wm.dev > mad.mad_micro * 3) AS is_anomaly
-       |FROM wm JOIN mad USING (event_type)
-       |ORDER BY wm.event_type, wm.day_idx""".stripMargin
+    Relational3.q69ValueAnomalySqlWhere(s"event_id < $CUTOFF")
 
   /** Exactly-once fingerprint admission for the composed pipeline: key =
     * content fingerprint, ONE boolean cell per DISTINCT fingerprint ever
@@ -627,7 +547,8 @@ object Streaming3 {
     import s.implicits._
     Streaming.withRocksDBStateStore(s) { StreamRun(s, "stream_pipeline_curate") { run =>
       val stage = stageDocsRange2(s, dir, run.gate)
-      val manifest = inOrder(run, Streaming.docsSchema, Feed(stage, from(1000L)))
+      // stage 3 (outermost): the running shard coordinator over survivors
+      shardManifest(run, inOrder(run, Streaming.docsSchema, Feed(stage, from(1000L)))
         // stage 1: the quality cascade, stateless (projected tokens so
         // the tokenizer runs once — the CollapseProject discipline)
         .withColumn("toks", Parity.tokens($"text"))
@@ -638,17 +559,7 @@ object Streaming3 {
         .as[(String, Long, Long)]
         .groupByKey(_._1)
         .transformWithState(new DedupAdmitProcessor,
-          TimeMode.None(), OutputMode.Append())
-        // stage 3: the running shard coordinator over survivors
-        .groupByKey(_ => 0L)
-        .transformWithState(new ShardManifestProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("doc_id", "shard_id", "ntok")
-      run.memory(manifest, "append")
-        .groupBy($"shard_id")
-        .agg(count(lit(1)).as("n_docs"), sum($"ntok").as("sum_tokens"),
-          min($"doc_id").as("first_doc"), max($"doc_id").as("last_doc"))
-        .orderBy($"shard_id")
+          TimeMode.None(), OutputMode.Append()))
     }}
   }
   /** The batch composition, replayed: cascade-pass → first-copy-per-
@@ -674,15 +585,8 @@ object Streaming3 {
          |      ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
          |    FROM passed)
          |  WHERE rn = 1
-         |), c AS (
-         |  SELECT doc_id, ntok,
-         |    CAST(SUM(ntok) OVER (ORDER BY doc_id) AS BIGINT) - ntok AS start_off
-         |  FROM surv
          |)
-         |SELECT start_off // ${graft.operators.Curation7.ShardTokens} AS shard_id,
-         |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(ntok) AS BIGINT) AS sum_tokens,
-         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         |FROM c GROUP BY 1 ORDER BY shard_id""".stripMargin
+         |${graft.operators.Curation7.shardReportSql("surv")}""".stripMargin
   }
 
   /** Streaming incremental cluster maintenance (stream_cc_delta): the

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.functions.Parity
+import graft.operators.TextAnalysis.{KnDiscount, bigramCounts, broadcastUnder, knContexts,
+  knSizes, knTablesSql, meanNll, meanNllSql}
 import StreamRun.Feed
 
 /** Streaming consumers of standing MODEL artifacts: rows where the
@@ -16,8 +18,6 @@ import StreamRun.Feed
   * accumulated sink must hash-equal batch SQL over the same slice.
   */
 object Streaming4 {
-  private val KnDiscount = 0.75
-
   /** Streaming LM quality gate (`stream_lm_score`): the interpolated
     * Kneser-Ney bigram LM of `text_bigram_kn`, trained ONCE on the
     * standing corpus (doc_id % 5 != 0) as prep, scoring every ARRIVING
@@ -58,15 +58,6 @@ object Streaming4 {
     StreamPlans.resetIngest(run.gate)
     val prepT0 = System.nanoTime()
     val docs = Tables.documents(s, dir)
-    def bigramsOfToks(df: DataFrame): DataFrame = df
-      .filter(size($"t") >= 2)
-      .select($"doc_id", explode(zip_with(
-        slice($"t", lit(1), size($"t") - 1),
-        slice($"t", lit(2), size($"t") - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select($"doc_id", $"bg.w1".as("w1"), $"bg.w2".as("w2"))
-    def bigrams(df: DataFrame): DataFrame = bigramsOfToks(
-      df.select($"doc_id", Parity.tokens($"text").as("t")))
 
     // ---- prep: the standing LM as a TRAIN-ONCE Models artifact (the
     // ccStandingArtifacts shape, r22): bigram/context/continuation
@@ -85,18 +76,15 @@ object Streaming4 {
       val toks = docs.filter($"doc_id" % 5 =!= 0)
         .select($"doc_id", Parity.tokens($"text").as("t"))
         .persist()
-      val bigB = bigramsOfToks(toks)
-        .groupBy($"w1", $"w2").agg(count(lit(1)).as("c")).persist()
+      val bigB = bigramCounts(Parity.bigrams(toks)).persist()
       bigB.write.mode("overwrite").parquet(s"$out/big")
-      bigB.groupBy($"w1").agg(sum($"c").as("ctot"), count(lit(1)).as("n1f"))
-        .write.mode("overwrite").parquet(s"$out/fwd")
-      bigB.groupBy($"w2").agg(count(lit(1)).as("n1b"))
-        .write.mode("overwrite").parquet(s"$out/bwd")
-      val stats = bigB.agg(count(lit(1)), countDistinct($"w1"),
-        countDistinct($"w2")).first()
+      val (fwdB, bwdB) = knContexts(bigB)
+      fwdB.write.mode("overwrite").parquet(s"$out/fwd")
+      bwdB.write.mode("overwrite").parquet(s"$out/bwd")
+      val (nTypesB, nFwdB, nBwdB) = knSizes(bigB)
       val vSizeL = toks.select(explode($"t").as("tok"))
         .agg(countDistinct($"tok")).first().getLong(0)
-      Seq((stats.getLong(0), stats.getLong(1), stats.getLong(2), vSizeL))
+      Seq((nTypesB, nFwdB, nBwdB, vSizeL))
         .toDF("n_types", "n_fwd", "n_bwd", "v_size")
         .write.mode("overwrite").parquet(s"$out/stats")
       bigB.unpersist(); toks.unpersist()
@@ -117,8 +105,7 @@ object Streaming4 {
     // count — fwd/bwd are vocab-bounded and usually keep broadcasting
     // after big (a row per bigram TYPE) has to fall back to a shuffle
     // equi-join (regime equality pinned by StreamingLmRegimeSpec).
-    def lm(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= maxTypes) broadcast(df) else df
+    def lm(df: DataFrame, rows: Long): DataFrame = broadcastUnder(df, rows, maxTypes)
     // materialize the pins before the stream races them
     big.count(); fwd.count(); bwd.count()
     StreamPlans.recordPrep(run.gate, (System.nanoTime() - prepT0) / 1e9)
@@ -148,7 +135,7 @@ object Streaming4 {
       // row's regime comment + BENCH_NOTES round 18; regime equality
       // of this fallback is pinned by StreamingLmRegimeSpec through
       // the maxTypes parameter).
-      val parts = bigrams(batch)
+      val parts = Parity.bigrams(batch.select($"doc_id", Parity.tokens($"text").as("t")))
         .join(lm(big, nTypesL), Seq("w1", "w2"), "left")
         .join(lm(fwd, nFwd), Seq("w1"), "left")
         .join(lm(bwd, nBwd), Seq("w2"), "left")
@@ -164,9 +151,7 @@ object Streaming4 {
         .otherwise($"pc")
       val scores = parts
         .withColumn("nll_micro", -Parity.microNats(p))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          (sum($"nll_micro").cast("double") / (count(lit(1)) * 1e6)).as("avg_nll"))
+        .transform(meanNll("n_bigrams"))
       StreamPlans.capturePlan(run.gate, scores)
       scores.write.mode("overwrite").parquet(s"$scoresDir/batch=$id")
       StreamPlans.recordIngest(run.gate, id,
@@ -196,26 +181,13 @@ object Streaming4 {
         |      END""".stripMargin
     raw"""WITH toks AS (
          |  SELECT doc_id, ${Parity.tokensSql("text")} AS t FROM documents
-         |), train_idx AS (
-         |  SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks WHERE doc_id % 5 <> 0
-         |), train_bi AS (
-         |  SELECT t[i] AS w1, t[i + 1] AS w2 FROM train_idx
-         |), big AS (
-         |  SELECT w1, w2, COUNT(*) AS c FROM train_bi GROUP BY w1, w2
-         |), fwd AS (
-         |  SELECT w1, CAST(SUM(c) AS BIGINT) AS ctot, COUNT(*) AS n1f
-         |  FROM big GROUP BY w1
-         |), bwd AS (
-         |  SELECT w2, COUNT(*) AS n1b FROM big GROUP BY w2
-         |), nt AS (
+         |), ${knTablesSql("toks WHERE doc_id % 5 <> 0")}, nt AS (
          |  SELECT CAST(COUNT(*) AS DOUBLE) AS ntypes FROM big
          |), vsz AS (
          |  SELECT CAST(COUNT(DISTINCT tok) AS DOUBLE) AS v
          |  FROM (SELECT unnest(t) AS tok FROM toks WHERE doc_id % 5 <> 0)
-         |), eval_idx AS (
-         |  SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks WHERE doc_id % 5 = 0
          |), eval_bi AS (
-         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2 FROM eval_idx
+         |  ${Parity.bigramsSql("toks WHERE doc_id % 5 = 0")}
          |), parts AS (
          |  SELECT e.doc_id, big.c, fwd.ctot, fwd.n1f,
          |    CASE WHEN bwd.n1b IS NOT NULL
@@ -230,9 +202,7 @@ object Streaming4 {
          |    -${Parity.microNatsSql(p)} AS nll_micro
          |  FROM parts
          |)
-         |SELECT doc_id, COUNT(*) AS n_bigrams,
-         |  CAST(SUM(nll_micro) AS DOUBLE) / (COUNT(*) * 1000000.0) AS avg_nll
-         |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |${meanNllSql("n_bigrams")}""".stripMargin
   }
 
   val rows: Seq[QueryDef] = Seq(

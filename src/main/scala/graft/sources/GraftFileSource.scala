@@ -2,12 +2,9 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import scala.util.control.NonFatal
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SQLContext}
@@ -70,7 +67,6 @@ class GraftFileSource(
   private val options = ConnectorOptions(parameters)
   private val spark = sqlContext.sparkSession
   private val hadoopConf = sqlContext.sparkContext.hadoopConfiguration
-  private val jsonMapper = new ObjectMapper()
 
   // A checkpoint written by the removed RocksDB log holds its state under
   // `rocksdb/`: an empty file log there would restore batch -1 under
@@ -306,15 +302,9 @@ class GraftFileSource(
     df
   }
 
-  private def logOffsetOf(o: Offset): Long = o match {
-    case f: FileStreamSourceOffset => f.logOffset
-    case other =>
-      try jsonMapper.readTree(other.json()).get("logOffset").asLong()
-      catch {
-        case NonFatal(e) =>
-          throw new GraftSourceException(s"cannot decode offset ${other.json()}", e)
-      }
-  }
+  /** Spark's own decoder: it reads both the `{"logOffset":n}` JSON form
+    * and the legacy plain-long form of a recovered offset. */
+  private def logOffsetOf(o: Offset): Long = FileStreamSourceOffset(o).logOffset
 
   override def commit(end: Offset): Unit = {
     fileCache.purge()

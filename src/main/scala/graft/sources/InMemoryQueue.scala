@@ -128,8 +128,8 @@ object InMemoryQueueRegistry {
   * (AsyncSqsClientImpl.scala:238-289) regardless of transport and sends a
   * batch's 10-entry chunks concurrently on the pool.
   * [[deleteMessageBatchAsync]] returns without waiting, so the source acks
-  * a batch while Spark runs it; [[deleteMessageBatch]] waits for the same
-  * calls. The one client class of the source (reference:
+  * a batch while Spark runs it; [[handleProcessedMessageBatch]] waits for
+  * the same calls. The one client class of the source (reference:
   * AsyncQueueClient.scala:26-52); tests drive it over an [[InMemoryQueue]]
   * and over [[SqsHttpQueue]].
   */
@@ -307,10 +307,6 @@ final class QueueFetchClient(
     try Await.ready(calls, Duration(callWaitSeconds, TimeUnit.SECONDS))
     catch { case _: java.util.concurrent.TimeoutException => () }
 
-  /** [[deleteMessageBatchAsync]], waited for at most `callWaitSeconds`. */
-  def deleteMessageBatch(messageIds: Seq[String]): Unit =
-    awaitCalls(deleteMessageBatchAsync(messageIds))
-
   private def deleteChunk(chunk: Seq[String]): Unit =
     try {
       queue.deleteBatch(chunk).foreach { case (_, ok) =>
@@ -330,9 +326,10 @@ final class QueueFetchClient(
     }
   }
 
-  /** Ack a committed batch: delete all its messages (chunked). */
+  /** Ack a committed batch: [[deleteMessageBatchAsync]], waited for at
+    * most `callWaitSeconds`. */
   def handleProcessedMessageBatch(messageIds: Seq[String]): Unit =
-    deleteMessageBatch(messageIds)
+    awaitCalls(deleteMessageBatchAsync(messageIds))
 
   /** Stops new work, waits at most `callWaitSeconds` for in-flight wire
     * calls (a batch's deletes among them) so none signs with credentials

@@ -3,6 +3,8 @@ package graft.functions
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.sys.process._
+import scala.util.Try
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -12,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[Parity]]'s Spark spellings against independent JVM computations on
   * fixed inputs (the DuckDB twins are checked by the oracle gate), and a
   * source scan that keeps every cross-engine spelling inside Parity:
-  * md5 keys, list sums, the tokenizer, the punctuation class and the
-  * rendered stop-word list. */
+  * md5 keys, list sums, the tokenizer, the punctuation class, the
+  * rendered stop-word list and the bigram split. The bigram twin is
+  * also run on DuckDB here, where a `python3` with `duckdb` exists. */
 class ParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -118,12 +121,51 @@ class ParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.last.isEmpty, s"null token array -> ${got.last}")
   }
 
+  /** `(doc_id, t)` token arrays: empty, one token, two, four with a
+    * repeat, null. */
+  private val bigramDocs: Seq[(Long, Option[Seq[String]])] = Seq(
+    1L -> Some(Seq.empty), 2L -> Some(Seq("a")), 3L -> Some(Seq("a", "b")),
+    4L -> Some(Seq("a", "b", "c", "a")), 5L -> None)
+  private val wantBigrams: Seq[(Long, String, String)] = for {
+    (id, Some(t)) <- bigramDocs
+    Seq(w1, w2) <- t.sliding(2).toSeq
+  } yield (id, w1, w2)
+
+  test("bigrams: adjacent token pairs; empty, one-token and null arrays yield none") {
+    val s = spark; import s.implicits._
+    val got = Parity.bigrams(bigramDocs.toDF("doc_id", "t"))
+      .as[(Long, String, String)].collect().toSeq
+    assert(got.sorted == wantBigrams.sorted)
+    assert(got.count(_._1 == 4L) == 3 && got.forall(_._1 >= 3L))
+  }
+
+  test("bigramsSql: DuckDB yields the same pairs as bigrams") {
+    val hasDuckDb = Try(Seq("python3", "-c", "import duckdb")
+      .!(ProcessLogger(_ => (), _ => ())) == 0).getOrElse(false)
+    assume(hasDuckDb, "python3 with duckdb not available")
+    def listSql(t: Option[Seq[String]]): String = t match {
+      case None => "NULL::VARCHAR[]"
+      case Some(ts) => ts.map(w => s"'$w'").mkString("[", ", ", "]::VARCHAR[]")
+    }
+    val values = bigramDocs.map { case (id, t) => s"($id, ${listSql(t)})" }.mkString(", ")
+    val sql = s"WITH docs AS (SELECT * FROM (VALUES $values) v(doc_id, t)) " +
+      Parity.bigramsSql("docs")
+    val out = Seq("python3", "-c",
+      "import sys, duckdb\nfor r in duckdb.sql(sys.argv[1]).fetchall(): print(*r, sep='\\t')",
+      sql).!!
+    val got = out.linesIterator.filter(_.nonEmpty).map(_.split("\t")).map {
+      case Array(id, w1, w2) => (id.toLong, w1, w2)
+    }.toSeq
+    assert(got.sorted == wantBigrams.sorted, sql)
+  }
+
   test("source scan: only Parity.scala spells md5-prefix keys or DuckDB list sums") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root; ${root.toAbsolutePath} missing")
     val spellings = Seq("substring(md5(", "list_sum(list_transform(",
       "string_split_regex(", "split(trim(", "'[^a-zA-Z0-9 ]'",
-      "StopWords.map(", ".mkString(\"[\", \", \", \"]\")", "'the', 'a', 'an'")
+      "StopWords.map(", ".mkString(\"[\", \", \", \"]\")", "'the', 'a', 'an'",
+      "struct(a.as(\"w1\"), b.as(\"w2\"))", "t[i] AS w1, t[i + 1] AS w2")
     val files = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq
     assert(files.exists(_.endsWith("Parity.scala")))

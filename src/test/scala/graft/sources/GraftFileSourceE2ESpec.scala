@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path => JPath}
 import java.util.concurrent.CountDownLatch
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.streaming.SerializedOffset
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -281,6 +283,27 @@ class GraftFileSourceE2ESpec extends AnyFunSuite with SuiteTempDirs {
     assert(elapsedMs >= 550, s"expected backoff between retries, drained in ${elapsedMs}ms")
     assert(elapsedMs < 30000)
     src.stop()
+  }
+
+  test("getBatch decodes a recovered offset in both serialized forms") {
+    val (qn, q) = freshQueue()
+    val file = writeJson(tempDir("graft-e2e"), "a.json", Seq(1 -> "x"))
+    announce(q, file)
+    val src = new GraftFileSource(spark.sqlContext,
+      tempDir("graft-offsets").toString, schema,
+      Map("fileformat" -> "json", "queuename" -> qn, "queuefetchwaittimeoutseconds" -> "5"))
+    try {
+      src.prepareForTriggerAvailableNow()
+      assert(src.getOffset.map(_.json) == Some("""{"logOffset":0}"""))
+      // a restarted query hands getBatch the offset as read back from the
+      // offset log: the JSON form, or the plain long of older checkpoints
+      for (json <- Seq("""{"logOffset":0}""", "0")) {
+        val files = src.getBatch(None, SerializedOffset(json)).queryExecution.analyzed
+          .collect { case l: LogicalRelation => l.relation }
+          .flatMap { case r: HadoopFsRelation => r.location.inputFiles.toSeq }
+        assert(files.map(new org.apache.hadoop.fs.Path(_).getName) == Seq("a.json"), json)
+      }
+    } finally src.stop()
   }
 
   test("a checkpoint left by the removed RocksDB log fails construction instead of restoring empty") {

@@ -182,13 +182,13 @@ class InMemoryQueueSpec extends AnyFunSuite {
     val client = new QueueFetchClient(q, "batch-del", _ => (),
       None, 60, 2, keepMessageOnConsumerError = false)
     // one unknown id in the middle: a failed ENTRY, not a failed call
-    client.deleteMessageBatch(ids.take(10) :+ "no-such-id")
+    client.handleProcessedMessageBatch(ids.take(10) :+ "no-such-id")
     assert(client.metrics.deleteMessageCounter.sum() == 10)
     assert(client.metrics.deleteMessageFailedCounter.sum() == 1)
     assert(q.approximateSize == 15)
     // batch endpoint down: per-message fallback still clears the queue
     q.failBatchDeletes = true
-    client.deleteMessageBatch(ids.drop(10))
+    client.handleProcessedMessageBatch(ids.drop(10))
     assert(q.approximateSize == 0)
     assert(client.metrics.deleteMessageCounter.sum() == 25)
     q.failBatchDeletes = false

@@ -140,13 +140,13 @@ class SqsHttpClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ids = (1 to 25).map(i => stub.queue.send(s"""{"path":"d$i","timestampMs":$i}"""))
     val c = client(_ => ())
     // one unknown receipt in the middle: a failed ENTRY, not a failed call
-    c.deleteMessageBatch(ids.take(10) :+ "no-such-receipt")
+    c.handleProcessedMessageBatch(ids.take(10) :+ "no-such-receipt")
     assert(c.metrics.deleteMessageCounter.sum() == 10)
     assert(c.metrics.deleteMessageFailedCounter.sum() == 1)
     assert(stub.queue.approximateSize == 15)
     // batch endpoint down (500 on the wire): per-message fallback clears it
     stub.queue.failBatchDeletes = true
-    c.deleteMessageBatch(ids.drop(10))
+    c.handleProcessedMessageBatch(ids.drop(10))
     stub.queue.failBatchDeletes = false
     assert(stub.queue.approximateSize == 0)
     assert(c.metrics.deleteMessageCounter.sum() == 25)
